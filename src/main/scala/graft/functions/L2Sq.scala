@@ -18,14 +18,18 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Summation order is ascending-index with d += (x-y)*(x-y) — the exact
   * IEEE op sequence of both the HOF fold it replaces and the driver-side
   * [[graft.ops.Clustering.l2sqLocal]], so engine- and driver-ranked
-  * distances stay bit-identical (L2SqSpec pins equality against the HOF
-  * form).
+  * distances stay bit-identical (L2SqSpec pins the codegen and
+  * interpreted paths against `l2sqLocal`, and against the HOF form on
+  * null-free, equal-length arrays).
   *
   * Null semantics: null if either array is null (BinaryExpression's
-  * null-intolerant default). Arrays of different lengths use the common
-  * prefix, matching [[graft.ops.Clustering.l2sqLocal]]; every caller
-  * compares equal-dim vectors (the zip_with form it replaces returned
-  * null there — unreachable, no caller compares ragged arrays).
+  * null-intolerant default). A null ELEMENT is read as 0.0
+  * (`ArrayData.toDoubleArray` reads a null slot as 0.0 in both paths), so
+  * such a pair yields a finite distance, where the HOF form returned
+  * null. Arrays of different lengths use the common prefix, matching
+  * [[graft.ops.Clustering.l2sqLocal]]; every caller compares equal-dim
+  * vectors (the zip_with form it replaces returned null there —
+  * unreachable, no caller compares ragged arrays). L2SqSpec pins both.
   */
 case class L2Sq(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {

@@ -59,30 +59,34 @@ object LrOps {
     * data (the q178 r17 finding). Gradient values are IEEE-identical
     * per partition (same ascending z and g·fⱼ ops); the partition
     * layout change re-orders only the final partial-sum merge —
-    * LrSpec's convergence/accuracy pins re-certify. */
+    * LrSpec's convergence/accuracy pins re-certify. An unpersisted input
+    * is cached for the fit alone and released on every path, as in
+    * `kmeansFit`; a caller's cache is left in place. */
   def fit(data: DataFrame, dim: Int, epochs: Int = 40,
       step: Double = 2.0): Array[Double] = {
     val owned = data.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val cached = if (owned) data.persist() else data
-    // LR's per-row work is a dim-length dot (light) → a coarse grain
-    val df = graft.ops.ScaleOps.coalesceAdaptive(cached, cached.count(),
-      rowsPerPart = 1L << 20)
-    val w = new Array[Double](dim)
-    val gsums = (0 until dim).map(j =>
-      sum(col("g") * element_at(col("f"), j + 1)).as(s"g$j")) :+
-      count(lit(1)).as("n")
-    var e = 0
-    while (e < epochs) {
-      val upd = df
-        .select(col("f"), residualUdf(w.clone())(col("label"), col("f")).as("g"))
-        .agg(gsums.head, gsums.tail: _*)
-        .head()
-      val n = upd.getLong(dim)
-      var i = 0
-      while (i < dim) { w(i) -= step * upd.getDouble(i) / n.toDouble; i += 1 }
-      e += 1
-    }
-    w
+    try {
+      // LR's per-row work is a dim-length dot (light) → a coarse grain
+      val df = graft.ops.ScaleOps.coalesceAdaptive(cached, cached.count(),
+        rowsPerPart = 1L << 20)
+      val w = new Array[Double](dim)
+      val gsums = (0 until dim).map(j =>
+        sum(col("g") * element_at(col("f"), j + 1)).as(s"g$j")) :+
+        count(lit(1)).as("n")
+      var e = 0
+      while (e < epochs) {
+        val upd = df
+          .select(col("f"), residualUdf(w.clone())(col("label"), col("f")).as("g"))
+          .agg(gsums.head, gsums.tail: _*)
+          .head()
+        val n = upd.getLong(dim)
+        var i = 0
+        while (i < dim) { w(i) -= step * upd.getDouble(i) / n.toDouble; i += 1 }
+        e += 1
+      }
+      w
+    } finally if (owned) cached.unpersist()
   }
 
   /** Score rows with a trained weight vector: adds `p` = σ(w·f). One

@@ -29,8 +29,12 @@ import org.apache.spark.sql.types._
   *
   * Scale notes: every step is declarative — the explode is narrow, the
   * regroup is one partial+final hash aggregate, and the state merge is one
-  * full-outer join on the state key. At 100 TB the state snapshot would be
-  * bucketed by `customerId` so only the incoming delta shuffles.
+  * full-outer join on the state key. `run` first cuts the state to the
+  * batch's customers, so the merge's cost follows the batch's customers,
+  * not the whole state, and it emits only those customers: the caller's
+  * store already holds every other customer's value, as Redis did in the
+  * reference. At 100 TB the state snapshot would be bucketed by
+  * `customerId` so only the incoming delta shuffles.
   */
 object MoviePipeline {
 
@@ -209,13 +213,34 @@ object MoviePipeline {
       concat(lit("customer:"), col("customerId")).as("key"),
       to_json(struct(col("customerId"), col("watchedMovies"))).as("value"))
 
-  /** The whole pipeline, batch shape: files in, KV rows out. */
+  /** The whole pipeline, batch shape: files in, KV rows out.
+    *
+    * Output contract: one row per customer with an event in the batch,
+    * and no others. With `existingState`, each row is that customer's
+    * full merged value, the same key's value in
+    * `toKv(regroupCustomers(mergeState(state, events, fidelity)))`.
+    * Customers only in the state are not emitted: the batch cannot
+    * change their value, and the caller's store already holds it, as
+    * Redis did in the reference, whose GET + merge + SET loop touched
+    * only the batch's customers (DataTransformationService.java:176–195).
+    * Writing the output over a store that holds the state's values
+    * therefore yields the full merge. Rows with a null `customerId` have
+    * no key and are out of scope.
+    *
+    * The state is cut by a left-semi join before `mergeState`, so only
+    * the batch's customers are deduped, joined, regrouped and
+    * serialised. The join is shuffled, not broadcast: a broadcast
+    * string-keyed hash relation holds a whole memory page for as long as
+    * the broadcast lives. */
   def run(spark: SparkSession, inputPath: String,
           existingState: Option[DataFrame] = None,
           fidelity: Boolean = false): DataFrame = {
     val events = explodeEvents(readMovies(spark, inputPath))
     val merged = existingState match {
-      case Some(state) => mergeState(state, events, fidelity)
+      case Some(state) =>
+        val batchCustomers = events.select("customerId").hint("shuffle_hash")
+        mergeState(state.join(batchCustomers, Seq("customerId"), "left_semi"),
+          events, fidelity)
       case None => if (fidelity) events else dedupLatest(events)
     }
     toKv(regroupCustomers(merged))

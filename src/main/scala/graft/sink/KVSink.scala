@@ -30,9 +30,13 @@ object InMemoryKVStore {
 /** Streaming/batch KV sink: rows of (key: String, value: String) →
   * `store.put`. Unlike the reference's per-customer GET+SET round-trips
   * on the driver thread (:176–195), writes happen on executors, one
-  * connection per partition, in parallel — the merge logic itself lives
-  * upstream in the plan (MoviePipeline.mergeState), so the sink is a
-  * blind bulk writer and needs no read-modify-write atomicity.
+  * connection per partition, in parallel. The merge itself lives
+  * upstream in the plan (MoviePipeline.run reads the state snapshot, not
+  * the store), so the sink needs no read-modify-write atomicity. It is an
+  * overlay writer, not a full rewrite: `MoviePipeline.run` emits only the
+  * batch's customers, each with its full merged value, and relies on the
+  * store already holding every other customer's value — the reference's
+  * write set.
   */
 class KVForeachWriter(store: KVStore, keyCol: String = "key",
     valueCol: String = "value") extends ForeachWriter[Row] {

@@ -44,6 +44,22 @@ class LrSpec extends AnyFunSuite {
     assert(math.abs(w(0) - 0.5) < 1e-12)
   }
 
+  test("fit releases the cache it owns and keeps a caller's cache") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val df = (1 to 50).map(i => (if (i % 2 == 0) 1.0 else 0.0, Seq(1.0, i / 50.0)))
+      .toDF("label", "f")
+    val before = sc.getPersistentRDDs.keySet.toSet
+    LrOps.fit(df, dim = 2, epochs = 2)
+    assert(sc.getPersistentRDDs.keySet.toSet == before)
+    val cached = df.persist()
+    try {
+      LrOps.fit(cached, dim = 2, epochs = 2)
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally cached.unpersist()
+  }
+
   test("q176: distilled classifier beats 0.85 accuracy on its linear target") {
     val r = ops.LrOps.q176LrDistill(spark, dir).head
     val (n, tp, fp, tn, fn) =

@@ -137,6 +137,49 @@ class MoviePipelineSpec extends AnyFunSuite {
     assert(v.indexOf(""""movieId":"m1"""") < v.indexOf(""""movieId":"m2""""))
   }
 
+  test("run with state emits exactly the batch's customers, each with its full-merge value") {
+    // c1 is in the state and the batch: m1 is replaced (incoming strictly
+    // later), m2 keeps the state's row (incoming older), m3 is untouched.
+    // c2 is only in the state; c9 is new, with a duplicate (c9, m1) pair.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_run")
+    java.nio.file.Files.writeString(tmp.resolve("batch.json"),
+      """{"movieId":"m1","title":"A","yearOfRelease":2010,"watchedBy":[{"customer-id":"c1","movie-id":"m1","rating":5,"date":"2024-03-01"},{"customer-id":"c9","movie-id":"m1","rating":4,"date":"2024-01-10"},{"customer-id":"c9","movie-id":"m1","rating":2,"date":"2024-02-10"}]}
+        |{"movieId":"m2","title":"B","yearOfRelease":2011,"watchedBy":[{"customer-id":"c1","movie-id":"m2","rating":1,"date":"2023-01-01"}]}
+        |""".stripMargin)
+    val state = events(
+      ("c1", "m1", "A", 2010, 3, "2024-01-01"),
+      ("c1", "m2", "B", 2011, 3, "2023-06-01"),
+      ("c1", "m3", "C", 2012, 4, "2022-05-05"),
+      ("c2", "m1", "A", 2010, 2, "2021-01-01"))
+    def movie(m: String, t: String, y: Int, r: Int, d: String) =
+      s"""{"movieId":"$m","title":"$t","yearOfRelease":$y,"rating":$r,"date":"$d"}"""
+    def value(c: String, ms: String*) =
+      s"""{"customerId":"$c","watchedMovies":[${ms.mkString(",")}]}"""
+    val c1 = value("c1", movie("m1", "A", 2010, 5, "2024-03-01"),
+      movie("m2", "B", 2011, 3, "2023-06-01"), movie("m3", "C", 2012, 4, "2022-05-05"))
+    val c9 = Map(
+      false -> value("c9", movie("m1", "A", 2010, 2, "2024-02-10")),
+      // fidelity: a customer absent from the state keeps every raw row (g5)
+      true -> value("c9", movie("m1", "A", 2010, 2, "2024-02-10"),
+        movie("m1", "A", 2010, 4, "2024-01-10")))
+    def kv(df: DataFrame): Map[String, String] =
+      df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    Seq(false, true).foreach { fidelity =>
+      val out = kv(MoviePipeline.run(spark, tmp.toString, Some(state), fidelity))
+      val batch = MoviePipeline.explodeEvents(MoviePipeline.readMovies(spark, tmp.toString))
+      val full = kv(MoviePipeline.toKv(MoviePipeline.regroupCustomers(
+        MoviePipeline.mergeState(state, batch, fidelity))))
+      val ctx = s"fidelity=$fidelity"
+      // c2's value cannot change, so it is not emitted
+      assert(full.contains("customer:c2"), ctx)
+      assert(out.keySet == Set("customer:c1", "customer:c9"), ctx)
+      assert(out("customer:c1") == full("customer:c1"), ctx)
+      assert(out("customer:c9") == full("customer:c9"), ctx)
+      assert(out("customer:c1") == c1, ctx)
+      assert(out("customer:c9") == c9(fidelity), ctx)
+    }
+  }
+
   test("merge is idempotent: merge(merge(s,x),x) == merge(s,x)") {
     val s = events(("c1", "m1", "S", 2010, 3, "2024-01-10"))
     val x = events(("c1", "m1", "X", 2010, 5, "2024-02-01"),
