@@ -2,15 +2,20 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
   * Design notes for scale: each loader is a plain parquet scan — filters and
   * projections composed downstream reach the scan via Catalyst pushdown
-  * (verified with `.explain`: `PushedFilters`, pruned `ReadSchema`). No
-  * schema inference pass is triggered beyond the footer read; at 100 TB the
-  * same loaders work because partition discovery and row-group pruning are
-  * handled by the datasource, not user code.
+  * (verified with `.explain`: `PushedFilters`, pruned `ReadSchema`); at
+  * 100 TB the same loaders work because partition discovery and row-group
+  * pruning are handled by the datasource, not user code.
+  *
+  * Schema resolution ([[load]]): a schema-less `spark.read.parquet` infers
+  * the schema with a Spark job that reads parquet footers, on every call.
+  * The loaders infer once per file version instead and pass the remembered
+  * schema on later reads, which start no job. See [[load]] for the key.
   */
 object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
@@ -64,8 +69,68 @@ object Tables {
     }
   }
 
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The one read path for a driver table `dir/name.parquet` (a single
+    * file or a directory of part files), and for the streaming loaders'
+    * schema probes. A schema inferred once is remembered under
+    *   - the path and the session's schema-relevant settings
+    *     ([[schemaSettings]]), and
+    *   - a digest of every leaf file's qualified path, length and
+    *     modification time, taken from the listing the read makes anyway.
+    * A later read with the same path and settings passes the remembered
+    * schema (`spark.read.schema(s)`, no inference job) and keeps it only
+    * if its own listing has the same digest; otherwise, as on a miss, it
+    * infers exactly as `spark.read.parquet` does. A failed inference (the
+    * nanos generation without `nanosAsLong`) throws and is not remembered. */
+  private[graft] def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, schemaSettings(spark))
+    val hit = schemas.synchronized(Option(schemas.get(key))).flatMap {
+      case (digest, schema) =>
+        val df = spark.read.schema(schema).parquet(path)
+        if (leafDigest(df) == digest) Some(df) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      schemas.synchronized(schemas.put(key, (leafDigest(df), df.schema)))
+      df
+    }
+  }
+
+  /** Session settings that can change an inferred parquet schema or
+    * whether inference succeeds: the parquet readers' own settings
+    * (`nanosAsLong`, INT96/binary-as-string, timestamp handling), case
+    * sensitivity, and skipping corrupt or missing files. Only explicitly
+    * set values appear; an unset key reads as its default. */
+  private def schemaSettings(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+        k.startsWith("spark.sql.files.ignore") || k == "spark.sql.caseSensitive"
+    }
+
+  /** SHA-256 over the sorted (path, length, mtime) of every leaf file the
+    * read listed: a fixed-size file-version stamp, however many part
+    * files a table has. */
+  private def leafDigest(df: DataFrame): String = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val leaves = df.queryExecution.analyzed.collectLeaves().flatMap {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+        fs.location.listFiles(Nil, Nil).flatMap(_.files)
+          .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
+      case _ => Nil
+    }.sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    leaves.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
+    java.util.HexFormat.of().formatHex(md.digest())
+  }
+
+  /** (path, settings) → (leaf digest, schema), least recently used first;
+    * bounded because tests and probes load from many temp dirs. */
+  private type SchemaKey = (String, Map[String, String])
+  private val schemas =
+    new java.util.LinkedHashMap[SchemaKey, (String, StructType)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, (String, StructType)]): Boolean = size > 64
+    }
 
   /** Decouple compute parallelism from file layout for CPU-heavy narrow
     * transforms (regex scoring, sketching). The driver testdata is ONE

@@ -46,6 +46,13 @@ object LrOps {
   /** Fit `epochs` of full-batch GD on (label ∈ {0,1}, f: dim doubles
     * incl. bias). Returns the weight vector. One job per epoch.
     *
+    * Ragged features: a feature array shorter than `dim` is read as
+    * zero-padded (its missing entries contribute 0 to the dot product
+    * and to the gradient), and entries past `dim` are ignored — the
+    * same reading as [[predict]]. A null entry fails the fit
+    * (NOT_NULL_ASSERT_VIOLATION from the residual UDF's `Seq[Double]`
+    * input). LrSpec pins both.
+    *
     * r17 (guide §2/§4): the gradient aggregate is `dim` independent
     * built-in sum(g·fⱼ) columns (the minhashSignatures
     * K-independent-aggregates trick) instead of the former per-row
@@ -72,7 +79,8 @@ object LrOps {
         rowsPerPart = 1L << 20)
       val w = new Array[Double](dim)
       val gsums = (0 until dim).map(j =>
-        sum(col("g") * element_at(col("f"), j + 1)).as(s"g$j")) :+
+        sum(col("g") * coalesce(try_element_at(col("f"), lit(j + 1)), lit(0.0)))
+          .as(s"g$j")) :+
         count(lit(1)).as("n")
       var e = 0
       while (e < epochs) {

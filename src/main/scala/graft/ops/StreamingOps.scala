@@ -347,6 +347,15 @@ object StreamingOps {
       outSchema: Option[org.apache.spark.sql.types.StructType] = None)(
       finish: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
+    // shuffleParts is set on the SESSION: an already active streaming
+    // query would plan its next batches with the drain's count, so refuse
+    // before touching the conf (or creating the dirs)
+    val active = spark.streams.active
+    if (shuffleParts > 0 && active.nonEmpty)
+      throw new IllegalStateException(s"drainAndClean($name): shuffleParts=" +
+        s"$shuffleParts would change spark.sql.shuffle.partitions for the active " +
+        s"streaming queries (${active.map(q => Option(q.name).getOrElse(q.id)).mkString(", ")}); " +
+        "drain with shuffleParts = -1 or after they stop")
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$name")
     val sink = java.nio.file.Files.createTempDirectory(s"graft-sink-$name")
     val partsKey = "spark.sql.shuffle.partitions"
@@ -446,13 +455,14 @@ object StreamingOps {
   }
 
   /** The events table as a ts-normalized file STREAM — the readStream
-    * twin of `Tables.events`: raw-schema probe (the nanosAsLong
-    * session flag covers the nanos generation — ADVICE r7), then the
+    * twin of `Tables.events`: raw-schema probe through `Tables.load`
+    * (inferred once per file version; the nanosAsLong session flag
+    * covers the nanos generation — ADVICE r7), then the
     * same two-generation normalization contract. Shared by every
     * declared streaming query over events (q172/q194/q195/q196). */
   private[graft] def eventStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.load(spark, dir, "events").schema
     val raw = tableStream(spark, dir, "events", schema)
     schema("ts").dataType match {
       case LongType =>
@@ -569,7 +579,7 @@ object StreamingOps {
     * unbounded with the sketch as the only state.
     */
   def q192StreamingKmv(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.documents(spark, dir).schema
     val raw = tableStream(spark, dir, "documents", schema)
     val kmv = udaf(new KmvAgg(2048))
     val agg = raw
@@ -727,11 +737,11 @@ object StreamingOps {
     * at shared storage and REUSES it with the checkpoint across
     * restarts. */
   def q206StreamingSpanIngest(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
+    val table = Tables.documents(spark, dir)
+    val docs = table.select("doc_id", "text")
     val store0 = SpanOps.spanIndex(
       docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L))
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = tableStream(spark, dir, "documents", schema)
+    val stream = tableStream(spark, dir, "documents", table.schema)
       .filter(pmod(col("doc_id"), lit(7L)) === 0L)
       .select("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("graft-spanstore")

@@ -60,6 +60,26 @@ class LrSpec extends AnyFunSuite {
     } finally cached.unpersist()
   }
 
+  test("ragged features read as zero-padded to dim; a null entry fails the fit") {
+    val s = spark
+    import s.implicits._
+    // short rows and an over-long row, against the same rows padded
+    // (and truncated) to dim = 3 by hand
+    val ragged = Seq((1.0, Seq(1.0, 0.8, 0.3)), (0.0, Seq(1.0)), (1.0, Seq(1.0, 0.9)),
+      (0.0, Seq(1.0, 0.2, 0.1)), (1.0, Seq(1.0, 0.7, 0.2, 5.0)))
+    val padded = ragged.map { case (l, f) => (l, f.take(3).padTo(3, 0.0)) }
+    val wR = LrOps.fit(ragged.toDF("label", "f"), dim = 3, epochs = 5)
+    val wP = LrOps.fit(padded.toDF("label", "f"), dim = 3, epochs = 5)
+    assert(wR.toSeq == wP.toSeq)
+    def p(df: org.apache.spark.sql.DataFrame) =
+      LrOps.predict(df, wR).orderBy("label", "p").select("p").as[Double].collect().toSeq
+    assert(p(ragged.toDF("label", "f")) == p(padded.toDF("label", "f")))
+    val withNull = Seq[(Double, Seq[java.lang.Double])]((1.0, Seq(1.0, null)))
+      .toDF("label", "f")
+    val e = intercept[Exception](LrOps.fit(withNull, dim = 2, epochs = 1))
+    assert(e.getMessage.contains("NOT_NULL_ASSERT_VIOLATION"))
+  }
+
   test("q176: distilled classifier beats 0.85 accuracy on its linear target") {
     val r = ops.LrOps.q176LrDistill(spark, dir).head
     val (n, tp, fp, tn, fn) =

@@ -1372,4 +1372,23 @@ class StreamingSpec extends AnyFunSuite {
       finally walked.close()
     }
   }
+
+  test("a drain that sizes the shuffle refuses while another query is active") {
+    // shuffleParts is set on the session, so it would reach the other
+    // query's next batches: the drain must fail before touching the conf
+    val input = MemoryStream[Int](spark)
+    val other = input.toDF().writeStream.format("noop").queryName("other_q").start()
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    try {
+      val agg = StreamingOps.eventStream(spark, SparkTest.sfDir)
+        .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+      val e = intercept[IllegalStateException] {
+        StreamingOps.drainAndClean(spark, agg, "busy", shuffleParts = 3)(identity)
+      }
+      assert(e.getMessage.contains("other_q") && e.getMessage.contains("shuffleParts=3"))
+      assert(spark.conf.get(key) == before)
+      assert(spark.streams.active.map(_.name).toSeq == Seq("other_q"))
+    } finally other.stop()
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Loader contract guard (VERDICT r6 item 7). The driver regenerated
   * `/root/testdata` between rounds and silently flipped `events.ts` from
@@ -116,6 +117,83 @@ class TablesSpec extends AnyFunSuite {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    }
+  }
+
+  /** Jobs started on this thread while `body` runs, counted by a listener.
+    * Listener events arrive asynchronously, so a marker job is run after
+    * `body` and waited for: events are delivered in order, so every job
+    * of `body` has been counted once the marker's start arrives. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"tables-spec-${System.nanoTime()}"
+    val marker = "tables-spec-marker"
+    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try {
+      body
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "marker job never reached the listener")
+      seen.size - 1
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a table's schema is inferred once: a second load starts no Spark job") {
+    val first = Tables.lineitem(spark, dir).schema
+    val jobs = jobsDuring {
+      assert(Tables.lineitem(spark, dir).schema == first)
+    }
+    assert(jobs == 0, s"second load started $jobs job(s) (a footer-read inference)")
+  }
+
+  test("a table rewritten in place with different columns is inferred again") {
+    import java.nio.file.{Files, StandardCopyOption}
+    val s = spark
+    import s.implicits._
+    val tmp = Files.createTempDirectory("graft-tables-rewrite")
+    // a directory of part files, as Spark writes it, and a single file
+    // replaced at the same path (same leaf name, new length and mtime)
+    def writeDir(df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/part.parquet")
+    def writeFile(df: org.apache.spark.sql.DataFrame): Unit = {
+      val out = tmp.resolve("w")
+      df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+      val listed = Files.list(out)
+      val leaf = try listed.iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        finally listed.close()
+      Files.copy(leaf, tmp.resolve("nation.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    try {
+      writeDir(Seq((1L, "a")).toDF("k", "v"))
+      writeFile(Seq((1L, "a")).toDF("k", "v"))
+      assert(Tables.part(spark, tmp.toString).columns.toSeq == Seq("k", "v"))
+      assert(Tables.nation(spark, tmp.toString).columns.toSeq == Seq("k", "v"))
+      writeDir(Seq((2.5, 3, true)).toDF("x", "y", "z"))
+      writeFile(Seq((2.5, 3, true)).toDF("x", "y", "z"))
+      val dirT = Tables.part(spark, tmp.toString)
+      val fileT = Tables.nation(spark, tmp.toString)
+      assert(dirT.columns.toSeq == Seq("x", "y", "z"))
+      assert(fileT.columns.toSeq == Seq("x", "y", "z"))
+      assert(fileT.head() == org.apache.spark.sql.Row(2.5, 3, true))
+    } finally {
+      val walked = Files.walk(tmp)
+      try walked.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walked.close()
     }
   }
 }
