@@ -9,26 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // size the JVM-global generated-class cache to the workload
-      // (static conf; default 100 entries): the 210 declared queries
-      // produce ~4k distinct codegen sources, so at the default every
-      // pass janino-recompiles every stage of every query — measured
-      // r17 (QBenchSub codegen column): q199 re-compiled 154 sources
-      // on EVERY pass, ~3 s of driver time per pass; post-eviction
-      // repeat passes pay ~0.2–0.5 s per query across the whole bench.
-      // Scale-independent driver-side sizing (a production driver
-      // serving many distinct queries wants the same); parameterized.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     // JVM/codegen warmup outside the timed region (driver compares
     // totals across engines; first-query startup noise would dominate)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

@@ -1,18 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Throwaway probe main: smoke-checks SparkEntry.entry the way the driver
   * does (t1: rows > 0 on sf0.001). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4)
     val n = SparkEntry.entry(spark).count()
     println(s"ENTRY_ROWS=$n")
     spark.stop()

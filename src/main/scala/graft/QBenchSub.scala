@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: Bench's exact timing methodology (same session confs, same
+/** Dev tool: Bench's exact timing methodology (same Session.local, same
   * warmup, noop sink, min-of-N passes, persist-delta cleanup) over a
   * SUBSET of declared queries — for before/after measurement of a single
   * optimization without paying a full 210-query window. Usage:
@@ -13,17 +12,7 @@ object QBenchSub {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
     val sc = spark.sparkContext

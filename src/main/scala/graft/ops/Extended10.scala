@@ -282,25 +282,23 @@ object Extended10 {
     * replication ⇒ every cell holds ≥ 1000 identical members at ANY
     * k, ~1e9 forced pairs) collapses to its distinct representatives
     * before a single pair forms, for the price of one hash shuffle on
-    * the vector value (the q24 exact-dedup cost). The env override
-    * SPARK_GRAFT_SEMDEDUP_K remains for probes only. */
+    * the vector value (the q24 exact-dedup cost). */
   def q187SemDedup(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.fanout(Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("e")))
-    semDedupAdaptive(emb, dim = 64, tau = 0.99,
-      kOverride = sys.env.get("SPARK_GRAFT_SEMDEDUP_K").map(_.toInt))
+    semDedupAdaptive(emb, dim = 64, tau = 0.99)
   }
 
   /** The declared adaptive-k entry: collapse, ONE count job sizes
-    * k = max(8, ⌈nReps/256⌉) (unless a probe overrides), and the count
-    * is reused for the training-sample modulus. */
+    * k = max(8, ⌈nReps/256⌉), and the count is reused for the
+    * training-sample modulus. */
   private[graft] def semDedupAdaptive(emb: DataFrame, dim: Int,
-      tau: Double, kOverride: Option[Int] = None): DataFrame = {
+      tau: Double): DataFrame = {
     val reps = collapseExact(emb).persist()
     try {
       val nReps = reps.count()
-      val k = kOverride.getOrElse(semDedupK(nReps))
+      val k = semDedupK(nReps)
       semDedupOnReps(reps, k, dim, tau, knownCount = Some(nReps))
     } finally reps.unpersist()
   }
@@ -630,7 +628,7 @@ object Extended10 {
   }
 
   /** Un-checkpointed q190 plan + the frames it persisted, so the spec
-    * and QPlan can audit the REAL dataflow (the declared query
+    * can audit the REAL dataflow (the declared query
     * localCheckpoints, which hides the plan behind an RDD scan). */
   private[graft] def q190Plan(spark: SparkSession,
       dir: String): (DataFrame, Seq[DataFrame]) =
@@ -878,24 +876,17 @@ object Extended10 {
     * (≡ 0 mod 7) another — merged on read, so the answer is EXACTLY
     * q190's and shares its oracle verbatim (the q172/q206 precedent:
     * same contract, different mechanism — here the mechanism is the
-    * segment lifecycle). Segments derive inline by default (testdata
-    * ships no index); a pre-built store plugs in via the
-    * `graft.sparse.store` property / SPARK_GRAFT_SPARSE_STORE env var
-    * naming a table prefix P → tables P_postings and P_stats (the
-    * pair sparseIndexAppend maintains). */
+    * segment lifecycle). Segments derive inline (testdata ships no
+    * index); serving from the stored P_postings/P_stats pair that
+    * sparseIndexAppend maintains is measured in BASELINE.md's "q207
+    * tier probe". */
   def q207Bm25Incr(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanout(
       Tables.documents(spark, dir).select("doc_id", "text"))
-    val (postings, segStats) = sys.props.get("graft.sparse.store")
-      .orElse(sys.env.get("SPARK_GRAFT_SPARSE_STORE")) match {
-        case Some(p) => (spark.table(s"${p}_postings"),
-          spark.table(s"${p}_stats"))
-        case None =>
-          val store = docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L)
-          val batch = docs.filter(pmod(col("doc_id"), lit(7L)) === 0L)
-          (sparseIndex(store).union(sparseIndex(batch)),
-            sparseStats(store).union(sparseStats(batch)))
-      }
+    val store = docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L)
+    val batch = docs.filter(pmod(col("doc_id"), lit(7L)) === 0L)
+    val postings = sparseIndex(store).union(sparseIndex(batch))
+    val segStats = sparseStats(store).union(sparseStats(batch))
     // ≤ 20 distinct terms BY CONSTRUCTION (5 queries × ≤4 tokens) —
     // the bm25VsIndex contract (ADVICE r14/r15): the guard is 20, not
     // 64, because the staged-division BIGINT headroom analysis in the
@@ -1424,9 +1415,9 @@ object Extended10 {
     * crossJoin expand, no shuffle, and at ingest it is the WRITE path:
     * [[ivfIndex]]'s output persisted partitioned by `cell` makes the
     * query-side read prune to nProbe cells (nProbe/nCells of the
-    * corpus — the QIvfProbe 100×/1000× harness measures both the
-    * amortized-index query and the inline build+query against brute
-    * q197). Candidates quantize AFTER pruning, so the int8 map also
+    * corpus — BASELINE_ARCHIVE.md's q199 100×/1000× tier tables give
+    * both the amortized-index query and the inline build+query against
+    * brute q197). Candidates quantize AFTER pruning, so the int8 map also
     * runs on nProbe/nCells of the corpus per query. No DuckDB oracle:
     * the cell boundaries are float k-means fixpoints (q45/q108
     * precedent) — correctness is pinned by RrfSpec's exactness-at-
@@ -1495,9 +1486,9 @@ object Extended10 {
     * Scale: append cost ∝ batch, not corpus — one argmin pass over the
     * batch (k·d centroids ride the closure) and one partitioned write
     * of batch-sized files into the cell directories; the stored index
-    * is never read, never shuffled, never rewritten (QIvfProbe's
-    * `append` stage measures this against the full rebuild at the
-    * 100×/1000× tiers). The drift audit reads each side once; over a
+    * is never read, never shuffled, never rewritten (measured against
+    * the full rebuild in BASELINE_ARCHIVE.md's "q200 append, 100×
+    * tier"). The drift audit reads each side once; over a
     * STORED index the stored-side error is a k-free per-row lookup of
     * the row's own cell centroid, while this declared INLINE
     * composition derives the stored side's (cell, d2) from one argmin

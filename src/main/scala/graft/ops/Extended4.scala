@@ -239,7 +239,6 @@ object Extended4 {
     * α = ⌈t(|a|+|b|)/(1+t)⌉ (the intersection a Jaccard ≥ t needs).
     * Pairs at or above t always get their exact value — the abort can
     * only fire on pairs the filter would drop anyway. */
-  private[graft] def devJaccardAbort(t: Double) = jaccardSortedAbort(t)
   private def jaccardSortedAbort(t: Double) = udf {
     (a: Seq[String], b: Seq[String]) =>
       val na = a.length; val nb = b.length

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * RE-RUNS that compute: once for the sample, once for the shuffle.
   * Measured: q193's Bloom probe twice (two ~410 s-CPU stages at 100×),
   * q93's 3-gram scoring twice (31 of 88 CPU-s was the re-run). The
-  * QSortAudit dev tool lists every declared sort's recomputed chain.
+  * round-10 audit of every declared sort's recomputed chain is in
+  * BASELINE_ARCHIVE.md ("Sort-sampling double-compute").
   *
   * `cachedOrderBy` caches the pre-sort rows — the query's OUTPUT, the
   * smallest relation in the plan — so the sampling pass reads the cache

@@ -349,10 +349,6 @@ object PqOps {
     pqAdcQueryCodes(emb, codes, model, qvecs, topR, depth)
   }
 
-  /** The scan + refinement half over a PREBUILT (id, code) frame —
-    * the production serving shape (codes stored once at ingest, read
-    * as an 8-byte column per query) and QPqProbe's stored-codes
-    * stage; [[pqAdcQuery]] is the inline composition. */
   /** The ADC scan + map-side top-R frame over a (id, code) corpus —
     * exposed so PqSpec can pin its plan shape (WindowGroupLimit
     * rank-limit pushdown, broadcast query fanout, codes-only scan). */
@@ -374,6 +370,10 @@ object PqOps {
       .select(col("q_id"), col("id"), col("adc_d2"))
   }
 
+  /** The scan + refinement half over a PREBUILT (id, code) frame —
+    * the production serving shape (codes stored once at ingest, read
+    * as an 8-byte column per query); [[pqAdcQuery]] is the inline
+    * composition. */
   private[graft] def pqAdcQueryCodes(emb: DataFrame, codes: DataFrame,
       model: PqModel, qvecs: Array[(Long, Array[Double])], topR: Int,
       depth: Int): DataFrame = {
@@ -416,8 +416,8 @@ object PqOps {
   /** q201 — exhaustive PQ/ADC retrieval over the embeddings table:
     * train 8 × ks codebooks (ks = 16 at grid scale — each subspace of
     * the ≤2k-vector grid supports ~2k/128 ≈ 16 meaningful cells; 256
-    * is the published 100 TB setting, reachable via the probe-only
-    * SPARK_GRAFT_PQ_KS override, the SEMDEDUP_K precedent), encode the
+    * is the published 100 TB setting, measured at 200k distinct
+    * vectors in BASELINE.md's "PQ append tier"), encode the
     * corpus into one BIGINT per vector, ADC-rank ALL vectors for the 5
     * lowest-id queries, exact-rerank the top-32 and emit the top-10.
     * Rows-only (float codebooks). */
@@ -428,8 +428,7 @@ object PqOps {
       .filter(size(col("e")) === 64)
       .persist()
     try {
-      val ks = sys.env.get("SPARK_GRAFT_PQ_KS").map(_.toInt).getOrElse(16)
-      val model = pqTrain(emb, dim = 64, m = 8, ks = ks)
+      val model = pqTrain(emb, dim = 64, m = 8, ks = 16)
       // 5 query vectors, collected driver-side (5·64 doubles — the
       // model-artifact class; a query-vector DataFrame would cost one
       // fat corpus scan per consumer, the r11 lesson)

@@ -649,27 +649,16 @@ object SemStoreOps {
     * with vec_id ≡ 0 (mod 7) arrive as the batch (the q203 split),
     * the rest build the standing cells+reps store. Emits the per-cell
     * probe audit (cid, n_store, n_batch, n_dropped). Store derived
-    * inline by default (testdata ships no store — the q200/q203
-    * precedent); a pre-built store plugs in via the `graft.sem.store`
-    * property / SPARK_GRAFT_SEM_STORE env var naming a table prefix
-    * P → tables P_reps (cid, id, e, cnt) and P_model (tcid, sub, k2,
-    * ce — [[semModelRows]]'s shape, flat or two-level) — the pair
-    * [[semStoreAppend]] + the QSemProf maintenance tier maintain — so
-    * the declared query runs EXACTLY the stored-table path with the
-    * exact build-time assignment. Rows-only (float cells). */
+    * inline (testdata ships no store — the q200/q203 precedent); the
+    * stored-table pair [[semStoreAppend]] maintains is measured in
+    * BASELINE.md's "q208 maintenance tier". Rows-only (float cells). */
   def q208SemDedupIncr(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.fanout(Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("e")))
     val batch = emb.filter(pmod(col("id"), lit(7L)) === 0L)
-    val (model, reps) = sys.props.get("graft.sem.store")
-      .orElse(sys.env.get("SPARK_GRAFT_SEM_STORE")) match {
-        case Some(p) =>
-          (loadStoredModel(spark, p), spark.table(s"${p}_reps"))
-        case None =>
-          semStoreBuild(emb.filter(pmod(col("id"), lit(7L)) =!= 0L),
-            dim = 64)
-      }
+    val (model, reps) =
+      semStoreBuild(emb.filter(pmod(col("id"), lit(7L)) =!= 0L), dim = 64)
     semDedupVsStore(batch, model, reps)
   }
 

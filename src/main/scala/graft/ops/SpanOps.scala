@@ -126,8 +126,8 @@ object SpanOps {
       // NOT cachedOrderBy (the Out.scala criterion): the output carries
       // the full rewritten corpus — long-string columns cache worse
       // than the sampling pass's recompute of the assembly tail (the
-      // q62 redacted-corpus precedent, 1.4× at 1000×). QSortAudit:
-      // the sampled chain starts at the fanout shuffle, so the replay
+      // q62 redacted-corpus precedent, 1.4× at 1000×). The sampled
+      // chain starts at the fanout shuffle, so the replay
       // is tokenize + kept-filter over map outputs — never the scan,
       // and never the digest pass (cached)
       .orderBy("doc_id")
@@ -310,7 +310,8 @@ object SpanOps {
     * so future probes stay store-shuffle-free). Cost ∝ batch digests:
     * one anti-join against the bucketed store + one batch-sized
     * bucketed write — the standing index is never rescanned or
-    * rewritten (QSpanProbe times this against the full rebuild). */
+    * rewritten (100× dup: 2.4 s vs 12.6 s for the full rebuild,
+    * BASELINE.md round 14). */
   private[graft] def spanIndexAppend(spark: SparkSession, batch: DataFrame,
       table: String, nBuckets: Int = 32): Unit =
     // materialize the (batch-sized) delta before writing — the write
@@ -400,43 +401,26 @@ object SpanOps {
   /** q203 — incremental span dedup over the documents table: docs with
     * doc_id ≡ 0 (mod 7) arrive as the new batch, the rest are the
     * standing corpus whose digest index exists from its own ingest.
-    * The index is derived inline by default — testdata ships no stored
-    * index; the q200 declared-query precedent — but a pre-built store
-    * (parquet path or bucketed table) can be supplied via the
-    * `graft.span.store` system property or `SPARK_GRAFT_SPAN_STORE`
-    * env var, so the declared query and QSpanProbe's bucketed
-    * maintenance tier run EXACTLY this code path. Location syntax is
-    * [[ScaleOps.loadStore]]: explicit "parquet:<path>"/"table:<name>"
-    * schemes, with the legacy '/'-heuristic for bare values.
-    * (Same digest-persist caller contract as q202.) */
+    * The index is derived inline — testdata ships no stored index; the
+    * q200 declared-query precedent. The stored-index probe is
+    * [[spanDedupVsStore]] over any store frame. (Same digest-persist
+    * caller contract as q202.) */
   def q203SpanDedupIncr(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val batch = docs.filter(pmod(col("doc_id"), lit(7L)) === 0L)
-    val store = sys.props.get("graft.span.store")
-      .orElse(sys.env.get("SPARK_GRAFT_SPAN_STORE")) match {
-        case Some(loc) => ScaleOps.loadStore(spark, loc)
-        case None =>
-          spanIndex(docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L))
-      }
+    val store = spanIndex(docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L))
     spanDedupVsStore(batch, store)
   }
 
   /** q205 — incremental keep-first span dedup over the documents table
     * (the q203 mod-7 split applied to the q204 policy): the batch
-    * dedups against the standing corpus's KEYED span index. Index
-    * derived inline by default; a pre-built keyed store (parquet path
-    * or bucketed table, possibly uncompacted — merge-on-read) plugs in
-    * via the `graft.span.kstore` property / `SPARK_GRAFT_SPAN_KSTORE`
-    * env var. (Same digest-persist caller contract as q202.) */
+    * dedups against the standing corpus's KEYED span index, derived
+    * inline. (Same digest-persist caller contract as q202.) */
   def q205SpanDedupKeepOneIncr(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val batch = docs.filter(pmod(col("doc_id"), lit(7L)) === 0L)
-    val store = sys.props.get("graft.span.kstore")
-      .orElse(sys.env.get("SPARK_GRAFT_SPAN_KSTORE")) match {
-        case Some(loc) => ScaleOps.loadStore(spark, loc)
-        case None =>
-          spanIndexKeyed(docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L))
-      }
+    val store =
+      spanIndexKeyed(docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L))
     spanDedupKeepFirstVsStore(batch, store)
   }
 

@@ -213,26 +213,6 @@ object StreamingOps {
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"), col("segment"))
 
-  /** q172 — a REAL Structured Streaming run, oracle-checked: the events
-    * table replayed through `readStream` with `Trigger.AvailableNow`
-    * into the q28 tumbling aggregation and a memory sink, returned as
-    * the finished batch result. AvailableNow processes everything
-    * available then stops — the incremental-backfill posture (at scale:
-    * the same code runs unbounded with the watermark bounding state;
-    * here Complete mode emits every window, so the finished result is
-    * EXACTLY q28's batch answer and shares its DuckDB oracle — the
-    * driver's t2 hash-compare therefore covers the streaming path
-    * end-to-end, not just spec assertions). Checkpoint lives in a fresh
-    * java.io.tmpdir directory (no driver contract needed; AvailableNow
-    * finishes, so the checkpoint is single-use by construction). */
-  /** File-stream a parquet table that may be a single FILE (shipped
-    * testdata) or a DIRECTORY of part files (any Spark-written table,
-    * e.g. the QScale probes). The source requires a directory path:
-    * for a file, stream the parent glob-filtered down to the table;
-    * for a directory, stream the directory itself — a glob on the
-    * parent would match nothing there, because pathGlobFilter tests
-    * LEAF file paths (part-*.parquet), silently producing an empty
-    * stream (found live by the 1000× probe on q192). */
   /** An empty batch frame with the given schema — the analysis-only
     * probe both ingest operators (and their specs) use to derive the
     * drain's output schema without running a job (code review r15b:
@@ -261,6 +241,15 @@ object StreamingOps {
       finally walked.close()
     }
 
+  /** File-stream a parquet table that may be a single FILE (shipped
+    * testdata) or a DIRECTORY of part files (any Spark-written table,
+    * e.g. the replicated 10×–1000× scale tiers). The source requires
+    * a directory path: for a file, stream the parent glob-filtered
+    * down to the table; for a directory, stream the directory itself
+    * — a glob on the parent would match nothing there, because
+    * pathGlobFilter tests LEAF file paths (part-*.parquet), silently
+    * producing an empty stream (found live by the 1000× probe on
+    * q192). */
   private def tableStream(spark: SparkSession, dir: String, table: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
@@ -304,7 +293,7 @@ object StreamingOps {
     * mode or the cluster). Why it matters for STREAMING specifically:
     * each stateful operator keeps one state-store instance PER SHUFFLE
     * PARTITION, each paying per-trigger provider/commit overhead
-    * regardless of rows (QJoinProf r9 measured q195's symmetric-hash
+    * regardless of rows (round 9 measured q195's symmetric-hash
     * join: 4 stores/partition — summed commit 75–90 s/batch at 32
     * partitions for 40k state rows, ~6 s at 8, ~0.9 s at 2), streaming
     * has NO AQE to coalesce post-shuffle partitions, and the
@@ -478,6 +467,18 @@ object StreamingOps {
     }
   }
 
+  /** q172 — a REAL Structured Streaming run, oracle-checked: the events
+    * table replayed through `readStream` with `Trigger.AvailableNow`
+    * into the q28 tumbling aggregation and a memory sink, returned as
+    * the finished batch result. AvailableNow processes everything
+    * available then stops — the incremental-backfill posture (at scale:
+    * the same code runs unbounded with the watermark bounding state;
+    * here Complete mode emits every window, so the finished result is
+    * EXACTLY q28's batch answer and shares its DuckDB oracle — the
+    * driver's t2 hash-compare therefore covers the streaming path
+    * end-to-end, not just spec assertions). Checkpoint lives in a fresh
+    * java.io.tmpdir directory (no driver contract needed; AvailableNow
+    * finishes, so the checkpoint is single-use by construction). */
   def q172StreamingAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val agg = eventStream(spark, dir)
       .groupBy(window(col("ts"), "1 hour").as("w"))

@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions.col
   * grows with trigger count (one tiny segment per trigger, per-file
   * open overhead ∝ T); [[maintain]] bounds live segments at
   * maxSegments+1, the sparseMaintain merge-policy shape, so per-trigger
-  * probe cost stays flat in trigger count (QStreamProf's ingest stage
-  * measures exactly this). */
+  * probe cost stays flat in trigger count (measured over 30 triggers:
+  * BASELINE.md, "VersionedStore merge policy probe"). */
 object VersionedStore {
 
   /** Write the standing corpus's artifact as segment `init`
@@ -99,8 +99,8 @@ object VersionedStore {
     * carries no catalog bucket spec, so this removes the probe's
     * listing/open cost and restores one sorted run per hash partition,
     * NOT the join shuffle — the shuffle-free serving tier remains the
-    * bucketed TABLE stores (sigStoreAppend/spanIndexAppend; QSigProbe
-    * pins that regime).
+    * bucketed TABLE stores (sigStoreAppend/spanIndexAppend; measured
+    * store-shuffle-free at 100× in BASELINE.md round 14).
     *
     * Crash-safe (the LSM-manifest order, and the answer to the
     * sparseStoreCompact crash-window ADVICE): the folded copy is fully

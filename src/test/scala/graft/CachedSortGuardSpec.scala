@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * q62's redacted text 1.4× — so those sites were reverted to plain
   * orderBy; the criterion lived only in comments and BASELINE.md prose
   * until this spec. It walks every declared query's physical plan
-  * (AQE off, QSortAudit's view), finds range-partitioning sorts whose
+  * (AQE off), finds range-partitioning sorts whose
   * sampling chain is headed by an InMemoryTableScan (= a cachedOrderBy
   * site), and bounds every string column of the cached schema by the
   * observed max length at sf0.001 — so the q37/q62 regression shape

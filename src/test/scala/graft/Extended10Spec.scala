@@ -56,7 +56,7 @@ class Extended10Spec extends AnyFunSuite {
     assert(Extended10.semDedupK(2048) == 8)
     assert(Extended10.semDedupK(2049) == 9)
     assert(Extended10.semDedupK(2000000) == 7813)
-    // adaptive entry (kOverride = None) on the planted cones: same
+    // adaptive entry on the planted cones: same
     // count laws as the explicit-k pins
     val out = Extended10.semDedupAdaptive(planted(dups = 4), dim = 8,
       tau = 0.99).collect()

@@ -48,7 +48,7 @@ class SimilaritySpec extends AnyFunSuite {
     // portable md5 path (q25 — the oracle-checkable one). Different hash
     // families make different banding luck on borderline pairs, so the
     // pin is the honest law, not set identity (measured at sf0.1:
-    // |sym-diff| ≈ 3% of ~5.8k pairs; MinhashTwinBench): each instance
+    // |sym-diff| ≈ 3% of ~5.8k pairs; SCALING.md): each instance
     // recovers ≥90% of the planted pairs, and the two pair sets overlap
     // on ≥90% of their union.
     val base = Tables.documents(spark, dir).select("doc_id", "text")

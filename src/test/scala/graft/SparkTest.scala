@@ -4,17 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession across all suites (startup costs ~10s). */
 object SparkTest {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(4)
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Generate GENUINELY-DISTINCT embedding probe corpora (r12).
 
-QScale tiers replicate identical vectors with shifted ids, so at any
-replication factor a SemDeDup-style exact-collapse reduces them to the
-base 2,000 representatives — useful for dup-heavy-corpus probes,
+The replicated scale tiers (10×–1000× copies of an sf dir) repeat
+identical vectors with shifted ids, so at any replication factor a
+SemDeDup-style exact-collapse reduces them to the base 2,000
+representatives — useful for dup-heavy-corpus probes,
 useless for exercising adaptive-k / two-level-quantizer behavior.
 These corpora are 40 loose gaussian cones (so k-means has real density
 shape), all vectors distinct, deterministic (seed 42).
