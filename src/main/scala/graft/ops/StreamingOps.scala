@@ -259,23 +259,6 @@ object StreamingOps {
     else rdr.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
-  /** Drain an AvailableNow query DISTRIBUTED and CLEAN UP: foreachBatch
-    * writes each trigger's result to a temp parquet dir on the
-    * EXECUTORS (Complete overwrites with the full result, append
-    * appends the newly-emitted rows), the drained table is read back
-    * with the aggregate's own schema, `finish` materializes off it,
-    * and the single-use checkpoint + sink dirs are deleted (the
-    * leak fix, ADVICE r8).
-    *
-    * Until round 9 this used the MEMORY sink — a hidden
-    * collect-to-driver: Complete mode retains the entire result in
-    * driver memory, which is fine for dimension-sized results
-    * (q172's 720 windows, q192's 20 sketches, q196's 5 segments) but
-    * OOMs spark.driver.maxResultSize the moment the result is
-    * data-sized — the 100× probe killed q194 (per-user sessions,
-    * 1 GB of task results) exactly there, masked at sf scales by
-    * small outputs. foreachBatch keeps the whole drain path
-    * distributed, the posture every other operator already has. */
   /** Bytes on disk under `dir/table.parquet` (file or directory) — the
     * cheap input-volume probe [[drainParts]] sizes from. */
   private[graft] def tableBytes(spark: SparkSession, dir: String,
@@ -314,6 +297,40 @@ object StreamingOps {
     math.max(2L, math.min((bytes + grain - 1L) / grain, cap)).toInt
   }
 
+  /** Drain an AvailableNow query DISTRIBUTED and CLEAN UP: foreachBatch
+    * writes each trigger's result to a temp parquet dir on the
+    * EXECUTORS (Complete overwrites with the full result, append
+    * appends the newly-emitted rows), the drained table is read back
+    * with the aggregate's own schema, `finish` materializes off it,
+    * and the single-use checkpoint + sink dirs are deleted (the
+    * leak fix, ADVICE r8).
+    *
+    * Until round 9 this used the MEMORY sink — a hidden
+    * collect-to-driver: Complete mode retains the entire result in
+    * driver memory, which is fine for dimension-sized results
+    * (q172's 720 windows, q192's 20 sketches, q196's 5 segments) but
+    * OOMs spark.driver.maxResultSize the moment the result is
+    * data-sized — the 100× probe killed q194 (per-user sessions,
+    * 1 GB of task results) exactly there, masked at sf scales by
+    * small outputs. foreachBatch keeps the whole drain path
+    * distributed, the posture every other operator already has.
+    *
+    * Spark runs the query in a session cloned at `start()`, whose conf
+    * is a snapshot of this session's. Two confs are set for the drain
+    * and then restored to exactly their prior state (unset stays unset):
+    *  - `spark.sql.artifact.isolation.enabled=false`, around `start()`
+    *    only. An isolated clone gets a new artifact UUID and so a new
+    *    executor class loader, and `CodeGenerator`'s cache is keyed on
+    *    the class loader: every drain recompiled byte-identical
+    *    whole-stage classes (q172: 12 per call). No code here adds
+    *    session artifacts, so the shared loader loses nothing.
+    *  - `spark.sql.streaming.checkpointFileManagerClass` =
+    *    [[NioCheckpointFileManager]], for the whole drain, because some
+    *    checkpoint logs are opened after `start()` from this session's
+    *    conf. The checkpoint is a local temp dir made here, and without
+    *    Hadoop's native library the default manager forks a `chmod`,
+    *    `stat` or `readlink` process per checkpoint file it writes
+    *    (~0.2 s of a q172 call). */
   private[graft] def drainAndClean(spark: SparkSession, agg: DataFrame,
       name: String, outputMode: String = "complete",
       // scale-adaptive shuffle/state partition count for this drain
@@ -350,6 +367,9 @@ object StreamingOps {
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.get(partsKey)
     if (shuffleParts > 0) spark.conf.set(partsKey, shuffleParts.toString)
+    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
+    val prevManager = confSetting(spark, managerKey)
+    spark.conf.set(managerKey, classOf[NioCheckpointFileManager].getName)
     // held for the finally: on a mid-drain failure the drain's OWN
     // query is still in spark.streams.active — the concurrency WARN
     // below must not misreport it as an "other" query, and it must be
@@ -360,6 +380,9 @@ object StreamingOps {
     // deletes the two dirs just created — otherwise each failed call
     // leaks a ckpt+sink pair in /tmp
     try {
+      val isolationKey = "spark.sql.artifact.isolation.enabled"
+      val prevIsolation = confSetting(spark, isolationKey)
+      spark.conf.set(isolationKey, "false")
       // Complete re-emits the FULL result each trigger → keep the last
       // (overwrite of the sink root); append and update emit
       // per-trigger deltas → keep them all, each batch in its OWN
@@ -372,16 +395,18 @@ object StreamingOps {
       // a checkpoint is reused, ADVICE r9). overwrite-into-b<id>
       // replays to the identical sink state.
       val complete = outputMode == "complete"
-      val sq = agg.writeStream
-        .outputMode(outputMode)
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val target = if (complete) sink.toString
-                       else s"$sink/b$batchId"
-          perBatch(df, batchId).write.mode("overwrite").parquet(target)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      val sq =
+        try agg.writeStream
+          .outputMode(outputMode)
+          .foreachBatch { (df: DataFrame, batchId: Long) =>
+            val target = if (complete) sink.toString
+                         else s"$sink/b$batchId"
+            perBatch(df, batchId).write.mode("overwrite").parquet(target)
+          }
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        finally restoreConf(spark, isolationKey, prevIsolation)
       own = Some(sq)
       sq.awaitTermination()
       // explicit schema: a drain whose every batch emitted zero rows
@@ -392,6 +417,7 @@ object StreamingOps {
         .localCheckpoint()
     } finally {
       if (shuffleParts > 0) spark.conf.set(partsKey, prevParts)
+      restoreConf(spark, managerKey, prevManager)
       // Unload the query's state store providers BEFORE deleting its
       // dirs / letting the JVM exit: Spark keeps providers (and their
       // maintenance + RocksDB background compaction threads) loaded
@@ -443,6 +469,19 @@ object StreamingOps {
     }
   }
 
+  /** The value `key` is explicitly set to, or None when it is unset.
+    * `getOption` returns a registered conf's default instead, and
+    * restoring that would leave an unset conf set. */
+  private def confSetting(spark: SparkSession, key: String): Option[String] =
+    spark.conf.getAll.get(key)
+
+  /** Puts `key` back to a [[confSetting]]: set to its value, or unset. */
+  private def restoreConf(spark: SparkSession, key: String,
+      prev: Option[String]): Unit = prev match {
+    case Some(v) => spark.conf.set(key, v)
+    case None => spark.conf.unset(key)
+  }
+
   /** The events table as a ts-normalized file STREAM — the readStream
     * twin of `Tables.events`: raw-schema probe through `Tables.load`
     * (inferred once per file version; the nanosAsLong session flag
@@ -469,11 +508,12 @@ object StreamingOps {
 
   /** q172 — a REAL Structured Streaming run, oracle-checked: the events
     * table replayed through `readStream` with `Trigger.AvailableNow`
-    * into the q28 tumbling aggregation and a memory sink, returned as
-    * the finished batch result. AvailableNow processes everything
-    * available then stops — the incremental-backfill posture (at scale:
-    * the same code runs unbounded with the watermark bounding state;
-    * here Complete mode emits every window, so the finished result is
+    * into the q28 tumbling aggregation and [[drainAndClean]]'s
+    * foreachBatch parquet sink, returned as the finished batch result.
+    * AvailableNow processes everything available then stops — the
+    * incremental-backfill posture (at scale: the same code runs
+    * unbounded with the watermark bounding state; here Complete mode
+    * emits every window, so the finished result is
     * EXACTLY q28's batch answer and shares its DuckDB oracle — the
     * driver's t2 hash-compare therefore covers the streaming path
     * end-to-end, not just spec assertions). Checkpoint lives in a fresh
@@ -656,7 +696,7 @@ object StreamingOps {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.config.Configurator
     val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
+    val prev = confSetting(spark, key)
     val logName = "org.apache.spark.sql.execution.streaming.state.RocksDB"
     // restore-by-removal when the level was INHERITED (ADVICE r9):
     // Configurator.setLevel materializes a LoggerConfig for logName if
@@ -681,10 +721,7 @@ object StreamingOps {
         ctx.getConfiguration.removeLogger(logName)
         ctx.updateLoggers()
       }
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+      restoreConf(spark, key, prev)
     }
   }
 

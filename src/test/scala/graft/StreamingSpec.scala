@@ -1391,4 +1391,50 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.streams.active.map(_.name).toSeq == Seq("other_q"))
     } finally other.stop()
   }
+
+  test("a second q172 drain on the same session compiles no classes") {
+    // every drain runs in a session cloned at start(); an artifact-isolated
+    // clone gets a new executor class loader, and the codegen cache is keyed
+    // on the loader, so each call would recompile the same classes
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def drain() = StreamingOps.q172StreamingAvailableNow(spark, SparkTest.sfDir)
+      .collect().map(_.toSeq).toSeq
+    val first = drain()
+    val before = compiles()
+    val second = drain()
+    assert(compiles() - before == 0)
+    assert(second == first)
+  }
+
+  test("drainAndClean leaves the clone confs as it found them, on success and on a start() failure") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+    val keys = Seq("spark.sql.artifact.isolation.enabled",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    def state: Seq[Option[String]] = keys.map(spark.conf.getAll.get)
+    def put(s: Seq[Option[String]]): Unit = keys.zip(s).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val ev = StreamingOps.eventStream(spark, SparkTest.sfDir)
+    val counts = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    // append of an aggregation without a watermark: start() rejects it
+    val unwatermarked = ev.groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"))
+    val initial = state
+    try Seq(Seq(None, None),
+        Seq(Some("true"), Some(classOf[FileContextBasedCheckpointFileManager].getName)))
+      .foreach { start =>
+        put(start)
+        assert(StreamingOps.drainAndClean(spark, counts, "confs_ok")(identity).count() > 0)
+        assert(state == start)
+        intercept[AnalysisException] {
+          StreamingOps.drainAndClean(spark, unwatermarked, "confs_bad",
+            outputMode = "append")(identity)
+        }
+        assert(state == start)
+      }
+    finally put(initial)
+  }
 }
