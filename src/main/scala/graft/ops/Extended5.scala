@@ -26,33 +26,42 @@ object Extended5 {
     * semantics: first view, first click in the day after that view,
     * first purchase in the day after that click — the window is what
     * makes the funnel discriminate; unbounded, every active user
-    * trivially completes it). Each stage is one filtered aggregate
-    * joined to the previous stage's per-user times — the stage tables
-    * shrink monotonically (150 → 60 → 25 at sf0.01) and only
-    * (user_id, ts) pairs shuffle, never event payloads. Timestamp
+    * trivially completes it). All three stages come from ONE shuffle
+    * by user: t1, t2 and t3 are per-user `min(when(...))` windows (no
+    * order, so each is the whole user's minimum), one aggregate per
+    * user runs on the same partitioning, and one global count gives
+    * the three stage sizes (150 → 60 → 25 at sf0.01). The oracle's
+    * `JOIN … USING (user_id)` never matches a null user, so a null
+    * user can reach "view" only; a user whose views all have a null
+    * ts still reaches it, as the oracle's GROUP BY counts them. Window
+    * buffers spill, so a heavy user stays memory-bounded. Timestamp
     * arithmetic is exact integer micros on both engines. */
   def q130Funnel(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.fanout(Tables.events(spark, dir)
-      .select("user_id", "event_type", "ts"))
-    val t1 = ev.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min("ts").as("t1"))
-    val t2 = ev.filter(col("event_type") === "click")
-      .join(t1, "user_id")
-      .filter(col("ts") > col("t1") &&
-        col("ts") <= col("t1") + expr("INTERVAL 24 HOURS"))
-      .groupBy("user_id").agg(min("ts").as("t2"))
-    val t3 = ev.filter(col("event_type") === "purchase")
-      .join(t2, "user_id")
-      .filter(col("ts") > col("t2") &&
-        col("ts") <= col("t2") + expr("INTERVAL 24 HOURS"))
-      .groupBy("user_id").agg(min("ts").as("t3"))
-    def stage(df: DataFrame, idx: Int, name: String) =
-      df.agg(count(lit(1)).as("n_users"))
-        .select(lit(idx).as("stage_idx"), lit(name).as("stage"),
-          col("n_users"))
-    stage(t1, 1, "view")
-      .unionByName(stage(t2, 2, "click"))
-      .unionByName(stage(t3, 3, "purchase"))
+    val byUser = Window.partitionBy("user_id")
+    // the first `kind` event in the 24 h after `from`
+    def next(kind: String, from: String): Column =
+      min(when(col("user_id").isNotNull && col("event_type") === kind &&
+        col("ts") > col(from) &&
+        col("ts") <= col(from) + expr("INTERVAL 24 HOURS"), col("ts")))
+    val users = Tables.events(spark, dir)
+      .select("user_id", "event_type", "ts")
+      .withColumn("t1",
+        min(when(col("event_type") === "view", col("ts"))).over(byUser))
+      .withColumn("t2", next("click", "t1").over(byUser))
+      .withColumn("t3", next("purchase", "t2").over(byUser))
+      .withColumn("viewed", when(col("event_type") === "view", 1))
+      .groupBy("user_id")
+      .agg(max("viewed").as("viewed"), max("t2").as("t2"),
+        max("t3").as("t3"))
+    val n = users.agg(count("viewed").as("n1"),
+      count("t2").as("n2"), count("t3").as("n3"))
+    n.select(explode(array(
+        Seq((1, "view", "n1"), (2, "click", "n2"), (3, "purchase", "n3"))
+          .map { case (idx, name, c) =>
+            struct(lit(idx).as("stage_idx"), lit(name).as("stage"),
+              col(c).as("n_users"))
+          }: _*)).as("s"))
+      .select("s.*")
       .orderBy("stage_idx")
   }
 

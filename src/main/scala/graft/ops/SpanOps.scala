@@ -354,8 +354,8 @@ object SpanOps {
     * segment b<id>. Idempotent under replay — the probe excludes b<id>
     * and the fold rewrites it with the same deterministic content, so
     * a batch that wrote-then-died before its WAL commit replays to the
-    * identical sink AND store state. Per-trigger work ∝ batch (probe
-    * semi-join + batch-sized delta write); the standing segments are
+    * identical kept batch AND store state. Per-trigger work ∝ batch
+    * (probe semi-join + batch-sized delta write); the standing segments are
     * never rewritten by the fold — past `maxSegments` live segments
     * the [[VersionedStore.maintain]] merge policy folds them into one
     * digest-laid-out compacted generation (∝ store, amortized;
@@ -363,9 +363,9 @@ object SpanOps {
     * batch's id are folded), so probe cost stays flat in trigger
     * count. Returns a stateful closure: each trigger also frees the
     * previous trigger's localCheckpoint blocks (ADVICE r15 — RDD
-    * blocks survive catalog.clearCache(); the previous sink frame has
-    * been written by the time the next trigger runs, foreachBatch
-    * being sequential). */
+    * blocks survive catalog.clearCache(); the drain has checkpointed
+    * its own copy of the previous frame by the time the next trigger
+    * runs, foreachBatch being sequential). */
   private[graft] def spanIngestTrigger(spark: SparkSession, root: String,
       maxSegments: Int = 8): (DataFrame, Long) => DataFrame = {
     var lastOut: Option[DataFrame] = None

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoders => SqlEncoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import scala.jdk.CollectionConverters._
 
 /** Latest-event state per (user_id, event_type) — the streaming shape of
   * the reference's Redis upsert (SURVEY.md §2.1 R10). */
@@ -298,12 +299,12 @@ object StreamingOps {
   }
 
   /** Drain an AvailableNow query DISTRIBUTED and CLEAN UP: foreachBatch
-    * writes each trigger's result to a temp parquet dir on the
-    * EXECUTORS (Complete overwrites with the full result, append
-    * appends the newly-emitted rows), the drained table is read back
-    * with the aggregate's own schema, `finish` materializes off it,
-    * and the single-use checkpoint + sink dirs are deleted (the
-    * leak fix, ADVICE r8).
+    * local-checkpoints each trigger's result into blocks on the
+    * EXECUTORS, kept per batchId (Complete keeps only the latest, since
+    * it re-emits the full result; append and update keep every delta),
+    * and the drain returns `finish` over the union of the kept batches,
+    * lazily. The single-use checkpoint dir is deleted (the leak fix,
+    * ADVICE r8); a failed drain also frees every kept batch.
     *
     * Until round 9 this used the MEMORY sink — a hidden
     * collect-to-driver: Complete mode retains the entire result in
@@ -312,8 +313,9 @@ object StreamingOps {
     * OOMs spark.driver.maxResultSize the moment the result is
     * data-sized — the 100× probe killed q194 (per-user sessions,
     * 1 GB of task results) exactly there, masked at sf scales by
-    * small outputs. foreachBatch keeps the whole drain path
-    * distributed, the posture every other operator already has.
+    * small outputs. The result stays in executor blocks and is never
+    * collected to the driver, the posture every other operator
+    * already has.
     *
     * Spark runs the query in a session cloned at `start()`, whose conf
     * is a snapshot of this session's. Two confs are set for the drain
@@ -339,16 +341,16 @@ object StreamingOps {
       // perBatch hook's batch jobs — micro-batch-sized inputs want the
       // same adaptive layout (the r17 per-task-overhead finding).
       shuffleParts: Int = -1,
-      // driver-side per-trigger hook (default: write the batch as-is).
+      // driver-side per-trigger hook (default: keep the batch as-is).
       // Runs INSIDE foreachBatch, so it may launch its own batch jobs
       // against the micro-batch (q206 runs the span-dedup operator and
       // folds the store); if it changes the schema, pass `outSchema`
-      // so the sink readback matches. A hook that mutates driver state
-      // must produce the SAME output under batch REPLAY (foreachBatch
-      // re-runs a batch that wrote-then-died with the same batchId —
-      // q206 tracks its pre-fold store per batchId and re-probes
-      // against that, since the post-fold store would change the
-      // replayed answer).
+      // so a drain that runs no batch returns that schema. A hook that
+      // mutates driver state must produce the SAME output under batch
+      // REPLAY (foreachBatch re-runs a batch that ran-then-died with
+      // the same batchId — q206 tracks its pre-fold store per batchId
+      // and re-probes against that, since the post-fold store would
+      // change the replayed answer).
       perBatch: (DataFrame, Long) => DataFrame = (df, _) => df,
       outSchema: Option[org.apache.spark.sql.types.StructType] = None)(
       finish: DataFrame => DataFrame): DataFrame = {
@@ -363,7 +365,9 @@ object StreamingOps {
         s"streaming queries (${active.map(q => Option(q.name).getOrElse(q.id)).mkString(", ")}); " +
         "drain with shuffleParts = -1 or after they stop")
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$name")
-    val sink = java.nio.file.Files.createTempDirectory(s"graft-sink-$name")
+    // each batch's result as local-checkpoint blocks, by batchId: put on
+    // the stream thread, read here once the query has terminated
+    val kept = new java.util.concurrent.ConcurrentSkipListMap[Long, DataFrame]()
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.get(partsKey)
     if (shuffleParts > 0) spark.conf.set(partsKey, shuffleParts.toString)
@@ -375,33 +379,29 @@ object StreamingOps {
     // below must not misreport it as an "other" query, and it must be
     // stopped before its dirs are deleted (ADVICE r10)
     var own: Option[org.apache.spark.sql.streaming.StreamingQuery] = None
+    var returned = false
     // the whole body sits inside the try so an analysis-time start()
     // failure (unwatermarked append, non-aggregated complete) still
-    // deletes the two dirs just created — otherwise each failed call
-    // leaks a ckpt+sink pair in /tmp
+    // deletes the checkpoint dir just created — otherwise each failed
+    // call leaks one in /tmp
     try {
       val isolationKey = "spark.sql.artifact.isolation.enabled"
       val prevIsolation = confSetting(spark, isolationKey)
       spark.conf.set(isolationKey, "false")
       // Complete re-emits the FULL result each trigger → keep the last
-      // (overwrite of the sink root); append and update emit
-      // per-trigger deltas → keep them all, each batch in its OWN
-      // batchId-keyed subdirectory written with overwrite. The subdir
-      // makes replay idempotent: foreachBatch writes the sink BEFORE
-      // the WAL commit, so a batch that wrote and died is re-run on
-      // restart with the same batchId — a flat `append` would then
-      // duplicate its rows (harmless inside this single-use
-      // checkpoint, wrong the moment the pattern is copied somewhere
-      // a checkpoint is reused, ADVICE r9). overwrite-into-b<id>
-      // replays to the identical sink state.
+      // (one key); append and update emit per-trigger deltas → keep them
+      // all, keyed by batchId. foreachBatch runs BEFORE the WAL commit,
+      // so a batch that ran and died is re-run with the same batchId:
+      // replacing (and freeing) its entry keeps replay idempotent, where
+      // appending would count its rows twice (ADVICE r9).
       val complete = outputMode == "complete"
       val sq =
         try agg.writeStream
           .outputMode(outputMode)
           .foreachBatch { (df: DataFrame, batchId: Long) =>
-            val target = if (complete) sink.toString
-                         else s"$sink/b$batchId"
-            perBatch(df, batchId).write.mode("overwrite").parquet(target)
+            val blocks = perBatch(df, batchId).localCheckpoint()
+            Option(kept.put(if (complete) 0L else batchId, blocks))
+              .foreach(ScaleOps.freeLocalCheckpoint)
           }
           .option("checkpointLocation", ckpt.toString)
           .trigger(Trigger.AvailableNow())
@@ -409,12 +409,13 @@ object StreamingOps {
         finally restoreConf(spark, isolationKey, prevIsolation)
       own = Some(sq)
       sq.awaitTermination()
-      // explicit schema: a drain whose every batch emitted zero rows
-      // leaves no part files to infer from; recursive lookup descends
-      // the b<id> subdirs (and is a no-op for complete's flat root)
-      finish(spark.read.schema(outSchema.getOrElse(agg.schema))
-          .option("recursiveFileLookup", "true").parquet(sink.toString))
-        .localCheckpoint()
+      // explicit schema: a drain that ran no batch keeps none to take
+      // it from
+      val drained = kept.values.asScala.reduceOption(_ union _)
+        .getOrElse(emptyFrame(spark, outSchema.getOrElse(agg.schema)))
+      val result = finish(drained)
+      returned = true
+      result
     } finally {
       if (shuffleParts > 0) spark.conf.set(partsKey, prevParts)
       restoreConf(spark, managerKey, prevManager)
@@ -440,13 +441,15 @@ object StreamingOps {
       // future concurrent caller gets a WARN naming the degradation
       // instead of a silent slowdown.
       // on the failure path the drain's own query may still be active:
-      // stop it (its checkpoint/sink dirs are deleted just below), and
+      // stop it (its checkpoint dir is deleted just below), and
       // exclude it from the concurrency WARN — it is not an "other"
       // query (ADVICE r10)
       own.filter(_.isActive).foreach { q =>
         try q.stop()
         catch { case _: Throwable => () }
       }
+      // a failed drain returns nothing, so nothing reads its batches
+      if (!returned) kept.values.asScala.foreach(ScaleOps.freeLocalCheckpoint)
       val ownId = own.map(_.id)
       val stillActive = spark.streams.active
         .filterNot(q => ownId.contains(q.id))
@@ -459,13 +462,7 @@ object StreamingOps {
             "providers will be unloaded and reopened from checkpoint on " +
             "their next batch (correct but slow)")
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-      Seq(ckpt, sink).foreach { d =>
-        val walked = java.nio.file.Files.walk(d)
-        try walked
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walked.close()
-      }
+      graft.FsUtil.deleteRecursively(ckpt)
     }
   }
 
@@ -508,8 +505,9 @@ object StreamingOps {
 
   /** q172 — a REAL Structured Streaming run, oracle-checked: the events
     * table replayed through `readStream` with `Trigger.AvailableNow`
-    * into the q28 tumbling aggregation and [[drainAndClean]]'s
-    * foreachBatch parquet sink, returned as the finished batch result.
+    * into the q28 tumbling aggregation; [[drainAndClean]] keeps each
+    * micro-batch's result in executor blocks (Complete mode: the latest
+    * batch) and returns the finished batch result over them.
     * AvailableNow processes everything available then stops — the
     * incremental-backfill posture (at scale: the same code runs
     * unbounded with the watermark bounding state; here Complete mode
@@ -564,7 +562,7 @@ object StreamingOps {
     * joins) driven by two file streams over the SAME events table and
     * drained with AvailableNow. Inner-join matches emit as they are
     * found (the watermark bounds STATE, it never withholds an inner
-    * match), so the finished sink holds exactly the batch range-join
+    * match), so the kept batches hold exactly the batch range-join
     * answer and the driver hash-compares the stream-stream join path.
     *
     * Multi-batch caveat (documented, not hit here): if the source
@@ -739,8 +737,8 @@ object StreamingOps {
     * segments < id and the fold overwrites b<id>, so BOTH replay
     * shapes (an in-JVM foreachBatch re-run and a cross-restart WAL
     * replay of a batch that wrote-then-died before its commit)
-    * re-probe the exact pre-fold snapshot and rewrite identical sink
-    * and store state. StreamingSpec pins the cross-restart case by
+    * re-probe the exact pre-fold snapshot and rewrite identical kept
+    * batch and store state. StreamingSpec pins the cross-restart case by
     * deleting the checkpoint's commit marker between drains. */
   private[graft] def streamingSpanIngest(spark: SparkSession,
       docStream: DataFrame, store0: DataFrame,
@@ -783,8 +781,8 @@ object StreamingOps {
       .filter(pmod(col("doc_id"), lit(7L)) === 0L)
       .select("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("graft-spanstore")
-    // the result is localCheckpoint'd by the drain, so the store dir
-    // can be deleted as soon as the drain returns
+    // the drain returns its result over batches it local-checkpointed,
+    // so the store dir can be deleted as soon as the drain returns
     try streamingSpanIngest(spark, stream, store0, root.toString,
       shuffleParts = drainParts(spark, tableBytes(spark, dir, "documents")))
     finally graft.FsUtil.deleteRecursively(root)
@@ -807,8 +805,8 @@ object StreamingOps {
     (b: DataFrame, id: Long) => {
       // free the PREVIOUS trigger's blocks first (ADVICE r15: these
       // are RDD persists — catalog.clearCache() never reclaims them,
-      // so a long drain would accumulate storage unbounded); its sink
-      // write has completed, foreachBatch being sequential
+      // so a long drain would accumulate storage unbounded); the drain
+      // has checkpointed its own copy, foreachBatch being sequential
       lastOut.foreach(ScaleOps.freeLocalCheckpoint)
       lastOut = None
       // merge policy: fold committed segments (all strictly < id) into
@@ -885,7 +883,7 @@ object StreamingOps {
   /** Per-trigger hook for the q210 SemDeDup ingest (the q209 shape on
     * the cells+reps store): probe the micro-batch with the SHIPPED
     * [[SemStoreOps.semIngest]] — ONE probe pass feeds the audit (the
-    * sink row) AND the admitted fold — against the versioned reps
+    * drained row) AND the admitted fold — against the versioned reps
     * store, under the FROZEN driver-held quantizer (the stored-model
     * contract: retrain is [[SemStoreOps.semMaintain]]'s batch-side
     * decision, not a per-trigger one). Replay-idempotent via the two
@@ -897,8 +895,8 @@ object StreamingOps {
     * deterministic, so a replayed batch's admit decisions can differ
     * bitwise from the crashed attempt's at sub-cell boundaries. This
     * is unobservable: the crashed attempt committed nothing (no WAL
-    * commit), and the replay OVERWRITES both its sink subdir and
-    * b<id>, so the surviving sink/store pair is mutually consistent —
+    * commit), and the replay REPLACES both its kept batch and
+    * b<id>, so the surviving result/store pair is mutually consistent —
     * the overwrite invariant, not bit-determinism, is what replay
     * safety actually rests on (see [[VersionedStore]]). Non-flooded
     * batches (the refinement no-op) replay bit-identically.
@@ -919,7 +917,7 @@ object StreamingOps {
       val out = audit.localCheckpoint(true)
       VersionedStore.write(admitted, root, id)
       // every intermediate (bc, the probe's internal checkpoints) is
-      // consumed by out + the fold; keep only the sink frame's blocks
+      // consumed by out + the fold; keep only the drained frame's blocks
       ScaleOps.freeSince(spark, mark, out)
       lastOut = Some(out)
       out
@@ -1054,7 +1052,7 @@ object StreamingOps {
         |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         |FROM sessions GROUP BY user_id, sid
         |ORDER BY user_id, start_us""".stripMargin,
-    // inner interval-join matches emit as found — the drained sink is
+    // inner interval-join matches emit as found — the drained result is
     // the batch range join
     "q195_streaming_interval_join" ->
       """SELECT c.user_id, c.event_id AS c_id, p.event_id AS p_id,

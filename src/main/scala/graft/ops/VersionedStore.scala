@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions.col
   *     batch (in-JVM foreachBatch re-run or a cross-restart WAL replay
   *     of a batch that wrote-then-died before its commit) re-probes
   *     the exact pre-fold snapshot by construction;
-  *   - the fold OVERWRITES b<id> (and the drain's sink writes
-  *     overwrite their b<id> subdir), so a replayed batch leaves ONE
-  *     mutually-consistent sink/store pair and nothing retains the
+  *   - the fold OVERWRITES b<id> (and the drain replaces the kept
+  *     result of batch id), so a replayed batch leaves ONE
+  *     mutually-consistent result/store pair and nothing retains the
   *     crashed attempt's uncommitted outputs. Deterministic fold
   *     content (which the digest/band ingests have) makes the replay
   *     additionally bit-identical, but the overwrite is what replay

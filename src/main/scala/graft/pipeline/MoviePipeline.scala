@@ -163,14 +163,16 @@ object MoviePipeline {
     * `fidelity = true` reproduces quirk 3 (new-customer asymmetry): for
     * customers with NO existing state, incoming rows bypass dedup and all
     * duplicates survive, exactly like the else-branch at :190–195.
+    * Customers already in the state are R9-folded either way: their
+    * incoming duplicates collapse to one row per movie, which then
+    * replaces or keeps the existing one.
     */
   def mergeState(existing: DataFrame, incoming: DataFrame,
                  fidelity: Boolean = false): DataFrame = {
     val ex = dedupLatest(existing).select(
       col("customerId"), col("movieId"),
       struct(eventCols.map(col): _*).as("ex"))
-    val inDeduped = if (fidelity) incoming else dedupLatest(incoming)
-    val in = inDeduped.select(
+    val in = dedupLatest(incoming).select(
       col("customerId"), col("movieId"),
       struct(eventCols.map(col): _*).as("in"))
     val joined = ex.join(in, Seq("customerId", "movieId"), "full_outer")

@@ -20,9 +20,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class CachedSortGuardSpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
 
-  // Streaming drains return localCheckpointed frames — an RDD scan
-  // can't expose a cached sort, and building their plans runs the
-  // whole drain. Skipped by NAME (validated against the declared map
+  // Streaming drains return their finish over micro-batch results
+  // held in local-checkpoint blocks — an RDD scan can't expose a
+  // cached sort, and building their plans runs the whole drain.
+  // Skipped by NAME (validated against the declared map
   // below so a rename breaks loudly, not silently).
   private val streamingSkip = Set(
     "q28_tumbling", "q29_sliding", "q30_session",

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class Extended5Spec extends AnyFunSuite {
   lazy val spark = SparkTest.session
+  import spark.implicits._
   val dir: String = SparkTest.sfDir
 
   test("q130: funnel stages shrink monotonically and discriminate") {
@@ -16,6 +17,46 @@ class Extended5Spec extends AnyFunSuite {
     assert(rows(1) > 0, "some user must reach stage 1")
     assert(rows(2) < rows(1),
       "the 24h window must eliminate someone, or the funnel is vacuous")
+  }
+
+  test("q130: a null user reaches only the view stage, as in the oracle") {
+    // the oracle groups the null user into t1 but its JOIN ... USING
+    // (user_id) never matches a null, so t2 and t3 never hold it; a
+    // view with a null ts still puts its user in t1
+    val tmp = java.nio.file.Files.createTempDirectory("graft_q130_null")
+    try {
+      Seq[(Long, String, Option[Long], String)](
+          (1L, "2024-01-01 10:00:00", None, "view"),
+          (2L, "2024-01-01 11:00:00", None, "click"),
+          (3L, "2024-01-01 12:00:00", None, "purchase"),
+          (4L, "2024-01-01 10:00:00", Some(7L), "view"),
+          (5L, "2024-01-01 11:00:00", Some(7L), "click"),
+          (6L, "2024-01-01 12:00:00", Some(7L), "purchase"),
+          (7L, null, Some(8L), "view"))
+        .toDF("event_id", "t", "user_id", "event_type")
+        .select(col("event_id"), to_timestamp(col("t")).as("ts"),
+          col("user_id"), col("event_type"), lit(1.0).as("value"))
+        .write.parquet(s"$tmp/events.parquet")
+      val rows = Extended5.q130Funnel(spark, tmp.toString).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+      assert(rows == Seq((1, "view", 3L), (2, "click", 1L), (3, "purchase", 1L)))
+    } finally FsUtil.deleteRecursively(tmp)
+  }
+
+  test("q130: one shuffle by user_id, no join") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = Extended5.q130Funnel(spark, dir)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    val byUser = helper.collect(plan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning => h.expressions.map(_.sql) }
+    assert(byUser == Seq(Seq("user_id")), plan.toString)
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan.toString)
   }
 
   test("q131: rolling revenue includes at least the row's own order") {

@@ -119,6 +119,24 @@ class MoviePipelineSpec extends AnyFunSuite {
     assert(rows.length == 1 && rows.head.getAs[Int]("rating") == 5)
   }
 
+  test("fidelity folds a known customer's incoming duplicates like R9") {
+    // only customers absent from the state keep raw rows (g5); a known
+    // customer's batch folds to one row per movie, and the stale
+    // existing row never survives beside a newer one
+    val existing = events(("c1", "m1", "E", 2010, 3, "2024-01-01"))
+    val incoming = events(
+      ("c1", "m1", "A", 2010, 5, "2024-02-01"),
+      ("c1", "m1", "B", 2010, 4, "2023-12-01"),
+      ("c1", "m2", "C", 2011, 2, "2024-01-05"),
+      ("c1", "m2", "D", 2011, 1, "2024-01-10"))
+    Seq(false, true).foreach { fidelity =>
+      val got = MoviePipeline.mergeState(existing, incoming, fidelity)
+        .collect().map(r => (r.getAs[String]("movieId"), r.getAs[String]("title")))
+        .sorted.toSeq
+      assert(got == Seq("m1" -> "A", "m2" -> "D"), s"fidelity=$fidelity")
+    }
+  }
+
   test("g6: empty watchedBy contributes nothing") {
     val df = MoviePipeline.explodeEvents(movies(
       """{"movieId":"m1","title":"T","yearOfRelease":2010,"watchedBy":[]}"""))

@@ -1373,6 +1373,71 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** A (k, v) file stream of three single-row triggers, staged under `dir`. */
+  private def threeTriggers(dir: String) = {
+    StreamingOps.stageTriggerFiles(s"$dir/stream",
+      Seq((1L, 10L), (2L, 20L), (1L, 30L)).map(Seq(_).toDF("k", "v")))
+    spark.readStream.schema("k BIGINT, v BIGINT")
+      .option("maxFilesPerTrigger", "1")
+      .option("recursiveFileLookup", "true")
+      .parquet(s"$dir/stream")
+  }
+
+  private def ckptDirs(name: String): Seq[String] = {
+    val listed = java.nio.file.Files.list(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try listed.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith(s"graft-ckpt-$name")).toSeq
+    finally listed.close()
+  }
+
+  test("a drain whose perBatch hook throws frees its kept batches and its checkpoint dir") {
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_hookfail")
+    try {
+      val stream = threeTriggers(dir.toString)
+      val before = sc.getPersistentRDDs.keySet.toSet
+      var kept = 0
+      intercept[StreamingQueryException] {
+        StreamingOps.drainAndClean(spark, stream, "hookfail", outputMode = "append",
+          perBatch = (df, id) =>
+            if (id < 2) { kept += 1; df }
+            else throw new IllegalStateException("hook failed"))(identity)
+      }
+      assert(kept == 2, "the first two triggers must have been kept")
+      assert(sc.getPersistentRDDs.keySet.toSet == before)
+      assert(ckptDirs("hookfail").isEmpty)
+    } finally FsUtil.deleteRecursively(dir)
+  }
+
+  test("a successful drain adds only the returned frame's blocks") {
+    // complete mode keeps the latest trigger only and frees each one it
+    // replaces; append keeps one block set per trigger
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_drainblocks")
+    try {
+      val stream = threeTriggers(dir.toString)
+      Seq(
+        ("complete", stream.groupBy("k").agg(sum("v").as("v")), 1,
+          Seq((1L, 40L), (2L, 20L))),
+        ("append", stream, 3, Seq((1L, 10L), (1L, 30L), (2L, 20L)))
+      ).foreach { case (mode, agg, nKept, expected) =>
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val out = StreamingOps.drainAndClean(spark, agg, s"blocks_$mode",
+          outputMode = mode)(_.orderBy("k", "v"))
+        val added = sc.getPersistentRDDs.keySet.toSet -- before
+        val leaves = out.queryExecution.analyzed.collectLeaves()
+          .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+        assert(added == leaves && added.size == nKept, mode)
+        assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == expected, mode)
+        ops.ScaleOps.freeLocalCheckpoint(out)
+        assert(ckptDirs(s"blocks_$mode").isEmpty, mode)
+      }
+    } finally FsUtil.deleteRecursively(dir)
+  }
+
   test("a drain that sizes the shuffle refuses while another query is active") {
     // shuffleParts is set on the session, so it would reach the other
     // query's next batches: the drain must fail before touching the conf
