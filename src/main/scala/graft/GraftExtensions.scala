@@ -1,113 +1,52 @@
 package graft
 
-import graft.functions.CosineSim
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.functions.{CosineSim, JaccardSorted, Md5Bucket, SigMatchCount}
+import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The engine's [[SparkSessionExtensions]] entry point — the PUBLIC
-  * registration route for sessions the library owner builds
-  * (`SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`):
+/** The one route that makes the engine's SQL functions and its
+  * optimizer rule part of a session, in the style of a strategy's
+  * `setup(session)`: `GraftExtensions.install(spark)` on a running
+  * session. The library's own queries use the Column API
+  * (`CosineSim.cosineSim`, `LayoutOps.zorderKey`, …) and need no
+  * install; `Session.local` does not call it.
   *
-  *  - `injectFunction`: `cosine_sim` becomes callable from
-  *    `spark.sql(...)` with a catalog ExpressionInfo entry.
-  *
-  * No optimizer rule is injected, deliberately: the one candidate —
-  * constant-folding literal `cosine_sim` calls — is already covered by
-  * Catalyst's built-in ConstantFolding, because [[CosineSim]] extends
-  * BinaryExpression, whose `foldable` contract (both children foldable)
-  * makes literal calls fold natively (pinned by GraftExtensionsSpec).
-  * Injecting a redundant rule would add an optimizer-batch pass for
-  * nothing.
-  *
-  * [[org.apache.spark.sql.GraftShims.registerBinaryFunction]] stays as
-  * the runtime-registration fallback for sessions built by a host that
-  * does not configure extensions (the t2 driver owns session creation
-  * here). Both routes register the same expression. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"cosine_sim expects 2 arguments, got ${args.length}")
-        CosineSim(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaccard_sorted"),
-      new ExpressionInfo(classOf[functions.JaccardSorted].getName,
-        "jaccard_sorted"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"jaccard_sorted expects 2 arguments, got ${args.length}")
-        functions.JaccardSorted(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sig_match_count"),
-      new ExpressionInfo(classOf[functions.SigMatchCount].getName,
-        "sig_match_count"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"sig_match_count expects 2 arguments, got ${args.length}")
-        functions.SigMatchCount(args.head, args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("md5_bucket"),
-      new ExpressionInfo(classOf[functions.Md5Bucket].getName,
-        "md5_bucket"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3,
-          s"md5_bucket expects 3 arguments, got ${args.length}")
-        functions.Md5Bucket(args.head, args(1), args(2))
-      }))
-    // zorder_key(a, b): the Morton interleave ladder from
-    // LayoutOps.zorderKey, exposed to SQL. The builder runs inside the
-    // analyzer, so it must emit RESOLVED catalyst nodes directly — a
-    // Column-API composition would wrap unresolved ColumnNodes that
-    // nothing downstream re-analyzes. Same ~30 native bitwise nodes,
-    // so it folds, prunes, and codegens exactly like the Column form
-    // (GraftExtensionsSpec pins the equality).
-    ext.injectFunction((
-      new FunctionIdentifier("zorder_key"),
-      new ExpressionInfo(ops.LayoutOps.getClass.getName, "zorder_key"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2,
-          s"zorder_key expects 2 arguments, got ${args.length}")
-        GraftExtensions.zorderKeyExpr(args.head, args(1))
-      }))
-    // The one optimizer rule worth its batch pass: size-guard rewrite
-    // for jaccard_sorted threshold filters (J ≥ t ⟹ |A| ≥ t·|B| ∧
-    // |B| ≥ t·|A|) — O(1) guards short-circuit the O(|A|+|B|) merge
-    // for size-contradicted candidate pairs. Provably implied by the
-    // original predicate (½-element slack covers the IEEE multiply),
-    // so it is a pure physical win; GraftExtensionsSpec pins plan
-    // shape, result equality, and idempotence.
-    ext.injectOptimizerRule(_ => plans.JaccardSizeGuard)
-  }
-}
-
+  * No rule is installed to fold literal calls: each expression extends
+  * Binary/TernaryExpression, whose `foldable` contract (all children
+  * foldable) lets Catalyst's built-in ConstantFolding evaluate them at
+  * plan time (pinned by GraftExtensionsSpec). */
 object GraftExtensions {
-  import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseOr,
-    Cast, Literal, ShiftLeft}
-  import org.apache.spark.sql.types.LongType
 
-  /** Catalyst-expression form of [[ops.LayoutOps.zorderKey]]'s ladder. */
-  private[graft] def zorderKeyExpr(a: Expression, b: Expression): Expression =
-    BitwiseOr(spreadExpr(a), ShiftLeft(spreadExpr(b), Literal(1)))
+  /** Each SQL function: name, the class its catalog entry names, arity,
+    * Catalyst builder. The builders run inside the analyzer, so they
+    * emit resolved Catalyst nodes directly. */
+  private val sqlFunctions
+      : Seq[(String, Class[_], Int, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSim], 2, a => CosineSim(a(0), a(1))),
+    ("jaccard_sorted", classOf[JaccardSorted], 2,
+      a => JaccardSorted(a(0), a(1))),
+    ("sig_match_count", classOf[SigMatchCount], 2,
+      a => SigMatchCount(a(0), a(1))),
+    ("md5_bucket", classOf[Md5Bucket], 3, a => Md5Bucket(a(0), a(1), a(2))),
+    ("zorder_key", ops.LayoutOps.getClass, 2,
+      a => ops.LayoutOps.zorderKeyExpr(a(0), a(1))))
 
-  private def spreadExpr(e: Expression): Expression = {
-    val masks = Seq(
-      (16, 0x0000FFFF0000FFFFL),
-      (8, 0x00FF00FF00FF00FFL),
-      (4, 0x0F0F0F0F0F0F0F0FL),
-      (2, 0x3333333333333333L),
-      (1, 0x5555555555555555L))
-    masks.foldLeft[Expression](
-      BitwiseAnd(Cast(e, LongType), Literal(0xFFFFFFFFL))) {
-      case (x, (shift, mask)) =>
-        BitwiseAnd(BitwiseOr(x, ShiftLeft(x, Literal(shift))), Literal(mask))
+  /** Register the five functions in `spark`'s function registry and add
+    * [[plans.JaccardSizeGuard]] to its extra optimizations. Idempotent:
+    * a function is re-registered in place, and the rule is appended only
+    * when absent. Only `spark` changes — a `newSession()` of it, or its
+    * parent, keeps its own registry and rules. */
+  def install(spark: SparkSession): Unit = {
+    sqlFunctions.foreach { case (name, cls, arity, build) =>
+      GraftShims.registerFunction(spark, name,
+        new ExpressionInfo(cls.getName, name), { args =>
+          require(args.length == arity,
+            s"$name expects $arity arguments, got ${args.length}")
+          build(args)
+        })
     }
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(plans.JaccardSizeGuard))
+      spark.experimental.extraOptimizations = rules :+ plans.JaccardSizeGuard
   }
 }

@@ -75,9 +75,4 @@ object CosineSim {
     org.apache.spark.sql.GraftShims.column(CosineSim(
       org.apache.spark.sql.GraftShims.expression(a),
       org.apache.spark.sql.GraftShims.expression(b)))
-
-  /** Make `cosine_sim(a, b)` callable from spark.sql(...). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftShims.registerBinaryFunction(
-      spark, "cosine_sim", CosineSim(_, _))
 }

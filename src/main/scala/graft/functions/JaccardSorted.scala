@@ -73,9 +73,4 @@ object JaccardSorted {
     org.apache.spark.sql.GraftShims.column(JaccardSorted(
       org.apache.spark.sql.GraftShims.expression(a),
       org.apache.spark.sql.GraftShims.expression(b)))
-
-  /** Make `jaccard_sorted(a, b)` callable from spark.sql(...). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftShims.registerBinaryFunction(
-      spark, "jaccard_sorted", JaccardSorted(_, _))
 }

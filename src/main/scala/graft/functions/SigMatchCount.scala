@@ -74,9 +74,4 @@ object SigMatchCount {
     org.apache.spark.sql.GraftShims.column(SigMatchCount(
       org.apache.spark.sql.GraftShims.expression(a),
       org.apache.spark.sql.GraftShims.expression(b)))
-
-  /** Make `sig_match_count(a, b)` callable from spark.sql(...). Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftShims.registerBinaryFunction(
-      spark, "sig_match_count", SigMatchCount(_, _))
 }

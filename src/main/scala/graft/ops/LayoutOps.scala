@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseOr, Cast,
+  Expression, Literal, ShiftLeft}
+import org.apache.spark.sql.types.LongType
 
 /** Physical data-layout operators — the write-side half of the 100 TB
   * posture. Scan-side pruning (partition filters, row-group min/max
@@ -27,20 +29,27 @@ object LayoutOps {
     * from 5 magic-mask spread steps per column — a ~30-node codegen'd
     * expression, not a per-bit loop. */
   def zorderKey(a: Column, b: Column): Column =
-    spread32(a).bitwiseOR(shiftleft(spread32(b), 1))
+    GraftShims.column(zorderKeyExpr(
+      GraftShims.expression(a), GraftShims.expression(b)))
 
-  /** Spread the low 32 bits of `c` to the even bit positions of a long
+  /** [[zorderKey]] as a Catalyst expression; SQL's `zorder_key` builds
+    * the same one ([[graft.GraftExtensions.install]]). */
+  private[graft] def zorderKeyExpr(a: Expression, b: Expression): Expression =
+    BitwiseOr(spreadExpr(a), ShiftLeft(spreadExpr(b), Literal(1)))
+
+  /** Spread the low 32 bits of `e` to the even bit positions of a long
     * (…b₂b₁b₀ → …0b₂0b₁0b₀) via the standard mask-doubling ladder. */
-  private def spread32(c: Column): Column = {
+  private def spreadExpr(e: Expression): Expression = {
     val masks = Seq(
       (16, 0x0000FFFF0000FFFFL),
       (8, 0x00FF00FF00FF00FFL),
       (4, 0x0F0F0F0F0F0F0F0FL),
       (2, 0x3333333333333333L),
       (1, 0x5555555555555555L))
-    masks.foldLeft(c.cast("long").bitwiseAND(lit(0xFFFFFFFFL))) {
+    masks.foldLeft[Expression](
+      BitwiseAnd(Cast(e, LongType), Literal(0xFFFFFFFFL))) {
       case (x, (shift, mask)) =>
-        x.bitwiseOR(shiftleft(x, shift)).bitwiseAND(lit(mask))
+        BitwiseAnd(BitwiseOr(x, ShiftLeft(x, Literal(shift))), Literal(mask))
     }
   }
 

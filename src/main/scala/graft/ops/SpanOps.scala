@@ -361,17 +361,11 @@ object SpanOps {
     * digest-laid-out compacted generation (∝ store, amortized;
     * replay-safe because only segments strictly below this committed
     * batch's id are folded), so probe cost stays flat in trigger
-    * count. Returns a stateful closure: each trigger also frees the
-    * previous trigger's localCheckpoint blocks (ADVICE r15 — RDD
-    * blocks survive catalog.clearCache(); the drain has checkpointed
-    * its own copy of the previous frame by the time the next trigger
-    * runs, foreachBatch being sequential). */
+    * count. Returns the trigger's result local-checkpointed; the drain
+    * keeps that frame and frees it when it is no longer read. */
   private[graft] def spanIngestTrigger(spark: SparkSession, root: String,
-      maxSegments: Int = 8): (DataFrame, Long) => DataFrame = {
-    var lastOut: Option[DataFrame] = None
+      maxSegments: Int = 8): (DataFrame, Long) => DataFrame =
     (b: DataFrame, id: Long) => {
-      lastOut.foreach(ScaleOps.freeLocalCheckpoint)
-      lastOut = None
       VersionedStore.maintain(spark, root, id, Seq("g"), maxSegments)
       val bc = b.localCheckpoint(true)
       val probeStore = spanStoreBefore(spark, root, id)
@@ -379,10 +373,8 @@ object SpanOps {
       spark.catalog.clearCache() // the digest persist, per trigger
       VersionedStore.write(spanIndexDelta(bc, probeStore), root, id)
       ScaleOps.freeLocalCheckpoint(bc) // both consumers materialized
-      lastOut = Some(out)
       out
     }
-  }
 
   /** q202 over the documents table.
     *

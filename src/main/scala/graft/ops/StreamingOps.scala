@@ -299,12 +299,14 @@ object StreamingOps {
   }
 
   /** Drain an AvailableNow query DISTRIBUTED and CLEAN UP: foreachBatch
-    * local-checkpoints each trigger's result into blocks on the
-    * EXECUTORS, kept per batchId (Complete keeps only the latest, since
-    * it re-emits the full result; append and update keep every delta),
-    * and the drain returns `finish` over the union of the kept batches,
-    * lazily. The single-use checkpoint dir is deleted (the leak fix,
-    * ADVICE r8); a failed drain also frees every kept batch.
+    * passes each trigger to `perBatch`, which returns the batch's result
+    * already materialized in blocks on the EXECUTORS (the default hook
+    * local-checkpoints the batch as-is). The drain keeps those frames
+    * per batchId (Complete keeps only the latest, since it re-emits the
+    * full result; append and update keep every delta) and returns
+    * `finish` over their union, lazily. The single-use checkpoint dir is
+    * deleted (the leak fix, ADVICE r8); a failed drain also frees every
+    * kept batch.
     *
     * Until round 9 this used the MEMORY sink — a hidden
     * collect-to-driver: Complete mode retains the entire result in
@@ -318,40 +320,43 @@ object StreamingOps {
     * already has.
     *
     * Spark runs the query in a session cloned at `start()`, whose conf
-    * is a snapshot of this session's. Two confs are set for the drain
-    * and then restored to exactly their prior state (unset stays unset):
-    *  - `spark.sql.artifact.isolation.enabled=false`, around `start()`
-    *    only. An isolated clone gets a new artifact UUID and so a new
-    *    executor class loader, and `CodeGenerator`'s cache is keyed on
-    *    the class loader: every drain recompiled byte-identical
-    *    whole-stage classes (q172: 12 per call). No code here adds
-    *    session artifacts, so the shared loader loses nothing.
+    * is a snapshot of this session's. Three confs are set through
+    * [[withConf]], so each is put back to exactly its prior state
+    * (unset stays unset) on every path:
+    *  - `spark.sql.shuffle.partitions` = `shuffleParts`, for the whole
+    *    drain.
     *  - `spark.sql.streaming.checkpointFileManagerClass` =
     *    [[NioCheckpointFileManager]], for the whole drain, because some
     *    checkpoint logs are opened after `start()` from this session's
     *    conf. The checkpoint is a local temp dir made here, and without
     *    Hadoop's native library the default manager forks a `chmod`,
     *    `stat` or `readlink` process per checkpoint file it writes
-    *    (~0.2 s of a q172 call). */
+    *    (~0.2 s of a q172 call).
+    *  - `spark.sql.artifact.isolation.enabled=false`, around `start()`
+    *    only. An isolated clone gets a new artifact UUID and so a new
+    *    executor class loader, and `CodeGenerator`'s cache is keyed on
+    *    the class loader: every drain recompiled byte-identical
+    *    whole-stage classes (q172: 12 per call). No code here adds
+    *    session artifacts, so the shared loader loses nothing. */
   private[graft] def drainAndClean(spark: SparkSession, agg: DataFrame,
       name: String, outputMode: String = "complete",
       // scale-adaptive shuffle/state partition count for this drain
-      // ([[drainParts]]); -1 = keep the session setting. Scoped: set
-      // before start(), restored in the finally. Also governs the
-      // perBatch hook's batch jobs — micro-batch-sized inputs want the
-      // same adaptive layout (the r17 per-task-overhead finding).
+      // ([[drainParts]]); -1 = keep the session setting. Also governs
+      // the perBatch hook's batch jobs — micro-batch-sized inputs want
+      // the same adaptive layout (the r17 per-task-overhead finding).
       shuffleParts: Int = -1,
-      // driver-side per-trigger hook (default: keep the batch as-is).
-      // Runs INSIDE foreachBatch, so it may launch its own batch jobs
-      // against the micro-batch (q206 runs the span-dedup operator and
-      // folds the store); if it changes the schema, pass `outSchema`
-      // so a drain that runs no batch returns that schema. A hook that
-      // mutates driver state must produce the SAME output under batch
-      // REPLAY (foreachBatch re-runs a batch that ran-then-died with
-      // the same batchId — q206 tracks its pre-fold store per batchId
-      // and re-probes against that, since the post-fold store would
-      // change the replayed answer).
-      perBatch: (DataFrame, Long) => DataFrame = (df, _) => df,
+      // driver-side per-trigger hook; it returns the batch's result
+      // MATERIALIZED (eagerly local-checkpointed), and the drain keeps
+      // that frame as is. Runs INSIDE foreachBatch, so it may launch its
+      // own batch jobs against the micro-batch (q206 runs the span-dedup
+      // operator and folds the store); if it changes the schema, pass
+      // `outSchema` so a drain that runs no batch returns that schema. A
+      // hook that mutates driver state must produce the SAME output
+      // under batch REPLAY (foreachBatch re-runs a batch that
+      // ran-then-died with the same batchId — q206 tracks its pre-fold
+      // store per batchId and re-probes against that, since the
+      // post-fold store would change the replayed answer).
+      perBatch: (DataFrame, Long) => DataFrame = (df, _) => df.localCheckpoint(),
       outSchema: Option[org.apache.spark.sql.types.StructType] = None)(
       finish: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
@@ -364,16 +369,12 @@ object StreamingOps {
         s"$shuffleParts would change spark.sql.shuffle.partitions for the active " +
         s"streaming queries (${active.map(q => Option(q.name).getOrElse(q.id)).mkString(", ")}); " +
         "drain with shuffleParts = -1 or after they stop")
+    val partsKey = "spark.sql.shuffle.partitions"
+    val parts = if (shuffleParts > 0) shuffleParts.toString else spark.conf.get(partsKey)
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$name")
     // each batch's result as local-checkpoint blocks, by batchId: put on
     // the stream thread, read here once the query has terminated
     val kept = new java.util.concurrent.ConcurrentSkipListMap[Long, DataFrame]()
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    if (shuffleParts > 0) spark.conf.set(partsKey, shuffleParts.toString)
-    val managerKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val prevManager = confSetting(spark, managerKey)
-    spark.conf.set(managerKey, classOf[NioCheckpointFileManager].getName)
     // held for the finally: on a mid-drain failure the drain's OWN
     // query is still in spark.streams.active — the concurrency WARN
     // below must not misreport it as an "other" query, and it must be
@@ -384,41 +385,39 @@ object StreamingOps {
     // failure (unwatermarked append, non-aggregated complete) still
     // deletes the checkpoint dir just created — otherwise each failed
     // call leaks one in /tmp
-    try {
-      val isolationKey = "spark.sql.artifact.isolation.enabled"
-      val prevIsolation = confSetting(spark, isolationKey)
-      spark.conf.set(isolationKey, "false")
-      // Complete re-emits the FULL result each trigger → keep the last
-      // (one key); append and update emit per-trigger deltas → keep them
-      // all, keyed by batchId. foreachBatch runs BEFORE the WAL commit,
-      // so a batch that ran and died is re-run with the same batchId:
-      // replacing (and freeing) its entry keeps replay idempotent, where
-      // appending would count its rows twice (ADVICE r9).
-      val complete = outputMode == "complete"
-      val sq =
-        try agg.writeStream
-          .outputMode(outputMode)
-          .foreachBatch { (df: DataFrame, batchId: Long) =>
-            val blocks = perBatch(df, batchId).localCheckpoint()
-            Option(kept.put(if (complete) 0L else batchId, blocks))
-              .foreach(ScaleOps.freeLocalCheckpoint)
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        finally restoreConf(spark, isolationKey, prevIsolation)
-      own = Some(sq)
-      sq.awaitTermination()
-      // explicit schema: a drain that ran no batch keeps none to take
-      // it from
-      val drained = kept.values.asScala.reduceOption(_ union _)
-        .getOrElse(emptyFrame(spark, outSchema.getOrElse(agg.schema)))
-      val result = finish(drained)
-      returned = true
-      result
+    try withConf(spark, partsKey, parts) {
+      withConf(spark, "spark.sql.streaming.checkpointFileManagerClass",
+          classOf[NioCheckpointFileManager].getName) {
+        // Complete re-emits the FULL result each trigger → keep the last
+        // (one key); append and update emit per-trigger deltas → keep
+        // them all, keyed by batchId. foreachBatch runs BEFORE the WAL
+        // commit, so a batch that ran and died is re-run with the same
+        // batchId: replacing (and freeing) its entry keeps replay
+        // idempotent, where appending would count its rows twice
+        // (ADVICE r9).
+        val complete = outputMode == "complete"
+        val sq = withConf(spark, "spark.sql.artifact.isolation.enabled", "false") {
+          agg.writeStream
+            .outputMode(outputMode)
+            .foreachBatch { (df: DataFrame, batchId: Long) =>
+              Option(kept.put(if (complete) 0L else batchId, perBatch(df, batchId)))
+                .foreach(ScaleOps.freeLocalCheckpoint)
+            }
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(Trigger.AvailableNow())
+            .start()
+        }
+        own = Some(sq)
+        sq.awaitTermination()
+        // explicit schema: a drain that ran no batch keeps none to take
+        // it from
+        val drained = kept.values.asScala.reduceOption(_ union _)
+          .getOrElse(emptyFrame(spark, outSchema.getOrElse(agg.schema)))
+        val result = finish(drained)
+        returned = true
+        result
+      }
     } finally {
-      if (shuffleParts > 0) spark.conf.set(partsKey, prevParts)
-      restoreConf(spark, managerKey, prevManager)
       // Unload the query's state store providers BEFORE deleting its
       // dirs / letting the JVM exit: Spark keeps providers (and their
       // maintenance + RocksDB background compaction threads) loaded
@@ -466,17 +465,20 @@ object StreamingOps {
     }
   }
 
-  /** The value `key` is explicitly set to, or None when it is unset.
-    * `getOption` returns a registered conf's default instead, and
-    * restoring that would leave an unset conf set. */
-  private def confSetting(spark: SparkSession, key: String): Option[String] =
-    spark.conf.getAll.get(key)
-
-  /** Puts `key` back to a [[confSetting]]: set to its value, or unset. */
-  private def restoreConf(spark: SparkSession, key: String,
-      prev: Option[String]): Unit = prev match {
-    case Some(v) => spark.conf.set(key, v)
-    case None => spark.conf.unset(key)
+  /** Runs `body` with `key` set to `value` in `spark`'s conf, then puts
+    * `key` back to exactly its prior state: set to its prior value, or
+    * unset when it was unset (`getOption` would return a registered
+    * conf's default instead, and restoring that would leave an unset
+    * key set). The one place the library sets a session conf. */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** The events table as a ts-normalized file STREAM — the readStream
@@ -667,8 +669,8 @@ object StreamingOps {
       }
     }
 
-  /** Scope the RocksDB state store provider to one drain and restore
-    * the session default after. Two users: transformWithState REQUIRES
+  /** Scope the RocksDB state store provider to one drain
+    * ([[withConf]]: the prior setting comes back after). Two users: transformWithState REQUIRES
     * it (q198), and any query whose state is DATA-sized needs it at
     * scale — the default HDFSBackedStateStore keeps every partition's
     * full state map ON-HEAP, which the 1000× probe caught OOM-ing
@@ -693,8 +695,6 @@ object StreamingOps {
   private def withRocksDbState[T](spark: SparkSession)(body: => T): T = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.config.Configurator
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = confSetting(spark, key)
     val logName = "org.apache.spark.sql.execution.streaming.state.RocksDB"
     // restore-by-removal when the level was INHERITED (ADVICE r9):
     // Configurator.setLevel materializes a LoggerConfig for logName if
@@ -709,17 +709,15 @@ object StreamingOps {
       ctx.getConfiguration.getLoggerConfig(logName).getName == logName
     val prevLevel = LogManager.getLogger(logName)
       .asInstanceOf[org.apache.logging.log4j.core.Logger].getLevel
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     Configurator.setLevel(logName, Level.ERROR)
-    try body
+    try withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
     finally {
       if (hadOwnConfig) Configurator.setLevel(logName, prevLevel)
       else {
         ctx.getConfiguration.removeLogger(logName)
         ctx.updateLoggers()
       }
-      restoreConf(spark, key, prev)
     }
   }
 
@@ -800,15 +798,8 @@ object StreamingOps {
     * there). Per-trigger work ∝ batch: one signature pass + the band
     * equi-join probe + a batch-sized segment write. */
   private[graft] def sigIngestTrigger(spark: SparkSession, root: String,
-      maxSegments: Int = 8): (DataFrame, Long) => DataFrame = {
-    var lastOut: Option[DataFrame] = None
+      maxSegments: Int = 8): (DataFrame, Long) => DataFrame =
     (b: DataFrame, id: Long) => {
-      // free the PREVIOUS trigger's blocks first (ADVICE r15: these
-      // are RDD persists — catalog.clearCache() never reclaims them,
-      // so a long drain would accumulate storage unbounded); the drain
-      // has checkpointed its own copy, foreachBatch being sequential
-      lastOut.foreach(ScaleOps.freeLocalCheckpoint)
-      lastOut = None
       // merge policy: fold committed segments (all strictly < id) into
       // one band-key-laid-out generation past maxSegments — probe cost
       // flat in trigger count, replay-safe (VersionedStore.maintain)
@@ -826,10 +817,8 @@ object StreamingOps {
       // the fold (written) — both consumed, free their blocks now
       ScaleOps.freeLocalCheckpoint(bands)
       ScaleOps.freeLocalCheckpoint(bc)
-      lastOut = Some(out)
       out
     }
-  }
 
   /** q209 — STREAMING near-dup (MinHash/LSH) ingest, oracle-checked:
     * the q153 maintenance loop as a real `readStream` — the planted
@@ -904,11 +893,8 @@ object StreamingOps {
     * here is the mark/freeSince scope instead of named frees. */
   private[graft] def semIngestTrigger(spark: SparkSession, root: String,
       model: SemStoreOps.SemModel, maxSegments: Int = 8)
-      : (DataFrame, Long) => DataFrame = {
-    var lastOut: Option[DataFrame] = None
+      : (DataFrame, Long) => DataFrame =
     (b: DataFrame, id: Long) => {
-      lastOut.foreach(ScaleOps.freeLocalCheckpoint)
-      lastOut = None
       VersionedStore.maintain(spark, root, id, Seq("cid"), maxSegments)
       val mark = ScaleOps.rddMark(spark)
       val bc = b.localCheckpoint(true)
@@ -919,10 +905,8 @@ object StreamingOps {
       // every intermediate (bc, the probe's internal checkpoints) is
       // consumed by out + the fold; keep only the drained frame's blocks
       ScaleOps.freeSince(spark, mark, out)
-      lastOut = Some(out)
       out
     }
-  }
 
   /** q210 — STREAMING SemDeDup ingest, completing the streaming column
     * (span q206, sig q209, semantic here): the q208 maintenance loop

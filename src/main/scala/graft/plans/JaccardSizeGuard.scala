@@ -35,7 +35,8 @@ import org.apache.spark.sql.types.DoubleType
   * the rewritten condition is an `And`, which the matcher does not
   * fire on, and CombineFilters keeps conjunctions together.
   *
-  * Registered via [[graft.GraftExtensions]] (`injectOptimizerRule`).
+  * Installed by [[graft.GraftExtensions.install]], as one of the
+  * session's extra optimizations.
   * GraftExtensionsSpec pins: guards present in the optimized plan,
   * results identical with and without the rule, idempotence, and that
   * a size-contradicted pair short-circuits correctly. */

@@ -1,16 +1,18 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge into the sql-package-private Column ↔ Expression converters,
-  * needed to expose a custom Catalyst [[Expression]] through the public
-  * Column API without registering a session extension. This is the
-  * conventional shim used by Spark-native extension libraries: the
-  * converters are `private[sql]`, so the bridge lives inside the
-  * org.apache.spark.sql package and re-exports exactly the two calls
-  * (plus the `AbstractDataType` name that `ExpectsInputTypes`
-  * signatures require). No behavior here — aliases only.
+/** Bridge into the sql-package-private Catalyst hooks the engine's
+  * custom expressions need: the Column ↔ Expression converters (to
+  * expose an [[Expression]] through the public Column API), the
+  * `AbstractDataType` name that `ExpectsInputTypes` signatures require,
+  * and the session's function registry (to make one callable from
+  * `spark.sql(...)`). This is the conventional shim of Spark-native
+  * extension libraries: the hooks are `private[sql]`, so the bridge
+  * lives inside the org.apache.spark.sql package. No behavior here —
+  * aliases only.
   */
 object GraftShims {
   type AbstractDataType = org.apache.spark.sql.types.AbstractDataType
@@ -18,19 +20,11 @@ object GraftShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a 2-arg expression builder under `name` in the session's
-    * function registry, making it callable from spark.sql(...). The
-    * public route for this is SparkSessionExtensions#injectFunction,
-    * which requires configuring the extension class at session build
-    * time; this shim offers the same registration on an already-running
-    * session (the driver owns session creation here). */
-  def registerBinaryFunction(spark: SparkSession, name: String,
-      builder: (Expression, Expression) => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      { args =>
-        require(args.length == 2, s"$name expects 2 arguments, got ${args.length}")
-        builder(args(0), args(1))
-      },
-      "scala_udf")
+  /** Register `builder` under `name` in `spark`'s own function registry.
+    * An existing entry of that name is replaced, so registering again is
+    * a no-op. [[graft.GraftExtensions.install]] is the one caller. */
+  def registerFunction(spark: SparkSession, name: String, info: ExpressionInfo,
+      builder: Seq[Expression] => Expression): Unit =
+    spark.sessionState.functionRegistry.registerFunction(
+      FunctionIdentifier(name), info, builder)
 }

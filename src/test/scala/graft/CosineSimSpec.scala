@@ -63,8 +63,9 @@ class CosineSimSpec extends AnyFunSuite {
   }
 
   test("cosine_sim is callable from SQL after registration") {
-    CosineSim.register(spark)
-    val row = spark.sql(
+    val s = spark.newSession()
+    GraftExtensions.install(s)
+    val row = s.sql(
       "SELECT cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c," +
         " cosine_sim(array(1.0D, 0.0D), array(0.0D, 1.0D)) AS o")
       .collect().head

@@ -4,28 +4,29 @@ import graft.functions.CosineSim
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SparkSessionExtensions route: a session built with
-  * `withExtensions(new GraftExtensions)` gets `cosine_sim` in SQL. The
-  * extension session shares the test SparkContext (never stopped);
-  * active/default session state is restored afterwards so the shared
-  * suite session is unaffected. */
+/** The install route: `GraftExtensions.install` on a session gets the
+  * engine's functions in SQL and its optimizer rule. Each case installs
+  * on a `newSession()` of the shared test session (same SparkContext,
+  * its own function registry and rules), so the shared session never
+  * gains them. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   private def withExtensionSession[T](body: SparkSession => T): T = {
-    val prev = SparkTest.session // ensure the shared context exists
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      body(s2)
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
+    val s2 = SparkTest.session.newSession()
+    GraftExtensions.install(s2)
+    body(s2)
+  }
+
+  test("install is idempotent and reaches only the session it is given") {
+    withExtensionSession { s2 =>
+      GraftExtensions.install(s2)
+      assert(s2.experimental.extraOptimizations
+        .count(_ == plans.JaccardSizeGuard) == 1)
+      assert(s2.sql("SELECT zorder_key(0, 1)").head().getLong(0) == 2L)
+      val shared = SparkTest.session
+      assert(!shared.experimental.extraOptimizations
+        .contains(plans.JaccardSizeGuard))
+      assert(!shared.catalog.functionExists("cosine_sim"))
     }
   }
 
@@ -84,10 +85,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
   }
 
   test("literal cosine_sim constant-folds via the BinaryExpression foldable contract") {
-    // no injected optimizer rule needed FOR FOLDING: CosineSim inherits
+    // no added optimizer rule needed FOR FOLDING: CosineSim inherits
     // foldable = (left.foldable && right.foldable) from
     // BinaryExpression, so built-in ConstantFolding evaluates literal
-    // calls at plan time — the one rule GraftExtensions does inject
+    // calls at plan time — the one rule GraftExtensions.install does add
     // (JaccardSizeGuard) exists for a different reason: a rewrite no
     // built-in can derive
     withExtensionSession { s2 =>

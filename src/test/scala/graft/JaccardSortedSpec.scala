@@ -52,11 +52,12 @@ class JaccardSortedSpec extends AnyFunSuite {
   }
 
   test("stays inside WholeStageCodegen and is SQL-callable") {
-    import spark.implicits._
-    JaccardSorted.register(spark)
+    val s = spark.newSession()
+    GraftExtensions.install(s)
+    import s.implicits._
     val df = Seq((Seq(1L, 2L, 3L), Seq(2L, 3L, 4L))).toDF("a", "b")
     df.createOrReplaceTempView("jacc_t")
-    val viaSql = spark.sql(
+    val viaSql = s.sql(
       "SELECT jaccard_sorted(a, b) FROM jacc_t").head().getDouble(0)
     assert(viaSql == 0.5)
     // a LocalRelation plans as LocalTableScan (no codegen stage at

@@ -63,12 +63,10 @@ class MultimodalSpec extends AnyFunSuite {
     assert(rows.map(r => (r.getLong(0), r.getSeq[Float](1))).toMap
       == again.map(r => (r.getLong(0), r.getSeq[Float](1))).toMap)
     // composes with the cosine expression downstream of extraction
-    import org.apache.spark.sql.functions.{col, expr}
-    org.apache.spark.sql.GraftShims.registerBinaryFunction(spark,
-      "cosine_sim", graft.functions.CosineSim(_, _))
+    import org.apache.spark.sql.functions.col
+    val e = col("embedding").cast("array<double>")
     val sims = feats.limit(5)
-      .select(expr("cosine_sim(cast(embedding as array<double>), " +
-        "cast(embedding as array<double>))").as("self"))
+      .select(graft.functions.CosineSim.cosineSim(e, e).as("self"))
       .collect().map(_.getDouble(0))
     assert(sims.forall(s => math.abs(s - 1.0) < 1e-9))
   }

@@ -50,12 +50,13 @@ class SigMatchCountSpec extends AnyFunSuite {
   }
 
   test("stays inside WholeStageCodegen and is SQL-callable") {
-    import spark.implicits._
-    SigMatchCount.register(spark)
+    val s = spark.newSession()
+    GraftExtensions.install(s)
+    import s.implicits._
     val df = Seq((Seq("aa", "bb", "cc"), Seq("aa", "xx", "cc")))
       .toDF("a", "b")
     df.createOrReplaceTempView("sig_t")
-    assert(spark.sql("SELECT sig_match_count(a, b) FROM sig_t")
+    assert(s.sql("SELECT sig_match_count(a, b) FROM sig_t")
       .head().getInt(0) == 2)
     // a pure scan+projection plan (no exchange): an aggregate upstream
     // would wrap the executed plan in AdaptiveSparkPlanExec, whose

@@ -397,7 +397,7 @@ class StreamingSpec extends AnyFunSuite {
         store.toDF("id", "e"), dim = dim, kOverride = Some(4))
       ops.VersionedStore.init(reps0, storeRoot)
       def drain(): Unit = {
-        // one stateful hook per drain — the shipped usage (the second
+        // one hook per drain — the shipped usage (the second
         // drain runs the replayed b0 AND b1 through one closure)
         val hook = StreamingOps.semIngestTrigger(spark, storeRoot, model)
         val stream = spark.readStream
@@ -549,11 +549,8 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "one two three four five six seven eight"), // dup via b0's fold
       (4L, "nine ten eleven twelve thirteen fourteen fifteen sixteen"))
     def drain(): Unit = {
-      // ONE stateful hook per drain — the shipped usage (code review
-      // r16: a fresh closure per batch never exercised the
-      // lastOut-free branch; the second drain here runs TWO triggers
-      // (replayed b0, then b1) through one closure, so the free of a
-      // replayed trigger's sink frame is covered)
+      // ONE hook per drain — the shipped usage; the second drain here
+      // runs TWO triggers (replayed b0, then b1) through one closure
       val hook = ops.SpanOps.spanIngestTrigger(spark, storeRoot)
       val stream = spark.readStream.schema("doc_id BIGINT, text STRING")
         .option("recursiveFileLookup", "true").parquet(streamDir.toString)
@@ -1402,7 +1399,7 @@ class StreamingSpec extends AnyFunSuite {
       intercept[StreamingQueryException] {
         StreamingOps.drainAndClean(spark, stream, "hookfail", outputMode = "append",
           perBatch = (df, id) =>
-            if (id < 2) { kept += 1; df }
+            if (id < 2) { kept += 1; df.localCheckpoint() }
             else throw new IllegalStateException("hook failed"))(identity)
       }
       assert(kept == 2, "the first two triggers must have been kept")
@@ -1435,6 +1432,38 @@ class StreamingSpec extends AnyFunSuite {
         ops.ScaleOps.freeLocalCheckpoint(out)
         assert(ckptDirs(s"blocks_$mode").isEmpty, mode)
       }
+    } finally FsUtil.deleteRecursively(dir)
+  }
+
+  test("a two-trigger sig ingest drain adds only the returned frame's blocks") {
+    // sigIngestTrigger returns each trigger's result materialized, and
+    // the drain keeps that frame as is: no second copy per trigger, and
+    // no copy of the last trigger's result left behind
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val words = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
+      "golf", "hotel", "india", "juliet", "kilo", "lima")
+    def text(k: Int) = (0 until 8).map(j => words((k + j) % words.size)).mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("graft_sigblocks").toString
+    try {
+      ops.VersionedStore.init(ops.Similarity.sigBands(
+        Seq((1L, text(0)), (2L, text(4))).toDF("doc_id", "text")), s"$dir/store")
+      StreamingOps.stageTriggerFiles(s"$dir/stream",
+        Seq(Seq((10L, text(0))), Seq((11L, text(8)))).map(_.toDF("doc_id", "text")))
+      val stream = spark.readStream
+        .schema("doc_id BIGINT, text STRING")
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(s"$dir/stream")
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = StreamingOps.drainAndClean(spark, stream, "sigblocks",
+        outputMode = "append",
+        perBatch = StreamingOps.sigIngestTrigger(spark, s"$dir/store"))(identity)
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      val leaves = out.queryExecution.analyzed.collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+      assert(added == leaves && added.size == 2, s"added $added, returned $leaves")
+      ops.ScaleOps.freeLocalCheckpoint(out)
     } finally FsUtil.deleteRecursively(dir)
   }
 
@@ -1501,5 +1530,29 @@ class StreamingSpec extends AnyFunSuite {
         assert(state == start)
       }
     finally put(initial)
+  }
+
+  test("a drain that sizes the shuffle leaves an unset shuffle.partitions unset, on success and on failure") {
+    import org.apache.spark.sql.AnalysisException
+    val key = "spark.sql.shuffle.partitions"
+    val initial = spark.conf.getAll.get(key)
+    val ev = StreamingOps.eventStream(spark, SparkTest.sfDir)
+    val counts = ev.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    // append of an aggregation without a watermark: start() rejects it
+    val unwatermarked = ev.groupBy(window(col("ts"), "1 hour"))
+      .agg(count(lit(1)).as("n"))
+    spark.conf.unset(key)
+    try {
+      val out = StreamingOps.drainAndClean(spark, counts, "parts_ok",
+        shuffleParts = 3)(identity)
+      assert(spark.conf.getAll.get(key).isEmpty)
+      assert(out.count() > 0)
+      ops.ScaleOps.freeLocalCheckpoint(out)
+      intercept[AnalysisException] {
+        StreamingOps.drainAndClean(spark, unwatermarked, "parts_bad",
+          outputMode = "append", shuffleParts = 3)(identity)
+      }
+      assert(spark.conf.getAll.get(key).isEmpty)
+    } finally initial.foreach(spark.conf.set(key, _))
   }
 }
