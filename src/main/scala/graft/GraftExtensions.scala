@@ -4,8 +4,8 @@ import graft.functions.{CosineSim, JaccardSorted, Md5Bucket, SigMatchCount}
 import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** The one route that makes the engine's SQL functions and its
-  * optimizer rule part of a session, in the style of a strategy's
+/** The one route that makes the engine's SQL functions part of a
+  * session, in the style of a strategy's
   * `setup(session)`: `GraftExtensions.install(spark)` on a running
   * session. The library's own queries use the Column API
   * (`CosineSim.cosineSim`, `LayoutOps.zorderKey`, …) and need no
@@ -31,12 +31,11 @@ object GraftExtensions {
     ("zorder_key", ops.LayoutOps.getClass, 2,
       a => ops.LayoutOps.zorderKeyExpr(a(0), a(1))))
 
-  /** Register the five functions in `spark`'s function registry and add
-    * [[plans.JaccardSizeGuard]] to its extra optimizations. Idempotent:
-    * a function is re-registered in place, and the rule is appended only
-    * when absent. Only `spark` changes — a `newSession()` of it, or its
-    * parent, keeps its own registry and rules. */
-  def install(spark: SparkSession): Unit = {
+  /** Register the five functions in `spark`'s function registry.
+    * Idempotent: a function is re-registered in place. Only `spark`
+    * changes — a `newSession()` of it, or its parent, keeps its own
+    * registry. */
+  def install(spark: SparkSession): Unit =
     sqlFunctions.foreach { case (name, cls, arity, build) =>
       GraftShims.registerFunction(spark, name,
         new ExpressionInfo(cls.getName, name), { args =>
@@ -45,8 +44,4 @@ object GraftExtensions {
           build(args)
         })
     }
-    val rules = spark.experimental.extraOptimizations
-    if (!rules.contains(plans.JaccardSizeGuard))
-      spark.experimental.extraOptimizations = rules :+ plans.JaccardSizeGuard
-  }
 }

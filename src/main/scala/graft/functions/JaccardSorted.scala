@@ -19,8 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * bit-identical to the UDF path it replaces and to any engine
   * computing |∩|/|∪| on the same sets.
   *
-  * Inputs MUST be sorted ascending with distinct elements (the
-  * contract of [[graft.ops.Similarity.shingleSet]]); unsorted input
+  * Inputs MUST be sorted ascending with distinct elements; unsorted input
   * undercounts the intersection. Null if either side is null. Two
   * empty arrays → 0/0 = NaN, matching the UDF it replaces.
   */

@@ -140,37 +140,6 @@ object BpeOps {
     merges.toSeq.toDF("rank", "l", "r", "cnt")
   }
 
-  /** ENCODE with a trained merge table: tokens → character symbols →
-    * merges applied in rank order (greedy leftmost each, the exact
-    * inverse-of-training rule). One corpus-sized NARROW map — no
-    * shuffle; the merge table rides the closure (model-sized, the same
-    * broadcast posture as kmeans centroids). Tokenization hot paths are
-    * inherently per-row imperative, so a UDF is the honest primitive
-    * here (every production tokenizer is); BpeSpec pins encode∘fit
-    * round-trips on hand corpora. */
-  def encode(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val mergeArr = merges.toArray
-    val encUdf = udf { (text: String) =>
-      val words = Option(text).getOrElse("")
-        .toLowerCase.split("[^a-z]+").filter(_.nonEmpty)
-      words.flatMap { w =>
-        var syms: Array[String] = w.map(_.toString).toArray
-        mergeArr.foreach { case (l, r) =>
-          val out = ArrayBuffer[String]()
-          var i = 0
-          while (i < syms.length) {
-            if (i + 1 < syms.length && syms(i) == l && syms(i + 1) == r) {
-              out += (l + r); i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          syms = out.toArray
-        }
-        syms
-      }.toSeq
-    }
-    docs.select(col("doc_id"), encUdf(col("text")).as("tokens"))
-  }
-
   /** q170 — BPE first merge step, oracle-checked: the round-0 adjacent
     * CHARACTER-pair count table (top 20 by count desc, then pair), the
     * exact argmax input of [[fit]]'s first round. DuckDB reproduces it

@@ -212,7 +212,7 @@ object Clustering {
   }
 
   /** THE flat/two-level regime switch — shared by q187's in-memory
-    * assignment (semDedupOnReps) and q208's serializable store build
+    * assignment (semDedupOnReps) and q208's store build
     * (code review r15: the switch was duplicated and had already
     * diverged on maxIters/knownCount). k ≤ 64 → the bounded flat
     * [[lloydSampled]] fit (maxIters = 6, the SemDeDup posture);

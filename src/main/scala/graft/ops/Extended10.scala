@@ -705,147 +705,6 @@ object Extended10 {
     docs.select(toks(col("text")).as("t"))
       .agg(count(lit(1)).as("n"), sum(size(col("t")).cast("long")).as("l"))
 
-  /** Ingest a batch as a NEW SEGMENT (the Lucene shape, and the
-    * sigStoreAppend contract): blind appends of the batch's postings
-    * (bucketed by w) and its one stats row — the standing index is
-    * never read, rescanned, or rewritten; cost ∝ batch. Ingest
-    * invariant: batch doc_ids are fresh (re-ingesting a doc would
-    * double-count its postings and stats). */
-  private[graft] def sparseIndexAppend(batch: DataFrame,
-      postingsTable: String, statsTable: String, nBuckets: Int = 32): Unit = {
-    // existing bucket spec wins over nBuckets (ADVICE r14)
-    val nb = ScaleOps.appendBuckets(batch.sparkSession, postingsTable,
-      nBuckets)
-    ScaleOps.stageCheckpoint(sparseIndex(batch))
-      // repartition by the bucket hash so the segment lands as ONE
-      // file per bucket (code review r15b — without it each writer
-      // partition emits a file per bucket it touches, and the
-      // sparseMaintain file-count bound of maxSegments+1 per bucket
-      // would not hold; same fix sparseStoreCompact carries)
-      .repartition(nb, col("w"))
-      .write.mode("append")
-      .bucketBy(nb, "w")
-      .sortBy("w")
-      .saveAsTable(postingsTable)
-    sparseStats(batch).write.mode("append").saveAsTable(statsTable)
-  }
-
-  /** Compact the segmented sparse store in place — the Lucene
-    * forceMerge(1) half of the q207 lifecycle: rewrite every segment's
-    * postings as ONE bucketed+sorted-by-w segment and collapse the
-    * per-segment stats rows into one (exact — readers SUM across
-    * stats rows anyway). Postings rows are DISJOINT across segments
-    * (the fresh-doc ingest invariant), so the merge is purely
-    * physical: fewer files and one sorted run per bucket, restoring
-    * the point-lookup locality appends erode (each blind append adds
-    * one file per bucket, and a query's pushed In(w,…) lookup must
-    * touch every segment's files). Every query result is invariant
-    * under it — SparseIndexSpec pins bit-for-bit equality, the
-    * spanKeyedCompact/ivfCompact precedent. Cost ∝ store (run when
-    * segment counts grow); the store's own bucket spec and table
-    * locations are preserved.
-    *
-    * Crash-safe via DURABLE staging (ADVICE r15: the rewrite
-    * previously read the store through a JVM-local stageCheckpoint,
-    * so a driver crash mid-overwrite lost the standing index — the
-    * only complete copy died with the JVM). The WAL-marker protocol:
-    *   1. write the merged copy whole to `<table>__compact_stage`
-    *      tables (serving tables untouched; a crash here leaves
-    *      harmless pre-commit stage garbage the next run overwrites);
-    *   2. create the `<postings>__compact_commit` marker — the commit
-    *      point: from here the STAGE is authoritative;
-    *   3. overwrite the serving tables FROM the stage, drop marker,
-    *      drop stage.
-    * On entry, an existing marker means a previous run died inside
-    * step 3 (serving possibly damaged, stage complete) — the call
-    * FINISHES that compaction from the surviving stage instead of
-    * re-staging from the damaged serving table (code review r16: the
-    * first staging cut re-staged serving-first, which wrecked the only
-    * complete copy exactly in the crash case it claimed to fix). At
-    * every instant a complete copy exists on disk under one of the two
-    * names. The price is writing the merged postings twice, amortized
-    * over maxSegments blind appends by [[sparseMaintain]] — but only
-    * ONE of the two writes shuffles: the stage is a plain NARROW copy
-    * of the serving rows (no repartition, no bucket layout — a second
-    * r16 review pass caught the first cut paying the full
-    * repartition+sort twice), and the single bucket-hash shuffle+sort
-    * happens at publish. The serving bucket count rides IN the marker
-    * row so recovery reproduces the exact serving layout without
-    * consulting either (possibly damaged / unbucketed) table. One
-    * corner degrades: a crash between an overwrite's internal drop and
-    * create can lose an EXTERNAL table's location metadata — recovery
-    * recreates it as managed (data intact). */
-  private[graft] def sparseStoreCompact(spark: SparkSession,
-      postingsTable: String, statsTable: String): Unit = {
-    val pStage = s"${postingsTable}__compact_stage"
-    val sStage = s"${statsTable}__compact_stage"
-    val marker = s"${postingsTable}__compact_commit"
-    def extLoc(t: String): Option[String] = {
-      if (!spark.catalog.tableExists(t)) return None // mid-crash corner
-      val meta = spark.sessionState.catalog
-        .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(t))
-      if (meta.tableType ==
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL)
-        Some(meta.location.toString)
-      else None
-    }
-    // step 3 (also the recovery path): serving ← stage, then cleanup.
-    // repartition BY THE BUCKET HASH into exactly nb partitions before
-    // the bucketed write: partition i then holds exactly bucket i's
-    // rows (same Murmur3 pmod), so the merged segment lands as ONE
-    // file per bucket — without it each of the writer's input
-    // partitions emits a file per bucket it touches and the "merge"
-    // can produce MORE files per bucket than the segments had
-    // (measured: serve over such a compaction was ~1.3× the segmented
-    // serve; one-file-per-bucket is the whole point of the merge)
-    def publishFromStage(nb: Int): Unit = {
-      val pw = spark.table(pStage).repartition(nb, col("w"))
-        .write.mode("overwrite").bucketBy(nb, "w").sortBy("w")
-      extLoc(postingsTable).fold(pw)(p => pw.option("path", p))
-        .saveAsTable(postingsTable)
-      val sw = spark.table(sStage).write.mode("overwrite")
-      extLoc(statsTable).fold(sw)(p => sw.option("path", p))
-        .saveAsTable(statsTable)
-      spark.sql(s"DROP TABLE IF EXISTS $marker")
-      spark.sql(s"DROP TABLE IF EXISTS $pStage")
-      spark.sql(s"DROP TABLE IF EXISTS $sStage")
-    }
-    if (spark.catalog.tableExists(marker)) {
-      // committed stage from a crashed run — finish it; the serving
-      // tables may be damaged and must NOT be re-staged. The serving
-      // bucket count comes from the marker row (the stage is plain)
-      publishFromStage(spark.table(marker).head.getInt(0))
-      return
-    }
-    val nb = ScaleOps.appendBuckets(spark, postingsTable, 32)
-    // plain narrow copy — the one bucket shuffle happens at publish
-    spark.table(postingsTable)
-      .write.mode("overwrite").saveAsTable(pStage)
-    spark.table(statsTable).agg(sum("n").as("n"), sum("l").as("l"))
-      .write.mode("overwrite").saveAsTable(sStage)
-    spark.range(1).select(lit(nb).as("nb"))
-      .write.mode("overwrite").saveAsTable(marker) // commit
-    publishFromStage(nb)
-  }
-
-  /** The merge-policy consumer (the ivfMaintain shape for the sparse
-    * store — Lucene's maxMergedSegments analogue): ingest the batch as
-    * a new segment (blind, ∝ batch), then compact ONLY when the
-    * segment count exceeds `maxSegments` — so the ∝-store rewrite is
-    * amortized over maxSegments blind appends and serving never sees
-    * more than maxSegments+1 files per bucket. Returns true iff the
-    * compaction fired (SparseIndexSpec pins both sides of the
-    * threshold and that query results are invariant either way). */
-  private[graft] def sparseMaintain(spark: SparkSession, batch: DataFrame,
-      postingsTable: String, statsTable: String,
-      maxSegments: Int = 8): Boolean = {
-    sparseIndexAppend(batch, postingsTable, statsTable)
-    val segments = spark.table(statsTable).count()
-    val fire = segments > maxSegments
-    if (fire) sparseStoreCompact(spark, postingsTable, statsTable)
-    fire
-  }
-
   /** BM25 top-10 against the STORED segmented index: df for the query
     * terms aggregates across all segments and corpus stats sum across
     * segment rows, so segmented ≡ rebuilt exactly. The distinct query
@@ -877,9 +736,7 @@ object Extended10 {
     * q190's and shares its oracle verbatim (the q172/q206 precedent:
     * same contract, different mechanism — here the mechanism is the
     * segment lifecycle). Segments derive inline (testdata ships no
-    * index); serving from the stored P_postings/P_stats pair that
-    * sparseIndexAppend maintains is measured in BASELINE.md's "q207
-    * tier probe". */
+    * index). */
   def q207Bm25Incr(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.fanout(
       Tables.documents(spark, dir).select("doc_id", "text"))
@@ -1473,15 +1330,11 @@ object Extended10 {
     * systematically farther from every centroid than the corpus the
     * quantizer was trained on).
     *
-    * Correctness contract (RrfSpec pins): at FULL probe the query over
-    * an appended index is bit-equal to the query over a full inline
-    * rebuild — cell assignments differ (frozen vs retrained quantizer)
-    * but full probe visits every cell, so candidate sets coincide;
-    * append is batch-local (base rows' cells untouched, appending in
-    * two batches ≡ one); re-appending the base to its own quantizer
-    * reproduces the stored cells (assignment determinism); planted
-    * off-distribution batches trip the retrain flag, in-distribution
-    * ones don't.
+    * Correctness contract (RrfSpec pins): the batch assignment is
+    * batch-local (auditing in two batches ≡ one); auditing the base
+    * against its own quantizer reproduces the stored cells (assignment
+    * determinism); planted off-distribution batches trip the retrain
+    * flag, in-distribution ones don't.
     *
     * Scale: append cost ∝ batch, not corpus — one argmin pass over the
     * batch (k·d centroids ride the closure) and one partitioned write
@@ -1505,25 +1358,12 @@ object Extended10 {
       cellIsComputed = true)
   }
 
-  /** The append itself: assign each batch vector to the existing
-    * quantizer's nearest cell (same argmin, same tie rule as ingest).
-    * Returns batch rows in index schema (vec_id, e0, cell) — the
-    * caller unions them with (or file-appends them beside) the stored
-    * index. Never touches the stored index. */
-  private[graft] def ivfAppend(cents: Array[(Long, Array[Double])],
-      batch: DataFrame, dim: Int): DataFrame = {
-    val bD = batch.filter(size(col("e0")) === dim)
-    if (cents.isEmpty) bD.withColumn("cell", lit(0L)).limit(0)
-    else bD.withColumn("cell",
-      Clustering.nearestCentroid(cents)(col("e0"))("_1"))
-  }
-
   /** Maintenance audit of an append: per-cell base/batch populations,
     * per-side mean quantization error, the GLOBAL retrain trigger
     * (total batch MSE > 2× total base MSE, replicated onto every cell
-    * row — the quantizer is corpus-global, so the decision is too;
-    * [[ivfMaintain]] is its consumer), and the per-cell `cell_drift`
-    * MSE ratio that makes LOCALIZED drift visible. The
+    * row — the quantizer is corpus-global, so the decision is too),
+    * and the per-cell `cell_drift` MSE ratio that makes LOCALIZED
+    * drift visible. The
     * batch side's error is the append argmin's own d2. The stored
     * side depends on what `index` is (code-review r12): over a STORED
     * (parquet) index the error is a k-FREE map lookup of the row's own
@@ -1533,18 +1373,7 @@ object Extended10 {
     * a redundant second distance pass. */
   private[graft] def ivfAppendAudit(index: DataFrame,
       cents: Array[(Long, Array[Double])], batch: DataFrame,
-      dim: Int, cellIsComputed: Boolean = false,
-      // r15 (code review): the batch side's (cell, d2) assignment —
-      // default is the flat argmin over `cents`, which IS the ingest
-      // assignment for every flat quantizer (q200); a hierarchical
-      // store (q208's two-level / split-guarded model) must pass its
-      // OWN assignment UDF, or the batch's flat global-min d2
-      // LOWER-BOUNDS the real assignment's and systematically
-      // understates batch MSE — masking exactly the drift the 2×
-      // trigger exists to catch (stored rows are measured against
-      // their own assigned leaf, so both sides stay symmetric).
-      batchAsg: Option[org.apache.spark.sql.expressions.UserDefinedFunction]
-        = None): DataFrame = {
+      dim: Int, cellIsComputed: Boolean = false): DataFrame = {
     // belt-and-suspenders (the ivfIndex empty-cents posture): a
     // zero-centroid quantizer with a nonempty batch would crash the
     // per-row argmin — an empty audit is the degraded answer
@@ -1575,7 +1404,7 @@ object Extended10 {
       .groupBy("cell")
       .agg(count(lit(1)).as("n_base"), sum(col("d2")).as("s_base"))
     val batchSide = batch.filter(size(col("e0")) === dim)
-      .select(batchAsg.getOrElse(asg)(col("e0")).as("a"))
+      .select(asg(col("e0")).as("a"))
       .select(col("a._1").as("cell"), col("a._2").as("d2"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_batch"), sum(col("d2")).as("s_batch"))
@@ -1599,7 +1428,7 @@ object Extended10 {
         // GLOBAL trigger (ADVICE r12: scope documented) — the
         // total-batch-MSE / total-base-MSE > 2 decision, replicated
         // identically onto every cell row; the maintenance decision
-        // is corpus-global (one quantizer), see [[ivfMaintain]]
+        // is corpus-global (one quantizer)
         coalesce(col("batch_mse") > col("base_mse") * 2, lit(false))
           .as("retrain"),
         // per-cell MSE ratio so LOCALIZED drift is visible in the
@@ -1612,83 +1441,6 @@ object Extended10 {
       .orderBy("cell")
     try out.localCheckpoint()
     finally cells.unpersist()
-  }
-
-  /** Consume the retrain trigger (r12 verdict item 2) — the
-    * maintenance decision [[ivfAppendAudit]] exists to gate, exercised
-    * end-to-end: audit the batch against the stored quantizer; if the
-    * global trigger fires (the batch lives outside the trained space),
-    * RETRAIN — rebuild quantizer and index on stored ∪ batch (the raw
-    * vectors are the index's own (vec_id, e0) columns; the rebuild is
-    * the same deterministic [[ivfIndex]] fit as any inline build, and
-    * the fit is row-order independent — id-keyed hash draw, first-k-
-    * by-id init — so RrfSpec pins its full-probe query bit-equal to
-    * the inline rebuild). Otherwise keep the frozen quantizer and take
-    * the ∝-batch append path. Returns (index, cents, retrained).
-    *
-    * Scale: the no-drift path is q200's append (one argmin pass over
-    * the batch; the stored index is unioned lazily, never shuffled);
-    * the drift path pays one full rebuild — the corpus-sized cost the
-    * trigger exists to amortize down to drifted batches only. */
-  private[graft] def ivfMaintain(index: DataFrame,
-      cents: Array[(Long, Array[Double])], batch: DataFrame, dim: Int,
-      nCells: Int, cellIsComputed: Boolean = false)
-      : (DataFrame, Array[(Long, Array[Double])], Boolean) = {
-    val audit = ivfAppendAudit(index, cents, batch, dim, cellIsComputed)
-    // the audit frame is localCheckpointed and cell-sized; `retrain`
-    // is the global flag replicated per row — max() over ≤ k rows
-    val retrain = audit
-      .agg(coalesce(max(col("retrain")), lit(false)).as("r"))
-      .head.getBoolean(0)
-    if (retrain) {
-      val (i2, c2) = ivfIndex(
-        index.select(col("vec_id"), col("e0"))
-          .unionByName(batch.select(col("vec_id"), col("e0"))),
-        dim, nCells)
-      (i2, c2, true)
-    } else (index.unionByName(ivfAppend(cents, batch, dim)), cents,
-      false)
-  }
-
-  /** Tombstone delete for a stored IVF index — the complement of
-    * q200's append, completing the maintenance lifecycle (append =
-    * ivfAppend, retrain = ivfMaintain, delete/compact = here; Faiss
-    * remove_ids semantics, the LSM tombstone shape). A delete batch is
-    * recorded as ID-ONLY tombstone rows — O(batch) like the append,
-    * the stored index never read — and queries mask candidates with a
-    * BROADCAST anti-join (tombstones are batch-sized between
-    * compactions). At full probe the masked index answers queries
-    * bit-equal to a full rebuild on the remaining vectors (cells never
-    * matter at full probe — the q200 append-pin argument), which
-    * RrfSpec pins. */
-  private[graft] def ivfWithTombstones(index: DataFrame,
-      tombstones: DataFrame): DataFrame =
-    index.join(broadcast(tombstones.select(col("vec_id"))),
-      Seq("vec_id"), "left_anti")
-
-  /** Compaction: fold the tombstones in, rewriting ONLY the affected
-    * cells. Finding them needs no fat read — one scan of the index's
-    * (vec_id, cell) columns (16 bytes/row; on the cell-partitioned
-    * store this is a narrow column read) joined against the broadcast
-    * tombstones, collected as the ≤ nCells affected-cell set (audit-
-    * sized by construction). Unaffected cells pass through UNTOUCHED —
-    * in production their files are simply left in place and only the
-    * affected cell partitions rewrite; the returned frame models
-    * exactly that split. Returns (compacted, affectedCells). */
-  private[graft] def ivfCompact(index: DataFrame,
-      tombstones: DataFrame): (DataFrame, Seq[Long]) = {
-    val tombs = broadcast(tombstones.select(col("vec_id")))
-    val affected = index.select(col("vec_id"), col("cell"))
-      .join(tombs, "vec_id")
-      .select(col("cell")).distinct()
-      .collect().map(_.getLong(0)).sorted.toSeq
-    if (affected.isEmpty) return (index, affected)
-    val untouched = index
-      .filter(!col("cell").isin(affected.map(Long.box): _*))
-    val rewritten = index
-      .filter(col("cell").isin(affected.map(Long.box): _*))
-      .join(tombs, Seq("vec_id"), "left_anti")
-    (untouched.unionByName(rewritten), affected)
   }
 
   /** Inline build+query composition (the declared q199 and the spec

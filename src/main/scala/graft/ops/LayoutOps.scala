@@ -1,24 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShims}
+import org.apache.spark.sql.{Column, GraftShims}
 import org.apache.spark.sql.catalyst.expressions.{BitwiseAnd, BitwiseOr, Cast,
   Expression, Literal, ShiftLeft}
 import org.apache.spark.sql.types.LongType
 
-/** Physical data-layout operators — the write-side half of the 100 TB
-  * posture. Scan-side pruning (partition filters, row-group min/max
-  * skipping) only pays off if the writer clustered related rows
-  * together; these produce that layout.
-  *
-  * - [[clusteredWrite]]: range-partition + sort-within-partitions so
-  *   each output file covers a narrow, non-overlapping key range →
-  *   parquet footer min/max stats prune whole files for key predicates.
-  * - [[zorderKey]]: Morton-interleave two dimensions into one sort key
-  *   so a single clustering serves predicates on EITHER dimension —
-  *   the multi-dimensional generalization of range clustering.
-  * - [[compact]]: bound output file size (the small-files problem: a
-  *   100 TB table written from 10⁵ tasks with no bound produces file
-  *   counts that break listing and planning).
+/** Physical data-layout operators: [[zorderKey]] Morton-interleaves two
+  * dimensions into one sort key so a single clustering serves
+  * predicates on EITHER dimension (parquet footer min/max stats then
+  * prune files for a predicate on either key).
   */
 object LayoutOps {
 
@@ -52,28 +42,4 @@ object LayoutOps {
         BitwiseAnd(BitwiseOr(x, ShiftLeft(x, Literal(shift))), Literal(mask))
     }
   }
-
-  /** Range-cluster `df` into `nFiles` sorted, non-overlapping key
-    * ranges and write one file per range. Parquet records per-column
-    * min/max per file and row group; a later scan with a predicate on
-    * `keys` prunes every file whose range misses — without reading it.
-    * (repartitionByRange samples the key distribution, so ranges are
-    * equi-depth, not equi-width: skew in the key does not skew files.) */
-  def clusteredWrite(df: DataFrame, path: String, nFiles: Int,
-      keys: Column*): Unit =
-    df.repartitionByRange(nFiles, keys: _*)
-      .sortWithinPartitions(keys: _*)
-      .write.mode("overwrite").parquet(path)
-
-  /** Rewrite `df` with bounded file sizes: at most `maxRecordsPerFile`
-    * rows per output file (Spark splits a task's output as it crosses
-    * the bound). `nPartitions` bounds the file COUNT from below — one
-    * task writes ≥ 1 file — so pick it as totalRows / maxRecordsPerFile
-    * rounded up for even sizing. */
-  def compact(df: DataFrame, path: String, nPartitions: Int,
-      maxRecordsPerFile: Long): Unit =
-    df.repartition(nPartitions)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
 }

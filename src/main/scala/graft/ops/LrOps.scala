@@ -54,8 +54,8 @@ object LrOps {
     * input). LrSpec pins both.
     *
     * r17 (guide §2/§4): the gradient aggregate is `dim` independent
-    * built-in sum(g·fⱼ) columns (the minhashSignatures
-    * K-independent-aggregates trick) instead of the former per-row
+    * built-in sum(g·fⱼ) columns (the K-independent-aggregates trick
+    * of the portable MinHash signature) instead of the former per-row
     * array UDF + VectorSumAgg pair, whose catalyst↔Scala buffer
     * (de)serialization was the per-row cost; only the scalar residual
     * g stays a UDF (weights in `references` keep the codegen cache

@@ -2,26 +2,16 @@ package graft.ops
 
 import graft.Tables
 import graft.ops.Out.SortOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Decoded-media record produced by the stub decoder. */
-case class DecodedMedia(
-    media_id: Long, mime: String, byte_len: Long,
-    width: Int, height: Int, n_frames: Int, sampled_frames: Seq[Int])
-
-/** q40 + multimodal column plumbing: media as opaque BINARY columns with
-  * a typed metadata struct, decoded by a per-partition stub.
-  *
-  * The container has no image/audio codecs, so `decodeStub` is a
-  * clearly-marked deterministic fake (dimensions derived from byte
-  * length) — but the Spark-side shape is real: binary column + metadata
-  * struct schema, `mapPartitions` batch decode (the Scala analog of
-  * `mapInPandas` — one iterator per partition, so a real decoder could
-  * amortize codec init per partition exactly like a Pandas batch UDF),
-  * and frame sampling producing an array column. At 100 TB the binary
-  * payload stays columnar in parquet, is never shuffled (all derivations
-  * are narrow), and decode parallelism = partition count.
+/** q40 — multimodal column plumbing: media as opaque BINARY columns
+  * with a typed metadata struct. The container has no image/audio
+  * codecs, so the "decode" is deterministic arithmetic on byte length
+  * (width, height, frame count, stride-4 frame samples), expressed as
+  * codegen'd column arithmetic the DuckDB oracle mirrors. At 100 TB the
+  * binary payload stays columnar in parquet and is never shuffled (all
+  * derivations are narrow).
   */
 object MultimodalOps {
 
@@ -37,103 +27,8 @@ object MultimodalOps {
         octet_length(col("text").cast("binary")).cast("long").as("byte_len"),
         col("source").as("origin")).as("meta"))
 
-  /** Real media INGESTION path: a directory of raw files through
-    * Spark's `binaryFile` source — one row per file (path, length,
-    * modificationTime, content), emitted in the [[mediaTable]] shape
-    * so everything downstream (decode/resize/feature-extract) is
-    * source-agnostic. `pathGlobFilter` prunes at LISTING time (files
-    * that miss the glob are never opened) and recursive lookup walks
-    * the usual object-store layout. Scale: the source packs small
-    * files up to spark.sql.files.maxPartitionBytes per task and never
-    * splits one file across tasks, so a 100 TB media lake partitions
-    * by byte budget with no tiny-file task explosion; media ids are
-    * the file paths (unique by construction). */
-  def readMediaDir(spark: SparkSession, dir: String,
-      glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(
-        col("path").as("media_id"),
-        col("content").as("bytes"),
-        struct(
-          lit("application/octet-stream").as("mime"),
-          col("length").as("byte_len"),
-          regexp_extract(col("path"), "([^/]+)$", 1).as("origin"))
-          .as("meta"))
-
-  /** STUB: deterministic fake decode — real codecs are absent from the
-    * container. Dimensions are arithmetic on byte length; a production
-    * impl would replace ONLY this function body (signature and batch
-    * shape stay). */
-  def decodeStub(media: DataFrame): Dataset[DecodedMedia] = {
-    import media.sparkSession.implicits._
-    media.select(col("media_id"), col("bytes"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { it =>
-        // per-partition init (codec handle in a real decoder) goes here
-        it.map { case (id, bytes, mime) =>
-          val b = bytes.length.toLong
-          val w = (b % 512 + 128).toInt
-          val h = (b * 7 % 512 + 128).toInt
-          val nf = (b % 16 + 1).toInt
-          DecodedMedia(id, mime, b, w, h, nf, frameSample(nf, 4))
-        }
-      }
-  }
-
-  /** Frame indices 0, stride, 2·stride, … < nFrames. */
-  def frameSample(nFrames: Int, stride: Int): Seq[Int] =
-    0 until nFrames by stride
-
-  /** STUB resize: binary → binary at a fixed target byte budget
-    * (truncate or zero-pad — a real impl swaps ONLY the body for a
-    * pixel resample). Shape notes that are real: binary in, binary
-    * out, narrow (no shuffle), metadata struct rewritten alongside the
-    * payload so downstream readers never see stale byte_len. */
-  def resizeStub(media: DataFrame, targetBytes: Int): DataFrame = {
-    val resize = udf { bytes: Array[Byte] =>
-      if (bytes.length >= targetBytes) bytes.take(targetBytes)
-      else bytes ++ Array.fill[Byte](targetBytes - bytes.length)(0)
-    }
-    media.select(col("media_id"),
-      resize(col("bytes")).as("bytes"),
-      struct(col("meta.mime").as("mime"),
-        lit(targetBytes.toLong).as("byte_len"),
-        col("meta.origin").as("origin")).as("meta"))
-  }
-
-  /** STUB feature extraction: binary → fixed-dimension Array[Float]
-    * (deterministic byte-fold — a real impl swaps the body for a model
-    * forward pass). The output column is schema-compatible with the
-    * `embeddings.embedding` column, so everything downstream of it —
-    * cosine top-k (q26), ANN (q38/q45), embedding near-dup (q39) —
-    * composes unchanged. mapPartitions batch shape: per-partition init
-    * is where a real extractor loads its model once per task. */
-  def featureExtractStub(media: DataFrame, dim: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.select(col("media_id"), col("bytes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        // per-partition init (model load in a real extractor) goes here
-        it.map { case (id, bytes) =>
-          val v = new Array[Float](dim)
-          var i = 0
-          while (i < bytes.length) {
-            v(i % dim) += (bytes(i) & 0xFF) / 255.0f
-            i += 1
-          }
-          (id, v)
-        }
-      }
-      .toDF("media_id", "embedding")
-  }
-
   /** q40 — the multimodal pipeline shape, expressed with codegen'd
-    * column arithmetic (so the DuckDB oracle can mirror it — the
-    * mapPartitions variant above is behavior-identical, tested in
-    * MultimodalSpec). */
+    * column arithmetic so the DuckDB oracle can mirror it. */
   def q40Multimodal(spark: SparkSession, dir: String): DataFrame =
     mediaTable(spark, dir).select(
       col("media_id"),

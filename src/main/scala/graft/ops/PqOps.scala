@@ -36,17 +36,15 @@ import org.apache.spark.sql.functions._
   * a LITERAL isin on the stored id column — parquet row-group pruning
   * on an id-sorted corpus — plus a broadcast join for the adc_d2
   * values, so the raw e0 column is point-looked-up, never rescanned.
-  * Composes with q199/q200's IVF cells (IVFADC — probe cells first,
-  * ADC-rank only probed candidates): PqSpec pins the composed path;
-  * the declared query keeps the exhaustive-scan shape, which is the
-  * published ADC baseline and isolates what is new here.
+  * The declared query keeps the exhaustive-scan shape, the published
+  * ADC baseline.
   *
   * Rows-only in t2 (float k-means codebooks — the q45/q108/q199
   * precedent); PqSpec pins pack/unpack roundtrip, the lossless-
   * alphabet law (on a binary-exact alphabet with ≤ ks distinct
   * subvectors per subspace the ADC distance EQUALS the exact distance,
   * bit-for-bit, and the rankings coincide), planted-cluster top-10
-  * overlap vs brute, self-retrieval, and the IVFADC composition. */
+  * overlap vs brute, and self-retrieval. */
 object PqOps {
 
   /** M per-subspace codebooks; codebooks(i) is subspace i's Lloyd
@@ -122,160 +120,6 @@ object PqOps {
       }
       code
     }.asNonNullable()
-  }
-
-  /** Residual training — the full IVFADC (Jégou TPAMI 2011 §IV, the
-    * Faiss default at scale): codebooks quantize the RESIDUAL
-    * x − c(cell) of each indexed vector against its own coarse cell
-    * centroid instead of x itself, concentrating the code's 64 bits
-    * on within-cell noise rather than re-spending them on the coarse
-    * geometry the cell id already encodes — strictly better
-    * reconstruction on clustered data at the same bits (PqSpec
-    * measures it). One in-row residual map (centroids ride the
-    * closure) feeding the same one-job-per-round subspace fit. */
-  private[graft] def pqTrainResidual(index: DataFrame,
-      cents: Array[(Long, Array[Double])], dim: Int, m: Int, ks: Int,
-      maxIters: Int = 4): PqModel = {
-    val cmap = cents.toMap
-    val resid = udf { (e: Seq[Double], cell: Long) =>
-      val c = cmap(cell)
-      val out = new Array[Double](e.length)
-      var j = 0
-      while (j < out.length) { out(j) = e(j) - c(j); j += 1 }
-      out
-    }.asNonNullable()
-    pqTrain(index.select(col("vec_id").as("id"),
-      resid(col("e0"), col("cell")).as("e")), dim, m, ks, maxIters)
-  }
-
-  /** Attach residual codes to a coarse index — the IVFADC ingest
-    * shape: (vec_id, e0, cell) → + code, one in-row pass (centroids
-    * AND codebooks ride the closure). */
-  private[graft] def ivfAdcIndex(index: DataFrame,
-      cents: Array[(Long, Array[Double])], model: PqModel): DataFrame = {
-    val cmap = cents.toMap
-    val books = model.codebooks
-    val m = model.m
-    val sub = model.subDim
-    val enc = udf { (e: Seq[Double], cell: Long) =>
-      val c = cmap(cell)
-      var code = 0L
-      var i = 0
-      while (i < m) {
-        val s = new Array[Double](sub)
-        var j = 0
-        while (j < sub) {
-          s(j) = e(i * sub + j) - c(i * sub + j); j += 1
-        }
-        code |= (Clustering.argminLocal(books(i),
-          scala.collection.immutable.ArraySeq.unsafeWrapArray(s))._1
-          & 0xffL) << (8 * i)
-        i += 1
-      }
-      code
-    }.asNonNullable()
-    index.withColumn("code", enc(col("e0"), col("cell")))
-  }
-
-  /** IVFADC query: probe each query's nProbe nearest cells (driver-
-    * ranked, the q199 metric and tie rules), ADC-rank ONLY the probed
-    * cells' rows with per-(query, cell) residual tables (q − c(cell)
-    * against the shared codebooks — nProbe·M·ks doubles per query,
-    * still the model-artifact class), exact-refine the collected
-    * top-R from the index's own e0 via the pushed-id shape. At full
-    * probe with topR ≥ corpus the refinement law makes the output the
-    * brute exact ranking regardless of code quality (PqSpec pin). */
-  /** The IVFADC candidate frame (exposed for the spec's plan pin):
-    * probed-cell rows ADC-ranked with per-(query, cell) residual
-    * tables, cut to top-R map-side. `pruneCells` adds the probed-cell
-    * set as a STATIC isin on the stored cell column — file-listing
-    * partition pruning on a cell-partitioned store (the q199 prebuilt
-    * lesson applied to codes); leave false over an INLINE index whose
-    * cell column is the computed assignment UDF (the filter would
-    * push below fanout's repartition — the q45 trap). */
-  private[graft] def ivfAdcCandidates(index: DataFrame,
-      cents: Array[(Long, Array[Double])], model: PqModel,
-      qvecs: Array[(Long, Array[Double])], nProbe: Int, topR: Int,
-      pruneCells: Boolean = false): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val cmap = cents.toMap
-    val probe: Map[Long, Seq[Long]] = qvecs.map { case (q, e) =>
-      q -> cents.toSeq
-        .map { case (cid, ce) => (cid, Clustering.l2sqLocal(e, ce)) }
-        .sortBy { case (cid, d) => (d, cid) }.take(nProbe).map(_._1)
-    }.toMap
-    val tables: Map[Long, Map[Long, Array[Array[Double]]]] =
-      qvecs.map { case (q, e) =>
-        q -> probe(q).map { cid =>
-          val c = cmap(cid)
-          val r = new Array[Double](e.length)
-          var j = 0
-          while (j < r.length) { r(j) = e(j) - c(j); j += 1 }
-          cid -> adcTable(model, r)
-        }.toMap
-      }.toMap
-    val cellSet = probe.values.flatten.toSeq.distinct
-    val candFilter =
-      if (!pruneCells) lit(true)
-      else if (cellSet.isEmpty) lit(false)
-      else col("cell").isin(cellSet.map(Long.box): _*)
-    val probeDf = probe.toSeq
-      .flatMap { case (q, cs) => cs.map(c => (q, c)) }
-      .toDF("q_id", "cell")
-    val m = model.m
-    val adcUdf = udf { (qId: Long, cell: Long, code: Long) =>
-      val t = tables(qId)(cell)
-      var d = 0.0
-      var i = 0
-      while (i < m) {
-        d += t(i)(((code >>> (8 * i)) & 0xffL).toInt)
-        i += 1
-      }
-      d
-    }.asNonNullable()
-    index.filter(candFilter).join(broadcast(probeDf), "cell")
-      .select(col("q_id"), col("vec_id").as("id"),
-        adcUdf(col("q_id"), col("cell"), col("code")).as("adc_d2"))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("q_id")
-          .orderBy(col("adc_d2"), col("id"))))
-      .filter(col("rn") <= topR)
-      .select(col("q_id"), col("id"), col("adc_d2"))
-  }
-
-  private[graft] def ivfAdcQuery(index: DataFrame,
-      cents: Array[(Long, Array[Double])], model: PqModel,
-      qvecs: Array[(Long, Array[Double])], nProbe: Int, topR: Int,
-      depth: Int, pruneCells: Boolean = false): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val adcTop = ivfAdcCandidates(index, cents, model, qvecs, nProbe,
-      topR, pruneCells).collect()
-    if (adcTop.isEmpty)
-      return index.select(col("vec_id").as("q_id"), lit(0L).as("rnk"),
-        col("vec_id"), lit(0.0).as("adc_d2"), lit(0.0).as("d2"))
-        .limit(0)
-    val candIds = adcTop.map(_.getLong(1)).distinct.sorted.toSeq
-    val cand = adcTop.toSeq
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .toDF("q_id", "cand_id", "adc_d2")
-    val qmap = qvecs.toMap
-    val exactUdf = udf { (qId: Long, e: Seq[Double]) =>
-      Clustering.l2sqLocal(qmap(qId), e.toArray)
-    }.asNonNullable()
-    index.filter(col("vec_id").isin(candIds.map(Long.box): _*))
-      .join(broadcast(cand), col("vec_id") === col("cand_id"))
-      .select(col("q_id"), col("vec_id"), col("adc_d2"),
-        exactUdf(col("q_id"), col("e0")).as("d2"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("q_id")
-          .orderBy(col("d2"), col("vec_id"))))
-      .filter(col("rnk") <= depth)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"),
-        col("vec_id"), round(col("adc_d2"), 6).as("adc_d2"),
-        round(col("d2"), 6).as("d2"))
-      .orderBy("q_id", "rnk")
   }
 
   /** Unpack a code into its M per-subspace cell ids (spec + decode). */
@@ -438,88 +282,6 @@ object PqOps {
       val out = pqAdcQuery(emb, model, qvecs, topR = 32, depth = 10)
       out.localCheckpoint()
     } finally emb.unpersist()
-  }
-
-  // ------------------------------------------------- append lifecycle
-  /** PQ add-with-ids (the Faiss shape — closes the PQ store
-    * lifecycle): encode an ARRIVING batch under the STORED, frozen
-    * codebooks and blind-append its packed codes beside the standing
-    * code files. Because encode is a pure per-row function of the
-    * frozen model, append ≡ rebuild is BIT-EXACT on the code column
-    * (PqSpec pins it) — no approximation enters until the model is
-    * retrained. Cost ∝ batch: one in-row encode pass (M·ks·subDim
-    * doubles ride the closure) + one batch-sized parquet append,
-    * id-sorted within partitions so the refinement's literal-isin
-    * point lookups keep their row-group pruning; the stored codes are
-    * never read, rescanned, or rewritten. Ingest invariant: batch ids
-    * are fresh (re-appending a vector would duplicate its code row). */
-  private[graft] def pqAppend(batch: DataFrame, model: PqModel,
-      codesPath: String): Unit =
-    batch.select(col("id"), pqEncode(model)(col("e")).as("code"))
-      .sortWithinPartitions("id")
-      .write.mode("append").parquet(codesPath)
-
-  /** IVFADC add-with-ids: assign the batch to the STORED coarse cells
-    * ([[Extended10.ivfAppend]] — same argmin and tie rule as ingest),
-    * attach residual codes under the stored codebooks
-    * ([[ivfAdcIndex]]), and blind-append beside the cell partitions —
-    * batch-sized files land in their cell directories, the standing
-    * index is untouched. Same frozen-model bit-exactness law as
-    * [[pqAppend]] (PqSpec), and the same full-probe query-equality
-    * contract as q200's coarse append. */
-  private[graft] def ivfAdcAppend(batch: DataFrame,
-      cents: Array[(Long, Array[Double])], model: PqModel,
-      indexPath: String): Unit =
-    ivfAdcIndex(Extended10.ivfAppend(cents, batch, model.dim), cents,
-      model)
-      .write.mode("append").partitionBy("cell").parquet(indexPath)
-
-  /** Per-row PQ reconstruction error ||x − decode(encode(x))||² under
-    * a frozen model — encode and decode fused into one argmin pass
-    * (argminLocal returns the squared distance to the chosen codeword,
-    * which per subspace IS the reconstruction error; summed across
-    * subspaces in ascending order, the same IEEE fold as the ADC
-    * equality law). */
-  private[graft] def reconErr(model: PqModel): UserDefinedFunction = {
-    val books = model.codebooks
-    val m = model.m
-    val sub = model.subDim
-    udf { (e: Seq[Double]) =>
-      val arr = e.toArray
-      var d = 0.0
-      var i = 0
-      while (i < m) {
-        val s = scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          java.util.Arrays.copyOfRange(arr, i * sub, (i + 1) * sub))
-        d += Clustering.argminLocal(books(i), s)._2
-        i += 1
-      }
-      d
-    }.asNonNullable()
-  }
-
-  /** Drift audit for the frozen-codebook append — q200's 2× MSE
-    * trigger applied to PQ reconstruction error: one in-row pass per
-    * side computing ||x − decode(encode(x))||² under the stored model,
-    * retrain when the batch's mean reconstruction error exceeds 2× the
-    * base's (batch vectors landing systematically farther from every
-    * codeword than the corpus the codebooks were trained on — the
-    * ivfAppendAudit decision, model-global here because the codebooks
-    * are). One row out (the audit-artifact class); the 1×1 crossJoin
-    * is the scalar-fanout shape. */
-  private[graft] def pqAppendAudit(base: DataFrame, batch: DataFrame,
-      model: PqModel): DataFrame = {
-    val err = reconErr(model)
-    val b = base.select(err(col("e")).as("d2"))
-      .agg(count(lit(1)).as("n_base"), avg(col("d2")).as("base_mse"))
-    val t = batch.select(err(col("e")).as("d2"))
-      .agg(count(lit(1)).as("n_batch"), avg(col("d2")).as("batch_mse"))
-    b.crossJoin(broadcast(t))
-      .select(col("n_base"), col("n_batch"),
-        round(col("base_mse"), 6).as("base_mse"),
-        round(col("batch_mse"), 6).as("batch_mse"),
-        coalesce(col("batch_mse") > col("base_mse") * 2, lit(false))
-          .as("retrain"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

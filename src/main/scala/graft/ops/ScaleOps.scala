@@ -283,18 +283,14 @@ object ScaleOps {
     * against it WITHOUT shuffling the state side: only the (much
     * smaller) incoming batch is exchanged into the state's bucketing.
     * This is the SURVEY §4.2 posture for snapshot merges at 100 TB —
-    * the accumulated state never crosses the wire again. */
+    * the accumulated state never crosses the wire again. NB for a JOIN
+    * to reuse the bucketing without shuffling the state side, the
+    * bucket keys must be ALL of the join keys
+    * (spark.sql.requireAllClusterKeysForCoPartition defaults to true
+    * since 3.3 — a subset-keyed layout only helps aggregations and
+    * broadcast-regime scans, measured on the q153 band store). */
   def writeBucketedState(state: DataFrame, table: String, path: String,
-      key: String, nBuckets: Int = 8): Unit =
-    writeBucketedState(state, table, path, Seq(key), nBuckets)
-
-  /** Multi-key variant. NB for a JOIN to reuse the bucketing without
-    * shuffling the state side, the bucket keys must be ALL of the join
-    * keys (spark.sql.requireAllClusterKeysForCoPartition defaults to
-    * true since 3.3 — a subset-keyed layout only helps aggregations
-    * and broadcast-regime scans, measured on the q153 band store). */
-  def writeBucketedState(state: DataFrame, table: String, path: String,
-      keys: Seq[String], nBuckets: Int): Unit =
+      keys: Seq[String], nBuckets: Int = 8): Unit =
     state.write.mode("overwrite")
       .bucketBy(nBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
@@ -316,17 +312,4 @@ object ScaleOps {
     else if (loc.startsWith("table:")) spark.table(loc.stripPrefix("table:"))
     else if (loc.contains("/")) spark.read.parquet(loc)
     else spark.table(loc)
-
-  /** The bucket count an APPEND into `table` must use: the existing
-    * table's own bucket spec when the table exists (Spark throws an
-    * AnalysisException on a bucket-spec mismatch at append time —
-    * ADVICE r14: a store built via [[writeBucketedState]] (default 8)
-    * then appended with a helper's own default (32) exploded), else
-    * the caller's default for the initial create. */
-  def appendBuckets(spark: org.apache.spark.sql.SparkSession,
-      table: String, default: Int): Int =
-    if (!spark.catalog.tableExists(table)) default
-    else spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(default)
 }

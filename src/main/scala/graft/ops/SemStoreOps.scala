@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * Rows-only in t2 (float k-means cells — the q45/q108/q187/q200
   * precedent). SemStoreSpec pins planted-copy recovery, the
   * no-false-positive side, incremental ≡ full on planted cliques,
-  * the append law (a copy of an admitted rep drops on the next
-  * probe), and the drift-trigger reuse.
+  * and the append law (a copy of an admitted rep drops on the next
+  * probe).
   *
   * Scale: probe work ∝ batch reps × their cells' stored populations —
   * cells bound pair work (the q187 argument; the stored quantizer's
@@ -46,15 +46,6 @@ import org.apache.spark.sql.functions._
   * exact store shape), [[Clustering.lloydTwoLevel]] beyond it — √k
   * per-row fit and assignment work, the answer to the flat-Lloyd
   * O(n·k·d) ingest wall at adaptive k over large distinct corpora.
-  * Both shapes serialize to ONE model table ([[semModelRows]] /
-  * [[semModelFromRows]]: top rows + leaf rows, flat = leaves only),
-  * so the stored-path probe reconstructs the exact build-time
-  * assignment — what keeps "a copy of a stored vector lands in the
-  * stored rep's cell" true across JVMs. A batch whose vectors the
-  * frozen quantizer no longer fits concentrates into few cells AND
-  * lands far from every centroid — exactly what [[semDriftAudit]]
-  * (q200's 2× MSE trigger, reused verbatim over the model's flat
-  * LEAVES) flags as retrain-due.
   */
 object SemStoreOps {
 
@@ -99,10 +90,7 @@ object SemStoreOps {
     * quantizer failed to split re-created unbounded within-cell pair
     * work at probe time). `assign` descends: base argmin, then walk
     * split parents until a real leaf (children of children are split
-    * rows themselves — depth bounded by the build's maxRounds).
-    * `flatLeaves` is the FINAL leaf set (split parents replaced by
-    * their children) — the drift audit's lookup view, keyed by
-    * exactly the cids stored rows carry. */
+    * rows themselves — depth bounded by the build's maxRounds). */
   private[graft] final case class SemModel(base: SemBase,
       splits: Map[Long, Array[(Long, Array[Double])]]) {
     def isEmpty: Boolean = base.leaves.isEmpty
@@ -117,62 +105,6 @@ object SemStoreOps {
     }
     def assign: org.apache.spark.sql.expressions.UserDefinedFunction =
       udf { (e: Seq[Double]) => assignLocal(e) }.asNonNullable()
-    def flatLeaves: Array[(Long, Array[Double])] = {
-      val out = scala.collection.mutable.LinkedHashMap(
-        base.leaves.map(l => l._1 -> l._2).toSeq: _*)
-      splits.foreach { case (parent, kids) =>
-        out.remove(parent)
-        kids.foreach { case (c, ce) =>
-          if (!splits.contains(c)) out(c) = ce
-        }
-      }
-      out.toArray.sortBy(_._1)
-    }
-  }
-
-  /** Serialize a model to rows (tcid, sub, k2, ce):
-    *  - flat leaf: (−1, cid, 0, ce)
-    *  - two-level: top rows (tc, −1, k2, ce) + leaf rows (tc, bc, k2,
-    *    ce) with k2 ≥ 1
-    *  - split rows: (parent global cid, CHILD global cid, −1, ce)
-    * One small table — k·d doubles, the model-artifact class. */
-  private[graft] def semModelRows(model: SemModel)
-      : Seq[(Long, Long, Int, Seq[Double])] = {
-    val baseRows = model.base match {
-      case SemFlat(cents) =>
-        cents.toSeq.map { case (cid, ce) => (-1L, cid, 0, ce.toSeq) }
-      case SemTwoLevel(m) =>
-        m.top.toSeq.map { case (tc, ce) => (tc, -1L, m.k2, ce.toSeq) } ++
-          m.subs.toSeq.flatMap { case (tc, arr) =>
-            arr.toSeq.map { case (bc, ce) => (tc, bc, m.k2, ce.toSeq) }
-          }
-    }
-    baseRows ++ model.splits.toSeq.flatMap { case (parent, kids) =>
-      kids.toSeq.map { case (c, ce) => (parent, c, -1, ce.toSeq) }
-    }
-  }
-
-  /** Reconstruct the EXACT build-time model (and therefore the exact
-    * assignment function) from its table rows. */
-  private[graft] def semModelFromRows(
-      rows: Seq[(Long, Long, Int, Seq[Double])]): SemModel = {
-    val (splitRows, baseRows) = rows.partition(_._3 == -1)
-    val base: SemBase =
-      if (baseRows.forall(_._1 == -1L))
-        SemFlat(baseRows.sortBy(_._2)
-          .map { case (_, cid, _, ce) => (cid, ce.toArray) }.toArray)
-      else SemTwoLevel(Clustering.TwoLevelModel(
-        k2 = baseRows.head._3,
-        top = baseRows.filter(_._2 == -1L).sortBy(_._1)
-          .map { case (tc, _, _, ce) => (tc, ce.toArray) }.toArray,
-        subs = baseRows.filter(_._2 >= 0L).groupBy(_._1).map {
-          case (tc, leaf) => tc -> leaf.sortBy(_._2)
-            .map { case (_, bc, _, ce) => (bc, ce.toArray) }.toArray
-        }))
-    SemModel(base, splitRows.groupBy(_._1).map { case (parent, kids) =>
-      parent -> kids.sortBy(_._2)
-        .map { case (_, c, _, ce) => (c, ce.toArray) }.toArray
-    })
   }
 
   /** Build the store: exact-collapse, size k adaptively from the rep
@@ -181,31 +113,17 @@ object SemStoreOps {
     * ([[Clustering.fitQuantizer]]: flat at k ≤ 64, two-level beyond),
     * assign, then bound the WORST-CASE cell population (the r12
     * boundCellPopulations argument, applied at build time so the
-    * bound SERIALIZES with the model): every cell whose rep count
+    * bound holds for every probe): every cell whose rep count
     * exceeds `maxCell` is recursively split via
-    * [[Clustering.fitWithinCells]], split subcentroids recorded as
-    * model rows with fresh global cids, and the reps remapped — so a
-    * probe against the stored model sees the same bounded cells the
-    * build produced. Returns the driver-held model and the reps frame
-    * (cid, id, e, cnt), materialized so the caller can persist or
-    * table it. */
+    * [[Clustering.fitWithinCells]], split subcentroids recorded in the
+    * model with fresh global cids, and the reps remapped — so a probe
+    * against the model sees the same bounded cells the build produced.
+    * Returns the driver-held model and the reps frame (cid, id, e,
+    * cnt), materialized so the caller can persist or table it. */
   private[graft] def semStoreBuild(emb: DataFrame, dim: Int,
       kOverride: Option[Int] = None,
-      maxCell: Int = Extended10.SemDedupMaxCell): (SemModel, DataFrame) =
-    semStoreBuildFromReps(Extended10.collapseExact(emb), dim, kOverride,
-      maxCell)
-
-  /** [[semStoreBuild]] over ALREADY-collapsed reps (id, e, cnt) — the
-    * retrain path's entry: exact collapse is associative (min id, Σ
-    * cnt), so a rebuild can merge the stored reps with a collapsed
-    * batch instead of re-collapsing raw corpora it no longer has.
-    * cnt never shapes the model: the fit runs on (id, e) and the
-    * population guard counts rep ROWS, so any rep set with the same
-    * vector set yields the identical model. */
-  private[graft] def semStoreBuildFromReps(reps0: DataFrame, dim: Int,
-      kOverride: Option[Int] = None,
       maxCell: Int = Extended10.SemDedupMaxCell): (SemModel, DataFrame) = {
-    val reps = reps0.persist()
+    val reps = Extended10.collapseExact(emb).persist()
     try {
       val n = reps.count()
       val k = kOverride.getOrElse(Extended10.semDedupK(n))
@@ -226,7 +144,7 @@ object SemStoreOps {
   }
 
   /** The build-time population guard (the boundCellPopulations loop,
-    * capturing the split STRUCTURE so it serializes): per round, one
+    * capturing the split STRUCTURE in the model): per round, one
     * k-sized count audit; all oversized cells fitted simultaneously
     * (fitWithinCells, per-cell bounded draws); fresh global cids
     * allocated above every existing leaf and split id in ascending
@@ -313,7 +231,7 @@ object SemStoreOps {
     * never cell-count- or data-sized) and split every flooded cell
     * once via [[Clustering.fitWithinCells]] into an ephemeral `sub`
     * key (0 outside flooded cells). The refinement is per-probe and
-    * NEVER serialized — the store's model and cids are untouched; the
+    * never stored — the store's model and cids are untouched; the
     * same udf re-assigns the store's semi-reduced rows, so an exact
     * copy of a stored rep still meets it in the same (cid, sub) group
     * and the probe's pair joins run on the refined key while audit
@@ -431,7 +349,7 @@ object SemStoreOps {
   /** ONE ingest step — the maintenance loop's real shape: probe once,
     * return (per-cell audit, admitted append payload) both derived
     * from the same materialized probed frame. Callers run the audit,
-    * then [[semStoreAppend]] the admitted half. */
+    * then append the admitted half. */
   private[graft] def semIngest(batch: DataFrame, model: SemModel,
       storedReps: DataFrame, tau: Double = Tau,
       maxCell: Int = Extended10.SemDedupMaxCell)
@@ -442,216 +360,12 @@ object SemStoreOps {
     (auditOf(probed, storeInCells), admittedOf(probed))
   }
 
-  /** Blind bucketed append of reps (store build or admitted batch)
-    * into the standing reps table — never reads the store; an
-    * existing table's bucket spec wins (ADVICE r14). Bucketing by cid
-    * co-locates the probe's cell joins with the store side at rest. */
-  private[graft] def semStoreAppend(reps: DataFrame, table: String,
-      nBuckets: Int = 32): Unit = {
-    val nb = ScaleOps.appendBuckets(reps.sparkSession, table, nBuckets)
-    // repartition BY THE BUCKET HASH before the bucketed write so the
-    // append lands ONE file per bucket it touches — without it each of
-    // the payload's input partitions emits a file per bucket
-    // (the sparseIndexAppend/sparseStoreCompact lesson, measured there
-    // at ~1.3× serve cost; code review r16 caught this copy unfixed)
-    ScaleOps.stageCheckpoint(reps.select("cid", "id", "e", "cnt"))
-      .repartition(nb, col("cid"))
-      .write.mode("append")
-      .bucketBy(nb, "cid")
-      .sortBy("cid")
-      .saveAsTable(table)
-  }
-
-  /** Drift audit — q200's [[Extended10.ivfAppendAudit]] reused
-    * verbatim: the reps store IS an IVF index of the collapsed corpus
-    * ((cid, id, e) ≅ (cell, vec_id, e0)), so the same per-cell
-    * population/MSE audit and the same global 2×-MSE retrain trigger
-    * apply unchanged. Retrain = rebuild the store via
-    * [[semStoreBuild]] over store ∪ batch (the ivfMaintain shape). */
-  private[graft] def semDriftAudit(storedReps: DataFrame,
-      batch: DataFrame, model: SemModel, dim: Int): DataFrame =
-    Extended10.ivfAppendAudit(
-      storedReps.select(col("id").as("vec_id"), col("e").as("e0"),
-        col("cid").as("cell")),
-      // the FINAL flat leaves (split parents replaced by children):
-      // stored rows look their own assigned leaf up, k-free
-      model.flatLeaves,
-      batch.select(col("id").as("vec_id"), col("e").as("e0")),
-      dim,
-      // SYMMETRY (code review r15): the batch side must use the
-      // model's REAL assignment — a flat global-min over leaves
-      // lower-bounds the hierarchical assignment's d2 and would
-      // systematically understate batch MSE, masking drift
-      batchAsg = Some(model.assign))
-
-  /** Load the serialized quantizer from the store's model table
-    * (prefix P → table P_model; k·d doubles — the model-artifact
-    * collect class). */
-  private[graft] def loadStoredModel(spark: SparkSession,
-      prefix: String): SemModel =
-    semModelFromRows(spark.table(s"${prefix}_model").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-        r.getSeq[Double](3))).toSeq)
-
-  /** (Over)write the store pair — P_reps bucketed by cid (an existing
-    * table's bucket spec wins) and P_model as [[semModelRows]]. Used
-    * for the initial store create and the retrain rewrite; `reps`
-    * must be MATERIALIZED by the caller when it derives from the
-    * table being replaced (every [[semMaintain]] frame already is). */
-  private[graft] def semStoreWrite(spark: SparkSession, model: SemModel,
-      reps: DataFrame, prefix: String, nBuckets: Int = 32): Unit = {
-    import spark.implicits._
-    val nb = ScaleOps.appendBuckets(spark, s"${prefix}_reps", nBuckets)
-    // bucket-hash repartition first → exactly one file per bucket
-    // (a retrain's reps frame is a union of checkpointed frames with
-    // arbitrary partitioning; without this the rewrite lands up to
-    // partitions×buckets files — code review r16, the sparse lesson)
-    reps.select("cid", "id", "e", "cnt")
-      .repartition(nb, col("cid"))
-      .write.mode("overwrite")
-      .bucketBy(nb, "cid")
-      .sortBy("cid")
-      .saveAsTable(s"${prefix}_reps")
-    semModelRows(model).toDF("tcid", "sub", "k2", "ce")
-      .write.mode("overwrite").saveAsTable(s"${prefix}_model")
-  }
-
-  /** ONE-call merge policy for the stored cells+reps pair — the
-    * ivfMaintain/sparseMaintain shape for SemDeDup (r15 verdict item
-    * 5: consumers previously composed semIngest + semStoreAppend +
-    * semDriftAudit by hand, and the drift trigger's documented
-    * response had no executable path). Audit the batch against the
-    * frozen quantizer first; then either
-    *   - NO drift: the ∝-batch path — one probe pass, blind bucketed
-    *     append of the admitted reps, audit at the frozen model's cid
-    *     granularity; or
-    *   - drift (the 2× MSE global trigger): RETRAIN — refit quantizer
-    *     and cells over stored ∪ batch reps ([[semStoreBuildFromReps]]
-    *     on the exact-merged rep set, so the model is BIT-IDENTICAL to
-    *     a semStoreBuild from scratch over the union corpus —
-    *     SemStoreSpec pins it), probe the batch against the stored
-    *     reps within the NEW cells (the rebuild's population guard
-    *     already bounds them — no batch-side refinement needed), and
-    *     rewrite both tables with the surviving reps: stored reps
-    *     re-celled, hit batch reps dropped (exact copies of stored
-    *     vectors drop outright, near-dups via the within-cell probe),
-    *     admitted reps in. The returned audit is at the NEW model's
-    *     cid granularity.
-    * Ingest invariant (shared with every append tier): batch ids are
-    * fresh — stored and batch rep ids must not collide, or the
-    * origin split below misattributes rows. The retrain-≡-scratch
-    * identity additionally assumes batch ids EXCEED stored ids (the
-    * streaming/append id discipline every caller here has): when a
-    * batch vector exactly equals a stored rep's, this code keeps the
-    * STORED rep row, while a scratch collapseExact over the union
-    * would keep the min id — with lower fresh batch ids the two rep
-    * id sets differ, and the fit's id-keyed sample draws and
-    * lowest-id init make the rebuilt model id-sensitive (code review
-    * r16). Same-vector cnt also stays the stored rep's on both the
-    * ingest and retrain paths (dropped copies never bump cnt — the
-    * semStoreAppend absorption rule applies only at admission), which
-    * is why the SemStoreSpec pin states reps = scratch minus dropped
-    * rather than raw equality.
-    *
-    * `kOverride`/`maxCell` are the store's ORIGINAL build parameters —
-    * the model table does not persist them (code review r16), so a
-    * caller that built with non-defaults must thread the same values
-    * here or a fired retrain silently changes the store's cell-
-    * structure class (and the retrain ≡ scratch identity only holds
-    * against a scratch build with the same parameters). Returns
-    * (per-cell audit, retrained). */
-  private[graft] def semMaintain(spark: SparkSession, batch0: DataFrame,
-      prefix: String, dim: Int, tau: Double = Tau,
-      kOverride: Option[Int] = None,
-      maxCell: Int = Extended10.SemDedupMaxCell)
-      : (DataFrame, Boolean) = {
-    val model = loadStoredModel(spark, prefix)
-    val storedReps = spark.table(s"${prefix}_reps")
-    // checkpoint hygiene: everything this call persists — the batch
-    // materialization below AND every internal stage checkpoint
-    // (probeFrames' probed/bReps on the ingest leg; bReps/bFresh/
-    // sAsg/probed and semStoreBuildFromReps' assignment on the
-    // retrain leg, several of them store-sized) — is freed on exit
-    // via the rddMark/freeSince scope, keeping only the returned
-    // audit's blocks. Without this a long-lived maintenance loop
-    // accumulates full-store RDD copies per round (catalog.clearCache
-    // never reclaims RDD persists — the r15 ADVICE; code review r16
-    // caught this call freeing only `batch`). Same single-flow caveat
-    // as the q210 trigger: the mark→free window must not overlap
-    // another query persisting frames on this session (freeSince's
-    // documented contract).
-    val mark = ScaleOps.rddMark(spark)
-    var keep: Option[DataFrame] = None
-    // the raw batch feeds two consumers (drift MSE scan + the probe's
-    // collapse; three on the retrain leg) — materialize once (code
-    // review r16); every consumer below is itself materialized before
-    // its store mutation
-    val batch = batch0.localCheckpoint(true)
-    try {
-    val drift = semDriftAudit(storedReps, batch, model, dim)
-    val retrain = drift
-      .agg(coalesce(max(col("retrain")), lit(false)).as("r"))
-      .head.getBoolean(0)
-    if (!retrain) {
-      val (audit0, admitted) = semIngest(batch, model, storedReps, tau,
-        maxCell)
-      // materialize BEFORE the append: the audit's n_store side reads
-      // the reps TABLE lazily, and a post-append evaluation would
-      // count the admitted reps as store rows (cell-sized frame)
-      val audit = ScaleOps.stageCheckpoint(audit0)
-      semStoreAppend(admitted, s"${prefix}_reps")
-      keep = Some(audit)
-      (audit, false)
-    } else {
-      val bReps = ScaleOps.stageCheckpoint(Extended10.collapseExact(batch))
-      // exact copies of stored vectors drop outright (they would drop
-      // as probe hits anyway — splitting them out keeps the merged
-      // rep set identical to collapseExact(store ∪ batch)'s VECTOR
-      // set, which is what makes the rebuilt model scratch-identical)
-      val storeVecs = storedReps.select("e")
-      val bFresh = ScaleOps.stageCheckpoint(
-        bReps.join(storeVecs, Seq("e"), "left_anti"))
-      val merged = storedReps.select("id", "e", "cnt").unionByName(
-        bFresh.select("id", "e", "cnt"))
-      val (model2, asg2) = semStoreBuildFromReps(merged, dim, kOverride,
-        maxCell)
-      // origin split on id (fresh-id ingest invariant)
-      val bIds = bFresh.select("id")
-      val bAsg = asg2.join(bIds, Seq("id"), "left_semi")
-        .select("cid", "id", "e", "cnt")
-      val sAsg = ScaleOps.stageCheckpoint(
-        asg2.join(bIds, Seq("id"), "left_anti")
-          .select("cid", "id", "e", "cnt"))
-      // exact hits re-enter the audit as pre-flagged rows, celled by
-      // the NEW model (same vector as a stored rep → same cell)
-      val bExact = bReps.join(storeVecs, Seq("e"), "left_semi")
-        .select(model2.assign(col("e")).getField("_1").as("cid"),
-          col("id"), col("e"), col("cnt"), lit(true).as("h"))
-      val batchCells = bAsg.select("cid")
-        .union(bExact.select("cid")).distinct()
-      val storeInCells = sAsg.join(batchCells, Seq("cid"), "left_semi")
-      val probed = ScaleOps.stageCheckpoint(
-        semProbe(bAsg, storeInCells, tau).unionByName(bExact))
-      // materialize BEFORE the rewrite: bExact (hence batchCells →
-      // storeInCells → the audit's n_store) reads the reps TABLE
-      // lazily through storeVecs, and semStoreWrite replaces it
-      val audit = ScaleOps.stageCheckpoint(auditOf(probed, storeInCells))
-      val newReps = sAsg.unionByName(
-        probed.filter(!col("h")).select("cid", "id", "e", "cnt"))
-      semStoreWrite(spark, model2, newReps, prefix)
-      keep = Some(audit)
-      (audit, true)
-    }
-    } finally ScaleOps.freeSince(spark, mark, keep.toSeq: _*)
-  }
-
   /** q208 — incremental SemDeDup over the embeddings table: vectors
     * with vec_id ≡ 0 (mod 7) arrive as the batch (the q203 split),
     * the rest build the standing cells+reps store. Emits the per-cell
     * probe audit (cid, n_store, n_batch, n_dropped). Store derived
-    * inline (testdata ships no store — the q200/q203 precedent); the
-    * stored-table pair [[semStoreAppend]] maintains is measured in
-    * BASELINE.md's "q208 maintenance tier". Rows-only (float cells). */
+    * inline (testdata ships no store — the q200/q203 precedent).
+    * Rows-only (float cells). */
   def q208SemDedupIncr(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.fanout(Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),

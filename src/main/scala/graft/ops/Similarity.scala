@@ -2,37 +2,14 @@ package graft.ops
 
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.util.chaining._
-
-/** Elementwise-min merge of per-shingle hash vectors → a MinHash
-  * signature. The one custom aggregate in the engine (SURVEY.md §7.3):
-  * built-ins have no elementwise array-min aggregate. Buffer is a
-  * primitive long array — constant-size state per group, merge is O(k),
-  * so partial aggregation works and the shuffle carries k longs per doc
-  * regardless of document size. */
-class MinHashAgg(k: Int) extends Aggregator[Seq[Long], Array[Long], Seq[Long]] {
-  def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-  def reduce(b: Array[Long], a: Seq[Long]): Array[Long] = {
-    var i = 0
-    while (i < k) { if (a(i) < b(i)) b(i) = a(i); i += 1 }
-    b
-  }
-  def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = reduce(b1, b2.toSeq)
-  def finish(b: Array[Long]): Seq[Long] = b.toSeq
-  def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
-    ExpressionEncoder[Array[Long]]()
-  def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
-    ExpressionEncoder[Seq[Long]]()
-}
 
 /** q25/q26/q38/q39: near-duplicate detection and similarity search over
   * `documents` / `embeddings` — the LLM-training-data workhorses.
   *
   * Cache lifecycle contract: builders that feed one computed table into
-  * BOTH sides of a self-join (`nearDupPairs`, q38/q39/q41/q42) persist
+  * BOTH sides of a self-join (`portablePairs`, q38/q39/q41/q42) persist
   * that intermediate — it is sketch-sized (≤ ~128 B per document), never
   * text. The persist belongs to the returned plan; a caller composing
   * many invocations in one session reclaims the blocks with
@@ -63,121 +40,10 @@ object Similarity {
   // ---------------------------------------------------------------- q25
   val K = 16 // minhash signature width; bands of 4 rows → 4 band keys
 
-  // ------------------------------------------------ compiled sketches
-  // A document's MinHash signature, SimHash fingerprint, and shingle
-  // set are LOCAL computations — one pass over the text, fixed-size
-  // output. Round 1 derived them with explode → higher-order-function
-  // chains → groupBy (distributed machinery for a per-row job);
-  // interpreted lambda evaluation made that ~60 executor-CPU-seconds
-  // per pass at sf0.1. Each sketch below is one compiled function per
-  // row: no explode, no shuffle, no aggregate — the only shuffle the
-  // near-dup queries keep is the band-key self-join. At 100 TB this is
-  // also the right shape: sketching scales embarrassingly with the
-  // scan, and only k longs per document ever reach the wire.
-
-  @inline private def splitmix64(x0: Long): Long = {
-    var x = x0 + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
-  }
-
-  private val seeds: Array[Long] =
-    Array.tabulate(K)(i => splitmix64(0x5DEECE66DL + i * 0x9E3779B97F4A7C15L))
-
-  /** 64-bit hashes of word 3-shingles: lowercase, tokens = maximal
-    * [a-z] runs (identical tokenization to round 1's
-    * split(lower(text), "[^a-z]+")), shingle hash = order-sensitive
-    * splitmix64 chain over the three token hashes. Documents with < 3
-    * tokens yield one composite hash. */
-  private[ops] def shingleHashes(text: String): Array[Long] = {
-    val s = if (text == null) "" else text.toLowerCase
-    val toks = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var h = 1125899906842597L
-    var in = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c >= 'a' && c <= 'z') { h = h * 31 + c; in = true }
-      else if (in) { toks += splitmix64(h); h = 1125899906842597L; in = false }
-      i += 1
-    }
-    if (in) toks += splitmix64(h)
-    val n = toks.length
-    if (n >= 3) {
-      val out = new Array[Long](n - 2)
-      var j = 0
-      while (j < n - 2) {
-        out(j) = splitmix64(splitmix64(toks(j) ^ toks(j + 1)) ^ toks(j + 2))
-        j += 1
-      }
-      out
-    } else {
-      var acc = 0x2545F4914F6CDD1DL
-      var j = 0
-      while (j < n) { acc = splitmix64(acc ^ toks(j)); j += 1 }
-      Array(acc)
-    }
-  }
-
-  /** text → K-wide MinHash signature in one pass (K independent
-    * splitmix64 draws per shingle, elementwise min). */
-  private val minhashSigUdf = udf { (text: String) =>
-    val sh = shingleHashes(text)
-    val sig = Array.fill(K)(Long.MaxValue)
-    var i = 0
-    while (i < sh.length) {
-      val hb = sh(i)
-      var k = 0
-      while (k < K) {
-        val h = splitmix64(hb ^ seeds(k))
-        if (h < sig(k)) sig(k) = h
-        k += 1
-      }
-      i += 1
-    }
-    sig
-  }
-
-  /** text → 64-bit SimHash fingerprint (per-bit ±1 votes over shingle
-    * hashes, sign of the vote sum). */
-  private val simhashUdf = udf { (text: String) =>
-    val sh = shingleHashes(text)
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < sh.length) {
-      val hb = sh(i)
-      var j = 0
-      while (j < 64) {
-        votes(j) += (((hb >>> j) & 1L) * 2 - 1).toInt
-        j += 1
-      }
-      i += 1
-    }
-    var fp = 0L
-    var j = 0
-    while (j < 64) { if (votes(j) > 0) fp |= 1L << j; j += 1 }
-    fp
-  }
-
-  /** text → sorted distinct shingle-hash set (the exact-Jaccard ground
-    * truth; 8 B per shingle, never the text). */
-  private val shingleSetUdf = udf { (text: String) =>
-    val sh = shingleHashes(text)
-    java.util.Arrays.sort(sh)
-    var n = 0
-    var i = 0
-    while (i < sh.length) {
-      if (i == 0 || sh(i) != sh(i - 1)) { sh(n) = sh(i); n += 1 }
-      i += 1
-    }
-    java.util.Arrays.copyOf(sh, n)
-  }
-
   /** Exact Jaccard of two sorted distinct long arrays (two-pointer
     * merge — no per-call hash-set allocation). Kept as the independent
     * cross-check for the native [[graft.functions.JaccardSorted]]
-    * expression that the public API and q42 now use. */
+    * expression that q42 uses. */
   private[graft] val jaccardUdf = udf { (a: Seq[Long], b: Seq[Long]) =>
     var i = 0; var j = 0; var inter = 0
     while (i < a.length && j < b.length) {
@@ -189,31 +55,21 @@ object Similarity {
     inter.toDouble / (a.length + b.length - inter)
   }
 
-  /** Public Column API for the compiled sketches (used by pipelines and
-    * specs; the q-numbered queries below are the declared instances). */
-  def minhashSignature(text: Column): Column = minhashSigUdf(text)
-  def simhashFingerprint(text: Column): Column = simhashUdf(text)
-  def shingleSet(text: Column): Column = shingleSetUdf(text)
-  /** Exact Jaccard of sorted distinct long arrays — the native codegen
-    * expression ([[graft.functions.JaccardSorted]]); [[jaccardUdf]]
-    * remains as the spec's independent cross-check. */
-  def exactJaccard(a: Column, b: Column): Column =
-    graft.functions.JaccardSorted.jaccardSorted(a, b)
-
   // ------------------------------------------- portable (md5) sketches
   // q25/q42 declare the ORACLE-PORTABLE MinHash instance: every step —
   // tokenize, 3-shingle strings, per-component md5 hash family, string
   // min, band keys — is reproducible verbatim in DuckDB SQL, so the
   // driver's t2 hash-compare covers the near-dup path bit-exactly
-  // instead of a rows-only check. The splitmix64 fast path above stays
-  // the pipeline/default API (one compiled pass, no string shingles);
-  // the portable path pays ~2× CPU for cross-engine determinism.
+  // instead of a rows-only check.
   // Hash family: component i minimizes md5(i ':' shingle) as a 32-char
   // lowercase-hex STRING — fixed-length hex compares identically as a
   // string in any engine, so min() needs no unsigned-integer bridging.
   // 16 INDEPENDENT md5 draws, not a linear (Kirsch–Mitzenmacher) combo:
-  // see the hashFamily note below for the measured LSH-collapse
-  // pathology a linear family causes on low-entropy corpora.
+  // on a low-entropy corpus (shared vocabulary) a linear combo of two
+  // draws lets one globally-small shingle minimize MANY components at
+  // once, correlating the signature, inflating Jaccard estimates and
+  // collapsing LSH buckets together (measured: quadratic band-join
+  // blowup).
 
   /** Word-3-shingle STRINGS via engine-portable ops only. Tokenization
     * is the proven portable pairing (split(lower, "[^a-z]+") + filter
@@ -260,7 +116,7 @@ object Similarity {
     // independent uniform per shingle, so every component is a valid
     // minhash draw and components stay mutually independent (this is
     // word-slicing one strong hash, NOT a Kirsch–Mitzenmacher linear
-    // combo — see hashFamily for the pathology that rules out). The
+    // combo — see the hash-family note above). The
     // md5s are materialized in a projection BEFORE the aggregate so
     // each is computed once per shingle row (measured: the 16-md5
     // variant did 4× the hash arithmetic and dominated q25/q42).
@@ -368,44 +224,6 @@ object Similarity {
        |SELECT a_id, b_id, jaccard FROM jac
        |WHERE jaccard >= 0.5 ORDER BY a_id, b_id""".stripMargin
 
-  /** K independent component hashes from the 64-bit shingle hash:
-    * h_i = xxhash64(i, hb). NOT a Kirsch–Mitzenmacher linear family —
-    * on a low-entropy corpus (shared vocabulary) a linear combo of two
-    * draws lets one globally-small shingle minimize MANY components at
-    * once, correlating the signature, inflating Jaccard estimates, and
-    * collapsing LSH buckets together (measured: quadratic band-join
-    * blowup). Independent draws keep the estimator unbiased. */
-  private def hashFamily(hb: Column): Column =
-    transform(sequence(lit(0), lit(K - 1)), i => xxhash64(i, hb))
-
-  /** (doc_id, hb) rows: 64-bit hashes of word 3-shingles. Shingle
-    * STRINGS are never built — tokens are hashed individually and the
-    * shingle hash composes the three token hashes (downstream only ever
-    * consumes the hash; concat_ws string construction was the dominant
-    * CPU cost of the near-dup family). Stages are separate projections:
-    * inlining them makes the interpreted higher-order lambdas re-split
-    * the text per element_at (measured ~30× CPU). Duplicate shingles
-    * are kept: min() and collect_set are multiset-insensitive.
-    *
-    * explode_outer, NOT explode: inner explode synthesizes a
-    * `size(...) > 0` filter that predicate pushdown inlines BELOW the
-    * projections — duplicating the whole tree and re-splitting the text
-    * per element, O(tokens²) per document (measured 1082 CPU-s on 10k
-    * docs). The array is never null/empty (the otherwise-branch yields
-    * one element), so outer semantics are identical. */
-  private def explodedShingles(corpus: DataFrame): DataFrame =
-    corpus
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), "[^a-z]+"), t => t =!= "").as("toks"))
-      .select(col("doc_id"), transform(col("toks"), t => xxhash64(t)).as("hs"))
-      .select(col("doc_id"),
-        when(size(col("hs")) >= 3,
-          transform(sequence(lit(0), size(col("hs")) - 3),
-            i => xxhash64(element_at(col("hs"), i + 1),
-              element_at(col("hs"), i + 2), element_at(col("hs"), i + 3))))
-          .otherwise(array(xxhash64(col("hs")))).as("shb"))
-      .select(col("doc_id"), explode_outer(col("shb")).as("hb"))
-
   /** documents ∪ near-duplicate copies (suffix-perturbed, doc_id+1e6) —
     * planted so the near-dup surface has guaranteed positives on the
     * synthetic corpus (all driver texts are mutually distant). */
@@ -416,75 +234,12 @@ object Similarity {
       concat(col("text"), lit(" planted near duplicate suffix")).as("text"))))
   }
 
-  /** MinHash signatures the codegen'd way: two scalar hashes per shingle,
-    * then K independent `min` aggregates (whole-stage codegen, partial
-    * aggregation before the shuffle) reassembled into the signature
-    * array. ~50× faster than routing arrays through a UDAF — the
-    * [[MinHashAgg]] Aggregator remains the general-k API (and is what
-    * you'd use when K isn't a compile-time constant). */
-  def minhashSignatures(corpus: DataFrame): DataFrame = {
-    val mins = (0 until K).map(i =>
-      min(xxhash64(lit(i), col("hb"))).as(s"m$i"))
-    explodedShingles(corpus).groupBy("doc_id").agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until K).map(i => col(s"m$i")): _*).as("sig"))
-  }
-
-  /** [[minhashSignatures]] via the custom Aggregator — the general-k
-    * path, kept API-compatible and tested in SimilaritySpec. */
-  def minhashSignaturesAgg(corpus: DataFrame): DataFrame = {
-    val minhash = udaf(new MinHashAgg(K))
-    explodedShingles(corpus)
-      .select(col("doc_id"), hashFamily(col("hb")).as("hs"))
-      .groupBy("doc_id")
-      .agg(minhash(col("hs")).as("sig"))
-  }
-
-  /** q25 — MinHash + LSH near-duplicate pairs: band the signatures
-    * (4 bands × 4 rows), equi-join on a SCALAR band key, estimate
-    * Jaccard as the fraction of matching signature components, keep
-    * est ≥ 0.5. The band key is xxhash64(band_idx, slice) — joining on
-    * the raw array column is a trap: arrays aren't hash-partitionable
-    * join keys, so Spark degrades the join to a nested-loop with
-    * interpreted array equality (measured 77 s on 4k×4k rows; scalar
-    * key: sub-second). Hash collisions only add false candidates, which
-    * the est filter removes. */
-  /** MinHash+LSH near-duplicate pairs of any (doc_id, text) corpus:
-    * (a_id, b_id, est_jaccard) with a_id < b_id and est ≥ minEst.
-    * Public so pipelines (CorpusPipeline) can dedup arbitrary corpora
-    * with the same machinery q25 declares. */
-  def nearDupPairs(corpus: DataFrame, minEst: Double = 0.5): DataFrame = {
-    // persist: the signature table feeds BOTH sides of the self-join and
-    // is tiny (k longs per doc — ~128 B/doc at any scale), while
-    // recomputing it means re-hashing every shingle of the corpus
-    val sigs = corpus
-      .select(col("doc_id"), minhashSigUdf(col("text")).as("sig")).persist()
-    // carry the signature through the band explode: the pair join then
-    // yields both signatures directly (no extra joins back to sigs)
-    val bands = sigs.select(col("doc_id"), col("sig"),
-      posexplode(transform(sequence(lit(0), lit(3)),
-        b => xxhash64(b, slice(col("sig"), b * 4 + 1, lit(4)))))
-        .as(Seq("band_idx", "band_key")))
-    val a = bands.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("a_id"), col("sig").as("sig_a"))
-    val b = bands.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("b_id"), col("sig").as("sig_b"))
-    a.join(b, Seq("band_idx", "band_key"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        round(aggregate(
-          zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / K, 6).as("est_jaccard"))
-      .filter(col("est_jaccard") >= minEst)
-      .distinct()
-  }
-
   /** q25 — the declared MinHash+LSH instance, on the PORTABLE md5
     * hash family so the driver's DuckDB oracle checks it bit-exactly
     * (band-candidate generation, signature estimate, and 0.5 threshold
-    * all replicated in [[q25OracleSql]]). Same architecture as
-    * [[nearDupPairs]]: sketch once, band the signature, equi-join on
-    * scalar band keys, estimate from component agreement. */
+    * all replicated in [[q25OracleSql]]): sketch once, band the
+    * signature, equi-join on scalar band keys, estimate from component
+    * agreement ([[portablePairs]]). */
   def q25NearDup(spark: SparkSession, dir: String): DataFrame =
     portablePairs(plantedCorpus(spark, dir)).orderBy("a_id", "b_id")
 
@@ -699,8 +454,7 @@ object Similarity {
     * version, which did 16 string parses per shingle and made q41 the
     * round-7 board's only perf regression). The aggregate is a pure
     * codegen HashAggregate with map-side partials, and only 64 longs
-    * per doc cross the shuffle. The splitmix64 [[simhashUdf]] stays the
-    * fast default API ([[simhashFingerprint]]). Planted positives:
+    * per doc cross the shuffle. Planted positives:
     * 1-token-suffix copies (vote shift ≤ 3 per bit). */
   def q41SimHash(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir).select("doc_id", "text")
@@ -931,31 +685,6 @@ object Similarity {
       .select(col("new_id"), col("old_id").as("dup_of"), col("est_jaccard"))
       .orderBy("new_id")
   }
-
-  /** Store-update half of the q153 lifecycle (the q200 ivfAppend /
-    * q203 spanIndexAppend analogue): append an admitted batch's band
-    * rows to the bucketed signature store. Cost ∝ batch — one
-    * signature pass over the batch and a batch-sized bucketed write;
-    * the standing store is never read, rescanned, or rewritten.
-    * Contract: batch doc_ids are FRESH (the ingest invariant — a
-    * pipeline assigns monotone ids); replaying a batch would duplicate
-    * its band rows, which the band join dedups semantically (distinct
-    * before the best-match window) but pays for in candidate volume.
-    * Because signatures are per-document, the appended table is
-    * set-identical to a full rebuild over store ∪ batch, so two
-    * sequential batches ≡ one combined corpus exactly (SigStoreSpec
-    * pins both). */
-  private[graft] def sigStoreAppend(batch: DataFrame,
-      table: String, nBuckets: Int = 32): Unit =
-    // materialize the (batch-sized) delta before writing — the write
-    // must not re-read the table it is appending to
-    ScaleOps.stageCheckpoint(sigBands(batch))
-      .write.mode("append")
-      // existing bucket spec wins over nBuckets (ADVICE r14)
-      .bucketBy(ScaleOps.appendBuckets(batch.sparkSession, table, nBuckets),
-        "band_idx", "band_key")
-      .sortBy("band_idx", "band_key")
-      .saveAsTable(table)
 
   private[ops] def q153OracleSql: String = {
     val matches = (0 until K).map(i =>
@@ -1223,21 +952,6 @@ object Similarity {
        |             JOIN documents db ON db.doc_id = h.b_id)
        |SELECT source_1, source_2, CAST(count(*) AS BIGINT) AS n_pairs
        |FROM sp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  }
-
-  // ------------------------------------------------- winnowing (helper)
-  /** Winnowing fingerprints (rolling k-gram hashes, min per window) —
-    * the MOSS-style document fingerprint. Returns (doc_id, fingerprints:
-    * sorted distinct longs). Tested in SimilaritySpec; not t2-declared
-    * (no SQL equivalent). */
-  def winnowFingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
-    val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-    val grams = transform(sequence(lit(1), length(norm) - (k - 1)),
-      i => xxhash64(norm.substr(i, lit(k))))
-    docs.select(col("doc_id"),
-      sort_array(array_distinct(
-        transform(sequence(lit(0), size(grams) - w),
-          i => array_min(slice(grams, i + 1, lit(w)))))).as("fingerprints"))
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -231,11 +231,10 @@ object SpanOps {
     * batch's documents (the global keeper is min(store key, batch
     * keeper); SpanSpec pins the equivalence bit-for-bit on the LCG
     * corpus). Store handling is merge-on-read, the LSM posture: the
-    * stored table may carry MULTIPLE rows per digest (appends are
-    * blind, see [[spanKeyedAppend]]), so the probe semi-reduces the
-    * store to the batch's digests FIRST (∝ batch) and takes min(k)
-    * over whatever versions exist — correctness is independent of
-    * compaction state ([[spanKeyedCompact]]; invariance spec-pinned).
+    * stored table may carry MULTIPLE rows per digest (blind appends),
+    * so the probe semi-reduces the store to the batch's digests FIRST
+    * (∝ batch) and takes min(k) over whatever versions exist —
+    * correctness is independent of compaction state.
     * Work ∝ batch spans + one digest semi-join; the store is never
     * rescanned beyond the semi-join, never rewritten. */
   private[graft] def spanDedupKeepFirstVsStore(batch: DataFrame,
@@ -264,38 +263,12 @@ object SpanOps {
     assemble(base, occ)
   }
 
-  /** Append-only store update for the keyed index (the LSM half):
-    * the batch's OWN keyed rows are appended verbatim — no anti-join,
-    * no min-merge against standing rows, so the write is strictly
-    * ∝ batch and never reads the store at all. Colliding digests
-    * simply gain a second version row; every reader takes min(k)
-    * per digest (merge-on-read), so correctness is unaffected —
-    * [[spanKeyedCompact]] exists to bound version counts, not to fix
-    * semantics. Sequential law (SpanSpec): probe(b2, store ++
-    * keyed(b1)) ≡ q204(store ∪ b1 ∪ b2)│b2, because min over
-    * version rows of a union IS the union's keeper. */
-  private[graft] def spanKeyedAppend(batch: DataFrame,
-      table: String, nBuckets: Int = 32): Unit =
-    ScaleOps.stageCheckpoint(spanIndexKeyed(batch))
-      .write.mode("append")
-      // an existing table's own bucket spec wins — a mismatched append
-      // throws at runtime (ADVICE r14; nBuckets only sizes the create)
-      .bucketBy(ScaleOps.appendBuckets(batch.sparkSession, table, nBuckets),
-        "g").sortBy("g")
-      .saveAsTable(table)
-
-  /** Optional compaction: rewrite the keyed store to one min-k row per
-    * digest (∝ store; run when version counts grow — the q200
-    * ivfCompact precedent). Probe results are invariant under it. */
-  private[graft] def spanKeyedCompact(df: DataFrame): DataFrame =
-    df.groupBy("g").agg(min(col("k")).as("k"))
-
-  /** Store-update half of the q203 lifecycle (the q200 ivfAppend
-    * analogue): the digests an admitted batch ADDS to the stored set —
-    * the batch's distinct digests anti-joined against the store, so
-    * merge work is ∝ batch (the store side never shuffles when the
-    * index is the bucketed-state table, and never rewrites: the delta
-    * is APPENDED, see [[spanIndexAppend]]). Appending the RAW batch's
+  /** Store-update half of the q203 lifecycle: the digests an
+    * admitted batch ADDS to the stored set — the batch's distinct
+    * digests anti-joined against the store, so merge work is ∝ batch
+    * (the store side never shuffles when the index is the
+    * bucketed-state table, and never rewrites: the delta is
+    * APPENDED, see [[spanIngestTrigger]]). Appending the RAW batch's
     * digest set (not just the admitted survivors') is what makes the
     * sequential law exact: spanIndex(store) ∪ spanIndex(batch) IS the
     * digest set of store ∪ batch, so dedup(b2 vs merged store) ≡
@@ -304,24 +277,6 @@ object SpanOps {
   private[graft] def spanIndexDelta(batch: DataFrame,
       storeDigests: DataFrame): DataFrame =
     spanIndex(batch).join(storeDigests.select("g"), Seq("g"), "left_anti")
-
-  /** Append an admitted batch's new digests to the bucketed span-index
-    * table in place (same bucketing spec as ScaleOps.writeBucketedState
-    * so future probes stay store-shuffle-free). Cost ∝ batch digests:
-    * one anti-join against the bucketed store + one batch-sized
-    * bucketed write — the standing index is never rescanned or
-    * rewritten (100× dup: 2.4 s vs 12.6 s for the full rebuild,
-    * BASELINE.md round 14). */
-  private[graft] def spanIndexAppend(spark: SparkSession, batch: DataFrame,
-      table: String, nBuckets: Int = 32): Unit =
-    // materialize the (batch-sized) delta before writing — the write
-    // must not re-read the table it is appending to
-    ScaleOps.stageCheckpoint(spanIndexDelta(batch, spark.table(table)))
-      .write.mode("append")
-      // existing bucket spec wins over nBuckets (ADVICE r14)
-      .bucketBy(ScaleOps.appendBuckets(spark, table, nBuckets), "g")
-      .sortBy("g")
-      .saveAsTable(table)
 
   // ------------------------------------------- durable span store (q206)
   /** Initialize a batchId-VERSIONED span-digest store: a parquet

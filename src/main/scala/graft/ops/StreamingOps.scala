@@ -4,8 +4,8 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoders => SqlEncoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor,
+  TTLConfig, TimeMode, TimerValues, ValueState}
 import scala.jdk.CollectionConverters._
 
 /** Latest-event state per (user_id, event_type) — the streaming shape of
@@ -35,11 +35,12 @@ class LatestEventProcessor
 
 /** q28–q30 batch analogs + real Structured Streaming builders.
   *
-  * `window()` / `session_window()` are batch-evaluable, so the t2 queries
-  * run the SAME expressions the streaming jobs use — the streaming
-  * variants add only watermarking and state management. StreamingSpec
-  * drives the streaming builders through MemoryStream and asserts they
-  * equal the batch analogs on identical data.
+  * `window()` / `session_window()` are batch-evaluable, so the batch
+  * queries and the streaming drains share one aggregation builder each
+  * ([[hourlyWindows]]: q28/q172; [[userSessions]]: q30/q194) — the
+  * streaming side adds only state management. StreamingSpec drives the
+  * builders through MemoryStream and asserts they equal the batch
+  * analogs on identical data.
   */
 object StreamingOps {
 
@@ -57,12 +58,15 @@ object StreamingOps {
     * Epoch-aligned starts (Spark window origin = epoch; oracle uses
     * time_bucket, also epoch-aligned for sub-day widths). */
   def q28Tumbling(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
+    hourlyWindows(Tables.events(spark, dir)).orderBy("ws_us")
+
+  /** q28's and q172's aggregation over a batch or streaming events
+    * frame: (ws_us, n_events, sum_value) per 1-hour tumbling window. */
+  private[graft] def hourlyWindows(events: DataFrame): DataFrame =
+    events.groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(count(lit(1)).as("n_events"), sumValue)
       .select(unix_micros(col("w.start")).as("ws_us"),
         col("n_events"), col("sum_value"))
-      .orderBy("ws_us")
 
   /** q29 — sliding windows (1 hour every 30 minutes): each event lands in
     * exactly 2 windows; Spark plans this as an Expand (2 rows per input)
@@ -79,44 +83,19 @@ object StreamingOps {
     * when an event arrives ≥ gap after the previous one. Oracle mirrors
     * with the lag/flag/cumsum idiom. */
   def q30Session(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    userSessions(Tables.events(spark, dir)).orderBy("user_id", "start_us")
+
+  /** q30's and q194's aggregation over a batch or streaming events
+    * frame: (user_id, start_us, n_events, sum_value) per 30-minute-gap
+    * session. */
+  private[graft] def userSessions(events: DataFrame): DataFrame =
+    events
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"), sumValue)
       .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
         col("n_events"), col("sum_value"))
-      .orderBy("user_id", "start_us")
 
   // ------------------------------------------------- streaming builders
-
-  /** Streaming tumbling counts with a 10-minute watermark: late events
-    * beyond the watermark are dropped; windows finalize (Append mode)
-    * once the watermark passes their end. */
-  def streamingTumbling(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-      .select(unix_micros(col("w.start")).as("ws_us"),
-        col("n_events"), col("sum_value"))
-
-  /** Streaming session windows per user (30-minute gap, 10-minute
-    * watermark) — state store merges/expires sessions automatically. */
-  def streamingSessions(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
-        col("n_events"))
-
-  /** Streaming exact dedup (R9's streaming shape): drop repeats of
-    * (user_id, event_type, event_id) arriving within the watermark
-    * horizon. `dropDuplicatesWithinWatermark` keys state on the dedup
-    * columns but stamps each entry with its event time, so entries are
-    * purged once the watermark passes them — bounded state. (Plain
-    * `dropDuplicates` without the event-time column in the key would
-    * never purge and grow without bound.) */
-  def streamingDedup(events: DataFrame): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "event_id")
 
   /** Stream-stream inner join with an event-time interval: each click
     * joins the purchases of the SAME user that happen within 1 hour
@@ -126,21 +105,7 @@ object StreamingOps {
     * watermark advances — the only shape under which Spark permits an
     * append-mode stream-stream join. Batch-evaluable too (same
     * expressions; the interval condition becomes a range join). */
-  def streamingIntervalJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
-    intervalJoin(clicks, purchases, "inner")
-
-  /** LEFT OUTER flavor: clicks with NO purchase within the hour still
-    * emit — with null purchase columns — once the watermark proves no
-    * match can still arrive (the row leaves the state store at that
-    * point; before the watermark passes, the click is withheld, not
-    * emitted unmatched). The two-sided time bound is what makes the
-    * outer result well-defined on an infinite stream at all. */
-  def streamingIntervalJoinLeftOuter(clicks: DataFrame,
-      purchases: DataFrame): DataFrame =
-    intervalJoin(clicks, purchases, "left_outer")
-
-  private def intervalJoin(clicks: DataFrame, purchases: DataFrame,
-      joinType: String): DataFrame = {
+  def streamingIntervalJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
     val c = clicks.withWatermark("ts", "10 minutes")
       .select(col("user_id"), col("event_id").as("c_id"),
         col("ts").as("c_ts"))
@@ -150,47 +115,22 @@ object StreamingOps {
     c.join(p,
         col("user_id") === col("p_user") &&
           col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-        joinType)
+          col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
       .select(col("user_id"), col("c_id"), col("p_id"),
         unix_micros(col("c_ts")).as("c_ts_us"),
         unix_micros(col("p_ts")).as("p_ts_us"))
   }
 
-  /** Streaming keyed upsert (the reference's Redis merge, R10): keep the
-    * latest event per (user_id, event_type); ties favor existing state —
-    * the strict `Date.after` rule (SURVEY.md §2.2 quirk 2). State never
-    * expires (the reference's Redis keys live forever; documented in
-    * SURVEY.md §7.4). Emits the updated state row per input batch. */
-  def statefulUpsert(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    events
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"))
-      .as[EventRow]
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (_: (Long, String), rows: Iterator[EventRow], state: GroupState[EventRow]) => {
-          var cur = state.getOption.orNull
-          rows.foreach { e =>
-            // strictly-later wins; equal ts keeps existing (quirk 2)
-            if (cur == null || e.ts_us > cur.ts_us) cur = e
-          }
-          state.update(cur)
-          Iterator.single(cur)
-        })
-      .toDF()
-  }
-
-  /** The same keyed upsert on Spark 4.x's arbitrary-state API
-    * (`transformWithState` + [[LatestEventProcessor]]). Differences from
-    * the `flatMapGroupsWithState` form that matter at scale: state is
-    * SCHEMA'd (encoder-backed, evolvable across restarts), lives in the
-    * RocksDB state store (required by the API; spills off-heap instead
-    * of growing the JVM heap), supports per-entry TTL natively
-    * (TTLConfig — here NONE, matching the reference's forever-lived
-    * Redis keys), and timers replace the coarse GroupStateTimeout.
-    * StreamingSpec proves it bit-equal to [[statefulUpsert]]. */
+  /** Streaming keyed upsert (the reference's Redis merge, R10) on Spark
+    * 4.x's arbitrary-state API (`transformWithState` +
+    * [[LatestEventProcessor]]): keep the latest event per (user_id,
+    * event_type); ties favor existing state — the strict `Date.after`
+    * rule (SURVEY.md §2.2 quirk 2). Emits the updated state row per
+    * input batch. State is SCHEMA'd (encoder-backed, evolvable across
+    * restarts), lives in the RocksDB state store (required by the API;
+    * spills off-heap instead of growing the JVM heap), and never
+    * expires (TTLConfig NONE, matching the reference's forever-lived
+    * Redis keys; SURVEY.md §7.4). StreamingSpec pins the merge rule. */
   def statefulUpsertTws(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
     events
@@ -203,17 +143,6 @@ object StreamingOps {
       .toDF()
   }
 
-  /** Stream-static enrichment: each streaming event joins a STATIC
-    * dimension table (no state on either side — the static side is
-    * re-planned per micro-batch, so a dim refresh between batches is
-    * picked up automatically; with a small dim Catalyst broadcasts it
-    * into every batch, the streaming analog of q12). Inner join: events
-    * without a dim match drop, matching the batch semantics. */
-  def streamingStaticEnrich(events: DataFrame, dim: DataFrame): DataFrame =
-    events.join(broadcast(dim), Seq("user_id"))
-      .select(col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"), col("segment"))
-
   /** An empty batch frame with the given schema — the analysis-only
     * probe both ingest operators (and their specs) use to derive the
     * drain's output schema without running a job (code review r15b:
@@ -223,24 +152,6 @@ object StreamingOps {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-
-  /** Test/prof support (code review r16 — this was copy-pasted five
-    * times): stage each frame as ONE parquet file under `dir/f<i>`
-    * with strictly increasing mtimes (1 s apart), so a
-    * maxFilesPerTrigger=1 file stream over `dir` yields one
-    * DETERMINISTIC trigger per frame, in order (the file source
-    * orders by modification time). */
-  private[graft] def stageTriggerFiles(dir: String,
-      frames: Seq[DataFrame]): Unit =
-    frames.zipWithIndex.foreach { case (f, i) =>
-      f.coalesce(1).write.parquet(s"$dir/f$i")
-      val walked = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(s"$dir/f$i"))
-      try walked.forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-        java.nio.file.attribute.FileTime
-          .fromMillis(1700000000000L + i * 1000L)))
-      finally walked.close()
-    }
 
   /** File-stream a parquet table that may be a single FILE (shipped
     * testdata) or a DIRECTORY of part files (any Spark-written table,
@@ -519,16 +430,10 @@ object StreamingOps {
     * end-to-end, not just spec assertions). Checkpoint lives in a fresh
     * java.io.tmpdir directory (no driver contract needed; AvailableNow
     * finishes, so the checkpoint is single-use by construction). */
-  def q172StreamingAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val agg = eventStream(spark, dir)
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n_events"), sumValue)
-    drainAndClean(spark, agg, "q172",
+  def q172StreamingAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainAndClean(spark, hourlyWindows(eventStream(spark, dir)), "q172",
       shuffleParts = drainParts(spark, tableBytes(spark, dir, "events")))(
-      _.select(unix_micros(col("w.start")).as("ws_us"),
-          col("n_events"), col("sum_value"))
-        .orderBy("ws_us"))
-  }
+      _.orderBy("ws_us"))
 
   // ---------------------------------------------------------------- q194
   /** q194 — STREAMING session windows, oracle-checked: q30's per-user
@@ -537,23 +442,16 @@ object StreamingOps {
     * overlapping session fragments as batches arrive. AvailableNow +
     * Complete mode drains the table and finishes with exactly q30's
     * batch answer, so the driver's t2 hash-compare covers streaming
-    * session state end-to-end (the q172 pattern); before this the
-    * session-window streaming builder was spec-only. At scale the
-    * same code runs unbounded with a watermark bounding session
-    * state; Complete here keeps the finite-drain answer total. */
+    * session state end-to-end (the q172 pattern). At scale the same
+    * code runs unbounded with a watermark bounding session state;
+    * Complete here keeps the finite-drain answer total. */
   def q194StreamingSession(spark: SparkSession, dir: String): DataFrame =
     // per-user session state is DATA-sized → RocksDB store (the
     // on-heap default OOM'd the 1000× probe at ~10M sessions)
     withRocksDbState(spark) {
-      val agg = eventStream(spark, dir)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"), sumValue)
-      drainAndClean(spark, agg, "q194",
+      drainAndClean(spark, userSessions(eventStream(spark, dir)), "q194",
         shuffleParts = drainParts(spark, tableBytes(spark, dir, "events")))(
-        _.select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
-            col("n_events"), col("sum_value"))
-          .orderBy("user_id", "start_us"))
+        _.orderBy("user_id", "start_us"))
     }
 
   // ---------------------------------------------------------------- q195
@@ -584,9 +482,8 @@ object StreamingOps {
   }
 
   // ---------------------------------------------------------------- q196
-  /** q196 — STREAMING stream-static enrichment, oracle-checked: the
-    * [[streamingStaticEnrich]] shape — each micro-batch of events
-    * broadcast-joins the STATIC customer dimension (re-planned per
+  /** q196 — STREAMING stream-static enrichment, oracle-checked: each
+    * micro-batch of events broadcast-joins the STATIC customer dimension (re-planned per
     * batch; the streaming analog of q12) — aggregated per market
     * segment. The join is stateless; the only streaming state is the
     * segment-sized aggregate, and AvailableNow + Complete finishes
@@ -652,9 +549,7 @@ object StreamingOps {
     *
     * transformWithState requires the RocksDB state store provider;
     * the conf is scoped to the drain and restored after (the
-    * StreamingSpec pattern). Before this the transformWithState
-    * builder was spec-only — this closes the last spec-only
-    * streaming capability. */
+    * StreamingSpec pattern). */
   def q198StreamingUpsert(spark: SparkSession, dir: String): DataFrame =
     withRocksDbState(spark) {
       import org.apache.spark.sql.expressions.Window
@@ -726,8 +621,8 @@ object StreamingOps {
     * multi-file directory with maxFilesPerTrigger=1 to pin the
     * multi-trigger semantics): every micro-batch runs the SHIPPED
     * q203 operator against the store-so-far, then folds its own
-    * digests in — [[SpanOps.spanIngestTrigger]], the spanIndexAppend
-    * shape over a batchId-VERSIONED parquet store at `storeRoot`
+    * digests in — [[SpanOps.spanIngestTrigger]], a blind delta append
+    * over a batchId-VERSIONED parquet store at `storeRoot`
     * (segment `init` + one `b<id>` delta per batch; store bytes
     * written per trigger ∝ batch, the standing segments never
     * rewritten). RESTART-DURABLE (r14 verdict item 1): the driver
@@ -791,8 +686,8 @@ object StreamingOps {
     * signature store): probe the micro-batch against the versioned
     * band store with the SHIPPED [[Similarity.dedupVsSigStore]], then
     * fold the batch's OWN band rows in. The fold is BLIND and
-    * set-identical to a rebuild — signatures are per-document, the
-    * sigStoreAppend contract — and the b<id> overwrite is
+    * set-identical to a rebuild — signatures are per-document — and
+    * the b<id> overwrite is
     * replay-idempotent ([[VersionedStore]]'s two invariants, shared
     * with q206, including the cross-restart case StreamingSpec pins
     * there). Per-trigger work ∝ batch: one signature pass + the band
@@ -873,9 +768,8 @@ object StreamingOps {
     * the cells+reps store): probe the micro-batch with the SHIPPED
     * [[SemStoreOps.semIngest]] — ONE probe pass feeds the audit (the
     * drained row) AND the admitted fold — against the versioned reps
-    * store, under the FROZEN driver-held quantizer (the stored-model
-    * contract: retrain is [[SemStoreOps.semMaintain]]'s batch-side
-    * decision, not a per-trigger one). Replay-idempotent via the two
+    * store, under the FROZEN driver-held quantizer (retrain is not a
+    * per-trigger decision). Replay-idempotent via the two
     * [[VersionedStore]] invariants; the merge policy folds committed
     * segments past maxSegments into one cid-laid-out generation.
     * One replay caveat (code review r16): on a FLOODED batch (a cell

@@ -132,8 +132,7 @@ object TextOps {
 
   /** q37 — document fingerprinting: whitespace-normalized content hash
     * (the dedup-join key used by pipeline stages downstream) plus a
-    * 64-bit-prefix short form. Winnowing-style k-gram fingerprints (the
-    * no-oracle variant) live in [[Similarity.winnowFingerprints]]. */
+    * 64-bit-prefix short form. */
   def q37Fingerprint(spark: SparkSession, dir: String): DataFrame = {
     val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
     Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text"))

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions.col
   * WITHOUT compaction that cost
   * grows with trigger count (one tiny segment per trigger, per-file
   * open overhead ∝ T); [[maintain]] bounds live segments at
-  * maxSegments+1, the sparseMaintain merge-policy shape, so per-trigger
+  * maxSegments+1 (Lucene's merge-policy shape), so per-trigger
   * probe cost stays flat in trigger count (measured over 30 triggers:
   * BASELINE.md, "VersionedStore merge policy probe"). */
 object VersionedStore {
@@ -98,12 +98,11 @@ object VersionedStore {
     * appends erode) and GC the superseded segments. Raw parquet
     * carries no catalog bucket spec, so this removes the probe's
     * listing/open cost and restores one sorted run per hash partition,
-    * NOT the join shuffle — the shuffle-free serving tier remains the
-    * bucketed TABLE stores (sigStoreAppend/spanIndexAppend; measured
+    * NOT the join shuffle — a shuffle-free serving tier needs a
+    * bucketed TABLE store ([[ScaleOps.writeBucketedState]]; measured
     * store-shuffle-free at 100× in BASELINE.md round 14).
     *
-    * Crash-safe (the LSM-manifest order, and the answer to the
-    * sparseStoreCompact crash-window ADVICE): the folded copy is fully
+    * Crash-safe (the LSM-manifest order): the folded copy is fully
     * written to a hidden `.c<upTo>.tmp` dir, then RENAMED to c<upTo> —
     * atomic on posix/HDFS (document: an object store without atomic
     * dir rename needs a marker protocol instead) — and only then are
@@ -156,7 +155,7 @@ object VersionedStore {
     }
   }
 
-  /** The merge policy (the sparseMaintain shape): compact everything
+  /** The merge policy: compact everything
     * below the current batch `id` iff the probe at `id` would read
     * more than `maxSegments` live segments. Called at the start of an
     * ingest trigger, this bounds what any probe reads at

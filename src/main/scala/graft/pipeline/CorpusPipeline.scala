@@ -12,7 +12,7 @@ import scala.util.chaining._
   *
   *  1. exact dedup on the whitespace-normalized sha2 (keep min doc_id)
   *  2. near-dup removal: MinHash-LSH pairs, drop the larger doc_id of
-  *     every confirmed pair ([[Similarity.nearDupPairs]])
+  *     every confirmed pair ([[Similarity.portablePairs]])
   *  3. quality gate: [[TextOps.qualityScore]] ≥ minQuality
   *  4. token budget: documents kept in doc_id priority order while the
   *     running whitespace-token total stays within `tokenBudget`
@@ -26,7 +26,7 @@ import scala.util.chaining._
   * doc_id range and cutting at the range boundary.
   *
   * Cache lifecycle: `prepare` persists the exact-dedup survivors (and
-  * [[graft.ops.Similarity.nearDupPairs]] persists its signature table)
+  * [[graft.ops.Similarity.portablePairs]] persists its signature table)
   * for the duration of the returned plan. Callers running many
   * pipelines in one session should `spark.catalog.clearCache()` between
   * runs — see the contract note on [[graft.ops.Similarity]].
@@ -48,10 +48,8 @@ object CorpusPipeline {
     // (materialize survivors, then iterate on the much smaller set).
     val exact = docs.join(keepIds, Seq("doc_id"), "left_semi").persist()
     // 2 — near-dup removal (LSH candidates only; drop the b side).
-    // PORTABLE md5 family: ~2× the sketch CPU of the splitmix fast path
-    // (still sketch-sized on the wire), bought so the WHOLE pipeline is
-    // DuckDB-replicable and q46 graduates from rows-only to an
-    // end-to-end hash-compare — the q25/q42 tradeoff, applied here.
+    // PORTABLE md5 family (sketch-sized on the wire), so the WHOLE
+    // pipeline is DuckDB-replicable and q46 is hash-compared end to end.
     val dropB = Similarity.portablePairs(exact.select("doc_id", "text"))
       .select(col("b_id").as("doc_id")).distinct()
     val nearDeduped = exact.join(dropB, Seq("doc_id"), "left_anti")

@@ -46,24 +46,6 @@ class BpeSpec extends AnyFunSuite {
       == (firstPair.getString(0), firstPair.getString(1), firstPair.getLong(2)))
   }
 
-  test("encode applies trained merges in rank order, greedy leftmost") {
-    val train = docsOf("banana banana banana")
-    val merges = BpeOps.fit(train, 10).collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-    // full table reassembles the word to one token
-    val full = BpeOps.encode(docsOf("banana banana").withColumn("doc_id",
-      org.apache.spark.sql.functions.lit(1L)), merges).head
-    assert(full.getSeq[String](1) == Seq("banana", "banana"))
-    // a 2-merge prefix stops at [b, an, ana]
-    val partial = BpeOps.encode(docsOf("banana").withColumn("doc_id",
-      org.apache.spark.sql.functions.lit(1L)), merges.take(2)).head
-    assert(partial.getSeq[String](1) == Seq("b", "an", "ana"))
-    // unseen characters stay as single-char symbols
-    val oov = BpeOps.encode(docsOf("zq banana").withColumn("doc_id",
-      org.apache.spark.sql.functions.lit(1L)), merges).head
-    assert(oov.getSeq[String](1) == Seq("z", "q", "banana"))
-  }
-
   test("q173 encode-step bookkeeping is exact on the hand corpus") {
     // 'banana'×3: argmax pair (a,n); 2 occurrences/word × 3 words
     val s = spark

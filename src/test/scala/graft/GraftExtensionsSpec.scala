@@ -5,10 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The install route: `GraftExtensions.install` on a session gets the
-  * engine's functions in SQL and its optimizer rule. Each case installs
-  * on a `newSession()` of the shared test session (same SparkContext,
-  * its own function registry and rules), so the shared session never
-  * gains them. */
+  * engine's functions in SQL. Each case installs on a `newSession()` of
+  * the shared test session (same SparkContext, its own function
+  * registry), so the shared session never gains them. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
   private def withExtensionSession[T](body: SparkSession => T): T = {
@@ -20,13 +19,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
   test("install is idempotent and reaches only the session it is given") {
     withExtensionSession { s2 =>
       GraftExtensions.install(s2)
-      assert(s2.experimental.extraOptimizations
-        .count(_ == plans.JaccardSizeGuard) == 1)
       assert(s2.sql("SELECT zorder_key(0, 1)").head().getLong(0) == 2L)
-      val shared = SparkTest.session
-      assert(!shared.experimental.extraOptimizations
-        .contains(plans.JaccardSizeGuard))
-      assert(!shared.catalog.functionExists("cosine_sim"))
+      assert(s2.catalog.functionExists("cosine_sim"))
+      assert(s2.experimental.extraOptimizations.isEmpty)
+      assert(!SparkTest.session.catalog.functionExists("cosine_sim"))
     }
   }
 
@@ -88,9 +84,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // no added optimizer rule needed FOR FOLDING: CosineSim inherits
     // foldable = (left.foldable && right.foldable) from
     // BinaryExpression, so built-in ConstantFolding evaluates literal
-    // calls at plan time — the one rule GraftExtensions.install does add
-    // (JaccardSizeGuard) exists for a different reason: a rewrite no
-    // built-in can derive
+    // calls at plan time
     withExtensionSession { s2 =>
       val df = s2.sql(
         "SELECT cosine_sim(array(1.0d, 2.0d), array(2.0d, 4.0d)) AS c")
@@ -99,87 +93,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(remaining.isEmpty,
         s"expected folded plan, got:\n${df.queryExecution.optimizedPlan}")
       assert(math.abs(df.collect().head.getDouble(0) - 1.0) < 1e-12)
-    }
-  }
-
-  private def jaccardFixture(s2: SparkSession) = {
-    import s2.implicits._
-    // (id, small set, big set): row 1 passes J >= 0.5; row 2 is
-    // size-contradicted (1 vs 8 elements → J <= 1/8 < 0.5); row 3
-    // shares nothing but has compatible sizes. RDD-backed (LogicalRDD),
-    // NOT a local Seq: ConvertToLocalRelation would otherwise evaluate
-    // the whole filter at plan time and leave no Filter node to
-    // inspect.
-    s2.createDataFrame(s2.sparkContext.parallelize(Seq(
-      (1L, Array(1L, 2L, 3L), Array(1L, 2L, 3L, 4L)),
-      (2L, Array(9L), Array(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L)),
-      (3L, Array(7L, 8L, 9L), Array(10L, 11L, 12L))), 1))
-      .toDF("id", "a", "b")
-  }
-
-  test("JaccardSizeGuard: guards appear in the plan and results are unchanged") {
-    withExtensionSession { s2 =>
-      val df = jaccardFixture(s2)
-        .filter(functions.JaccardSorted.jaccardSorted(
-          org.apache.spark.sql.functions.col("a"),
-          org.apache.spark.sql.functions.col("b")) >= 0.5)
-      val sizes = df.queryExecution.optimizedPlan
-        .flatMap(_.expressions)
-        .flatMap(_.collect {
-          case s: org.apache.spark.sql.catalyst.expressions.Size => s })
-      assert(sizes.size >= 2,
-        s"expected size guards in:\n${df.queryExecution.optimizedPlan}")
-      assert(df.collect().map(_.getLong(0)).toSeq == Seq(1L),
-        "only the true >= 0.5 pair survives")
-      // the round(j, 6) published form is guarded too
-      val rounded = jaccardFixture(s2)
-        .filter(org.apache.spark.sql.functions.round(
-          functions.JaccardSorted.jaccardSorted(
-            org.apache.spark.sql.functions.col("a"),
-            org.apache.spark.sql.functions.col("b")), 6) >= 0.5)
-      val sizes2 = rounded.queryExecution.optimizedPlan
-        .flatMap(_.expressions)
-        .flatMap(_.collect {
-          case s: org.apache.spark.sql.catalyst.expressions.Size => s })
-      assert(sizes2.size >= 2)
-      assert(rounded.collect().map(_.getLong(0)).toSeq == Seq(1L))
-    }
-  }
-
-  test("JaccardSizeGuard: rule-free session returns identical rows (rewrite is semantics-free)") {
-    val plainRows = {
-      val s = SparkTest.session
-      import s.implicits._
-      Seq(
-        (1L, Array(1L, 2L, 3L), Array(1L, 2L, 3L, 4L)),
-        (2L, Array(9L), Array(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L)),
-        (3L, Array(7L, 8L, 9L), Array(10L, 11L, 12L)))
-        .toDF("id", "a", "b")
-        .filter(functions.JaccardSorted.jaccardSorted(
-          org.apache.spark.sql.functions.col("a"),
-          org.apache.spark.sql.functions.col("b")) >= 0.5)
-        .collect().map(_.getLong(0)).toSeq
-    }
-    withExtensionSession { s2 =>
-      val guarded = jaccardFixture(s2)
-        .filter(functions.JaccardSorted.jaccardSorted(
-          org.apache.spark.sql.functions.col("a"),
-          org.apache.spark.sql.functions.col("b")) >= 0.5)
-        .collect().map(_.getLong(0)).toSeq
-      assert(guarded == plainRows)
-    }
-  }
-
-  test("JaccardSizeGuard: idempotent — applying twice adds no second guard") {
-    withExtensionSession { s2 =>
-      val df = jaccardFixture(s2)
-        .filter(functions.JaccardSorted.jaccardSorted(
-          org.apache.spark.sql.functions.col("a"),
-          org.apache.spark.sql.functions.col("b")) >= 0.5)
-      val once = df.queryExecution.optimizedPlan
-      val twice = graft.plans.JaccardSizeGuard(once)
-      assert(once.toString == twice.toString,
-        "a second rule application must be a no-op")
     }
   }
 }

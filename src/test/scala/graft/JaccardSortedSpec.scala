@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native Jaccard expression: codegen must agree bit-for-bit with
-  * the UDF it replaced on real shingle sets, match a driver-side
+  * the UDF it replaced on q42's shingle-hash sets, match a driver-side
   * reference on random sets, stay inside WholeStageCodegen, and keep
   * the UDF's null/empty semantics. */
 class JaccardSortedSpec extends AnyFunSuite {
@@ -14,8 +14,9 @@ class JaccardSortedSpec extends AnyFunSuite {
   val dir: String = SparkTest.sfDir
 
   test("native expression equals the UDF bit-for-bit on real shingle sets") {
-    val sets = Tables.documents(spark, dir).select("doc_id", "text").limit(60)
-      .select(col("doc_id"), ops.Similarity.shingleSet(col("text")).as("s"))
+    val sets = ops.Similarity.portableHsets(
+        Tables.documents(spark, dir).select("doc_id", "text").limit(60))
+      .select(col("doc_id"), col("hset").as("s"))
     val a = sets.select(col("doc_id").as("a_id"), col("s").as("sa"))
     val b = sets.select(col("doc_id").as("b_id"), col("s").as("sb"))
     val both = a.crossJoin(b).filter(col("a_id") < col("b_id"))
@@ -64,7 +65,8 @@ class JaccardSortedSpec extends AnyFunSuite {
     // all) — assert over a real parquet scan, where falling out of
     // WholeStageCodegen would actually cost something
     val scan = Tables.documents(spark, dir).select("doc_id", "text")
-      .select(ops.Similarity.shingleSet(col("text")).as("s"))
+      .select(array_sort(array_distinct(transform(
+        split(lower(col("text")), "[^a-z]+"), t => xxhash64(t)))).as("s"))
       .select(JaccardSorted.jaccardSorted(col("s"), col("s")).as("j"))
       .filter(col("j") >= 0.0)
     val wsc = scan.queryExecution.executedPlan.collect {

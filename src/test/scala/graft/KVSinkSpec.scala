@@ -1,13 +1,12 @@
 package graft
 
 import graft.pipeline.MoviePipeline
-import graft.sink.{InMemoryKVStore, KVForeachWriter, KVSink}
+import graft.sink.{InMemoryKVStore, KVSink}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The KV sink (the reference's Redis surface, R13) in both batch and
-  * streaming shapes, fed by the movie pipeline's (key, value) output. */
+/** The KV sink (the reference's Redis surface, R13), fed by the movie
+  * pipeline's (key, value) output. */
 class KVSinkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
   import spark.implicits._
@@ -26,45 +25,5 @@ class KVSinkSpec extends AnyFunSuite {
     val c1 = InMemoryKVStore.data.get("customer:c1")
     assert(c1 != null && c1.contains(""""title":"A2"""") && !c1.contains(""""title":"A""""))
     assert(InMemoryKVStore.data.get("customer:c2").contains(""""movieId":"m2""""))
-  }
-
-  test("streaming: ForeachWriter sink receives stateful upsert output") {
-    InMemoryKVStore.data.clear()
-    val input = MemoryStream[EventIn](spark)
-    val kv = ops.StreamingOps.statefulUpsert(input.toDF())
-      .selectExpr("concat('user:', user_id, ':', event_type) AS key",
-        "cast(event_id AS string) AS value")
-    val q = kv.writeStream
-      .foreach(new KVForeachWriter(new InMemoryKVStore))
-      .outputMode("update").start()
-    try {
-      input.addData(EventIn(7, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
-        1, "click", 1.0))
-      q.processAllAvailable()
-      input.addData(EventIn(9, java.sql.Timestamp.valueOf("2024-01-01 11:00:00"),
-        1, "click", 2.0))
-      q.processAllAvailable()
-      assert(InMemoryKVStore.data.get("user:1:click") == "9")
-    } finally q.stop()
-  }
-
-  test("streaming: foreachBatch sink reuses the batch writer per micro-batch") {
-    InMemoryKVStore.data.clear()
-    val input = MemoryStream[EventIn](spark)
-    val kv = ops.StreamingOps.statefulUpsert(input.toDF())
-      .selectExpr("concat('user:', user_id, ':', event_type) AS key",
-        "cast(event_id AS string) AS value")
-    val q = kv.writeStream
-      .foreachBatch(KVSink.foreachBatchWriter(new InMemoryKVStore))
-      .outputMode("update").start()
-    try {
-      input.addData(EventIn(7, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"),
-        1, "click", 1.0))
-      q.processAllAvailable()
-      input.addData(EventIn(9, java.sql.Timestamp.valueOf("2024-01-01 11:00:00"),
-        1, "click", 2.0))
-      q.processAllAvailable()
-      assert(InMemoryKVStore.data.get("user:1:click") == "9")
-    } finally q.stop()
   }
 }

@@ -4,11 +4,9 @@ import graft.ops.LayoutOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
-/** Write-side layout operators: Morton-key correctness against a
-  * bit-by-bit reference, clustering that actually produces disjoint
-  * per-file ranges, and bounded file sizes. */
+/** The Morton layout key: correctness against a bit-by-bit reference
+  * and its locality law. */
 class LayoutSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
 
@@ -42,34 +40,5 @@ class LayoutSpec extends AnyFunSuite {
         yield refMorton(a, b)
       assert(keys.max - keys.min == 15, s"square at ($a0,$b0)")
     }
-  }
-
-  test("clusteredWrite yields non-overlapping per-file key ranges") {
-    val dir = Files.createTempDirectory("graft_cluster").toString
-    val ev = Tables.events(spark, SparkTest.sfDir)
-      .select("event_id", "user_id")
-    LayoutOps.clusteredWrite(ev, dir, 4, col("user_id"))
-    val ranges = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("user_id").as("lo"), max("user_id").as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    assert(ranges.length > 1)
-    ranges.sliding(2).foreach {
-      case Array((_, hiA), (loB, _)) => assert(hiA <= loB)
-      case _ =>
-    }
-  }
-
-  test("compact bounds records per output file") {
-    val dir = Files.createTempDirectory("graft_compact").toString
-    val ev = Tables.events(spark, SparkTest.sfDir).select("event_id")
-    val total = ev.count()
-    LayoutOps.compact(ev, dir, 2, 200L)
-    val perFile = spark.read.parquet(dir)
-      .groupBy(input_file_name()).count()
-      .collect().map(_.getLong(1))
-    assert(perFile.forall(_ <= 200L))
-    assert(perFile.sum == total)
   }
 }

@@ -147,124 +147,6 @@ class PqSpec extends AnyFunSuite {
     assert(composed == exhaustive)
   }
 
-  /** Dense exact anchors (multiples of 2, far apart in EVERY
-    * subspace) + exact small residues — the clustered geometry where
-    * residual coding's advantage is structural: plain PQ must spend
-    * subspace centroids separating the anchor clouds, residual PQ
-    * sees only the within-cell noise. */
-  private def plantedDense(n: Int): Seq[(Long, Seq[Double])] =
-    (0L until n.toLong).map { i =>
-      val c = (i % 4).toInt
-      val v = Array.tabulate(16)(j => ((c * 31 + j * 17) % 5) * 2.0)
-      (0 until 16).foreach(j => v(j) += ((i * 13 + j * 5) % 7) * 0.07)
-      (i, v.toSeq)
-    }
-
-  test("IVFADC residual codes: recon win, refinement law, overlap") {
-    val rows = plantedDense(240)
-    val df = rows.toDF("id", "e")
-    val (index, cents) = Extended10.ivfIndex(
-      df.select(col("id").as("vec_id"), col("e").as("e0")),
-      dim = 16, nCells = 4)
-    val plain = PqOps.pqTrain(df, dim = 16, m = 8, ks = 8)
-    val resid = PqOps.pqTrainResidual(index, cents, dim = 16, m = 8,
-      ks = 8)
-    val idx = PqOps.ivfAdcIndex(index, cents, resid)
-    // (1) at the same bits, residual recon (cell centroid + decoded
-    // residual) beats plain recon on clustered data — the published
-    // IVFADC motivation, measured
-    val cmap = cents.toMap
-    val plainCodes = df.select(col("id"),
-        PqOps.pqEncode(plain)(col("e")).as("code")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val idxRows = idx.select(col("vec_id"), col("e0"), col("cell"),
-      col("code")).collect()
-    var plainSse = 0.0
-    var residSse = 0.0
-    idxRows.foreach { r =>
-      val id = r.getLong(0)
-      val e = r.getSeq[Double](1).toArray
-      val c = cmap(r.getLong(2))
-      val rp = PqOps.decodeLocal(plain, plainCodes(id))
-      val rr = PqOps.decodeLocal(resid, r.getLong(3))
-        .zip(c).map { case (a, b) => a + b }
-      plainSse += Clustering.l2sqLocal(e, rp)
-      residSse += Clustering.l2sqLocal(e, rr)
-    }
-    assert(residSse < plainSse,
-      s"residual recon SSE $residSse must beat plain $plainSse")
-    // (2) refinement law: full probe + topR ≥ corpus makes the output
-    // the brute exact ranking REGARDLESS of code quality
-    val qvecs = rows.take(3).map { case (i, v) => (i, v.toArray) }
-      .toArray
-    val full = PqOps.ivfAdcQuery(idx, cents, resid, qvecs,
-      nProbe = cents.length, topR = 240, depth = 10).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val brute = qvecs.flatMap { case (q, qv) =>
-      rows.map { case (i, v) =>
-        (i, Clustering.l2sqLocal(qv, v.toArray)) }
-        .sortBy { case (i, d) => (d, i) }.take(10).zipWithIndex
-        .map { case ((i, _), r) => (q, (r + 1).toLong, i) }
-    }.sorted
-    assert(full.sorted.toSeq == brute.toSeq,
-      "full probe + full-depth refinement must be the exact ranking")
-    // (3) partial probe: the query's own cell is always probed, so
-    // self-retrieval holds and top-10 overlap vs brute stays ≥ 9/10
-    val part = PqOps.ivfAdcQuery(idx, cents, resid, qvecs, nProbe = 2,
-      topR = 20, depth = 10).collect()
-    qvecs.foreach { case (q, qv) =>
-      val got = part.filter(_.getLong(0) == q)
-      val top = got.sortBy(_.getLong(1)).map(_.getLong(2))
-      assert(top.head == q && got.sortBy(_.getLong(1)).head
-        .getDouble(4) == 0.0, "self-retrieval at rank 1")
-      val exact = rows.map { case (i, v) =>
-        (i, Clustering.l2sqLocal(qv, v.toArray)) }
-        .sortBy { case (i, d) => (d, i) }.take(10).map(_._1).toSet
-      assert((top.toSet intersect exact).size >= 9,
-        s"query $q: partial-probe overlap < 9/10")
-    }
-  }
-
-  test("IVFADC stored index: partial probe prunes cell partitions") {
-    // over a cell-PARTITIONED code store, pruneCells pushes the probed
-    // cells as a static isin: the candidate scan must carry cell
-    // partition filters (file-listing pruning — the q199 prebuilt pin
-    // applied to codes)
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    val rows = plantedDense(160)
-    val df = rows.toDF("id", "e")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfadc")
-    try {
-      val (index, cents) = Extended10.ivfIndex(
-        df.select(col("id").as("vec_id"), col("e").as("e0")),
-        dim = 16, nCells = 4)
-      val model = PqOps.pqTrainResidual(index, cents, dim = 16, m = 8,
-        ks = 8)
-      PqOps.ivfAdcIndex(index, cents, model)
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(dir.toString)
-      val stored = spark.read.parquet(dir.toString)
-      val qvecs = rows.take(2).map { case (i, v) => (i, v.toArray) }
-        .toArray
-      val cand = PqOps.ivfAdcCandidates(stored, cents, model, qvecs,
-        nProbe = 2, topR = 8, pruneCells = true)
-      val pruned = cand.queryExecution.sparkPlan.collect {
-        case s: FileSourceScanExec if s.partitionFilters.exists(
-          _.references.exists(_.name == "cell")) => s
-      }
-      assert(pruned.nonEmpty,
-        "candidate scan must carry cell partition filters")
-      // and the pruned path still answers: self-retrieval via the
-      // full query over the stored index
-      val out = PqOps.ivfAdcQuery(stored, cents, model, qvecs,
-        nProbe = 2, topR = 8, depth = 3, pruneCells = true).collect()
-      qvecs.foreach { case (q, _) =>
-        val top = out.filter(_.getLong(0) == q).minBy(_.getLong(1))
-        assert(top.getLong(2) == q && top.getDouble(4) == 0.0)
-      }
-    } finally FsUtil.deleteRecursively(dir)
-  }
-
   test("q201 plan: rank-limit pushdown, codes-only scan, point lookups") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
@@ -306,88 +188,6 @@ class PqSpec extends AnyFunSuite {
       assert(embScans.nonEmpty && embScans.forall(_.metadata
         .get("PushedFilters").exists(_.contains("In(id"))),
         "refinement must push the candidate ids to the corpus scan")
-    } finally FsUtil.deleteRecursively(dir)
-  }
-
-  test("pqAppend: frozen-model append ≡ rebuild bit-exact; drift trigger") {
-    // the add-with-ids law: encode is a pure per-row function of the
-    // FROZEN codebooks, so codes appended batch-by-batch are
-    // bit-identical to a one-shot encode of the union — the exactness
-    // that makes the append path safe (no approximation until retrain)
-    val rows = plantedDense(200)
-    val base = rows.filter(_._1 % 10 != 9)
-    val batch = rows.filter(_._1 % 10 == 9)
-    val baseDf = base.toDF("id", "e")
-    val model = PqOps.pqTrain(baseDf, dim = 16, m = 8, ks = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_append")
-    try {
-      PqOps.pqAppend(baseDf, model, s"$dir/codes")
-      PqOps.pqAppend(batch.toDF("id", "e"), model, s"$dir/codes")
-      val stored = spark.read.parquet(s"$dir/codes")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val rebuilt = rows.toDF("id", "e")
-        .select(col("id"), PqOps.pqEncode(model)(col("e")).as("code"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(stored.size == rows.size && stored == rebuilt)
-      // drift audit (q200's 2× MSE trigger on reconstruction error):
-      // an in-distribution batch must not trip retrain…
-      val audit = PqOps.pqAppendAudit(baseDf, batch.toDF("id", "e"),
-        model).collect().head
-      assert(audit.getLong(0) == base.size && audit.getLong(1) == batch.size)
-      assert(!audit.getBoolean(4),
-        s"in-distribution batch tripped retrain: $audit")
-      // …and a planted off-distribution batch (far from every
-      // codeword) must
-      val off = (900L until 920L).map(i =>
-        (i, Seq.tabulate(16)(j => 1000.0 + i * 0.1 + j)))
-      val audit2 = PqOps.pqAppendAudit(baseDf, off.toDF("id", "e"),
-        model).collect().head
-      assert(audit2.getBoolean(4),
-        s"off-distribution batch must trip retrain: $audit2")
-    } finally FsUtil.deleteRecursively(dir)
-  }
-
-  test("ivfAdcAppend: appended cell partitions ≡ rebuilt; stored query intact") {
-    // the IVFADC half: batch assigned to the STORED coarse cells,
-    // residual-coded under the stored codebooks, blind-appended beside
-    // the cell partitions — (vec_id, cell, code) triples must equal a
-    // one-shot rebuild under the same frozen quantizer and model
-    val rows = plantedDense(160)
-    val base = rows.filter(_._1 % 10 != 9)
-    val batch = rows.filter(_._1 % 10 == 9)
-    def asIdx(s: Seq[(Long, Seq[Double])]) = s.toDF("id", "e")
-      .select(col("id").as("vec_id"), col("e").as("e0"))
-    val (index, cents) = Extended10.ivfIndex(asIdx(base), dim = 16,
-      nCells = 4)
-    val model = PqOps.pqTrainResidual(index, cents, dim = 16, m = 8,
-      ks = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfadc_app")
-    try {
-      PqOps.ivfAdcIndex(index, cents, model)
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$dir/index")
-      PqOps.ivfAdcAppend(asIdx(batch), cents, model, s"$dir/index")
-      val stored = spark.read.parquet(s"$dir/index")
-      val sTriples = stored
-        .select(col("vec_id"), col("cell").cast("long"), col("code"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      val rTriples = PqOps.ivfAdcIndex(
-          Extended10.ivfAppend(cents, asIdx(rows), 16), cents, model)
-        .select(col("vec_id"), col("cell"), col("code"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      assert(sTriples.size == rows.size && sTriples == rTriples)
-      // the appended store still serves: self-retrieval for batch
-      // vectors through the full stored-index query path
-      val qvecs = batch.take(2).map { case (i, v) => (i, v.toArray) }
-        .toArray
-      val out = PqOps.ivfAdcQuery(stored, cents, model, qvecs,
-        nProbe = 4, topR = 160, depth = 3, pruneCells = true).collect()
-      qvecs.foreach { case (q, _) =>
-        val top = out.filter(_.getLong(0) == q).minBy(_.getLong(1))
-        assert(top.getLong(2) == q && top.getDouble(4) == 0.0)
-      }
     } finally FsUtil.deleteRecursively(dir)
   }
 

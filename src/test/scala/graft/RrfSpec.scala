@@ -375,37 +375,6 @@ class RrfSpec extends AnyFunSuite {
   }
 
   // ---------------------------------------------------------------- q200
-  test("q200 append: full-probe query over appended index equals rebuild") {
-    // the incremental-maintenance contract: an index built on 90% of
-    // the corpus with the last 10% APPENDED (frozen quantizer, same
-    // argmin) must answer a full-probe query BIT-EXACTLY like a full
-    // inline rebuild — cell assignments differ (frozen vs retrained
-    // centroids) but full probe visits every cell, so pruning is
-    // inert and everything downstream (quantize, dot, ties, fusion)
-    // must coincide
-    val docs = corpus(611L, 80)
-    val vecs = uniformVectors(613L, docs.map(_._1))
-    val docsDf = docs.toDF("doc_id", "text")
-    val embDf = vecs.toSeq.map { case (id, v) => (id, v) }
-      .toDF("vec_id", "e0")
-    def collectOut(p: (org.apache.spark.sql.DataFrame,
-        Seq[org.apache.spark.sql.DataFrame])) = {
-      val rows = p._1.collect().map(_.toSeq).toSeq
-      p._2.foreach(_.unpersist())
-      rows
-    }
-    val base = embDf.filter(pmod(col("vec_id"), lit(10L)) =!= 9)
-    val batch = embDf.filter(pmod(col("vec_id"), lit(10L)) === 9)
-    val (index, cents) = Extended10.ivfIndex(base, dim = 8, nCells = 4)
-    val appended = index.unionByName(
-      Extended10.ivfAppend(cents, batch, dim = 8))
-    val viaAppend = collectOut(Extended10.rrfHybridIvfQuery(
-      docsDf, appended, cents, nProbe = 4, pruneCells = false))
-    val rebuilt = collectOut(Extended10.rrfHybridIvfPlan(
-      docsDf, embDf, dim = 8, nCells = 4, nProbe = 4))
-    assert(viaAppend == rebuilt)
-  }
-
   test("q200 append is batch-local and assignment-deterministic") {
     val docs = corpus(617L, 60)
     val vecs = uniformVectors(619L, docs.map(_._1))
@@ -414,24 +383,24 @@ class RrfSpec extends AnyFunSuite {
     val base = embDf.filter(pmod(col("vec_id"), lit(10L)) =!= 9)
     val batch = embDf.filter(pmod(col("vec_id"), lit(10L)) === 9)
     val (index, cents) = Extended10.ivfIndex(base, dim = 8, nCells = 4)
-    def cellsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "cell").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // re-appending the base to its own quantizer reproduces the stored
-    // cells exactly (the append argmin IS the ingest argmin)
-    assert(cellsOf(Extended10.ivfAppend(cents, base, dim = 8)) ==
-      cellsOf(index))
-    // appending in two batches equals appending at once (batch-local:
+    // per-cell (n_base, n_batch) of the audit of `b` appended to `index`
+    def counts(b: org.apache.spark.sql.DataFrame) =
+      Extended10.ivfAppendAudit(index, cents, b, dim = 8).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // auditing the base against its own quantizer assigns every base
+    // row to its stored cell (the append argmin IS the ingest argmin)
+    assert(counts(base).values.forall { case (nb, nt) => nb == nt })
+    // auditing in two batches equals auditing at once (batch-local:
     // no append reads or perturbs any other row)
     val ids = batch.select("vec_id").collect().map(_.getLong(0)).sorted
-    if (ids.length >= 2) {
-      val mid = ids(ids.length / 2)
-      val b1 = batch.filter(col("vec_id") < mid)
-      val b2 = batch.filter(col("vec_id") >= mid)
-      assert((cellsOf(Extended10.ivfAppend(cents, b1, dim = 8)) union
-        cellsOf(Extended10.ivfAppend(cents, b2, dim = 8))) ==
-        cellsOf(Extended10.ivfAppend(cents, batch, dim = 8)))
-    }
+    assert(ids.length >= 2)
+    val mid = ids(ids.length / 2)
+    val split = Seq(batch.filter(col("vec_id") < mid),
+      batch.filter(col("vec_id") >= mid)).map(counts)
+    val whole = counts(batch)
+    assert(whole.keySet.forall(c => whole(c)._2 ==
+      split.map(_.get(c).fold(0L)(_._2)).sum))
+    assert(whole.values.map(_._2).sum == ids.length)
   }
 
   test("q200 audit: computed-cell fast path equals the stored-cell path") {
@@ -495,113 +464,6 @@ class RrfSpec extends AnyFunSuite {
       r.getLong(2) > 0).map(_.getDouble(6))
     assert(offRatios.nonEmpty && offRatios.forall(_ > 2.0),
       "localized drift must be visible in cell_drift")
-  }
-
-  test("q200 maintain consumes the retrain trigger end-to-end") {
-    // the r12 verdict's open loop: the audit FLAGGED drift but nothing
-    // exercised the retrain path. Planted drift geometry (the trigger
-    // test's), composed with the full query: an in-distribution batch
-    // takes the ∝-batch append path (frozen quantizer, index =
-    // stored ∪ batch); an off-distribution batch fires the trigger and
-    // the retrained index's FULL-PROBE query is bit-equal to the
-    // inline rebuild on the same vectors — the rebuild recovers the
-    // vectors from the stored index's own (vec_id, e0) columns, so the
-    // pin also covers that recovery path.
-    import spark.implicits._
-    val docs = corpus(631L, 80)
-    val docsDf = docs.toDF("doc_id", "text")
-    val anchors = Vector(
-      Vector(8.0, 0, 0, 0, 0, 0, 0, 0), Vector(0, 0, 8.0, 0, 0, 0, 0, 0),
-      Vector(0, 0, 0, 0, 8.0, 0, 0, 0), Vector(0, 0, 0, 0, 0, 0, 8.0, 0))
-    def planted(ids: Seq[Long]): org.apache.spark.sql.DataFrame =
-      ids.map { id =>
-        val a = anchors((id % 4).toInt)
-        (id, a.zipWithIndex.map { case (v, j) =>
-          v + ((id * 13 + j * 5) % 3) * 0.1 })
-      }.toDF("vec_id", "e0")
-    val baseDf = planted(docs.map(_._1))
-    val (index, cents) = Extended10.ivfIndex(baseDf, dim = 8, nCells = 4)
-    def collectOut(p: (org.apache.spark.sql.DataFrame,
-        Seq[org.apache.spark.sql.DataFrame])) = {
-      val rows = p._1.collect().map(_.toSeq).toSeq
-      p._2.foreach(_.unpersist())
-      rows
-    }
-    val inBatch = planted(10000L until 10020L)
-    val (aIdx, aCents, aRetrained) =
-      Extended10.ivfMaintain(index, cents, inBatch, dim = 8, nCells = 4)
-    assert(!aRetrained, "in-distribution batch must take the append path")
-    assert(aCents eq cents, "append path keeps the frozen quantizer")
-    assert(aIdx.count() == index.count() + 20,
-      "append path extends the index by exactly the batch")
-    val offBatch = inBatch.select(col("vec_id"),
-      transform(col("e0"), x => x + 100.0).as("e0"))
-    val (rIdx, rCents, rRetrained) =
-      Extended10.ivfMaintain(index, cents, offBatch, dim = 8, nCells = 4)
-    assert(rRetrained, "off-distribution batch must fire the trigger")
-    val viaMaintain = collectOut(Extended10.rrfHybridIvfQuery(
-      docsDf, rIdx, rCents, nProbe = 4, pruneCells = false))
-    val inlineRebuild = collectOut(Extended10.rrfHybridIvfPlan(
-      docsDf, baseDf.unionByName(offBatch), dim = 8, nCells = 4,
-      nProbe = 4))
-    assert(viaMaintain == inlineRebuild,
-      "retrained index must answer the full-probe query bit-equal " +
-        "to the inline rebuild")
-  }
-
-  test("IVF delete: tombstone mask and compaction close the lifecycle") {
-    // the maintenance complement of q200's append (Faiss remove_ids /
-    // LSM tombstones): (1) a tombstone-MASKED index answers full-probe
-    // queries bit-equal to an inline rebuild on the remaining vectors
-    // — cells are inert at full probe, the q200 append-pin argument in
-    // reverse (the rebuild's retrained cells differ, the candidate SET
-    // doesn't); (2) compaction folds the tombstones in with the same
-    // row set as the mask, rewriting ONLY the cells that actually held
-    // deleted ids; (3) an empty delete batch compacts to the identity.
-    import spark.implicits._
-    val docs = corpus(641L, 80)
-    val docsDf = docs.toDF("doc_id", "text")
-    val anchors = Vector(
-      Vector(8.0, 0, 0, 0, 0, 0, 0, 0), Vector(0, 0, 8.0, 0, 0, 0, 0, 0),
-      Vector(0, 0, 0, 0, 8.0, 0, 0, 0), Vector(0, 0, 0, 0, 0, 0, 8.0, 0))
-    val embDf = docs.map(_._1).map { id =>
-      val a = anchors((id % 4).toInt)
-      (id, a.zipWithIndex.map { case (v, j) =>
-        v + ((id * 13 + j * 5) % 3) * 0.1 })
-    }.toDF("vec_id", "e0")
-    val (index, cents) = Extended10.ivfIndex(embDf, dim = 8, nCells = 4)
-    val tombs = embDf.filter(pmod(col("vec_id"), lit(7L)) === 3)
-      .select("vec_id")
-    def collectOut(p: (org.apache.spark.sql.DataFrame,
-        Seq[org.apache.spark.sql.DataFrame])) = {
-      val rows = p._1.collect().map(_.toSeq).toSeq
-      p._2.foreach(_.unpersist())
-      rows
-    }
-    val masked = Extended10.ivfWithTombstones(index, tombs)
-    val viaMask = collectOut(Extended10.rrfHybridIvfQuery(
-      docsDf, masked, cents, nProbe = 4, pruneCells = false))
-    val rebuilt = collectOut(Extended10.rrfHybridIvfPlan(
-      docsDf, embDf.join(tombs, Seq("vec_id"), "left_anti"),
-      dim = 8, nCells = 4, nProbe = 4))
-    assert(viaMask == rebuilt,
-      "masked index must answer full-probe queries bit-equal to the " +
-        "rebuild on the remainder")
-    def rowsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select("vec_id", "cell").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (compacted, affected) = Extended10.ivfCompact(index, tombs)
-    assert(rowsOf(compacted) == rowsOf(masked),
-      "compaction must fold the tombstones in exactly")
-    val tombIds = tombs.collect().map(_.getLong(0)).toSet
-    assert(tombIds.nonEmpty, "the spec corpus must delete something")
-    val expect = rowsOf(index)
-      .filter { case (id, _) => tombIds.contains(id) }.map(_._2)
-    assert(affected.toSet == expect,
-      "compaction must rewrite exactly the cells holding deleted ids")
-    val (same, none) = Extended10.ivfCompact(index, tombs.limit(0))
-    assert(none.isEmpty && rowsOf(same) == rowsOf(index),
-      "an empty delete batch must compact to the identity")
   }
 
   test("planted twin fuses to the top: query doc leads both lists") {

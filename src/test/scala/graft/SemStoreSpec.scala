@@ -13,11 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    the union minus the store's own (0 on a distinct store) —
   *    exact-copy groups co-cell under ANY quantizer, so the law is
   *    partition-independent;
-  *  - append law: a later batch's copy of an ADMITTED rep drops, and
-  *    probing the appended TABLE ≡ probing the unioned frames;
-  *  - drift reuse: a batch of exact store copies reproduces the base
-  *    MSE (ratio 1 — no retrain, deterministically), a far
-  *    off-distribution batch trips the 2× trigger.
+  *  - append law: a later batch's copy of an ADMITTED rep drops.
   */
 class SemStoreSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.session
@@ -76,7 +72,7 @@ class SemStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("append law: admitted reps join the store; table ≡ frames") {
+  test("append law: admitted reps join the store") {
     val (model, reps) = SemStoreOps.semStoreBuild(
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
     val admitted = SemStoreOps.semAdmitted(
@@ -86,51 +82,19 @@ class SemStoreSpec extends AnyFunSuite {
       .toMap
     assert(adm.keySet == Set(105L, 107L, 108L, 109L))
     assert(adm(105L) == 2L)
-    try {
-      SemStoreOps.semStoreAppend(reps, "sem_spec_reps")
-      SemStoreOps.semStoreAppend(admitted, "sem_spec_reps")
-      // batch 2: a copy of ADMITTED 105 must now drop, a copy of a
-      // store vector still drops, a fresh vector doesn't
-      val b2 = Seq((200L, vec(45L)), (201L, vec(10L)), (202L, vec(50L)))
-      val viaTable = SemStoreOps.semDedupVsStore(
-        b2.toDF("id", "e"), model, spark.table("sem_spec_reps"))
-        .collect()
-      assert(viaTable.map(_.getLong(3)).sum == 2L,
-        s"expected 2 drops vs appended store: ${viaTable.mkString(", ")}")
-      // probing the appended TABLE ≡ probing the unioned frames
-      val viaFrames = SemStoreOps.semDedupVsStore(
-        b2.toDF("id", "e"), model, reps.unionByName(admitted))
-        .collect()
-      assert(viaTable.map(_.toSeq).toSeq == viaFrames.map(_.toSeq).toSeq)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS sem_spec_reps")
-    }
+    // batch 2: a copy of ADMITTED 105 must now drop, a copy of a
+    // store vector still drops, a fresh vector doesn't
+    val b2 = Seq((200L, vec(45L)), (201L, vec(10L)), (202L, vec(50L)))
+    val out = SemStoreOps.semDedupVsStore(
+      b2.toDF("id", "e"), model, reps.unionByName(admitted)).collect()
+    assert(out.map(_.getLong(3)).sum == 2L,
+      s"expected 2 drops vs appended store: ${out.mkString(", ")}")
   }
 
-  test("drift: exact-copy batch ratio 1 (no retrain), far batch trips 2×") {
-    val (model, reps) = SemStoreOps.semStoreBuild(
-      storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
-    // a batch of exact store copies reproduces the base MSE exactly —
-    // same points, same frozen assignment — so the trigger stays off
-    // deterministically (ratio 1 < 2)
-    val same = SemStoreOps.semDriftAudit(reps,
-      storeRows.map { case (i, v) => (i + 1000L, v) }.toDF("id", "e"),
-      model, Dim).collect()
-    assert(same.nonEmpty && same.forall(!_.getBoolean(5)),
-      s"exact-copy batch tripped retrain: ${same.mkString(", ")}")
-    val off = (2000L until 2010L)
-      .map(i => (i, Seq.tabulate(Dim)(j => 1000.0 + i * 0.1 + j)))
-    val far = SemStoreOps.semDriftAudit(reps, off.toDF("id", "e"),
-      model, Dim).collect()
-    assert(far.nonEmpty && far.forall(_.getBoolean(5)),
-      s"far batch must trip retrain: ${far.mkString(", ")}")
-  }
-
-  test("two-level regime (k > 64): same laws, model table round-trip") {
+  test("two-level regime (k > 64): same laws") {
     // force the semDedupOnReps switch: the quantizer is two-level, yet
     // every law is partition-independent for exact cliques, so the
-    // planted counts are unchanged — and the serialized model must
-    // reconstruct the EXACT assignment (same cells for every rep)
+    // planted counts are unchanged
     val (model, reps) = SemStoreOps.semStoreBuild(
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(72))
     assert(model.base.isInstanceOf[SemStoreOps.SemTwoLevel],
@@ -140,33 +104,23 @@ class SemStoreSpec extends AnyFunSuite {
     assert(audit.map(_.getLong(2)).sum == 10L)
     assert(audit.map(_.getLong(3)).sum == 6L,
       s"two-level regime broke the planted law: ${audit.mkString(", ")}")
-    // model table round-trip: rows → model → identical assignment
-    val rt = SemStoreOps.semModelFromRows(SemStoreOps.semModelRows(model))
+    // the stored cells are the model's own assignment
     val direct = reps.select("id", "cid").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaRt = reps.select(col("id"),
-        rt.assign(col("e")).getField("_1").as("cid2"))
+    val viaModel = reps.select(col("id"),
+        model.assign(col("e")).getField("_1").as("cid2"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(direct == viaRt,
-      "round-tripped model must reproduce the build-time assignment")
-    // and the flat round-trip too
-    val (mFlat, _) = SemStoreOps.semStoreBuild(
-      storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
-    val rtFlat = SemStoreOps.semModelFromRows(
-      SemStoreOps.semModelRows(mFlat))
-    assert(rtFlat.base.isInstanceOf[SemStoreOps.SemFlat])
-    assert(rtFlat.flatLeaves.map(_._1).toSeq ==
-      mFlat.flatLeaves.map(_._1).toSeq)
+    assert(direct == viaModel)
   }
 
   test("population guard: oversized cells split at build, laws survive") {
     // force the worst-case bound (code review r15: the store
     // previously lacked q187's r12 boundCellPopulations guard): k = 2
     // over 40 reps gives ~20-rep cells, far over maxCell = 8 — the
-    // build must split until every cell holds ≤ 8 reps, the split
-    // structure must SERIALIZE (round-trip reproduces the assignment,
-    // split walk included), and the planted drop laws are unchanged
-    // (they hold under ANY cell partition)
+    // build must split until every cell holds ≤ 8 reps, the stored
+    // cells must be the assignment's (split walk included), and the
+    // planted drop laws are unchanged (they hold under ANY cell
+    // partition)
     val (model, reps) = SemStoreOps.semStoreBuild(
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(2),
       maxCell = 8)
@@ -178,18 +132,13 @@ class SemStoreSpec extends AnyFunSuite {
     // split parents must not appear as cells in the stored reps
     model.splits.keys.foreach(p =>
       assert(!pops.contains(p), s"split parent $p still holds reps"))
-    // flatLeaves covers exactly the final leaf set the reps use
-    val leafIds = model.flatLeaves.map(_._1).toSet
-    assert(pops.keySet.subsetOf(leafIds))
-    // round-trip: serialized model reproduces the assignment,
-    // split-walk included
-    val rt = SemStoreOps.semModelFromRows(SemStoreOps.semModelRows(model))
+    // the stored cells are the model's assignment, split walk included
     val direct = reps.select("id", "cid").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaRt = reps.select(col("id"),
-        rt.assign(col("e")).getField("_1").as("cid2"))
+    val viaModel = reps.select(col("id"),
+        model.assign(col("e")).getField("_1").as("cid2"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(direct == viaRt)
+    assert(direct == viaModel)
     // and the planted laws are partition-independent
     val audit = SemStoreOps.semDedupVsStore(
       batchRows.toDF("id", "e"), model, reps).collect()
@@ -256,114 +205,6 @@ class SemStoreSpec extends AnyFunSuite {
       maxCell = 8)
     assert(a2.collect().map(_.toSeq).toSeq === plain)
     assert(adm2.count() == 24L) // 103's keeper + 23 fresh
-  }
-
-  test("semMaintain: no-drift appends, fired retrain ≡ build from scratch") {
-    // the one-call merge policy (r15 verdict item 5). Leg 1 — an
-    // in-distribution batch takes the ∝-batch path: audit ≡
-    // semDedupVsStore, admitted reps appended, model table untouched.
-    val (model, reps) = SemStoreOps.semStoreBuild(
-      storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
-    try {
-      SemStoreOps.semStoreWrite(spark, model, reps, "sem_m")
-      val modelRows0 = spark.table("sem_m_model").collect()
-        .map(_.toSeq).toSet
-      val (a1, r1) = SemStoreOps.semMaintain(spark,
-        batchRows.toDF("id", "e"), "sem_m", Dim)
-      val a1c = a1.collect().map(_.toSeq).toSeq
-      assert(!r1, "in-distribution batch must not retrain")
-      assert(a1c === SemStoreOps.semDedupVsStore(
-        batchRows.toDF("id", "e"), model, reps).collect()
-        .map(_.toSeq).toSeq)
-      assert(spark.table("sem_m_model").collect().map(_.toSeq).toSet
-        === modelRows0, "no-drift maintain must not touch the model")
-      // admitted reps landed: a copy of 105 now drops
-      val again = SemStoreOps.semDedupVsStore(
-        Seq((300L, vec(45L))).toDF("id", "e"), model,
-        spark.table("sem_m_reps")).collect()
-      assert(again.map(_.getLong(3)).sum == 1L)
-
-      // Leg 2 — a far batch trips the 2× trigger: the rebuilt model
-      // must be BIT-IDENTICAL to semStoreBuild from scratch over the
-      // union corpus, and the rewritten reps are the scratch reps
-      // minus the batch rows the probe dropped (the far rows are
-      // mutually near-dup — one keeper survives; the planted exact
-      // store copy drops through the exact-hit path).
-      spark.sql("DROP TABLE IF EXISTS sem_m_reps")
-      spark.sql("DROP TABLE IF EXISTS sem_m_model")
-      SemStoreOps.semStoreWrite(spark, model, reps, "sem_m")
-      val far = (2000L until 2010L).map(i =>
-        (i, Seq.tabulate(Dim)(j => 1000.0 + (i - 2000L) * 0.1 + j))) :+
-        ((1999L, vec(0L)))
-      val (a2, r2) = SemStoreOps.semMaintain(spark,
-        far.toDF("id", "e"), "sem_m", Dim)
-      val a2c = a2.collect()
-      assert(r2, "far batch must retrain")
-      assert(a2c.map(_.getLong(2)).sum == 11L)
-      assert(a2c.map(_.getLong(3)).sum == 10L,
-        s"9 far near-dups + 1 exact copy drop: ${a2c.mkString(", ")}")
-      val (scratchModel, scratchReps) = SemStoreOps.semStoreBuild(
-        (storeRows ++ far).toDF("id", "e"), dim = Dim)
-      assert(spark.table("sem_m_model").collect().map(_.toSeq).toSet
-        === SemStoreOps.semModelRows(scratchModel)
-          .map(t => Seq(t._1, t._2, t._3, t._4)).toSet,
-        "retrained model must equal the from-scratch build")
-      val stored = spark.table("sem_m_reps").select("id", "cid")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val scratch = scratchReps.select("id", "cid")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(stored.keySet === scratch.keySet -- (2001L until 2010L),
-        s"store = scratch minus dropped: ${stored.keySet}")
-      stored.foreach { case (id, cid) => assert(scratch(id) == cid,
-        s"rep $id re-celled differently from scratch") }
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS sem_m_reps")
-      spark.sql("DROP TABLE IF EXISTS sem_m_model")
-    }
-  }
-
-  test("semStoreWrite/semStoreAppend land one file per touched bucket") {
-    // the r16 second-review layout pin (the sparse store's measured
-    // ~1.3x serve regression class): the bucket-hash repartition
-    // before a bucketed write puts each bucket's rows in exactly one
-    // writer partition, so a write lands AT MOST one file per bucket
-    // it touches — without it each input partition emits a file per
-    // bucket (a retrain's union of checkpointed frames is the worst
-    // case). Counted against distinct cids, not nBuckets, so the pin
-    // discriminates at test scale.
-    def partFiles(table: String): Int = {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      val p = new org.apache.hadoop.fs.Path(meta.location)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.listStatus(p).count(_.getPath.getName.startsWith("part-"))
-    }
-    val (model, reps) = SemStoreOps.semStoreBuild(
-      storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
-    try {
-      // the write path: reps deliberately scattered across many
-      // partitions first (the retrain-union shape)
-      SemStoreOps.semStoreWrite(spark, model,
-        reps.repartition(8), "sem_files")
-      val cids = spark.table("sem_files_reps").select("cid")
-        .distinct().count().toInt
-      assert(partFiles("sem_files_reps") <= cids,
-        s"write: ${partFiles("sem_files_reps")} files > $cids buckets touched")
-      // the append path: a scattered FRESH payload (vec(i) for i ≥ 40
-      // is distinct from every store vector, so nothing drops)
-      val before = partFiles("sem_files_reps")
-      val admitted = SemStoreOps.semAdmitted(
-        (500L until 520L).map(i => (i, vec(i))).toDF("id", "e"),
-        model, spark.table("sem_files_reps")).localCheckpoint(true)
-      val payloadCids = admitted.select("cid").distinct().count().toInt
-      assert(payloadCids > 0, "payload unexpectedly empty")
-      SemStoreOps.semStoreAppend(admitted.repartition(8), "sem_files_reps")
-      assert(partFiles("sem_files_reps") - before <= payloadCids,
-        "append: more than one new file per touched bucket")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS sem_files_reps")
-      spark.sql("DROP TABLE IF EXISTS sem_files_model")
-    }
   }
 
   test("declared q208: audit shape, totals, stored-path parity") {

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** The shared test session is built by [[Session.local]], and no other
-  * main-code file configures a session of its own: each conf is set in
-  * one place. */
+/** Source scans: the shared test session is built by [[Session.local]],
+  * no other main-code file configures a session of its own (each conf
+  * is set in one place), and `src/main` carries no member that only
+  * specs reach unless it is allowlisted with a reason. */
 class SessionSpec extends AnyFunSuite {
 
   test("SparkTest.session carries the Session.local confs") {
@@ -62,5 +63,52 @@ class SessionSpec extends AnyFunSuite {
     }
     assert(outside.isEmpty, s"session confs set outside withConf: $outside")
     assert(callers("src", "functionRegistry") == List("GraftShims.scala"))
+  }
+
+  /** The `src/main` members no declared query, main or benchmark path
+    * reaches, keyed `Object.member` (or `Object` for all of its
+    * members), each with why it stays. */
+  private val specOnly: Map[String, String] = Map(
+    "MoviePipeline.readMoviesFidelity" ->
+      "the reference ETL's own surface: R11's retried movie read",
+    "MoviePipeline.readMoviesWithCorrupt" ->
+      "the reference ETL's own surface: R4's bad-line handling",
+    "GraftExtensions.install" ->
+      "the one SQL route for the engine's functions, through GraftShims.registerFunction",
+    "ObservabilityOps" ->
+      "ROADMAP item 9 either wires it into the pipelines or deletes it",
+    "SemStoreOps.semAdmitted" -> "the ground truth for q210's drain",
+    "PqOps.decodeLocal" -> "reconstructs codes to check pqEncode",
+    "Similarity.jaccardUdf" ->
+      "the independent cross-check of the native jaccard_sorted",
+    "Extended10.semDedupCells" ->
+      "the explicit-k entry to the reached semDedupOnReps",
+    "ScaleOps.writeBucketedState" ->
+      "writes the store that graft.sig.store loads into q153")
+
+  test("every src/main def, val and class is reached outside its definition or allowlisted") {
+    // a member is reached when its name occurs in a code line of
+    // src/main or perfbench/scala other than its own declaration line;
+    // overrides are Spark's callbacks and are not scanned
+    val decl = ("(?:@\\w+ )*(?:(?:private|protected)(?:\\[\\w+\\])? |final |" +
+      "implicit |lazy |case |sealed |abstract )*(?:def|val|class) (\\w+).*").r
+    val word = "\\w+".r
+    val main = codeLines("src/main/scala")
+    val uses = (main ++ codeLines("perfbench/scala")).flatMap(_._2)
+      .flatMap(word.findAllIn).groupBy(identity).view.mapValues(_.size)
+    val unreached = (for {
+      (p, lines) <- main
+      line <- lines
+      name <- decl.unapplySeq(line).flatMap(_.headOption)
+      if uses(name) == word.findAllIn(line).count(_ == name)
+    } yield s"${p.getFileName.toString.stripSuffix(".scala")}.$name").distinct
+    def allowed(m: String) = specOnly.contains(m) ||
+      specOnly.contains(m.takeWhile(_ != '.'))
+    val unexplained = unreached.filterNot(allowed)
+    assert(unexplained.isEmpty,
+      s"src/main members only specs reach: ${unexplained.mkString(", ")}")
+    val stale = specOnly.keys.filterNot(k =>
+      unreached.exists(m => m == k || m.takeWhile(_ != '.') == k))
+    assert(stale.isEmpty, s"allowlisted but reached or gone: $stale")
   }
 }

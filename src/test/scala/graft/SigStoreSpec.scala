@@ -2,12 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q153 store lifecycle — the signature-store update half added in r14
-  * (the q200 ivfAppend / q203 spanIndexAppend analogue). The laws:
-  * probing a batch against a stored band table equals the one-pass
-  * computation, two sequential batches through probe+append equal one
-  * combined store, and the bucketed append reproduces the rebuilt
-  * band-table set exactly. */
+/** q153 store lifecycle. The laws: probing a batch against a stored
+  * band table equals the one-pass computation, two sequential batches
+  * through probe+append equal one combined store, and the declared
+  * query over a pre-built bucketed store equals the inline one. */
 class SigStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
   import spark.implicits._
@@ -72,33 +70,6 @@ class SigStoreSpec extends AnyFunSuite {
     // the cross-batch duplicate is caught only through the merge
     assert(sequential.exists { case (n, o, _) => n == 200L && o == 102L },
       "b2's copy of a b1 doc must match through the merged store")
-  }
-
-  test("sigStoreAppend: bucketed table after append ≡ rebuilt band table") {
-    val store = mkDocs(0L until 5L, Map.empty)
-    val b1 = mkDocs(100L until 104L, Map(101L -> 2L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigstore").toString
-    try {
-      ops.ScaleOps.writeBucketedState(
-        ops.Similarity.sigBands(store.toDF("doc_id", "text")),
-        "sig_store_spec", s"$dir/bands", Seq("band_idx", "band_key"), 4)
-      spark.catalog.clearCache()
-      ops.Similarity.sigStoreAppend(b1.toDF("doc_id", "text"),
-        "sig_store_spec", nBuckets = 4)
-      spark.catalog.clearCache()
-      def canon(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2),
-          r.getSeq[String](3).mkString(","))).toSet
-      val merged = canon(spark.table("sig_store_spec"))
-      val rebuilt = canon(
-        ops.Similarity.sigBands((store ++ b1).toDF("doc_id", "text")))
-      spark.catalog.clearCache()
-      assert(merged === rebuilt)
-      assert(merged.nonEmpty)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS sig_store_spec")
-      spark.catalog.clearCache()
-    }
   }
 
   test("declared q153 via graft.sig.store runs the stored-table path unchanged") {

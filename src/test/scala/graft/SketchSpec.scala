@@ -1,82 +1,12 @@
 package graft
 
-import graft.ops.Similarity
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalacheck.Gen
-import org.scalacheck.rng.Seed
 
-/** Properties of the compiled document sketches: MinHash estimates and
-  * SimHash distances behave like the similarities they approximate, and
-  * the exact-Jaccard kernel agrees with a set-arithmetic reference.
-  * Generator cases are drawn with fixed seeds (the scalatest/scalacheck
-  * bridge isn't in the offline cache — same pattern as
-  * MergePropertySpec). */
+/** Spark's built-in streaming-safe sketches (frequent items, HLL,
+  * approx_top_k, count-min) against exact answers on the test tables. */
 class SketchSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
-  import spark.implicits._
-
-  private def sketchRow(a: String, b: String) =
-    Seq((a, b)).toDF("a", "b").select(
-      Similarity.exactJaccard(
-        Similarity.shingleSet(col("a")), Similarity.shingleSet(col("b")))
-        .as("jaccard"),
-      aggregate(
-        zip_with(Similarity.minhashSignature(col("a")),
-          Similarity.minhashSignature(col("b")),
-          (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, x) => acc + x).as("sig_matches"),
-      bit_count(Similarity.simhashFingerprint(col("a"))
-        .bitwiseXOR(Similarity.simhashFingerprint(col("b")))).as("hamming"))
-      .collect().head
-
-  test("identical texts: jaccard 1, full signature match, hamming 0") {
-    val r = sketchRow("the quick brown fox jumps over the lazy dog",
-      "the quick brown fox jumps over the lazy dog")
-    assert(r.getDouble(0) == 1.0)
-    assert(r.getInt(1) == Similarity.K)
-    assert(r.getInt(2) == 0)
-  }
-
-  test("disjoint-vocabulary texts: jaccard 0, no signature match") {
-    val r = sketchRow("alpha beta gamma delta epsilon zeta eta theta",
-      "uno dos tres cuatro cinco seis siete ocho")
-    assert(r.getDouble(0) == 0.0)
-    assert(r.getInt(1) == 0)
-  }
-
-  test("near-duplicate text: high jaccard, small hamming") {
-    val base = ("the court finds that the defendant breached the " +
-      "agreement and awards damages accordingly ") * 3
-    val r = sketchRow(base, base + " minor appended clause")
-    assert(r.getDouble(0) > 0.8, s"jaccard ${r.getDouble(0)}")
-    assert(r.getInt(2) <= 7, s"hamming ${r.getInt(2)}")
-  }
-
-  test("exactJaccard agrees with set arithmetic on generated token soups") {
-    val word = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
-    val text = Gen.listOfN(12, word).map(_.mkString(" "))
-    val pair = Gen.zip(text, text)
-    val cases = (0 until 20).flatMap { i =>
-      pair(Gen.Parameters.default.withSize(6), Seed(4242L + i))
-    }
-    assert(cases.size >= 15)
-    // one Spark job for all cases — per-case jobs would dominate runtime
-    val rows = cases.toDF("a", "b").select(
-      Similarity.shingleSet(col("a")).as("sa"),
-      Similarity.shingleSet(col("b")).as("sb"),
-      Similarity.exactJaccard(
-        Similarity.shingleSet(col("a")), Similarity.shingleSet(col("b")))
-        .as("j"))
-      .collect()
-    rows.foreach { row =>
-      val sa = row.getSeq[Long](0).toSet
-      val sb = row.getSeq[Long](1).toSet
-      val expected = sa.intersect(sb).size.toDouble / sa.union(sb).size
-      assert(math.abs(row.getDouble(2) - expected) < 1e-12)
-    }
-  }
 
   test("heavy hitters: stat.freqItems finds every true >10% item") {
     // Spark's built-in one-pass heavy-hitter sketch — the streaming-safe

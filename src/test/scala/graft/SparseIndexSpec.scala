@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q207 sparse (BM25) index lifecycle — the Lucene segment shape added
-  * in r14: blind segment appends, df and corpus stats merged on read,
-  * query-term literals pushed into the postings scan. */
+/** q207 sparse (BM25) index — the Lucene segment shape: df and corpus
+  * stats merged on read across segments, query-term literals pushed
+  * into the postings scan. */
 class SparseIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
   import spark.implicits._
@@ -30,14 +30,14 @@ class SparseIndexSpec extends AnyFunSuite {
     val batch = (100L until 105L).map(id => id -> text(id))
     val dir = java.nio.file.Files.createTempDirectory("graft_sparse").toString
     try {
+      // two segments at rest: both segments' postings bucketed by w,
+      // and one stats row per segment
+      val segments = Seq(store, batch).map(_.toDF("doc_id", "text"))
       ops.ScaleOps.writeBucketedState(
-        ops.Extended10.sparseIndex(store.toDF("doc_id", "text")),
-        "sparse_spec_postings", s"$dir/postings", "w", 4)
-      ops.Extended10.sparseStats(store.toDF("doc_id", "text"))
+        segments.map(ops.Extended10.sparseIndex).reduce(_ union _),
+        "sparse_spec_postings", s"$dir/postings", Seq("w"), 4)
+      segments.map(ops.Extended10.sparseStats).reduce(_ union _)
         .write.option("path", s"$dir/stats").saveAsTable("sparse_spec_stats")
-      spark.catalog.clearCache()
-      ops.Extended10.sparseIndexAppend(batch.toDF("doc_id", "text"),
-        "sparse_spec_postings", "sparse_spec_stats", nBuckets = 4)
       spark.catalog.clearCache()
       // merge-on-read is exercised: two segment stats rows
       assert(spark.table("sparse_spec_stats").count() === 2L)
@@ -67,107 +67,6 @@ class SparseIndexSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(plan.contains("PushedFilters: [In(w, "),
         s"expected pushed In(w, …) filter on the postings scan:\n$plan")
-      spark.catalog.clearCache()
-      // compaction (the Lucene forceMerge half): stats collapse to one
-      // row, the bucket spec survives, and the ranking is invariant
-      // bit-for-bit — postings rows are disjoint across segments, so
-      // the merge is purely physical
-      ops.Extended10.sparseStoreCompact(spark,
-        "sparse_spec_postings", "sparse_spec_stats")
-      spark.catalog.clearCache()
-      assert(spark.table("sparse_spec_stats").count() === 1L)
-      assert(ops.ScaleOps.appendBuckets(spark, "sparse_spec_postings", 32)
-        === 4)
-      val compacted = ops.Extended10.bm25VsIndex(qterms,
-          spark.table("sparse_spec_postings"),
-          spark.table("sparse_spec_stats"))
-        .collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      assert(compacted == rebuilt)
-      // the r16 durable-staging protocol cleaned up after itself
-      Seq("sparse_spec_postings__compact_stage",
-        "sparse_spec_stats__compact_stage",
-        "sparse_spec_postings__compact_commit").foreach(t =>
-        assert(!spark.catalog.tableExists(t), s"$t not dropped"))
-      // crash recovery, step-3 window: stage complete + commit marker
-      // present, serving table damaged (a crashed overwrite). The next
-      // compact call must restore serving FROM the stage — not
-      // re-stage from the damaged table — and clean up
-      spark.table("sparse_spec_postings")
-        .write.mode("overwrite").bucketBy(4, "w").sortBy("w")
-        .saveAsTable("sparse_spec_postings__compact_stage")
-      spark.table("sparse_spec_stats").write.mode("overwrite")
-        .saveAsTable("sparse_spec_stats__compact_stage")
-      spark.range(1).select(lit(4).as("nb")).write
-        .saveAsTable("sparse_spec_postings__compact_commit")
-      // the damage (materialized first — an overwrite must not read
-      // the table it replaces)
-      spark.table("sparse_spec_postings").limit(3).localCheckpoint(true)
-        .write.mode("overwrite").bucketBy(4, "w").sortBy("w")
-        .saveAsTable("sparse_spec_postings")
-      spark.catalog.clearCache()
-      ops.Extended10.sparseStoreCompact(spark,
-        "sparse_spec_postings", "sparse_spec_stats")
-      spark.catalog.clearCache()
-      val recovered = ops.Extended10.bm25VsIndex(qterms,
-          spark.table("sparse_spec_postings"),
-          spark.table("sparse_spec_stats"))
-        .collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      assert(recovered == rebuilt,
-        "recovery must republish the staged copy, not the damaged table")
-      Seq("sparse_spec_postings__compact_stage",
-        "sparse_spec_stats__compact_stage",
-        "sparse_spec_postings__compact_commit").foreach(t =>
-        assert(!spark.catalog.tableExists(t), s"$t not dropped"))
-      // a post-compaction append still works (the lifecycle loops:
-      // append → … → compact → append), and merges on read again
-      ops.Extended10.sparseIndexAppend(
-        (200L until 203L).map(id => id -> text(id)).toDF("doc_id", "text"),
-        "sparse_spec_postings", "sparse_spec_stats", nBuckets = 4)
-      spark.catalog.clearCache()
-      assert(spark.table("sparse_spec_stats").count() === 2L)
-      val all2 = (store ++ batch ++
-        (200L until 203L).map(id => id -> text(id))).toDF("doc_id", "text")
-      val viaTables2 = ops.Extended10.bm25VsIndex(qterms,
-          spark.table("sparse_spec_postings"),
-          spark.table("sparse_spec_stats"))
-        .collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      val rebuilt2 = ops.Extended10.bm25VsIndex(qterms,
-          ops.Extended10.sparseIndex(all2),
-          ops.Extended10.sparseStats(all2))
-        .collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      assert(viaTables2.nonEmpty && viaTables2 == rebuilt2)
-      // merge policy: under the threshold the segment count just
-      // grows; crossing it triggers the amortized compaction back to
-      // ONE segment — and the ranking is invariant throughout
-      val fired1 = ops.Extended10.sparseMaintain(spark,
-        (300L until 302L).map(id => id -> text(id)).toDF("doc_id", "text"),
-        "sparse_spec_postings", "sparse_spec_stats", maxSegments = 3)
-      spark.catalog.clearCache()
-      assert(!fired1 && spark.table("sparse_spec_stats").count() === 3L)
-      val fired2 = ops.Extended10.sparseMaintain(spark,
-        (310L until 312L).map(id => id -> text(id)).toDF("doc_id", "text"),
-        "sparse_spec_postings", "sparse_spec_stats", maxSegments = 3)
-      spark.catalog.clearCache()
-      assert(fired2 && spark.table("sparse_spec_stats").count() === 1L)
-      val all3 = (store ++ batch ++
-        (200L until 203L).map(id => id -> text(id)) ++
-        (300L until 302L).map(id => id -> text(id)) ++
-        (310L until 312L).map(id => id -> text(id))).toDF("doc_id", "text")
-      val viaTables3 = ops.Extended10.bm25VsIndex(qterms,
-          spark.table("sparse_spec_postings"),
-          spark.table("sparse_spec_stats"))
-        .collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      val rebuilt3 = ops.Extended10.bm25VsIndex(qterms,
-          ops.Extended10.sparseIndex(all3),
-          ops.Extended10.sparseStats(all3))
-        .collect().map(_.toSeq).toSeq
-      spark.catalog.clearCache()
-      assert(viaTables3.nonEmpty && viaTables3 == rebuilt3)
     } finally {
       spark.sql("DROP TABLE IF EXISTS sparse_spec_postings")
       spark.sql("DROP TABLE IF EXISTS sparse_spec_stats")

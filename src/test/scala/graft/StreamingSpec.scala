@@ -21,12 +21,18 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** Events with a 10-minute event-time watermark: late events beyond
+    * it are dropped, and append mode finalizes a window once the
+    * watermark passes its end. */
+  private def watermarked(events: org.apache.spark.sql.DataFrame) =
+    events.withWatermark("ts", "10 minutes")
+
   test("streaming tumbling agg equals batch q28 on the same events") {
     val rows = Tables.events(spark, SparkTest.sfDir)
       .select("event_id", "ts", "user_id", "event_type", "value")
       .as[EventIn].collect().toSeq
     val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingTumbling(input.toDF())
+    val q = StreamingOps.hourlyWindows(input.toDF())
       .writeStream.format("memory").queryName("tumbling_out")
       .outputMode("complete").start()
     try {
@@ -81,7 +87,7 @@ class StreamingSpec extends AnyFunSuite {
     val t2 = docs.filter(_._1 % 3 == 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_q206").toString
     try {
-      StreamingOps.stageTriggerFiles(s"$dir/stream",
+      SparkTest.stageTriggerFiles(s"$dir/stream",
         Seq(t1.toDF("doc_id", "text"), t2.toDF("doc_id", "text")))
       val schema = t1.toDF("doc_id", "text").schema
       val stream = spark.readStream.schema(schema)
@@ -167,7 +173,7 @@ class StreamingSpec extends AnyFunSuite {
       (i, fresh(i - 95L) + " beta"))
     val dir = java.nio.file.Files.createTempDirectory("graft_q209").toString
     try {
-      StreamingOps.stageTriggerFiles(s"$dir/stream",
+      SparkTest.stageTriggerFiles(s"$dir/stream",
         Seq(t1.toDF("doc_id", "text"), t2.toDF("doc_id", "text")))
       val store0 = ops.Similarity.sigBands(store.toDF("doc_id", "text"))
         .localCheckpoint(true)
@@ -214,8 +220,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch 0, delete commits/0 (+.crc), stage a second file, drain
     // from the same checkpoint — replayed batch 0 probes segments < 0
     // (init only) and overwrites b0 bit-identically (band rows are a
-    // deterministic hash of the doc, per-document — the sigStoreAppend
-    // contract); t2's x-space near-dup of a t1 doc then matches only
+    // deterministic hash of the doc, per-document); t2's x-space near-dup of a t1 doc then matches only
     // through the REWRITTEN b0.
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
@@ -324,7 +329,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_q210").toString
     try {
-      StreamingOps.stageTriggerFiles(s"$dir/stream",
+      SparkTest.stageTriggerFiles(s"$dir/stream",
         Seq(t1, t2).map(_.toDF("id", "e")))
       val (model, reps0) = ops.SemStoreOps.semStoreBuild(
         store.toDF("id", "e"), dim = dim, kOverride = Some(4))
@@ -472,7 +477,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_q209_compact").toString
     try {
-      StreamingOps.stageTriggerFiles(s"$dir/stream",
+      SparkTest.stageTriggerFiles(s"$dir/stream",
         Seq(t1, t2, t3).map(_.toDF("doc_id", "text")))
       val store0 = ops.Similarity.sigBands(store.toDF("doc_id", "text"))
         .localCheckpoint(true)
@@ -658,47 +663,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty && streamed == batch)
   }
 
-  test("streaming dedup drops within-watermark repeats, keeps distinct keys") {
-    val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingDedup(input.toDF())
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      input.addData(Seq(
-        EventIn(1, ts("2024-01-01 10:00:00"), 7, "click", 1.0),
-        EventIn(1, ts("2024-01-01 10:00:00"), 7, "click", 1.0), // dup
-        EventIn(2, ts("2024-01-01 10:01:00"), 7, "click", 2.0)))
-      q.processAllAvailable()
-      input.addData(Seq(
-        EventIn(1, ts("2024-01-01 10:02:00"), 7, "click", 1.0), // dup, later batch
-        EventIn(3, ts("2024-01-01 10:03:00"), 8, "view", 3.0)))
-      q.processAllAvailable()
-      val out = spark.table("dedup_out").select("event_id").collect()
-        .map(_.getLong(0)).sorted.toSeq
-      assert(out == Seq(1L, 2L, 3L), s"got $out")
-    } finally q.stop()
-  }
-
-  test("stateful upsert: latest wins across batches, equal ts keeps existing") {
-    val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.statefulUpsert(input.toDF())
-      .writeStream.format("memory").queryName("upsert_out")
-      .outputMode("update").start()
-    try {
-      input.addData(EventIn(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      // same ts, different event -> existing wins (quirk 2)
-      input.addData(EventIn(2, ts("2024-01-01 10:00:00"), 1, "click", 2.0))
-      q.processAllAvailable()
-      // strictly later -> replaces
-      input.addData(EventIn(3, ts("2024-01-01 11:00:00"), 1, "click", 3.0))
-      q.processAllAvailable()
-      val byBatch = spark.table("upsert_out").collect()
-        .map(r => r.getLong(2)).toSeq // event_id per emitted update
-      assert(byBatch == Seq(1L, 1L, 3L), s"got $byBatch")
-    } finally q.stop()
-  }
-
   test("transformWithState upsert matches flatMapGroupsWithState semantics") {
     // transformWithState requires the RocksDB state store provider;
     // scope the conf to this test and restore the default after.
@@ -738,60 +702,9 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("left-outer interval join emits unmatched clicks after the watermark") {
-    val clicks = MemoryStream[EventIn](spark)
-    val purchases = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingIntervalJoinLeftOuter(
-        clicks.toDF(), purchases.toDF())
-      .writeStream.format("memory").queryName("outer_join_out")
-      .outputMode("append").start()
-    try {
-      clicks.addData(
-        EventIn(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),   // matched
-        EventIn(2, ts("2024-01-01 10:05:00"), 2, "click", 1.0))   // unmatched
-      purchases.addData(
-        EventIn(10, ts("2024-01-01 10:30:00"), 1, "purchase", 5.0))
-      q.processAllAvailable()
-      // advance both watermarks far past click 2's match horizon
-      clicks.addData(EventIn(3, ts("2024-01-01 15:00:00"), 3, "click", 1.0))
-      purchases.addData(
-        EventIn(11, ts("2024-01-01 15:00:00"), 3, "purchase", 1.0))
-      q.processAllAvailable()
-      clicks.addData(EventIn(4, ts("2024-01-01 20:00:00"), 4, "click", 1.0))
-      purchases.addData(
-        EventIn(12, ts("2024-01-01 20:00:00"), 4, "purchase", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("outer_join_out").collect()
-        .map(r => (r.getLong(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
-        .toMap
-      assert(rows(1L) == 10L, s"click 1 should match purchase 10: $rows")
-      assert(rows(2L) == -1L, s"click 2 should emit unmatched: $rows")
-    } finally q.stop()
-  }
-
-  test("stream-static enrich joins each batch against the static dim") {
-    import spark.implicits._
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "segment")
-    val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingStaticEnrich(input.toDF(), dim)
-      .writeStream.format("memory").queryName("enrich_out")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        EventIn(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
-        EventIn(2, ts("2024-01-01 10:01:00"), 2, "click", 1.0),
-        EventIn(3, ts("2024-01-01 10:02:00"), 99, "click", 1.0)) // no dim row
-      q.processAllAvailable()
-      val got = spark.table("enrich_out")
-        .orderBy("event_id")
-        .collect().map(r => (r.getLong(1), r.getString(3))).toSeq
-      assert(got == Seq((1L, "gold"), (2L, "silver")))
-    } finally q.stop()
-  }
-
   test("watermark: late data beyond 10 minutes is dropped in append mode") {
     val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingTumbling(input.toDF())
+    val q = StreamingOps.hourlyWindows(watermarked(input.toDF()))
       .writeStream.format("memory").queryName("late_out")
       .outputMode("append").start()
     try {
@@ -821,7 +734,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("graft_out").toString
     val input = MemoryStream[EventIn](spark)
-    def start() = StreamingOps.streamingTumbling(input.toDF())
+    def start() = StreamingOps.hourlyWindows(watermarked(input.toDF()))
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -859,7 +772,7 @@ class StreamingSpec extends AnyFunSuite {
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt_sr").toString
     val out = java.nio.file.Files.createTempDirectory("graft_out_sr").toString
     val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingTumbling(input.toDF())
+    val q = StreamingOps.hourlyWindows(watermarked(input.toDF()))
       .writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -919,7 +832,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     spark.streams.addListener(listener)
     val input = MemoryStream[EventIn](spark)
-    val q = StreamingOps.streamingTumbling(input.toDF())
+    val q = StreamingOps.hourlyWindows(watermarked(input.toDF()))
       .writeStream.format("memory").queryName("g_listener")
       .outputMode("update").start()
     try {
@@ -1105,7 +1018,7 @@ class StreamingSpec extends AnyFunSuite {
     // with lost state it would open a fresh session at the phase-2
     // timestamp. Complete mode (q194's drain mode) re-emits the full
     // table, so the final flat-sink overwrite is also checked against
-    // a batch evaluation of the same builder over all events.
+    // a batch evaluation of q194's builder (q30's) over all events.
     import java.nio.file.Files
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.streaming.Trigger
@@ -1119,11 +1032,13 @@ class StreamingSpec extends AnyFunSuite {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     val t0 = 10000000000L // us; session gap = 30 min = 1.8e9 us
+    // every event carries value 1.25, so a session's sum is 1.25 × n
+    def events(rows: Seq[(Long, Long)]) = rows.toDF("user_id", "us")
+      .select(col("user_id"), timestamp_micros(col("us")).as("ts"),
+        lit(1.25).as("value"))
     def addFile(name: String, rows: Seq[(Long, Long)]): Unit = {
       val tmp = Files.createTempDirectory("graft-q194-restart-w")
-      rows.toDF("user_id", "us")
-        .select(col("user_id"), timestamp_micros(col("us")).as("ts"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      events(rows).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val listed = Files.list(tmp)
       val part =
         try listed.iterator().asScala
@@ -1137,8 +1052,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     def drain(): Unit = {
       val ev = spark.readStream
-        .schema("user_id BIGINT, ts TIMESTAMP").parquet(streamDir.toString)
-      val q = StreamingOps.streamingSessions(ev)
+        .schema("user_id BIGINT, ts TIMESTAMP, value DOUBLE")
+        .parquet(streamDir.toString)
+      val q = StreamingOps.userSessions(ev)
         .writeStream.outputMode("complete")
         .foreachBatch { (df: DataFrame, _: Long) =>
           df.write.mode("overwrite").parquet(sink.toString)
@@ -1158,21 +1074,21 @@ class StreamingSpec extends AnyFunSuite {
       addFile("b2.parquet", Seq(
         (1L, t0 + 2100000000L), (3L, t0 + 36000000000L)))
       drain()
-      val got = spark.read.parquet(sink.toString)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val drained = spark.read.parquet(sink.toString).collect()
+      val got = drained.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       // recovered state: user 1 is ONE session starting at its phase-1
       // start with 3 events; a fresh 1-event session here means the
       // merge state was lost on restart
       assert(got == Set((1L, t0, 3L), (2L, t0 - 3600000000L, 1L),
         (3L, t0 + 36000000000L, 1L)), s"final sessions $got")
+      assert(drained.forall(r => r.getDouble(3) == 1.25 * r.getLong(2)),
+        s"sum_value follows the merged sessions: ${drained.mkString(", ")}")
       // final ≡ batch: the same builder over all events as a static frame
-      val batch = StreamingOps.streamingSessions(
-          Seq((1L, t0), (1L, t0 + 600000000L), (2L, t0 - 3600000000L),
-            (1L, t0 + 2100000000L), (3L, t0 + 36000000000L))
-            .toDF("user_id", "us")
-            .select(col("user_id"), timestamp_micros(col("us")).as("ts")))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == batch)
+      val batch = StreamingOps.userSessions(events(Seq(
+          (1L, t0), (1L, t0 + 600000000L), (2L, t0 - 3600000000L),
+          (1L, t0 + 2100000000L), (3L, t0 + 36000000000L))))
+        .collect().map(_.toSeq).toSet
+      assert(drained.map(_.toSeq).toSet == batch)
     } finally {
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       prev match {
@@ -1305,7 +1221,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(completeOut.count() == 0 &&
       completeOut.columns.toSeq == Seq("event_type", "n"))
     val appendOut = StreamingOps.drainAndClean(spark,
-      StreamingOps.streamingTumbling(none), "drain_empty_a",
+      StreamingOps.hourlyWindows(watermarked(none)), "drain_empty_a",
       outputMode = "append")(identity)
     assert(appendOut.count() == 0 &&
       appendOut.columns.contains("n_events"))
@@ -1372,7 +1288,7 @@ class StreamingSpec extends AnyFunSuite {
 
   /** A (k, v) file stream of three single-row triggers, staged under `dir`. */
   private def threeTriggers(dir: String) = {
-    StreamingOps.stageTriggerFiles(s"$dir/stream",
+    SparkTest.stageTriggerFiles(s"$dir/stream",
       Seq((1L, 10L), (2L, 20L), (1L, 30L)).map(Seq(_).toDF("k", "v")))
     spark.readStream.schema("k BIGINT, v BIGINT")
       .option("maxFilesPerTrigger", "1")
@@ -1448,7 +1364,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       ops.VersionedStore.init(ops.Similarity.sigBands(
         Seq((1L, text(0)), (2L, text(4))).toDF("doc_id", "text")), s"$dir/store")
-      StreamingOps.stageTriggerFiles(s"$dir/stream",
+      SparkTest.stageTriggerFiles(s"$dir/stream",
         Seq(Seq((10L, text(0))), Seq((11L, text(8)))).map(_.toDF("doc_id", "text")))
       val stream = spark.readStream
         .schema("doc_id BIGINT, text STRING")
@@ -1517,12 +1433,15 @@ class StreamingSpec extends AnyFunSuite {
     val unwatermarked = ev.groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
     val initial = state
+    // an unset key must stay unset, a set one keep its value
     try Seq(Seq(None, None),
         Seq(Some("true"), Some(classOf[FileContextBasedCheckpointFileManager].getName)))
       .foreach { start =>
         put(start)
-        assert(StreamingOps.drainAndClean(spark, counts, "confs_ok")(identity).count() > 0)
+        val out = StreamingOps.drainAndClean(spark, counts, "confs_ok")(identity)
         assert(state == start)
+        assert(out.count() > 0)
+        ops.ScaleOps.freeLocalCheckpoint(out)
         intercept[AnalysisException] {
           StreamingOps.drainAndClean(spark, unwatermarked, "confs_bad",
             outputMode = "append")(identity)
