@@ -66,11 +66,12 @@ object Bench {
       if (chunks <= 1) Seq(sorted)
       else sorted.grouped(
         math.ceil(sorted.size.toDouble / chunks).toInt).toSeq
-    val sentinelFn = SparkEntry.queries.get("q15_agg_tpch1")
+    val sentinelFn =
+      if (chunks > 1) Some(SparkEntry.queries("q15_agg_tpch1")) else None
     val sentinels = scala.collection.mutable.ArrayBuffer[(String, Double)]()
     val results = groups.zipWithIndex.flatMap { case (g, gi) =>
       if (gi > 0 && chunks > 1 && coolS > 0) Thread.sleep(coolS * 1000L)
-      if (chunks > 1) sentinelFn.foreach { fn =>
+      sentinelFn.foreach { fn =>
         sentinels += (s"c$gi" -> timeOne("sentinel_q15", fn))
       }
       val passes = (1 to runs).map(_ => passOver(g))

@@ -10,7 +10,7 @@ package graft
   * driver surface: the driver's number of record stays graft.Bench. */
 object QBenchSub {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val fns = args(0).split(",").toSeq.map(n => n -> SparkEntry.queries(n))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -30,8 +30,7 @@ object QBenchSub {
     def codegenSnap(): (Long, Long) =
       (CodegenMetrics.METRIC_SOURCE_CODE_SIZE.getCount,
         CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getValues.sum)
-    val results = names.map { name =>
-      val fn = SparkEntry.queries(name)
+    val results = fns.map { case (name, fn) =>
       val stats = (1 to runs).map { _ =>
         val before = sc.getPersistentRDDs.keySet
         val (cg0, _) = codegenSnap()
@@ -53,7 +52,7 @@ object QBenchSub {
         f"  cpu=${stats.map(s => f"${s._3}%.1f").mkString(",")} s")
       (name, times.min)
     }
-    println(f"QSUB TOTAL ${results.map(_._2).sum}%.2f s over ${names.size} queries (min-of-$runs)")
+    println(f"QSUB TOTAL ${results.map(_._2).sum}%.2f s over ${fns.size} queries (min-of-$runs)")
     spark.stop()
   }
 }

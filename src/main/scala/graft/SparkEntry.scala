@@ -2,6 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+/** One declared query: its name, its builder over a table directory, and
+  * the equivalent ANSI SQL that DuckDB runs on the same parquet tables,
+  * or `None` where the result is not SQL-expressible (a trailing comment
+  * says why). */
+final case class Declared(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracle: Option[String])
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the t2 correctness surface: each entry's result (written to
@@ -19,34 +28,35 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.CorePipeline.q06DedupLatest(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.CorePipeline.queries ++ ops.Relational.queries ++
-      ops.TextOps.queries ++ ops.Similarity.queries ++
-      ops.StreamingOps.queries ++ ops.MultimodalOps.queries ++
-      pipeline.CorpusPipeline.queries ++ ops.Extended.queries ++
-      ops.Extended2.queries ++ ops.Extended3.queries ++
-      ops.GraphOps.queries ++ ops.Clustering.queries ++
-      ops.TpchExtra.queries ++ ops.Extended4.queries ++
-      ops.Extended5.queries ++ ops.Extended6.queries ++
-      ops.Extended7.queries ++ ops.Extended8.queries ++
-      ops.Extended9.queries ++ ops.BpeOps.queries ++ ops.LrOps.queries ++
-      ops.Extended10.queries ++ ops.PqOps.queries ++
-      ops.SpanOps.queries ++ ops.SemStoreOps.queries
+  /** Every declared query, each module named once. Fails with the names
+    * declared more than once. */
+  lazy val declared: Seq[Declared] = requireDistinct(Seq(
+    ops.CorePipeline.declared, ops.Relational.declared, ops.TextOps.declared,
+    ops.Similarity.declared, ops.StreamingOps.declared,
+    ops.MultimodalOps.declared, pipeline.CorpusPipeline.declared,
+    ops.Extended.declared, ops.Extended2.declared, ops.Extended3.declared,
+    ops.GraphOps.declared, ops.Clustering.declared, ops.TpchExtra.declared,
+    ops.Extended4.declared, ops.Extended5.declared, ops.Extended6.declared,
+    ops.Extended7.declared, ops.Extended8.declared, ops.Extended9.declared,
+    ops.BpeOps.declared, ops.LrOps.declared, ops.Extended10.declared,
+    ops.PqOps.declared, ops.SpanOps.declared, ops.SemStoreOps.declared
+  ).flatten)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ops.CorePipeline.oracleSql ++ ops.Relational.oracleSql ++
-      ops.TextOps.oracleSql ++ ops.Similarity.oracleSql ++
-      ops.StreamingOps.oracleSql ++ ops.MultimodalOps.oracleSql ++
-      pipeline.CorpusPipeline.oracleSql ++ ops.Extended.oracleSql ++
-      ops.Extended2.oracleSql ++ ops.Extended3.oracleSql ++
-      ops.GraphOps.oracleSql ++ ops.Clustering.oracleSql ++
-      ops.TpchExtra.oracleSql ++ ops.Extended4.oracleSql ++
-      ops.Extended5.oracleSql ++ ops.Extended6.oracleSql ++
-      ops.Extended7.oracleSql ++ ops.Extended8.oracleSql ++
-      ops.Extended9.oracleSql ++ ops.BpeOps.oracleSql ++ ops.LrOps.oracleSql ++
-      ops.Extended10.oracleSql ++ ops.PqOps.oracleSql ++
-      ops.SpanOps.oracleSql ++ ops.SemStoreOps.oracleSql
+  /** `ds` unchanged when its names are distinct. */
+  def requireDistinct(ds: Seq[Declared]): Seq[Declared] = {
+    val dups = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"queries declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    ds
+  }
+
+  /** Each declared query's builder, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = views._1
+
+  /** Each declared oracle, by its query's name. */
+  def oracleSql: Map[String, String] = views._2
+
+  private lazy val views = (
+    declared.map(d => d.name -> d.build).toMap,
+    declared.flatMap(d => d.oracle.map(d.name -> _)).toMap)
 }

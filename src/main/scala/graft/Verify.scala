@@ -5,14 +5,17 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
-    new java.io.File(outDir).mkdirs()
     // Dev aid: SPARK_GRAFT_ONLY=q88_chunk_docs,q89_... restricts the dump
     // to named queries (the driver never sets it → full surface).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names undeclared queries: " +
+      unknown.toSeq.sorted.mkString(", "))
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    new java.io.File(outDir).mkdirs()
     val sc = spark.sparkContext
     selected.foreach { case (name, fn) =>
       // Bench's per-query hygiene, mirrored (ADVICE r10): without it

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Declared, Tables}
 import scala.collection.mutable.ArrayBuffer
 
 /** BPE tokenizer TRAINING as a Spark job (SURVEY §7.4c: the last named
@@ -182,21 +182,17 @@ object BpeOps {
         sum(col("cnt") * col("occ")).as("n_merged"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q170_bpe_pairs" -> (q170BpePairs _),
-    "q171_bpe_train" -> (q171BpeTrain _),
-    "q173_bpe_encode_step" -> (q173BpeEncodeStep _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q170_bpe_pairs" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q170_bpe_pairs", q170BpePairs, Some(
       """WITH toks AS (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
         |  FROM documents),
         |words AS (SELECT w, count(*) AS cnt FROM toks WHERE w <> '' GROUP BY w),
         |pairs AS (SELECT substr(w, i, 1) AS l, substr(w, i + 1, 1) AS r, cnt
         |  FROM (SELECT w, cnt, unnest(range(1, length(w))) AS i FROM words)),
         |agg AS (SELECT l, r, CAST(SUM(cnt) AS BIGINT) AS cnt FROM pairs GROUP BY l, r)
-        |SELECT l, r, cnt FROM agg ORDER BY cnt DESC, l, r LIMIT 20""".stripMargin,
-    "q173_bpe_encode_step" ->
+        |SELECT l, r, cnt FROM agg ORDER BY cnt DESC, l, r LIMIT 20""".stripMargin)),
+    Declared("q171_bpe_train", q171BpeTrain, None), // iterative merge rounds: no SQL form
+    Declared("q173_bpe_encode_step", q173BpeEncodeStep, Some(
       """WITH toks AS (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
         |  FROM documents),
         |words AS (SELECT w, count(*) AS cnt FROM toks WHERE w <> '' GROUP BY w),
@@ -209,5 +205,5 @@ object BpeOps {
         |  CAST(SUM(cnt * (length(w)
         |    - (length(w) - length(replace(w, pair, ''))) // 2)) AS BIGINT) AS tokens_after,
         |  CAST(SUM(cnt * ((length(w) - length(replace(w, pair, ''))) // 2)) AS BIGINT) AS n_merged
-        |FROM words, top""".stripMargin)
+        |FROM words, top""".stripMargin)))
 }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Declared
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -40,22 +41,22 @@ object Clustering {
   case class VecSum(s: Seq[Double], n: Long)
   class VectorSumAgg(dim: Int)
       extends Aggregator[Seq[Double], VecSum, VecSum] {
-    def zero: VecSum = VecSum(Vector.fill(dim)(0.0), 0L)
-    def reduce(b: VecSum, a: Seq[Double]): VecSum = {
+    override def zero: VecSum = VecSum(Vector.fill(dim)(0.0), 0L)
+    override def reduce(b: VecSum, a: Seq[Double]): VecSum = {
       val out = new Array[Double](dim)
       var i = 0
       while (i < dim) { out(i) = b.s(i) + a(i); i += 1 }
       VecSum(out.toIndexedSeq, b.n + 1L)
     }
-    def merge(x: VecSum, y: VecSum): VecSum = {
+    override def merge(x: VecSum, y: VecSum): VecSum = {
       val out = new Array[Double](dim)
       var i = 0
       while (i < dim) { out(i) = x.s(i) + y.s(i); i += 1 }
       VecSum(out.toIndexedSeq, x.n + y.n)
     }
-    def finish(r: VecSum): VecSum = r
-    def bufferEncoder: Encoder[VecSum] = Encoders.product[VecSum]
-    def outputEncoder: Encoder[VecSum] = Encoders.product[VecSum]
+    override def finish(r: VecSum): VecSum = r
+    override def bufferEncoder: Encoder[VecSum] = Encoders.product[VecSum]
+    override def outputEncoder: Encoder[VecSum] = Encoders.product[VecSum]
   }
 
   /** Squared L2 distance between two array columns, in-row. Codegen'd
@@ -564,8 +565,6 @@ object Clustering {
       .orderBy("cid")
   }
 
-  val queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] =
-    Map("q108_kmeans" -> (q108Kmeans _))
-
-  val oracleSql: Map[String, String] = Map.empty
+  val declared: Seq[Declared] = Seq(
+    Declared("q108_kmeans", q108Kmeans, None)) // k-means fixpoint
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -148,44 +148,33 @@ object CorePipeline {
         to_json(struct(col("user_id"), col("n_events"), col("first_ts_us"))).as("value"))
       .orderBy("key")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_scan_project" -> (q01ScanProject _),
-    "q02_json_parse" -> (q02JsonParse _),
-    "q03_explode" -> (q03Explode _),
-    "q04_project_rename" -> (q04ProjectRename _),
-    "q05_group_collect" -> (q05GroupCollect _),
-    "q06_dedup_latest" -> (q06DedupLatest _),
-    "q07_merge_upsert" -> (q07MergeUpsert _),
-    "q08_date_funcs" -> (q08DateFuncs _),
-    "q09_to_json_kv" -> (q09ToJsonKv _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q01_scan_project" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q01_scan_project", q01ScanProject, Some(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q02_json_parse" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Declared("q02_json_parse", q02JsonParse, Some(
       """SELECT event_id, CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q03_explode" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Declared("q03_explode", q03Explode, Some(
       """SELECT vec_id, CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS pos,
         |       unnest(embedding) AS val
-        |FROM embeddings ORDER BY vec_id, pos""".stripMargin,
-    "q04_project_rename" ->
+        |FROM embeddings ORDER BY vec_id, pos""".stripMargin)),
+    Declared("q04_project_rename", q04ProjectRename, Some(
       """SELECT c_custkey AS id, upper(c_name) AS name,
         |       c_mktsegment AS segment, c_acctbal AS balance
-        |FROM customer ORDER BY id""".stripMargin,
-    "q05_group_collect" ->
+        |FROM customer ORDER BY id""".stripMargin)),
+    Declared("q05_group_collect", q05GroupCollect, Some(
       """SELECT user_id, count(*) AS n_events,
         |       string_agg(event_type || '|' || event_id, ';'
         |                  ORDER BY event_type || '|' || event_id) AS events_str
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q06_dedup_latest" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Declared("q06_dedup_latest", q06DedupLatest, Some(
       """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
         |FROM events
         |QUALIFY row_number() OVER (PARTITION BY user_id, event_type
         |                           ORDER BY ts DESC, event_id DESC) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q07_merge_upsert" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Declared("q07_merge_upsert", q07MergeUpsert, Some(
       """WITH latest AS (
         |  SELECT user_id, event_type, event_id, ts,
         |         ts < TIMESTAMP '2024-01-16' AS is_existing
@@ -205,16 +194,16 @@ object CorePipeline {
         |            THEN 'incoming' ELSE 'existing' END AS origin
         |FROM e FULL OUTER JOIN i
         |  ON e.user_id = i.user_id AND e.event_type = i.event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q08_date_funcs" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Declared("q08_date_funcs", q08DateFuncs, Some(
       """SELECT event_id, CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
         |       CAST(day(ts) AS INT) AS d, CAST(hour(ts) AS INT) AS h,
         |       strftime(ts, '%Y-%m-%d') AS day_str,
         |       CAST(date_diff('day', CAST(ts AS DATE), DATE '2024-02-01') AS INT) AS days_to_feb
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q09_to_json_kv" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Declared("q09_to_json_kv", q09ToJsonKv, Some(
       """SELECT 'user:' || user_id AS key,
         |       to_json({'user_id': user_id, 'n_events': count(*),
         |                'first_ts_us': min(epoch_us(ts))}) AS value
-        |FROM events GROUP BY user_id ORDER BY key""".stripMargin)
+        |FROM events GROUP BY user_id ORDER BY key""".stripMargin)))
 }

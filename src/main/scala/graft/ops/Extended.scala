@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -28,14 +28,14 @@ class TopKAgg(k: Int)
       val (hi, lo) = b.span(better(_, a))
       (hi ::: a :: lo).take(k)
     }
-  def zero: List[TopKEntry] = Nil
-  def reduce(b: List[TopKEntry], a: TopKEntry): List[TopKEntry] = insert(b, a)
-  def merge(b1: List[TopKEntry], b2: List[TopKEntry]): List[TopKEntry] =
+  override def zero: List[TopKEntry] = Nil
+  override def reduce(b: List[TopKEntry], a: TopKEntry): List[TopKEntry] = insert(b, a)
+  override def merge(b1: List[TopKEntry], b2: List[TopKEntry]): List[TopKEntry] =
     b2.foldLeft(b1)(insert)
-  def finish(b: List[TopKEntry]): Seq[TopKEntry] = b
-  def bufferEncoder: org.apache.spark.sql.Encoder[List[TopKEntry]] =
+  override def finish(b: List[TopKEntry]): Seq[TopKEntry] = b
+  override def bufferEncoder: org.apache.spark.sql.Encoder[List[TopKEntry]] =
     ExpressionEncoder[List[TopKEntry]]()
-  def outputEncoder: org.apache.spark.sql.Encoder[Seq[TopKEntry]] =
+  override def outputEncoder: org.apache.spark.sql.Encoder[Seq[TopKEntry]] =
     ExpressionEncoder[Seq[TopKEntry]]()
 }
 
@@ -381,26 +381,8 @@ object Extended {
           .cast("double").as("bucket_total"))
       .orderBy("bucket")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q65_funnel" -> (q65Funnel _),
-    "q66_histogram" -> (q66Histogram _),
-    "q61_topk_per_key" -> (q61TopKPerKey _),
-    "q62_pii_redact" -> (q62PiiRedact _),
-    "q60_pack_sequences" -> (q60PackSequences _),
-    "q49_grouping_sets" -> (q49GroupingSets _),
-    "q50_subqueries" -> (q50Subqueries _),
-    "q51_conditional_agg" -> (q51ConditionalAgg _),
-    "q52_nullsafe_join" -> (q52NullSafeJoin _),
-    "q53_unpivot" -> (q53Unpivot _),
-    "q54_range_frame" -> (q54RangeFrame _),
-    "q55_value_window" -> (q55ValueWindow _),
-    "q56_edit_distance" -> (q56EditDistance _),
-    "q57_union_by_name" -> (q57UnionByName _),
-    "q58_tpch_q3" -> (q58TpchQ3 _),
-    "q59_gap_fill" -> (q59GapFill _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q65_funnel" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q65_funnel", q65Funnel, Some(
       """WITH ev AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events)
         |SELECT user_id, c_id, p_id, delay_us FROM (
@@ -412,29 +394,29 @@ object Extended {
         |    ON c.user_id = p.user_id
         |   AND c.event_type = 'click' AND p.event_type = 'purchase'
         |   AND p.us > c.us AND p.us - c.us <= 1800000000)
-        |WHERE rn = 1 ORDER BY c_id""".stripMargin,
-    "q66_histogram" ->
+        |WHERE rn = 1 ORDER BY c_id""".stripMargin)),
+    Declared("q66_histogram", q66Histogram, Some(
       """SELECT least(CAST(floor(o_totalprice / 60000) AS BIGINT), 9) AS bucket,
         |       count(*) AS n,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
         |         AS bucket_total
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q61_topk_per_key" ->
+        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin)),
+    Declared("q61_topk_per_key", q61TopKPerKey, Some(
       """SELECT o_custkey, rnk, o_orderkey, o_totalprice FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_custkey
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rnk
         |  FROM orders)
-        |WHERE rnk <= 3 ORDER BY o_custkey, rnk""".stripMargin,
-    "q62_pii_redact" ->
+        |WHERE rnk <= 3 ORDER BY o_custkey, rnk""".stripMargin)),
+    Declared("q62_pii_redact", q62PiiRedact, Some(
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '[a-zA-Z0-9._]+@[a-zA-Z0-9]+\.[a-zA-Z]+')) AS INT) AS n_emails,
         |  CAST(len(regexp_extract_all(text, '[0-9]{4,}')) AS INT) AS n_digit_runs,
         |  regexp_replace(regexp_replace(text,
         |    '[a-zA-Z0-9._]+@[a-zA-Z0-9]+\.[a-zA-Z]+', '<EMAIL>', 'g'),
         |    '[0-9]{4,}', '<NUM>', 'g') AS redacted
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q60_pack_sequences" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Declared("q60_pack_sequences", q60PackSequences, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
@@ -447,23 +429,23 @@ object Extended {
         |       count(*) AS n_docs,
         |       CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
         |       min(doc_id) AS first_doc, max(doc_id) AS last_doc
-        |FROM c GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q49_grouping_sets" ->
+        |FROM c GROUP BY 1 ORDER BY bin""".stripMargin)),
+    Declared("q49_grouping_sets", q49GroupingSets, Some(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |       coalesce(o_orderpriority, 'ALL') AS priority,
         |       count(*) AS n_orders,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        |ORDER BY status, priority""".stripMargin,
-    "q50_subqueries" ->
+        |ORDER BY status, priority""".stripMargin)),
+    Declared("q50_subqueries", q50Subqueries, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders
         |WHERE EXISTS (SELECT 1 FROM lineitem
         |              WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
         |  AND o_totalprice > (SELECT avg(o_totalprice) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q51_conditional_agg" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Declared("q51_conditional_agg", q51ConditionalAgg, Some(
       """SELECT o_orderstatus,
         |  count(*) AS n_all,
         |  count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS n_urgent,
@@ -472,29 +454,29 @@ object Extended {
         |       AS DOUBLE) AS urgent_price,
         |  CAST(count(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS DOUBLE)
         |    / count(*) AS urgent_frac
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q52_nullsafe_join" ->
+        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)),
+    Declared("q52_nullsafe_join", q52NullSafeJoin, Some(
       """SELECT n_nationkey, n_name, r_name
         |FROM (SELECT n_nationkey, n_name, nullif(n_regionkey, 2) AS rk FROM nation) n
         |JOIN (SELECT r_name, nullif(r_regionkey, 2) AS rk FROM region) r
         |  ON n.rk IS NOT DISTINCT FROM r.rk
-        |ORDER BY n_nationkey""".stripMargin,
-    "q53_unpivot" ->
+        |ORDER BY n_nationkey""".stripMargin)),
+    Declared("q53_unpivot", q53Unpivot, Some(
       """SELECT p_partkey, metric, val
         |FROM (UNPIVOT (SELECT p_partkey,
         |                      CAST(p_size AS DOUBLE) AS size,
         |                      p_retailprice AS retail
         |               FROM part)
         |      ON size, retail INTO NAME metric VALUE val)
-        |ORDER BY p_partkey, metric""".stripMargin,
-    "q54_range_frame" ->
+        |ORDER BY p_partkey, metric""".stripMargin)),
+    Declared("q54_range_frame", q54RangeFrame, Some(
       """SELECT user_id, event_id,
         |  CAST(sum(CAST(value AS DECIMAL(18,6))) OVER (
         |    PARTITION BY user_id ORDER BY ts
         |    RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
         |  AS DOUBLE) AS trailing_1h_sum
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q55_value_window" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin)),
+    Declared("q55_value_window", q55ValueWindow, Some(
       """SELECT o_custkey, o_orderkey,
         |  first_value(o_totalprice) OVER w AS first_price,
         |  last_value(o_totalprice) OVER w AS last_price,
@@ -502,20 +484,20 @@ object Extended {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
         |             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q56_edit_distance" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)),
+    Declared("q56_edit_distance", q56EditDistance, Some(
       """SELECT p_partkey, p_name, p_type,
         |       CAST(levenshtein(p_name, lower(p_type)) AS INT) AS lev
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q57_union_by_name" ->
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Declared("q57_union_by_name", q57UnionByName, Some(
       """SELECT * FROM (
         |  SELECT s_suppkey AS id, s_name AS name, s_acctbal AS bal,
         |         'supplier' AS origin FROM supplier
         |  UNION ALL BY NAME
         |  SELECT c_name AS name, c_custkey AS id, CAST(NULL AS DOUBLE) AS bal,
         |         'customer' AS origin FROM customer)
-        |ORDER BY origin, id""".stripMargin,
-    "q58_tpch_q3" ->
+        |ORDER BY origin, id""".stripMargin)),
+    Declared("q58_tpch_q3", q58TpchQ3, Some(
       """SELECT l_orderkey, epoch_us(o_orderdate) AS orderdate_us,
         |  CAST(ROUND(sum(CAST(l_extendedprice * (1.0 - l_discount)
         |                      AS DECIMAL(28,10))), 2) AS DOUBLE) AS revenue
@@ -525,8 +507,8 @@ object Extended {
         |  AND o_orderdate < TIMESTAMP '1996-01-01'
         |  AND l_shipdate > TIMESTAMP '1996-01-01'
         |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q59_gap_fill" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
+    Declared("q59_gap_fill", q59GapFill, Some(
       """WITH hourly AS (
         |  SELECT date_trunc('hour', ts) AS h, count(*) AS n
         |  FROM events GROUP BY 1),
@@ -536,5 +518,5 @@ object Extended {
         |                                INTERVAL 1 HOUR)) AS h)
         |SELECT epoch_us(spine.h) AS h_us, coalesce(hourly.n, 0) AS n
         |FROM spine LEFT JOIN hourly ON spine.h = hourly.h
-        |ORDER BY h_us""".stripMargin)
+        |ORDER BY h_us""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * is not full the sketch IS the distinct set, so small-group answers
   * are exact — the property q191's oracle relies on. */
 class KmvAgg(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
-  def zero: Array[Long] = Array.empty[Long]
-  def reduce(b: Array[Long], v: Long): Array[Long] = {
+  override def zero: Array[Long] = Array.empty[Long]
+  override def reduce(b: Array[Long], v: Long): Array[Long] = {
     val pos = java.util.Arrays.binarySearch(b, v)
     if (pos >= 0) b                                   // already present
     else if (b.length < k) {                          // growing: insert
@@ -38,7 +38,7 @@ class KmvAgg(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
       out
     }
   }
-  def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
     // sorted merge, dedup, truncate at k
     val out = new Array[Long](math.min(b1.length + b2.length, k))
     var i = 0; var j = 0; var n = 0
@@ -51,10 +51,10 @@ class KmvAgg(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
     }
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
-  def finish(b: Array[Long]): Seq[Long] = b.toSeq
-  def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
+  override def finish(b: Array[Long]): Seq[Long] = b.toSeq
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
     ExpressionEncoder[Array[Long]]()
-  def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
+  override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
     ExpressionEncoder[Seq[Long]]()
 }
 
@@ -66,20 +66,20 @@ class KmvAgg(k: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
   * inserted (the property that distinguishes it from the broadcast
   * phrase set of q89, which grows with the benchmark). */
 class BitsetAgg(words: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
-  def zero: Array[Long] = new Array[Long](words)
-  def reduce(b: Array[Long], p: Long): Array[Long] = {
+  override def zero: Array[Long] = new Array[Long](words)
+  override def reduce(b: Array[Long], p: Long): Array[Long] = {
     b((p >>> 6).toInt) |= 1L << (p & 63L)
     b
   }
-  def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
     var i = 0
     while (i < words) { b1(i) |= b2(i); i += 1 }
     b1
   }
-  def finish(b: Array[Long]): Seq[Long] = b.toSeq
-  def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
+  override def finish(b: Array[Long]): Seq[Long] = b.toSeq
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
     ExpressionEncoder[Array[Long]]()
-  def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
+  override def outputEncoder: org.apache.spark.sql.Encoder[Seq[Long]] =
     ExpressionEncoder[Seq[Long]]()
 }
 
@@ -1341,12 +1341,10 @@ object Extended10 {
     * of batch-sized files into the cell directories; the stored index
     * is never read, never shuffled, never rewritten (measured against
     * the full rebuild in BASELINE_ARCHIVE.md's "q200 append, 100×
-    * tier"). The drift audit reads each side once; over a
-    * STORED index the stored-side error is a k-free per-row lookup of
-    * the row's own cell centroid, while this declared INLINE
-    * composition derives the stored side's (cell, d2) from one argmin
-    * evaluation (see [[ivfAppendAudit]]). Rows-only: cell boundaries
-    * are float k-means fixpoints (q45/q108/q199 precedent). */
+    * tier"). The drift audit reads each side once and derives each
+    * row's (cell, d2) from one argmin evaluation (see
+    * [[ivfAppendAudit]]). Rows-only: cell boundaries are float k-means
+    * fixpoints (q45/q108/q199 precedent). */
   def q200IvfAppend(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.fanout(Tables.embeddings(spark, dir)
       .select(col("vec_id"),
@@ -1354,8 +1352,7 @@ object Extended10 {
     val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 9)
     val batch = emb.filter(pmod(col("vec_id"), lit(10L)) === 9)
     val (index, cents) = ivfIndex(base, dim = 64, nCells = 16)
-    ivfAppendAudit(index, cents, batch, dim = 64,
-      cellIsComputed = true)
+    ivfAppendAudit(index, cents, batch, dim = 64)
   }
 
   /** Maintenance audit of an append: per-cell base/batch populations,
@@ -1363,17 +1360,12 @@ object Extended10 {
     * (total batch MSE > 2× total base MSE, replicated onto every cell
     * row — the quantizer is corpus-global, so the decision is too),
     * and the per-cell `cell_drift` MSE ratio that makes LOCALIZED
-    * drift visible. The
-    * batch side's error is the append argmin's own d2. The stored
-    * side depends on what `index` is (code-review r12): over a STORED
-    * (parquet) index the error is a k-FREE map lookup of the row's own
-    * cell centroid; over an INLINE index — whose `cell` column IS the
-    * assignment UDF — pass `cellIsComputed = true` so (cell, d2) come
-    * from ONE argmin evaluation instead of an argmin for the cell plus
-    * a redundant second distance pass. */
+    * drift visible. Each side's error is the append argmin's own d2:
+    * `index` is the inline index, whose `cell` column IS the assignment
+    * UDF, so (cell, d2) come from ONE argmin evaluation per row. */
   private[graft] def ivfAppendAudit(index: DataFrame,
       cents: Array[(Long, Array[Double])], batch: DataFrame,
-      dim: Int, cellIsComputed: Boolean = false): DataFrame = {
+      dim: Int): DataFrame = {
     // belt-and-suspenders (the ivfIndex empty-cents posture): a
     // zero-centroid quantizer with a nonempty batch would crash the
     // per-row argmin — an empty audit is the degraded answer
@@ -1382,25 +1374,12 @@ object Extended10 {
         lit(0L).as("n_batch"), lit(0.0).as("base_mse"),
         lit(0.0).as("batch_mse"), lit(false).as("retrain"),
         lit(null).cast("double").as("cell_drift")).limit(0)
-    val centsMap = cents.toMap
     val asg = Clustering.nearestCentroid(cents)
-    // stored rows already carry their cell: error is one map lookup +
-    // one d-length loop per row, independent of k
-    val storedErr = udf { (e: Seq[Double], cell: Long) =>
-      Clustering.l2sqLocal(e.toArray, centsMap(cell))
-    }.asNonNullable()
-    val baseRows =
-      if (cellIsComputed)
-        // identical (cell, d2) by argmin determinism; the unused
-        // computed cell column prunes away, so the argmin runs ONCE
-        // per row (single-eval under struct-field extraction — the
-        // PLANS.md q200 pin)
-        index.select(asg(col("e0")).as("a"))
-          .select(col("a._1").as("cell"), col("a._2").as("d2"))
-      else
-        index.select(col("cell"),
-          storedErr(col("e0"), col("cell")).as("d2"))
-    val baseSide = baseRows
+    // identical (cell, d2) by argmin determinism; the unused computed
+    // cell column prunes away, so the argmin runs ONCE per row
+    // (single-eval under struct-field extraction — the PLANS.md q200 pin)
+    val baseSide = index.select(asg(col("e0")).as("a"))
+      .select(col("a._1").as("cell"), col("a._2").as("d2"))
       .groupBy("cell")
       .agg(count(lit(1)).as("n_base"), sum(col("d2")).as("s_base"))
     val batchSide = batch.filter(size(col("e0")) === dim)
@@ -1538,30 +1517,19 @@ object Extended10 {
     (rrfFuse(lex, dense), caches)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q197_rrf_hybrid" -> (q197RrfHybrid _),
-    "q199_rrf_hybrid_ivf" -> (q199RrfHybridIvf _),
-    "q200_ivf_append" -> (q200IvfAppend _),
-    "q193_bloom_decontaminate" -> (q193BloomDecontaminate _),
-    "q191_kmv_overlap" -> (q191KmvOverlap _),
-    "q190_bm25" -> (q190Bm25 _),
-    "q207_bm25_incr" -> (q207Bm25Incr _),
-    "q185_dsir_buckets" -> (q185DsirBuckets _),
-    "q186_dsir_select" -> (q186DsirSelect _),
-    "q187_semdedup" -> (q187SemDedup _),
-    "q188_unimax_mixture" -> (q188UnimaxMixture _),
-    "q189_span_corruption" -> (q189SpanCorruption _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q197_rrf_hybrid" -> q197Oracle,
-    "q193_bloom_decontaminate" -> q193Oracle,
-    "q191_kmv_overlap" -> q191Oracle,
-    "q190_bm25" -> q190Oracle,
+  val declared: Seq[Declared] = Seq(
+    Declared("q197_rrf_hybrid", q197RrfHybrid, Some(q197Oracle)),
+    Declared("q199_rrf_hybrid_ivf", q199RrfHybridIvf, None), // k-means fixpoint: IVF cells
+    Declared("q200_ivf_append", q200IvfAppend, None), // k-means fixpoint: IVF cells
+    Declared("q193_bloom_decontaminate", q193BloomDecontaminate, Some(q193Oracle)),
+    Declared("q191_kmv_overlap", q191KmvOverlap, Some(q191Oracle)),
+    Declared("q190_bm25", q190Bm25, Some(q190Oracle)),
     // segmented index merged on read ≡ the full-corpus ranking — shares
     // q190's oracle verbatim (the q172/q206 same-answer precedent)
-    "q207_bm25_incr" -> q190Oracle,
-    "q185_dsir_buckets" -> q185Oracle,
-    "q186_dsir_select" -> q186Oracle,
-    "q188_unimax_mixture" -> q188Oracle,
-    "q189_span_corruption" -> q189Oracle)
+    Declared("q207_bm25_incr", q207Bm25Incr, Some(q190Oracle)),
+    Declared("q185_dsir_buckets", q185DsirBuckets, Some(q185Oracle)),
+    Declared("q186_dsir_select", q186DsirSelect, Some(q186Oracle)),
+    Declared("q187_semdedup", q187SemDedup, None), // k-means fixpoint: semantic cells
+    Declared("q188_unimax_mixture", q188UnimaxMixture, Some(q188Oracle)),
+    Declared("q189_span_corruption", q189SpanCorruption, Some(q189Oracle)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -476,29 +476,8 @@ object Extended2 {
         expr("exists(sequence(1, p_size % 10 + 1), x -> x = 5)").as("has5"))
       .cachedOrderBy("p_partkey")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q74_zorder" -> (q74Zorder _),
-    "q75_time_rollup" -> (q75TimeRollup _),
-    "q76_fuzzy_dedup" -> (q76FuzzyDedup _),
-    "q77_cdc_apply" -> (q77CdcApply _),
-    "q78_tpch_q5" -> (q78TpchQ5 _),
-    "q79_embed_stats" -> (q79EmbedStats _),
-    "q81_corr" -> (q81Corr _),
-    "q82_mode" -> (q82Mode _),
-    "q83_pareto_cut" -> (q83ParetoCut _),
-    "q84_dup_report" -> (q84DupReport _),
-    "q85_explode_outer" -> (q85ExplodeOuter _),
-    "q86_hof_bundle" -> (q86HofBundle _),
-    "q67_interval_merge" -> (q67IntervalMerge _),
-    "q68_tfidf" -> (q68Tfidf _),
-    "q69_scd2" -> (q69Scd2 _),
-    "q70_bloom_join" -> (q70BloomJoin _),
-    "q71_zscore_outliers" -> (q71ZscoreOutliers _),
-    "q72_md5_sample" -> (q72Md5Sample _),
-    "q73_bigram_lm" -> (q73BigramLm _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q74_zorder" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q74_zorder", q74Zorder, Some(
       """WITH base AS (
         |  SELECT o_orderkey, o_custkey,
         |         (o_custkey & 65535) AS a, (o_orderkey & 65535) AS b
@@ -519,8 +498,8 @@ object Extended2 {
         |         ((a | (a << 1)) & 6148914691236517205) AS a,
         |         ((b | (b << 1)) & 6148914691236517205) AS b FROM s4)
         |SELECT o_orderkey, o_custkey, (a | (b << 1)) AS zkey
-        |FROM s5 ORDER BY zkey, o_orderkey""".stripMargin,
-    "q75_time_rollup" ->
+        |FROM s5 ORDER BY zkey, o_orderkey""".stripMargin)),
+    Declared("q75_time_rollup", q75TimeRollup, Some(
       """SELECT coalesce(y, -1) AS y, coalesce(m, -1) AS m,
         |       coalesce(d, -1) AS d,
         |       count(*) AS n_events,
@@ -530,8 +509,8 @@ object Extended2 {
         |             CAST(day(ts) AS BIGINT) AS d, value
         |      FROM events)
         |GROUP BY ROLLUP (y, m, d)
-        |ORDER BY y, m, d""".stripMargin,
-    "q76_fuzzy_dedup" ->
+        |ORDER BY y, m, d""".stripMargin)),
+    Declared("q76_fuzzy_dedup", q76FuzzyDedup, Some(
       """WITH n AS (
         |  SELECT p_name, split_part(p_name, ' ', 1) AS blk,
         |         count(*) AS cnt
@@ -542,51 +521,43 @@ object Extended2 {
         |FROM n a JOIN n b
         |  ON a.blk = b.blk AND a.p_name < b.p_name
         |WHERE levenshtein(a.p_name, b.p_name) BETWEEN 1 AND 3
-        |ORDER BY name_a, name_b""".stripMargin,
-    "q85_explode_outer" ->
-      """WITH p AS (
-        |  SELECT p_partkey,
-        |         CASE WHEN p_size % 7 = 0 THEN NULL
-        |              ELSE string_split(p_name, ' ') END AS toks
-        |  FROM part)
-        |SELECT p.p_partkey, u.tok
-        |FROM p LEFT JOIN (SELECT p_partkey AS pk, unnest(toks) AS tok
-        |                  FROM p) u
-        |  ON p.p_partkey = u.pk
-        |ORDER BY p_partkey, tok NULLS FIRST""".stripMargin,
-    "q86_hof_bundle" ->
-      """SELECT p_partkey,
-        |  CAST(list_sum(list_transform(range(1, p_size % 10 + 2),
-        |                               x -> x * x)) AS BIGINT) AS sum_sq,
-        |  len(list_filter(range(1, p_size % 10 + 2),
-        |                  x -> x % 2 = 0)) AS n_even,
-        |  list_has_any(range(1, p_size % 10 + 2), [5]) AS has5
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q83_pareto_cut" ->
-      """WITH pc AS (
-        |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1),
-        |t AS (SELECT sum(rev) AS total FROM pc),
-        |c AS (
-        |  SELECT o_custkey, rev,
-        |         sum(rev) OVER (ORDER BY rev DESC, o_custkey
-        |                        ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM pc)
-        |SELECT o_custkey, CAST(rev AS DOUBLE) AS rev,
-        |       CAST(cum * 100 AS DOUBLE) / CAST(total AS DOUBLE)
-        |         AS cum_share_pct
-        |FROM c, t
-        |WHERE (cum - rev) * 100 < total * 80
-        |ORDER BY rev DESC, o_custkey""".stripMargin,
-    "q84_dup_report" ->
-      """WITH g AS (
-        |  SELECT source, sha256(text) AS h, count(*) AS copies
-        |  FROM documents GROUP BY 1, 2)
-        |SELECT source, CAST(sum(copies) AS BIGINT) AS n_docs,
-        |       CAST(sum(copies - 1) AS BIGINT) AS n_surplus,
-        |       CAST(sum(copies - 1) AS DOUBLE) / sum(copies) AS dup_ratio
-        |FROM g GROUP BY source ORDER BY source""".stripMargin,
-    "q81_corr" ->
+        |ORDER BY name_a, name_b""".stripMargin)),
+    Declared("q77_cdc_apply", q77CdcApply, Some(
+      """SELECT user_id, event_id, us AS as_of_us, v FROM (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us,
+        |         CASE WHEN event_id % 10 = 0 THEN 'D' ELSE 'U' END AS op,
+        |         CAST(CAST(value AS DECIMAL(18,6)) AS DOUBLE) AS v,
+        |         row_number() OVER (PARTITION BY user_id
+        |                            ORDER BY epoch_us(ts) DESC,
+        |                                     event_id DESC) AS rn
+        |  FROM events)
+        |WHERE rn = 1 AND op = 'U'
+        |ORDER BY user_id""".stripMargin)),
+    Declared("q78_tpch_q5", q78TpchQ5, Some(
+      """SELECT n_name,
+        |       CAST(ROUND(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |                           AS DECIMAL(28,10))), 2) AS DOUBLE)
+        |         AS revenue
+        |FROM customer, orders, lineitem, supplier, nation, region
+        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |  AND r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin)),
+    Declared("q79_embed_stats", q79EmbedStats, Some(
+      """WITH norms AS (
+        |  SELECT label,
+        |         CAST(round(sqrt(sum(v * v)), 6) AS DECIMAL(18,6)) AS norm
+        |  FROM (SELECT label, vec_id,
+        |               unnest(CAST(embedding AS DOUBLE[])) AS v
+        |        FROM embeddings)
+        |  GROUP BY label, vec_id)
+        |SELECT label, count(*) AS n_vecs,
+        |       CAST(sum(norm) AS DOUBLE) / count(*) AS mean_norm
+        |FROM norms GROUP BY label ORDER BY label""".stripMargin)),
+    Declared("q81_corr", q81Corr, Some(
       """WITH s AS (
         |  SELECT l_returnflag, count(*) AS n,
         |         sum(CAST(l_quantity AS DECIMAL(18,6))) AS sx,
@@ -612,50 +583,58 @@ object Extended2 {
         |SELECT l_returnflag, n,
         |       (n * sxy - sx * sy) /
         |       (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS corr_qd
-        |FROM d ORDER BY l_returnflag""".stripMargin,
-    "q82_mode" ->
+        |FROM d ORDER BY l_returnflag""".stripMargin)),
+    Declared("q82_mode", q82Mode, Some(
       """SELECT c_mktsegment, modal_nation, cnt FROM (
         |  SELECT c_mktsegment, c_nationkey AS modal_nation, count(*) AS cnt,
         |         row_number() OVER (PARTITION BY c_mktsegment
         |                            ORDER BY count(*) DESC, c_nationkey) AS rn
         |  FROM customer GROUP BY c_mktsegment, c_nationkey)
-        |WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin,
-    "q78_tpch_q5" ->
-      """SELECT n_name,
-        |       CAST(ROUND(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |                           AS DECIMAL(28,10))), 2) AS DOUBLE)
-        |         AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    "q79_embed_stats" ->
-      """WITH norms AS (
-        |  SELECT label,
-        |         CAST(round(sqrt(sum(v * v)), 6) AS DECIMAL(18,6)) AS norm
-        |  FROM (SELECT label, vec_id,
-        |               unnest(CAST(embedding AS DOUBLE[])) AS v
-        |        FROM embeddings)
-        |  GROUP BY label, vec_id)
-        |SELECT label, count(*) AS n_vecs,
-        |       CAST(sum(norm) AS DOUBLE) / count(*) AS mean_norm
-        |FROM norms GROUP BY label ORDER BY label""".stripMargin,
-    "q77_cdc_apply" ->
-      """SELECT user_id, event_id, us AS as_of_us, v FROM (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |         CASE WHEN event_id % 10 = 0 THEN 'D' ELSE 'U' END AS op,
-        |         CAST(CAST(value AS DECIMAL(18,6)) AS DOUBLE) AS v,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY epoch_us(ts) DESC,
-        |                                     event_id DESC) AS rn
-        |  FROM events)
-        |WHERE rn = 1 AND op = 'U'
-        |ORDER BY user_id""".stripMargin,
-    "q67_interval_merge" ->
+        |WHERE rn = 1 ORDER BY c_mktsegment""".stripMargin)),
+    Declared("q83_pareto_cut", q83ParetoCut, Some(
+      """WITH pc AS (
+        |  SELECT o_custkey, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
+        |  FROM orders GROUP BY 1),
+        |t AS (SELECT sum(rev) AS total FROM pc),
+        |c AS (
+        |  SELECT o_custkey, rev,
+        |         sum(rev) OVER (ORDER BY rev DESC, o_custkey
+        |                        ROWS UNBOUNDED PRECEDING) AS cum
+        |  FROM pc)
+        |SELECT o_custkey, CAST(rev AS DOUBLE) AS rev,
+        |       CAST(cum * 100 AS DOUBLE) / CAST(total AS DOUBLE)
+        |         AS cum_share_pct
+        |FROM c, t
+        |WHERE (cum - rev) * 100 < total * 80
+        |ORDER BY rev DESC, o_custkey""".stripMargin)),
+    Declared("q84_dup_report", q84DupReport, Some(
+      """WITH g AS (
+        |  SELECT source, sha256(text) AS h, count(*) AS copies
+        |  FROM documents GROUP BY 1, 2)
+        |SELECT source, CAST(sum(copies) AS BIGINT) AS n_docs,
+        |       CAST(sum(copies - 1) AS BIGINT) AS n_surplus,
+        |       CAST(sum(copies - 1) AS DOUBLE) / sum(copies) AS dup_ratio
+        |FROM g GROUP BY source ORDER BY source""".stripMargin)),
+    Declared("q85_explode_outer", q85ExplodeOuter, Some(
+      """WITH p AS (
+        |  SELECT p_partkey,
+        |         CASE WHEN p_size % 7 = 0 THEN NULL
+        |              ELSE string_split(p_name, ' ') END AS toks
+        |  FROM part)
+        |SELECT p.p_partkey, u.tok
+        |FROM p LEFT JOIN (SELECT p_partkey AS pk, unnest(toks) AS tok
+        |                  FROM p) u
+        |  ON p.p_partkey = u.pk
+        |ORDER BY p_partkey, tok NULLS FIRST""".stripMargin)),
+    Declared("q86_hof_bundle", q86HofBundle, Some(
+      """SELECT p_partkey,
+        |  CAST(list_sum(list_transform(range(1, p_size % 10 + 2),
+        |                               x -> x * x)) AS BIGINT) AS sum_sq,
+        |  len(list_filter(range(1, p_size % 10 + 2),
+        |                  x -> x % 2 = 0)) AS n_even,
+        |  list_has_any(range(1, p_size % 10 + 2), [5]) AS has5
+        |FROM part ORDER BY p_partkey""".stripMargin)),
+    Declared("q67_interval_merge", q67IntervalMerge, Some(
       """WITH iv AS (
         |  SELECT o_custkey, o_orderkey, epoch_us(o_orderdate) AS s,
         |         epoch_us(o_orderdate)
@@ -677,8 +656,8 @@ object Extended2 {
         |       min(s) AS span_start_us, max(e) AS span_end_us,
         |       count(*) AS n_orders
         |FROM isl GROUP BY o_custkey, island
-        |ORDER BY o_custkey, island""".stripMargin,
-    "q68_tfidf" ->
+        |ORDER BY o_custkey, island""".stripMargin)),
+    Declared("q68_tfidf", q68Tfidf, Some(
       """WITH tok AS (
         |  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+')) AS token
         |  FROM documents),
@@ -693,8 +672,8 @@ object Extended2 {
         |           ORDER BY CAST(tf AS DOUBLE) * n_docs / df DESC,
         |                    t.token) AS rnk
         |  FROM tf t JOIN dfc ON t.token = dfc.token CROSS JOIN n)
-        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    "q69_scd2" ->
+        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin)),
+    Declared("q69_scd2", q69Scd2, Some(
       """WITH o AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
         |         lag(event_type) OVER (PARTITION BY user_id
@@ -706,15 +685,15 @@ object Extended2 {
         |SELECT user_id, event_id, event_type, us AS valid_from_us,
         |       lead(us) OVER (PARTITION BY user_id
         |                      ORDER BY us, event_id) AS valid_to_us
-        |FROM ch ORDER BY user_id, valid_from_us, event_id""".stripMargin,
-    "q70_bloom_join" ->
+        |FROM ch ORDER BY user_id, valid_from_us, event_id""".stripMargin)),
+    Declared("q70_bloom_join", q70BloomJoin, Some(
       """SELECT p_brand, count(*) AS n_lines,
         |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
         |         AS sum_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE p_size <= 5
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q71_zscore_outliers" ->
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
+    Declared("q71_zscore_outliers", q71ZscoreOutliers, Some(
       """WITH ev AS (
         |  SELECT event_id, event_type, CAST(value AS DECIMAL(18,6)) AS vdec
         |  FROM events),
@@ -736,8 +715,8 @@ object Extended2 {
         |       (CAST(vdec AS DOUBLE) - mean_d) / sd AS z
         |FROM ev JOIN s ON ev.event_type = s.et
         |WHERE abs((CAST(vdec AS DOUBLE) - mean_d) / sd) > 2.0
-        |ORDER BY event_id""".stripMargin,
-    "q72_md5_sample" ->
+        |ORDER BY event_id""".stripMargin)),
+    Declared("q72_md5_sample", q72Md5Sample, Some(
       """SELECT c_mktsegment, rnk, c_custkey, c_name, h FROM (
         |  SELECT c_mktsegment, c_custkey, c_name,
         |         md5(CAST(c_custkey AS VARCHAR)) AS h,
@@ -745,8 +724,8 @@ object Extended2 {
         |                            ORDER BY md5(CAST(c_custkey AS VARCHAR)),
         |                                     c_custkey) AS rnk
         |  FROM customer)
-        |WHERE rnk <= 2 ORDER BY c_mktsegment, rnk""".stripMargin,
-    "q73_bigram_lm" ->
+        |WHERE rnk <= 2 ORDER BY c_mktsegment, rnk""".stripMargin)),
+    Declared("q73_bigram_lm", q73BigramLm, Some(
       """WITH t AS (
         |  SELECT regexp_extract_all(lower(text), '[a-z]+') AS l FROM documents),
         |b AS (
@@ -756,5 +735,5 @@ object Extended2 {
         |       CAST(cnt AS DOUBLE) / w1_total AS p_cond
         |FROM (SELECT w1, w2, cnt,
         |             sum(cnt) OVER (PARTITION BY w1) AS w1_total FROM c)
-        |ORDER BY cnt DESC, w1, w2 LIMIT 20""".stripMargin)
+        |ORDER BY cnt DESC, w1, w2 LIMIT 20""".stripMargin)))
 }

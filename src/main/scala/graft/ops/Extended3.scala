@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -658,43 +658,15 @@ object Extended3 {
       .cachedOrderBy("vec_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q87_null_aware_anti" -> (q87NullAwareAnti _),
-    "q88_chunk_docs" -> (q88ChunkDocs _),
-    "q89_decontaminate" -> (q89Decontaminate _),
-    "q90_lateral_topk" -> (q90LateralTopk _),
-    "q91_setops_all" -> (q91SetopsAll _),
-    "q92_upsample_mix" -> (q92UpsampleMix _),
-    "q93_repetition" -> (q93Repetition _),
-    "q94_train_split" -> (q94TrainSplit _),
-    "q95_retention" -> (q95Retention _),
-    "q96_time_weighted_avg" -> (q96TimeWeightedAvg _),
-    "q97_recursive_cte" -> (q97RecursiveCte _),
-    "q98_variant_json" -> (q98VariantJson _),
-    "q99_decontaminate_ngram" -> (q99DecontaminateNgram _),
-    "q101_tpch_q13" -> (q101TpchQ13 _),
-    "q102_tpch_q16" -> (q102TpchQ16 _),
-    "q103_tpch_q18" -> (q103TpchQ18 _),
-    "q104_tpch_q15" -> (q104TpchQ15 _),
-    "q105_tpch_q22" -> (q105TpchQ22 _),
-    "q106_tpch_q4" -> (q106TpchQ4 _),
-    "q107_tpch_q7" -> (q107TpchQ7 _),
-    "q109_tpch_q6" -> (q109TpchQ6 _),
-    "q110_tpch_q14" -> (q110TpchQ14 _),
-    "q111_prompt_completion" -> (q111PromptCompletion _),
-    "q112_share_of_total" -> (q112ShareOfTotal _),
-    "q113_yoy_growth" -> (q113YoyGrowth _),
-    "q114_int8_quantize" -> (q114Int8Quantize _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q87_null_aware_anti" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q87_null_aware_anti", q87NullAwareAnti, Some(
       """SELECT o_orderkey, o_custkey
         |FROM orders
         |WHERE nullif(o_custkey % 50, 7) NOT IN
         |  (SELECT c_custkey % 50 FROM customer
         |   WHERE c_custkey % 50 BETWEEN 25 AND 40)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q88_chunk_docs" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Declared("q88_chunk_docs", q88ChunkDocs, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -707,8 +679,8 @@ object Extended3 {
         |       len(list_slice(toks, start + 1, start + 64)) AS n_chunk_tokens,
         |       array_to_string(list_slice(toks, start + 1, start + 64), ' ')
         |         AS chunk_text
-        |FROM c ORDER BY doc_id, start""".stripMargin,
-    "q89_decontaminate" ->
+        |FROM c ORDER BY doc_id, start""".stripMargin)),
+    Declared("q89_decontaminate", q89Decontaminate, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -723,8 +695,8 @@ object Extended3 {
         |  FROM norm WHERE doc_id % 97 = 0 AND nt >= 8)
         |SELECT d.doc_id, count(DISTINCT p.phrase) AS n_hits
         |FROM norm d JOIN phrases p ON contains(d.norm, p.phrase)
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-    "q90_lateral_topk" ->
+        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+    Declared("q90_lateral_topk", q90LateralTopk, Some(
       """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer c,
         |LATERAL (SELECT o_orderkey, o_totalprice
@@ -732,8 +704,8 @@ object Extended3 {
         |         WHERE o.o_custkey = c.c_custkey
         |         ORDER BY o_totalprice DESC, o_orderkey
         |         LIMIT 2) t
-        |ORDER BY c.c_custkey, t.o_orderkey""".stripMargin,
-    "q91_setops_all" ->
+        |ORDER BY c.c_custkey, t.o_orderkey""".stripMargin)),
+    Declared("q91_setops_all", q91SetopsAll, Some(
       """WITH a AS (
         |  SELECT o_orderpriority AS p FROM orders
         |  JOIN customer ON o_custkey = c_custkey
@@ -750,8 +722,8 @@ object Extended3 {
         |       GROUP BY 2)
         |SELECT op, p, n FROM ia
         |UNION ALL SELECT op, p, n FROM ea
-        |ORDER BY op, p""".stripMargin,
-    "q92_upsample_mix" ->
+        |ORDER BY op, p""".stripMargin)),
+    Declared("q92_upsample_mix", q92UpsampleMix, Some(
       """WITH f AS (
         |  SELECT doc_id, source,
         |         1 + (CAST(substr(source, 4) AS INT) % 3) AS factor
@@ -760,8 +732,8 @@ object Extended3 {
         |             unnest(generate_series(1, factor)) AS copy_idx FROM f)
         |SELECT source, factor, count(DISTINCT doc_id) AS n_docs,
         |       count(*) AS n_after
-        |FROM x GROUP BY source, factor ORDER BY source""".stripMargin,
-    "q93_repetition" ->
+        |FROM x GROUP BY source, factor ORDER BY source""".stripMargin)),
+    Declared("q93_repetition", q93Repetition, Some(
       """WITH t AS (
         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS l
         |  FROM documents),
@@ -774,8 +746,8 @@ object Extended3 {
         |       len(list_distinct(grams)) AS n_distinct,
         |       CAST(len(list_distinct(grams)) AS DOUBLE)
         |         / CAST(n - 2 AS DOUBLE) AS distinct_ratio
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "q94_train_split" ->
+        |FROM g ORDER BY doc_id""".stripMargin)),
+    Declared("q94_train_split", q94TrainSplit, Some(
       """SELECT source,
         |       CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < 'cccd'
         |              THEN 'train'
@@ -784,16 +756,16 @@ object Extended3 {
         |            ELSE 'test' END AS split,
         |       count(*) AS n_docs
         |FROM documents
-        |GROUP BY source, split ORDER BY source, split""".stripMargin,
-    "q95_retention" ->
+        |GROUP BY source, split ORDER BY source, split""".stripMargin)),
+    Declared("q95_retention", q95Retention, Some(
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
         |cohort AS (SELECT user_id, min(d) AS c FROM ev GROUP BY 1)
         |SELECT strftime(c, '%Y-%m-%d') AS cohort_day,
         |       CAST(date_diff('day', c, d) AS INT) AS offset_days,
         |       count(DISTINCT user_id) AS n_users
         |FROM ev JOIN cohort USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q96_time_weighted_avg" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Declared("q96_time_weighted_avg", q96TimeWeightedAvg, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us,
         |         CAST(value AS DECIMAL(18,6)) AS vdec
@@ -810,8 +782,8 @@ object Extended3 {
         |            AS DOUBLE)
         |         / CAST(sum(dur_s) AS DOUBLE) AS twa
         |FROM d WHERE dur_s IS NOT NULL AND dur_s > 0
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q97_recursive_cte" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Declared("q97_recursive_cte", q97RecursiveCte, Some(
       """WITH RECURSIVE walk(id, cur, depth) AS (
         |  SELECT CAST(n_nationkey AS BIGINT), CAST(n_nationkey AS BIGINT),
         |         CAST(0 AS BIGINT)
@@ -819,16 +791,16 @@ object Extended3 {
         |  UNION ALL
         |  SELECT id, (cur - 1) // 2, depth + 1 FROM walk WHERE cur > 0)
         |SELECT id, CAST(max(depth) AS BIGINT) AS depth
-        |FROM walk GROUP BY id ORDER BY id""".stripMargin,
-    "q98_variant_json" ->
+        |FROM walk GROUP BY id ORDER BY id""".stripMargin)),
+    Declared("q98_variant_json", q98VariantJson, Some(
       """SELECT event_type, count(*) AS n,
         |       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
         |            AS BIGINT) AS sum_k,
         |       count(CASE WHEN CAST(json_extract_string(props, '$.k')
         |                            AS BIGINT) > 50 THEN 1 END) AS n_big
         |FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q99_decontaminate_ngram" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Declared("q99_decontaminate_ngram", q99DecontaminateNgram, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -844,16 +816,16 @@ object Extended3 {
         |bg AS (SELECT DISTINCT g FROM dg WHERE doc_id % 97 = 0)
         |SELECT d.doc_id, count(DISTINCT d.g) AS n_hits
         |FROM dg d JOIN bg USING (g)
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-    "q101_tpch_q13" ->
+        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+    Declared("q101_tpch_q13", q101TpchQ13, Some(
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT OUTER JOIN orders
         |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey)
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q102_tpch_q16" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    Declared("q102_tpch_q16", q102TpchQ16, Some(
       """SELECT p_brand, p_type, p_size,
         |       count(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem JOIN part ON p_partkey = l_partkey
@@ -861,8 +833,8 @@ object Extended3 {
         |  AND l_suppkey NOT IN
         |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "q103_tpch_q18" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
+    Declared("q103_tpch_q18", q103TpchQ18, Some(
       """WITH big AS (
         |  SELECT l_orderkey, sum(CAST(l_quantity AS DECIMAL(18,2))) AS qty
         |  FROM lineitem GROUP BY l_orderkey
@@ -872,8 +844,8 @@ object Extended3 {
         |FROM orders
         |JOIN big ON o_orderkey = l_orderkey
         |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey""".stripMargin,
-    "q104_tpch_q15" ->
+        |ORDER BY total_qty DESC, o_orderkey""".stripMargin)),
+    Declared("q104_tpch_q15", q104TpchQ15, Some(
       """WITH rev AS (
         |  SELECT l_suppkey,
         |         sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -885,8 +857,8 @@ object Extended3 {
         |       CAST(round(revenue, 4) AS DOUBLE) AS total_revenue
         |FROM rev JOIN supplier ON l_suppkey = s_suppkey
         |WHERE revenue = (SELECT max(revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q105_tpch_q22" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    Declared("q105_tpch_q22", q105TpchQ22, Some(
       """WITH stats AS (
         |  SELECT sum(CAST(c_acctbal AS DECIMAL(18,2))) AS s,
         |         count(*) AS n
@@ -897,8 +869,8 @@ object Extended3 {
         |  AND NOT EXISTS (SELECT 1 FROM orders
         |                  WHERE o_custkey = c_custkey
         |                    AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "q106_tpch_q4" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Declared("q106_tpch_q4", q106TpchQ4, Some(
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE EXISTS (
@@ -906,8 +878,8 @@ object Extended3 {
         |  WHERE l_orderkey = o_orderkey
         |    AND CAST(l_shipdate AS DATE) > CAST(o_orderdate AS DATE))
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q107_tpch_q7" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Declared("q107_tpch_q7", q107TpchQ7, Some(
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |       CAST(year(l_shipdate) AS INT) AS l_year,
         |       CAST(round(sum(CAST(
@@ -923,8 +895,8 @@ object Extended3 {
         |JOIN nation n2 ON c_nationkey = n2.n_nationkey
         |WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
         |   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q109_tpch_q6" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Declared("q109_tpch_q6", q109TpchQ6, Some(
       """SELECT CAST(round(sum(CAST(
         |         CAST(l_extendedprice AS DECIMAL(18,2)) *
         |         CAST(l_discount AS DECIMAL(18,2)) AS DECIMAL(38,4))), 4)
@@ -934,8 +906,8 @@ object Extended3 {
         |WHERE l_quantity < 24
         |  AND CAST(l_discount AS DECIMAL(18,2))
         |      BETWEEN CAST(0.05 AS DECIMAL(18,2))
-        |          AND CAST(0.07 AS DECIMAL(18,2))""".stripMargin,
-    "q110_tpch_q14" ->
+        |          AND CAST(0.07 AS DECIMAL(18,2))""".stripMargin)),
+    Declared("q110_tpch_q14", q110TpchQ14, Some(
       """WITH j AS (
         |  SELECT p_type,
         |         CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -951,8 +923,8 @@ object Extended3 {
         |  FROM j)
         |SELECT promo_revenue, total_revenue,
         |       promo_revenue * 100.0 / total_revenue AS promo_pct
-        |FROM s""".stripMargin,
-    "q111_prompt_completion" ->
+        |FROM s""".stripMargin)),
+    Declared("q111_prompt_completion", q111PromptCompletion, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -964,8 +936,8 @@ object Extended3 {
         |       array_to_string(list_slice(l, 33, 128), ' ') AS completion,
         |       CAST(32 AS BIGINT) AS n_prompt_tokens,
         |       least(n - 32, 96) AS n_completion_tokens
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q112_share_of_total" ->
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    Declared("q112_share_of_total", q112ShareOfTotal, Some(
       """WITH a AS (
         |  SELECT c_nationkey AS nationkey,
         |         sum(CAST(c_acctbal AS DECIMAL(18,2))) AS bal
@@ -974,8 +946,8 @@ object Extended3 {
         |SELECT nationkey, CAST(round(bal, 4) AS DOUBLE) AS balance,
         |       CAST(round(bal, 4) AS DOUBLE) * 100.0
         |         / CAST(round(total, 4) AS DOUBLE) AS share_pct
-        |FROM a, t ORDER BY nationkey""".stripMargin,
-    "q113_yoy_growth" ->
+        |FROM a, t ORDER BY nationkey""".stripMargin)),
+    Declared("q113_yoy_growth", q113YoyGrowth, Some(
       """WITH a AS (
         |  SELECT CAST(year(o_orderdate) AS INT) AS yr,
         |         sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
@@ -987,8 +959,8 @@ object Extended3 {
         |          - CAST(round(prev, 4) AS DOUBLE)) * 100.0
         |           / CAST(round(prev, 4) AS DOUBLE)
         |       END AS yoy_pct
-        |FROM b ORDER BY yr""".stripMargin,
-    "q114_int8_quantize" ->
+        |FROM b ORDER BY yr""".stripMargin)),
+    Declared("q114_int8_quantize", q114Int8Quantize, Some(
       """WITH e AS (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e0
         |  FROM embeddings),
@@ -1006,5 +978,5 @@ object Extended3 {
         |       CAST(len(list_distinct(codes)) AS BIGINT)
         |         AS n_distinct_codes,
         |       round(lo, 6) AS qmin, round(hi, 6) AS qmax
-        |FROM c ORDER BY vec_id""".stripMargin)
+        |FROM c ORDER BY vec_id""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -549,19 +549,8 @@ object Extended4 {
       .orderBy("shard", "pos")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q129_epoch_shuffle" -> (q129EpochShuffle _),
-    "q126_source_cap" -> (q126SourceCap _),
-    "q127_oov_score" -> (q127OovScore _),
-    "q128_dup_gram_rate" -> (q128DupGramRate _),
-    "q121_mad_outliers" -> (q121MadOutliers _),
-    "q122_pps_sample" -> (q122PpsSample _),
-    "q123_regr_trend" -> (q123RegrTrend _),
-    "q124_equidepth_hist" -> (q124EquidepthHist _),
-    "q125_set_sim_join" -> (q125SetSimJoin _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q129_epoch_shuffle" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q129_epoch_shuffle", q129EpochShuffle, Some(
       """WITH d AS (
         |  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
         |  FROM documents)
@@ -569,16 +558,16 @@ object Extended4 {
         |       row_number() OVER (PARTITION BY substr(h, 1, 1)
         |                          ORDER BY h, doc_id) AS pos,
         |       doc_id
-        |FROM d ORDER BY shard, pos""".stripMargin,
-    "q126_source_cap" ->
+        |FROM d ORDER BY shard, pos""".stripMargin)),
+    Declared("q126_source_cap", q126SourceCap, Some(
       """SELECT source, rnk, doc_id FROM (
         |  SELECT source, doc_id,
         |         row_number() OVER (PARTITION BY source
         |           ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 12),
         |                    doc_id) AS rnk
         |  FROM documents)
-        |WHERE rnk <= 10 ORDER BY source, rnk""".stripMargin,
-    "q127_oov_score" ->
+        |WHERE rnk <= 10 ORDER BY source, rnk""".stripMargin)),
+    Declared("q127_oov_score", q127OovScore, Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(list_filter(
         |    string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS tok
@@ -592,8 +581,8 @@ object Extended4 {
         |  round(CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
         |        / count(*), 6) AS oov_rate
         |FROM toks t LEFT JOIN vocab v USING (tok)
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    "q128_dup_gram_rate" ->
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin)),
+    Declared("q128_dup_gram_rate", q128DupGramRate, Some(
       """WITH gr AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    list_transform(generate_series(1, len(t) - 2),
@@ -611,8 +600,8 @@ object Extended4 {
         |  round(CAST(sum(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
         |        / count(*), 6) AS dup_rate
         |FROM gr JOIN df USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q121_mad_outliers" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Declared("q121_mad_outliers", q121MadOutliers, Some(
       """WITH li AS (
         |  SELECT p_brand, l_orderkey, l_linenumber, l_extendedprice
         |  FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -626,8 +615,8 @@ object Extended4 {
         |SELECT li.p_brand, l_orderkey, l_linenumber, l_extendedprice
         |FROM li JOIN mad USING (p_brand)
         |WHERE abs(l_extendedprice - med) > mad * 2.0
-        |ORDER BY p_brand, l_orderkey, l_linenumber""".stripMargin,
-    "q122_pps_sample" ->
+        |ORDER BY p_brand, l_orderkey, l_linenumber""".stripMargin)),
+    Declared("q122_pps_sample", q122PpsSample, Some(
       """WITH d AS (
         |  SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
         |         sum(CAST(n_chars AS BIGINT))
@@ -639,8 +628,8 @@ object Extended4 {
         |       CAST(cum_w // stride - (cum_w - w) // stride AS BIGINT) AS n_hits
         |FROM d, s
         |WHERE cum_w // stride - (cum_w - w) // stride > 0
-        |ORDER BY doc_id""".stripMargin,
-    "q123_regr_trend" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Declared("q123_regr_trend", q123RegrTrend, Some(
       """WITH o AS (
         |  SELECT o_orderpriority,
         |         CAST(year(o_orderdate) * 12 + month(o_orderdate)
@@ -653,8 +642,8 @@ object Extended4 {
         |         - sum(x) * sum(y) AS DOUBLE) /
         |    CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS DOUBLE),
         |  6) AS slope
-        |FROM o GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q124_equidepth_hist" ->
+        |FROM o GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Declared("q124_equidepth_hist", q124EquidepthHist, Some(
       """SELECT o_orderpriority, CAST(decile AS INT) AS decile,
         |       CAST(count(*) AS BIGINT) AS n,
         |       min(o_totalprice) AS lo, max(o_totalprice) AS hi
@@ -663,8 +652,8 @@ object Extended4 {
         |         ntile(10) OVER (PARTITION BY o_orderpriority
         |                         ORDER BY o_totalprice, o_orderkey) AS decile
         |  FROM orders)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q125_set_sim_join" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Declared("q125_set_sim_join", q125SetSimJoin, Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -688,5 +677,5 @@ object Extended4 {
         |WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
         |      (len(a.grams) + len(b.grams)
         |       - len(list_intersect(a.grams, b.grams))) >= 0.6
-        |ORDER BY a_id, b_id""".stripMargin)
+        |ORDER BY a_id, b_id""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -284,18 +284,8 @@ object Extended5 {
       .orderBy("q_id", "rnk")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q130_funnel" -> (q130Funnel _),
-    "q131_rolling_revenue" -> (q131RollingRevenue _),
-    "q132_ks_drift" -> (q132KsDrift _),
-    "q133_char_gini" -> (q133CharGini _),
-    "q134_fuzzy_join" -> (q134FuzzyJoin _),
-    "q135_length_batches" -> (q135LengthBatches _),
-    "q136_stratified_sample" -> (q136StratifiedSample _),
-    "q137_knn_graph" -> (q137KnnGraph _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q130_funnel" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q130_funnel", q130Funnel, Some(
       """WITH t1 AS (
         |  SELECT user_id, min(ts) AS t1 FROM events
         |  WHERE event_type = 'view' GROUP BY 1),
@@ -311,15 +301,15 @@ object Extended5 {
         |       (SELECT count(*) FROM t1) AS n_users
         |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM t2)
         |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM t3)
-        |ORDER BY stage_idx""".stripMargin,
-    "q131_rolling_revenue" ->
+        |ORDER BY stage_idx""".stripMargin)),
+    Declared("q131_rolling_revenue", q131RollingRevenue, Some(
       """SELECT o_orderkey, o_custkey, epoch_us(o_orderdate) AS d_us,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
         |    PARTITION BY o_custkey ORDER BY epoch_us(o_orderdate)
         |    RANGE BETWEEN 2505600000000 PRECEDING AND CURRENT ROW)
         |  AS DOUBLE) AS roll30
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q132_ks_drift" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Declared("q132_ks_drift", q132KsDrift, Some(
       """WITH d AS (SELECT source, n_chars FROM documents),
         |tot AS (SELECT source, count(*) AS n_s FROM d GROUP BY 1),
         |cnt AS (SELECT source, n_chars, count(*) AS c FROM d GROUP BY 1, 2),
@@ -339,8 +329,8 @@ object Extended5 {
         |                     - CAST(cum_all AS HUGEINT) * n_s)) AS DOUBLE)
         |        / (CAST(n_s AS DOUBLE) * CAST(n_all AS DOUBLE)), 6) AS ks
         |FROM cum, na GROUP BY source, n_s, n_all
-        |ORDER BY source""".stripMargin,
-    "q133_char_gini" -> {
+        |ORDER BY source""".stripMargin)),
+    Declared("q133_char_gini", q133CharGini, Some({
       val sumSq = ('a' to 'z')
         .map { c =>
           val cnt = s"CAST(length(t) - length(replace(t, '$c', '')) AS BIGINT)"
@@ -359,8 +349,8 @@ object Extended5 {
          |        / (CAST(n_letters AS DOUBLE) * CAST(n_letters AS DOUBLE)),
          |        6) AS gini
          |FROM s ORDER BY doc_id""".stripMargin
-    },
-    "q134_fuzzy_join" ->
+    })),
+    Declared("q134_fuzzy_join", q134FuzzyJoin, Some(
       """WITH nm AS (
         |  SELECT min(p_partkey) AS id, p_name AS name FROM part
         |  GROUP BY p_name),
@@ -377,8 +367,8 @@ object Extended5 {
         | AND a.id < b.id
         | AND abs(length(a.name) - length(b.name)) <= 2
         | AND levenshtein(a.name, b.name) <= 2
-        |ORDER BY a_id, b_id""".stripMargin,
-    "q135_length_batches" ->
+        |ORDER BY a_id, b_id""".stripMargin)),
+    Declared("q135_length_batches", q135LengthBatches, Some(
       """WITH d AS (
         |  SELECT doc_id,
         |         CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
@@ -395,8 +385,8 @@ object Extended5 {
         |       count(*) AS n_docs,
         |       CAST(sum(n_tokens) AS BIGINT) AS batch_tokens,
         |       min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens
-        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q136_stratified_sample" ->
+        |FROM b GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Declared("q136_stratified_sample", q136StratifiedSample, Some(
       """SELECT doc_id, lang, CAST(rnk AS INT) AS rnk FROM (
         |  SELECT doc_id, lang,
         |    count(*) OVER (PARTITION BY lang) AS n_lang,
@@ -404,8 +394,8 @@ object Extended5 {
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rnk
         |  FROM documents)
         |WHERE rnk <= (n_lang + 4) // 5
-        |ORDER BY lang, rnk""".stripMargin,
-    "q137_knn_graph" ->
+        |ORDER BY lang, rnk""".stripMargin)),
+    Declared("q137_knn_graph", q137KnnGraph, Some(
       """WITH e AS (
         |  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
         |         generate_subscripts(embedding, 1) AS pos
@@ -422,5 +412,5 @@ object Extended5 {
         |           ORDER BY dp / (sqrt(na) * sqrt(nb)) DESC, vec_id) AS rnk
         |  FROM d)
         |SELECT q_id, n_id, round(cs, 6) AS cos_sim, CAST(rnk AS INT) AS rnk
-        |FROM r WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin)
+        |FROM r WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -346,19 +346,8 @@ object Extended6 {
         .as("z"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q138_hapax_rate" -> (q138HapaxRate _),
-    "q139_gram_novelty" -> (q139GramNovelty _),
-    "q140_decay_score" -> (q140DecayScore _),
-    "q141_weighted_median" -> (q141WeightedMedian _),
-    "q142_bigram_lift" -> (q142BigramLift _),
-    "q143_vocab_overlap" -> (q143VocabOverlap _),
-    "q144_winsorized_mean" -> (q144WinsorizedMean _),
-    "q145_curriculum_stages" -> (q145CurriculumStages _),
-    "q146_ab_test" -> (q146AbTest _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q138_hapax_rate" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q138_hapax_rate", q138HapaxRate, Some(
       """WITH wd AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    list_filter(string_split_regex(lower(text), '[^a-z]+'),
@@ -371,8 +360,8 @@ object Extended6 {
         |  round(CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS DOUBLE)
         |        / count(*), 6) AS hapax_rate
         |FROM wd JOIN df USING (w)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q139_gram_novelty" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Declared("q139_gram_novelty", q139GramNovelty, Some(
       """WITH gr AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    list_transform(generate_series(1, len(t) - 2),
@@ -390,8 +379,8 @@ object Extended6 {
         |  round(CAST(sum(CASE WHEN first_seen = doc_id THEN 1 ELSE 0 END)
         |    AS DOUBLE) / count(*), 6) AS novelty
         |FROM gr JOIN fs USING (g)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q140_decay_score" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Declared("q140_decay_score", q140DecayScore, Some(
       """WITH e AS (
         |  SELECT user_id, CAST(value AS DECIMAL(18,6)) AS v,
         |    256 // (1 << least(
@@ -400,8 +389,8 @@ object Extended6 {
         |  FROM events)
         |SELECT user_id, count(*) AS n_events,
         |  round(CAST(sum(v * wt) AS DOUBLE) / 256.0, 6) AS decay_score
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q141_weighted_median" ->
+        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Declared("q141_weighted_median", q141WeightedMedian, Some(
       """WITH r AS (
         |  SELECT l_returnflag, l_extendedprice,
         |    sum(CAST(l_quantity AS DECIMAL(12,2))) OVER (
@@ -413,8 +402,8 @@ object Extended6 {
         |SELECT l_returnflag, CAST(min(tw) AS DOUBLE) AS total_qty,
         |       min(l_extendedprice) AS w_median
         |FROM r WHERE cw * 2 >= tw
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q142_bigram_lift" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Declared("q142_bigram_lift", q142BigramLift, Some(
       """WITH t AS (
         |  SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
         |                     x -> x <> '') AS t
@@ -439,8 +428,8 @@ object Extended6 {
         |FROM bi, nu, nb
         |JOIN uni x ON x.w = bi.w1
         |JOIN uni y ON y.w = bi.w2
-        |ORDER BY w1, w2""".stripMargin,
-    "q143_vocab_overlap" ->
+        |ORDER BY w1, w2""".stripMargin)),
+    Declared("q143_vocab_overlap", q143VocabOverlap, Some(
       """WITH v AS (
         |  SELECT DISTINCT source, unnest(list_distinct(
         |    list_filter(string_split_regex(lower(text), '[^a-z]+'),
@@ -457,8 +446,8 @@ object Extended6 {
         |FROM it
         |JOIN sz sa ON sa.source = it.src_a
         |JOIN sz sb ON sb.source = it.src_b
-        |ORDER BY src_a, src_b""".stripMargin,
-    "q144_winsorized_mean" ->
+        |ORDER BY src_a, src_b""".stripMargin)),
+    Declared("q144_winsorized_mean", q144WinsorizedMean, Some(
       """WITH r AS (
         |  SELECT event_type, CAST(value AS DECIMAL(18,6)) AS v,
         |    row_number() OVER (PARTITION BY event_type
@@ -476,8 +465,8 @@ object Extended6 {
         |  round(CAST(sum(greatest(lo, least(hi, v))) AS DOUBLE)
         |        / count(*), 6) AS w_mean
         |FROM r JOIN b USING (event_type)
-        |GROUP BY r.event_type ORDER BY r.event_type""".stripMargin,
-    "q145_curriculum_stages" ->
+        |GROUP BY r.event_type ORDER BY r.event_type""".stripMargin)),
+    Declared("q145_curriculum_stages", q145CurriculumStages, Some(
       """WITH d AS (
         |  SELECT doc_id,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
@@ -492,8 +481,8 @@ object Extended6 {
         |  count(*) AS n_docs,
         |  min(n_tokens) AS min_tokens, max(n_tokens) AS max_tokens,
         |  round(CAST(sum(n_tokens) AS DOUBLE) / count(*), 6) AS avg_tokens
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q146_ab_test" ->
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Declared("q146_ab_test", q146AbTest, Some(
       """WITH v AS (
         |  SELECT user_id % 2 AS variant,
         |    count(DISTINCT user_id) AS users,
@@ -520,5 +509,5 @@ object Extended6 {
         |      * (1.0 - CAST(conv_a + conv_b AS DOUBLE)
         |                 / (users_a + users_b))
         |      * (1.0 / users_a + 1.0 / users_b)), 6) END AS z
-        |FROM o""".stripMargin)
+        |FROM o""".stripMargin)))
 }

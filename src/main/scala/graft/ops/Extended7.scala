@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -336,20 +336,8 @@ object Extended7 {
       .orderBy("column")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q154_canonical_dedup" -> (q154CanonicalDedup _),
-    "q155_snapshot_diff" -> (q155SnapshotDiff _),
-    "q156_salted_join" -> (q156SaltedJoin _),
-    "q157_column_profile" -> (q157ColumnProfile _),
-    "q147_session_transitions" -> (q147SessionTransitions _),
-    "q148_vocab_growth" -> (q148VocabGrowth _),
-    "q149_interevent_gaps" -> (q149InterEventGaps _),
-    "q150_rule_audit" -> (q150RuleAudit _),
-    "q151_quantile_normalize" -> (q151QuantileNormalize _),
-    "q152_copurchase_lift" -> (q152CopurchaseLift _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q154_canonical_dedup" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q154_canonical_dedup", q154CanonicalDedup, Some(
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
@@ -368,8 +356,8 @@ object Extended7 {
         |      ORDER BY len DESC, doc_id) AS rnk
         |  FROM k)
         |SELECT ckey, n_variants, doc_id AS kept_id, len AS kept_len
-        |FROM r WHERE rnk = 1 ORDER BY ckey""".stripMargin,
-    "q155_snapshot_diff" ->
+        |FROM r WHERE rnk = 1 ORDER BY ckey""".stripMargin)),
+    Declared("q155_snapshot_diff", q155SnapshotDiff, Some(
       """WITH v1 AS (
         |  SELECT doc_id, md5(text) AS h FROM documents),
         |v2 AS (
@@ -386,16 +374,16 @@ object Extended7 {
         |            ELSE 'unchanged' END AS status,
         |       count(*) AS n
         |FROM v1 FULL OUTER JOIN v2 USING (doc_id)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q156_salted_join" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Declared("q156_salted_join", q156SaltedJoin, Some(
       """SELECT n_name, count(*) AS n_lines,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
         |    AS revenue
         |FROM lineitem
         |JOIN supplier ON s_suppkey = l_suppkey
         |JOIN nation ON n_nationkey = s_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q157_column_profile" ->
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
+    Declared("q157_column_profile", q157ColumnProfile, Some(
       """WITH m AS (
         |  SELECT
         |    CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS k_nulls,
@@ -424,8 +412,8 @@ object Extended7 {
         |UNION ALL SELECT 'o_orderpriority', pr_nulls, pr_distinct, pr_min, pr_max FROM m
         |UNION ALL SELECT 'o_orderstatus', s_nulls, s_distinct, s_min, s_max FROM m
         |UNION ALL SELECT 'o_totalprice', p_nulls, p_distinct, p_min, p_max FROM m
-        |ORDER BY "column"""".stripMargin,
-    "q147_session_transitions" ->
+        |ORDER BY "column"""".stripMargin)),
+    Declared("q147_session_transitions", q147SessionTransitions, Some(
       """WITH t AS (
         |  SELECT lag(event_type) OVER (PARTITION BY user_id
         |           ORDER BY ts, event_id) AS from_type,
@@ -437,8 +425,8 @@ object Extended7 {
         |SELECT from_type, to_type, n,
         |  round(CAST(n AS DOUBLE) /
         |    sum(n) OVER (PARTITION BY from_type), 6) AS p
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-    "q148_vocab_growth" ->
+        |FROM c ORDER BY from_type, to_type""".stripMargin)),
+    Declared("q148_vocab_growth", q148VocabGrowth, Some(
       """WITH fs AS (
         |  SELECT g, min(doc_id) AS first_seen FROM (
         |    SELECT doc_id, unnest(list_distinct(
@@ -459,8 +447,8 @@ object Extended7 {
         |  CAST(sum(n_new) OVER (ORDER BY block
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS cum_vocab
-        |FROM b ORDER BY block""".stripMargin,
-    "q149_interevent_gaps" ->
+        |FROM b ORDER BY block""".stripMargin)),
+    Declared("q149_interevent_gaps", q149InterEventGaps, Some(
       """WITH g AS (
         |  SELECT event_type,
         |    (epoch_us(ts) - epoch_us(lag(ts) OVER (
@@ -470,8 +458,8 @@ object Extended7 {
         |SELECT event_type, CAST(length(bin(gap_s)) AS INT) AS bucket,
         |  count(*) AS n, min(gap_s) AS min_gap_s, max(gap_s) AS max_gap_s
         |FROM g WHERE gap_s IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q150_rule_audit" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Declared("q150_rule_audit", q150RuleAudit, Some(
       """WITH m AS (
         |  SELECT
         |    CAST(sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END)
@@ -489,8 +477,8 @@ object Extended7 {
         |UNION ALL SELECT 'r2_stuck_pending', r2 FROM m
         |UNION ALL SELECT 'r3_future_dated', r3 FROM m
         |UNION ALL SELECT 'r4_orphan_customer', r4 FROM m
-        |ORDER BY rule""".stripMargin,
-    "q151_quantile_normalize" ->
+        |ORDER BY rule""".stripMargin)),
+    Declared("q151_quantile_normalize", q151QuantileNormalize, Some(
       """SELECT event_id, event_type,
         |  round(CAST(rn - 1 AS DOUBLE) / (n - 1), 6) AS q_norm
         |FROM (
@@ -499,8 +487,8 @@ object Extended7 {
         |      ORDER BY CAST(value AS DECIMAL(18,6)), event_id) AS rn,
         |    count(*) OVER (PARTITION BY event_type) AS n
         |  FROM events)
-        |ORDER BY event_id""".stripMargin,
-    "q152_copurchase_lift" ->
+        |ORDER BY event_id""".stripMargin)),
+    Declared("q152_copurchase_lift", q152CopurchaseLift, Some(
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
         |  FROM lineitem),
@@ -516,5 +504,5 @@ object Extended7 {
         |FROM pr, no
         |JOIN pf x ON x.pk = pr.pa
         |JOIN pf y ON y.pk = pr.pb
-        |ORDER BY pa, pb""".stripMargin)
+        |ORDER BY pa, pb""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -352,18 +352,8 @@ object Extended8 {
       .orderBy("source", "rnk")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q166_temperature_sample" -> (q166TemperatureSample _),
-    "q165_inverted_index" -> (q165InvertedIndex _),
-    "q162_rolling_anomaly" -> (q162RollingAnomaly _),
-    "q163_langmix_drift" -> (q163LangmixDrift _),
-    "q158_poisson_bootstrap" -> (q158PoissonBootstrap _),
-    "q159_rolling_active_users" -> (q159RollingActiveUsers _),
-    "q160_capped_sessions" -> (q160CappedSessions _),
-    "q161_funnel_latency" -> (q161FunnelLatency _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q166_temperature_sample" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q166_temperature_sample", q166TemperatureSample, Some(
       """WITH w AS (
         |  SELECT source, count(*) AS n_s,
         |         CAST(floor(sqrt(count(*))) AS BIGINT) AS w
@@ -380,8 +370,8 @@ object Extended8 {
         |  FROM documents d JOIN b USING (source))
         |SELECT source, doc_id, CAST(rnk AS INT) AS rnk, budget
         |FROM r WHERE rnk <= budget
-        |ORDER BY source, rnk""".stripMargin,
-    "q165_inverted_index" ->
+        |ORDER BY source, rnk""".stripMargin)),
+    Declared("q165_inverted_index", q165InvertedIndex, Some(
       """WITH gr AS (
         |  SELECT DISTINCT doc_id, unnest(list_distinct(
         |    list_transform(generate_series(1, len(t) - 2),
@@ -396,8 +386,8 @@ object Extended8 {
         |       array_to_string(list_sort(list(doc_id)), ',') AS postings
         |FROM gr GROUP BY g
         |HAVING count(*) BETWEEN 2 AND 5
-        |ORDER BY g""".stripMargin,
-    "q162_rolling_anomaly" ->
+        |ORDER BY g""".stripMargin)),
+    Declared("q162_rolling_anomaly", q162RollingAnomaly, Some(
       """WITH e AS (
         |  SELECT event_id, event_type,
         |    CAST(value AS DECIMAL(12,2)) AS v, epoch_us(ts) AS us
@@ -413,8 +403,8 @@ object Extended8 {
         |FROM f
         |WHERE n >= 30 AND v * n - s1 > 0
         |  AND (v * n - s1) * (v * n - s1) > (n * s2 - s1 * s1) * 9
-        |ORDER BY event_id""".stripMargin,
-    "q163_langmix_drift" ->
+        |ORDER BY event_id""".stripMargin)),
+    Declared("q163_langmix_drift", q163LangmixDrift, Some(
       """WITH d AS (SELECT source, lang FROM documents),
         |sl AS (SELECT source, lang, count(*) AS c_sl FROM d GROUP BY 1, 2),
         |s AS (SELECT source, count(*) AS n_s FROM d GROUP BY 1),
@@ -430,8 +420,8 @@ object Extended8 {
         |                     - CAST(c_l AS HUGEINT) * n_s)) AS DOUBLE)
         |        / (CAST(n_s AS DOUBLE) * n_all * 2.0), 6) AS tv_dist
         |FROM ex, na GROUP BY source, n_s, n_all
-        |ORDER BY source""".stripMargin,
-    "q158_poisson_bootstrap" ->
+        |ORDER BY source""".stripMargin)),
+    Declared("q158_poisson_bootstrap", q158PoissonBootstrap, Some(
       """WITH e AS (
         |  SELECT b, CAST(o_totalprice AS DECIMAL(18,2)) AS v,
         |    CASE WHEN u < '5e2d58d8' THEN 0
@@ -445,8 +435,8 @@ object Extended8 {
         |    FROM orders CROSS JOIN (SELECT unnest(range(0, 20)) AS b)))
         |SELECT b, CAST(sum(w) AS BIGINT) AS n_eff,
         |  round(CAST(sum(v * w) AS DOUBLE) / sum(w), 6) AS boot_mean
-        |FROM e GROUP BY b ORDER BY b""".stripMargin,
-    "q159_rolling_active_users" ->
+        |FROM e GROUP BY b ORDER BY b""".stripMargin)),
+    Declared("q159_rolling_active_users", q159RollingActiveUsers, Some(
       """WITH act AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |days AS (SELECT DISTINCT day FROM act),
@@ -456,8 +446,8 @@ object Extended8 {
         |SELECT CAST(rday AS VARCHAR) AS rday,
         |       count(DISTINCT user_id) AS active_7d
         |FROM ex SEMI JOIN days ON ex.rday = days.day
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q160_capped_sessions" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Declared("q160_capped_sessions", q160CappedSessions, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
         |s AS (
@@ -478,8 +468,8 @@ object Extended8 {
         |SELECT user_id, CAST(gs AS BIGINT) AS gs, block,
         |  count(*) AS n_events,
         |  (max(us) - min(us)) // 1000000 AS duration_s
-        |FROM b GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q161_funnel_latency" ->
+        |FROM b GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Declared("q161_funnel_latency", q161FunnelLatency, Some(
       """WITH t1 AS (
         |  SELECT user_id, min(ts) AS t1 FROM events
         |  WHERE event_type = 'view' GROUP BY 1),
@@ -510,5 +500,5 @@ object Extended8 {
         |SELECT stage, min(n) AS n_users,
         |  min(CASE WHEN rnk = (n + 1) // 2 THEN lat_s END) AS p50_s,
         |  min(CASE WHEN rnk = (9 * n + 9) // 10 THEN lat_s END) AS p90_s
-        |FROM r GROUP BY stage ORDER BY stage""".stripMargin)
+        |FROM r GROUP BY stage ORDER BY stage""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -215,36 +215,8 @@ object Extended9 {
       .drop("__aes_key")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q167_path_analysis" -> (q167PathAnalysis _),
-    "q168_retrieval_eval" -> (q168RetrievalEval _),
-    "q169_mix_cells" -> (q169MixCells _),
-    "q174_segment_dedup" -> (q174SegmentDedup _),
-    "q182_weighted_sample" -> (q182WeightedSample _))
-
-  val oracleSql: Map[String, String] = Map(
-    // groups by seg_text where Spark groups by sha2(seg_text) — identical
-    // results by digest injectivity (the q24/q154 argument)
-    "q174_segment_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
-        |                     x -> x <> '') AS toks
-        |  FROM documents),
-        |s AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 1),
-        |seg AS (SELECT doc_id, unnest(range(0, n, 10)) AS start, toks FROM s),
-        |sx AS (SELECT doc_id, start,
-        |    array_to_string(list_slice(toks, start + 1, start + 10), ' ')
-        |      AS seg_text,
-        |    doc_id * 10000000 + start AS okey FROM seg),
-        |f AS (SELECT seg_text, min(okey) AS first_key
-        |  FROM sx GROUP BY seg_text),
-        |kept AS (SELECT sx.doc_id, sx.start, sx.seg_text
-        |  FROM sx JOIN f ON sx.seg_text = f.seg_text AND sx.okey = f.first_key)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |       string_agg(seg_text, ' ' ORDER BY start) AS text_kept
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q167_path_analysis" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q167_path_analysis", q167PathAnalysis, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
         |  FROM events),
@@ -267,8 +239,8 @@ object Extended9 {
         |SELECT e1, e2, e3, count(*) AS n
         |FROM t WHERE g1 = gs AND g2 = gs
         |GROUP BY 1, 2, 3
-        |ORDER BY n DESC, e1, e2, e3 LIMIT 20""".stripMargin,
-    "q168_retrieval_eval" ->
+        |ORDER BY n DESC, e1, e2, e3 LIMIT 20""".stripMargin)),
+    Declared("q168_retrieval_eval", q168RetrievalEval, Some(
       """WITH q AS (
         |  SELECT vec_id + 1000000 AS q_id,
         |    list_transform(CAST(embedding AS DOUBLE[]), x -> x * 1.01)
@@ -306,8 +278,8 @@ object Extended9 {
         |  round(CAST(sum(twin_rank) AS DOUBLE) / count(*), 6) AS mean_rank,
         |  min(CASE WHEN pos = (nq + 1) // 2 THEN twin_rank END)
         |    AS median_rank
-        |FROM p""".stripMargin,
-    "q169_mix_cells" ->
+        |FROM p""".stripMargin)),
+    Declared("q169_mix_cells", q169MixCells, Some(
       """WITH d AS (SELECT source, lang FROM documents),
         |sl AS (SELECT source, lang, count(*) AS c_sl FROM d GROUP BY 1, 2),
         |s AS (SELECT source, count(*) AS n_s FROM d GROUP BY 1),
@@ -324,5 +296,27 @@ object Extended9 {
         |    AS rep_ratio
         |FROM ex, na
         |WHERE CAST(c_sl AS HUGEINT) * n_all < CAST(n_s AS HUGEINT) * c_l
-        |ORDER BY source, lang""".stripMargin)
+        |ORDER BY source, lang""".stripMargin)),
+    // groups by seg_text where Spark groups by sha2(seg_text) — identical
+    // results by digest injectivity (the q24/q154 argument)
+    Declared("q174_segment_dedup", q174SegmentDedup, Some(
+      """WITH t AS (
+        |  SELECT doc_id,
+        |         list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
+        |                     x -> x <> '') AS toks
+        |  FROM documents),
+        |s AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 1),
+        |seg AS (SELECT doc_id, unnest(range(0, n, 10)) AS start, toks FROM s),
+        |sx AS (SELECT doc_id, start,
+        |    array_to_string(list_slice(toks, start + 1, start + 10), ' ')
+        |      AS seg_text,
+        |    doc_id * 10000000 + start AS okey FROM seg),
+        |f AS (SELECT seg_text, min(okey) AS first_key
+        |  FROM sx GROUP BY seg_text),
+        |kept AS (SELECT sx.doc_id, sx.start, sx.seg_text
+        |  FROM sx JOIN f ON sx.seg_text = f.seg_text AND sx.okey = f.first_key)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+        |       string_agg(seg_text, ' ' ORDER BY start) AS text_kept
+        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Declared("q182_weighted_sample", q182WeightedSample, None)) // float sketch: ln(u)/w keys
 }

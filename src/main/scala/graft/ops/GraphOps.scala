@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
@@ -292,16 +292,6 @@ object GraphOps {
       .agg(count(lit(1)).as("n_vertices"))
       .orderBy("degree")
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q63_correlated_subquery" -> (q63CorrelatedSubquery _),
-    "q64_connected_components" -> (q64ConnectedComponents _),
-    "q80_degree_dist" -> (q80DegreeDist _),
-    "q177_triangles" -> (q177Triangles _),
-    "q178_pagerank" -> (q178PageRank _),
-    "q179_kcore" -> (q179KCore _),
-    "q180_assortativity" -> (q180Assortativity _),
-    "q181_label_prop" -> (q181LabelProp _))
 
   // --------------------------------------------------------------- q181
   /** q181 — label-propagation communities over the burst graph (the
@@ -726,13 +716,81 @@ object GraphOps {
     (nVerts, nEdges, nTri)
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "q178_pagerank" -> q178OracleSql,
-    "q179_kcore" -> q179OracleSql,
-    "q181_label_prop" -> q181OracleSql,
+  val declared: Seq[Declared] = Seq(
+    Declared("q63_correlated_subquery", q63CorrelatedSubquery, Some(
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders o
+        |WHERE CAST(o_totalprice AS DECIMAL(18,2))
+        |      * (SELECT count(*) FROM orders o2
+        |         WHERE o2.o_custkey = o.o_custkey)
+        |    > (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
+        |       FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+        |ORDER BY o_orderkey""".stripMargin)),
+    Declared("q64_connected_components", q64ConnectedComponents, Some(
+      """WITH RECURSIVE ev AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        |edges AS (
+        |  SELECT a.event_id AS src, b.event_id AS dst
+        |  FROM ev a JOIN ev b USING (user_id)
+        |  WHERE a.event_id < b.event_id
+        |    AND b.us >= a.us AND b.us - a.us <= 300000000),
+        |und AS (
+        |  SELECT src, dst FROM edges
+        |  UNION SELECT dst, src FROM edges),
+        |reach AS (
+        |  SELECT event_id AS id, event_id AS r FROM ev
+        |  UNION
+        |  SELECT reach.id, und.dst AS r
+        |  FROM reach JOIN und ON reach.r = und.src),
+        |labels AS (
+        |  SELECT id, min(r) AS component_id FROM reach GROUP BY id),
+        |sizes AS (
+        |  SELECT component_id, count(*) AS component_size
+        |  FROM labels GROUP BY component_id)
+        |SELECT labels.id AS event_id, labels.component_id,
+        |       sizes.component_size
+        |FROM labels JOIN sizes USING (component_id)
+        |ORDER BY event_id""".stripMargin)),
+    Declared("q80_degree_dist", q80DegreeDist, Some(
+      """WITH ev AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        |edges AS (
+        |  SELECT a.event_id AS src, b.event_id AS dst
+        |  FROM ev a JOIN ev b USING (user_id)
+        |  WHERE a.event_id < b.event_id
+        |    AND b.us >= a.us AND b.us - a.us <= 300000000),
+        |und AS (
+        |  SELECT src, dst FROM edges
+        |  UNION ALL SELECT dst, src FROM edges),
+        |deg AS (
+        |  SELECT src AS event_id, count(*) AS degree FROM und GROUP BY 1)
+        |SELECT coalesce(deg.degree, 0) AS degree,
+        |       count(*) AS n_vertices
+        |FROM ev LEFT JOIN deg USING (event_id)
+        |GROUP BY 1 ORDER BY degree""".stripMargin)),
+    // plain id-canonical 3-way join — no orientation needed at sf; the
+    // engine path's degree-ordered wedge count is the same number
+    Declared("q177_triangles", q177Triangles, Some(
+      """WITH ev AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        |edges AS (
+        |  SELECT DISTINCT a.event_id AS src, b.event_id AS dst
+        |  FROM ev a JOIN ev b USING (user_id)
+        |  WHERE a.event_id < b.event_id
+        |    AND b.us >= a.us AND b.us - a.us <= 300000000),
+        |verts AS (SELECT DISTINCT id FROM
+        |  (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges)),
+        |tri AS (SELECT count(*) AS n FROM edges e1
+        |  JOIN edges e2 ON e2.src = e1.src AND e2.dst > e1.dst
+        |  JOIN edges e3 ON e3.src = e1.dst AND e3.dst = e2.dst)
+        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM verts) AS n_vertices,
+        |       (SELECT CAST(count(*) AS BIGINT) FROM edges) AS n_edges,
+        |       (SELECT CAST(n AS BIGINT) FROM tri) AS n_triangles""".stripMargin)),
+    Declared("q178_pagerank", q178PageRank, Some(q178OracleSql)),
+    Declared("q179_kcore", q179KCore, Some(q179OracleSql)),
     // identical double expression shape on both engines over exact
     // integer moments (see q180 doc)
-    "q180_assortativity" ->
+    Declared("q180_assortativity", q180Assortativity, Some(
       """WITH ev AS (
         |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
         |edges AS (
@@ -762,74 +820,6 @@ object GraphOps {
         |  FROM mo)
         |SELECT m AS n_edge_ends,
         |  round(CASE WHEN den <> 0 THEN num / den END, 6) AS assortativity
-        |FROM nd""".stripMargin,
-    "q63_correlated_subquery" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE CAST(o_totalprice AS DECIMAL(18,2))
-        |      * (SELECT count(*) FROM orders o2
-        |         WHERE o2.o_custkey = o.o_custkey)
-        |    > (SELECT sum(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-        |       FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    // plain id-canonical 3-way join — no orientation needed at sf; the
-    // engine path's degree-ordered wedge count is the same number
-    "q177_triangles" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |edges AS (
-        |  SELECT DISTINCT a.event_id AS src, b.event_id AS dst
-        |  FROM ev a JOIN ev b USING (user_id)
-        |  WHERE a.event_id < b.event_id
-        |    AND b.us >= a.us AND b.us - a.us <= 300000000),
-        |verts AS (SELECT DISTINCT id FROM
-        |  (SELECT src AS id FROM edges UNION ALL SELECT dst FROM edges)),
-        |tri AS (SELECT count(*) AS n FROM edges e1
-        |  JOIN edges e2 ON e2.src = e1.src AND e2.dst > e1.dst
-        |  JOIN edges e3 ON e3.src = e1.dst AND e3.dst = e2.dst)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM verts) AS n_vertices,
-        |       (SELECT CAST(count(*) AS BIGINT) FROM edges) AS n_edges,
-        |       (SELECT CAST(n AS BIGINT) FROM tri) AS n_triangles""".stripMargin,
-    "q64_connected_components" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |edges AS (
-        |  SELECT a.event_id AS src, b.event_id AS dst
-        |  FROM ev a JOIN ev b USING (user_id)
-        |  WHERE a.event_id < b.event_id
-        |    AND b.us >= a.us AND b.us - a.us <= 300000000),
-        |und AS (
-        |  SELECT src, dst FROM edges
-        |  UNION SELECT dst, src FROM edges),
-        |reach AS (
-        |  SELECT event_id AS id, event_id AS r FROM ev
-        |  UNION
-        |  SELECT reach.id, und.dst AS r
-        |  FROM reach JOIN und ON reach.r = und.src),
-        |labels AS (
-        |  SELECT id, min(r) AS component_id FROM reach GROUP BY id),
-        |sizes AS (
-        |  SELECT component_id, count(*) AS component_size
-        |  FROM labels GROUP BY component_id)
-        |SELECT labels.id AS event_id, labels.component_id,
-        |       sizes.component_size
-        |FROM labels JOIN sizes USING (component_id)
-        |ORDER BY event_id""".stripMargin,
-    "q80_degree_dist" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |edges AS (
-        |  SELECT a.event_id AS src, b.event_id AS dst
-        |  FROM ev a JOIN ev b USING (user_id)
-        |  WHERE a.event_id < b.event_id
-        |    AND b.us >= a.us AND b.us - a.us <= 300000000),
-        |und AS (
-        |  SELECT src, dst FROM edges
-        |  UNION ALL SELECT dst, src FROM edges),
-        |deg AS (
-        |  SELECT src AS event_id, count(*) AS degree FROM und GROUP BY 1)
-        |SELECT coalesce(deg.degree, 0) AS degree,
-        |       count(*) AS n_vertices
-        |FROM ev LEFT JOIN deg USING (event_id)
-        |GROUP BY 1 ORDER BY degree""".stripMargin)
+        |FROM nd""".stripMargin)),
+    Declared("q181_label_prop", q181LabelProp, Some(q181OracleSql)))
 }

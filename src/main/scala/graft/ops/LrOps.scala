@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Declared, Tables}
 
 /** Distributed logistic regression — the cheap supervised quality filter
   * of production corpus pipelines (CCNet/fastText shape: distill an
@@ -161,8 +161,6 @@ object LrOps {
       .toDF("n", "tp", "fp", "tn", "fn", "accuracy")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q176_lr_distill" -> (q176LrDistill _))
-
-  val oracleSql: Map[String, String] = Map.empty
+  val declared: Seq[Declared] = Seq(
+    Declared("q176_lr_distill", q176LrDistill, None)) // float fixpoint: gradient-descent weights
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -39,16 +39,13 @@ object MultimodalOps {
       (floor((col("meta.byte_len") % 16 + 1 + 3) / 4)).cast("int").as("n_sampled"))
       .cachedOrderBy("media_id")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q40_multimodal" -> (q40Multimodal _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q40_multimodal" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q40_multimodal", q40Multimodal, Some(
       """SELECT doc_id AS media_id,
         |  octet_length(encode(text)) AS byte_len,
         |  CAST(octet_length(encode(text)) % 512 + 128 AS INT) AS width,
         |  CAST(octet_length(encode(text)) * 7 % 512 + 128 AS INT) AS height,
         |  CAST(octet_length(encode(text)) % 16 + 1 AS INT) AS n_frames,
         |  CAST(floor((octet_length(encode(text)) % 16 + 1 + 3) / 4) AS INT) AS n_sampled
-        |FROM documents ORDER BY media_id""".stripMargin)
+        |FROM documents ORDER BY media_id""".stripMargin)))
 }

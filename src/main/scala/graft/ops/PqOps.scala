@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Declared
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
@@ -284,8 +285,6 @@ object PqOps {
     } finally emb.unpersist()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("q201_pq_adc" -> (q201PqAdc _))
-
-  val oracleSql: Map[String, String] = Map.empty
+  val declared: Seq[Declared] = Seq(
+    Declared("q201_pq_adc", q201PqAdc, None)) // k-means fixpoint: PQ codebooks
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -367,56 +367,34 @@ object Relational {
       .orderBy("o_custkey", "o_orderkey")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q10_filter" -> (q10Filter _),
-    "q11_join_inner" -> (q11JoinInner _),
-    "q12_join_broadcast" -> (q12JoinBroadcast _),
-    "q13_join_semi_anti" -> (q13JoinSemiAnti _),
-    "q14_join_range" -> (q14JoinRange _),
-    "q15_agg_tpch1" -> (q15AggTpch1 _),
-    "q16_rollup" -> (q16Rollup _),
-    "q17_approx_distinct" -> (q17ApproxDistinct _),
-    "q18_window_rank" -> (q18WindowRank _),
-    "q19_window_frame" -> (q19WindowFrame _),
-    "q20_topk" -> (q20TopK _),
-    "q21_setops" -> (q21SetOps _),
-    "q22_scalar_bundle" -> (q22ScalarBundle _),
-    "q23_map_funcs" -> (q23MapFuncs _),
-    "q31_pivot" -> (q31Pivot _),
-    "q32_percentiles" -> (q32Percentiles _),
-    "q33_asof_join" -> (q33AsofJoin _),
-    "q43_cube" -> (q43Cube _),
-    "q44_stringagg" -> (q44StringAgg _),
-    "q48_window_distribution" -> (q48WindowDistribution _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q10_filter" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q10_filter", q10Filter, Some(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem WHERE l_quantity > 30 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q11_join_inner" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Declared("q11_join_inner", q11JoinInner, Some(
       """SELECT o_orderkey, o_custkey, c_name, c_mktsegment, o_totalprice
         |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "q12_join_broadcast" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Declared("q12_join_broadcast", q12JoinBroadcast, Some(
       """SELECT l_orderkey, l_linenumber, p_name, p_brand, l_quantity
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q13_join_semi_anti" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Declared("q13_join_semi_anti", q13JoinSemiAnti, Some(
       """SELECT c_custkey, 'has_orders' AS tag FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         |UNION ALL
         |SELECT c_custkey, 'no_orders' AS tag FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q14_join_range" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Declared("q14_join_range", q14JoinRange, Some(
       """SELECT a.user_id AS user_id, a.event_id AS a_id, b.event_id AS b_id,
         |       epoch_us(b.ts) - epoch_us(a.ts) AS dt_us
         |FROM events a JOIN events b
         |  ON a.user_id = b.user_id AND a.event_id < b.event_id
         | AND abs(epoch_us(b.ts) - epoch_us(a.ts)) <= 3600000000
-        |ORDER BY a.user_id, a_id, b_id""".stripMargin,
-    "q15_agg_tpch1" ->
+        |ORDER BY a.user_id, a_id, b_id""".stripMargin)),
+    Declared("q15_agg_tpch1", q15AggTpch1, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -427,34 +405,35 @@ object Relational {
         |  count(*) AS count_order,
         |  count(DISTINCT l_suppkey) AS n_supp
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q16_rollup" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Declared("q16_rollup", q16Rollup, Some(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |       coalesce(o_orderpriority, 'ALL') AS priority,
         |       count(*) AS n_orders,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "q18_window_rank" ->
+        |ORDER BY status, priority""".stripMargin)),
+    Declared("q17_approx_distinct", q17ApproxDistinct, None), // approximate count (HLL)
+    Declared("q18_window_rank", q18WindowRank, Some(
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  row_number() OVER w AS rn, rank() OVER w AS rnk,
         |  dense_rank() OVER w AS drnk
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey
         |             ORDER BY o_totalprice DESC, o_orderkey)
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "q19_window_frame" ->
+        |ORDER BY o_custkey, rn""".stripMargin)),
+    Declared("q19_window_frame", q19WindowFrame, Some(
       """SELECT user_id, event_id,
         |  CAST(sum(CAST(value AS DECIMAL(18,6))) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS DOUBLE) AS moving_sum,
         |  lag(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_id,
         |  lead(event_id, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_id
-        |FROM events ORDER BY user_id, event_id""".stripMargin,
-    "q20_topk" ->
+        |FROM events ORDER BY user_id, event_id""".stripMargin)),
+    Declared("q20_topk", q20TopK, Some(
       """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey LIMIT 10""".stripMargin,
-    "q21_setops" ->
+        |ORDER BY c_acctbal DESC, c_custkey LIMIT 10""".stripMargin)),
+    Declared("q21_setops", q21SetOps, Some(
       """WITH f AS (SELECT DISTINCT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'),
         |     o AS (SELECT DISTINCT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'O')
         |SELECT custkey, 'union' AS op FROM (SELECT custkey FROM f UNION SELECT custkey FROM o)
@@ -462,8 +441,8 @@ object Relational {
         |SELECT custkey, 'intersect' AS op FROM (SELECT custkey FROM f INTERSECT SELECT custkey FROM o)
         |UNION ALL
         |SELECT custkey, 'except' AS op FROM (SELECT custkey FROM f EXCEPT SELECT custkey FROM o)
-        |ORDER BY op, custkey""".stripMargin,
-    "q22_scalar_bundle" ->
+        |ORDER BY op, custkey""".stripMargin)),
+    Declared("q22_scalar_bundle", q22ScalarBundle, Some(
       """SELECT doc_id,
         |  CAST(length(text) AS INT) AS len,
         |  upper(substring(text, 1, 8)) AS head_up,
@@ -473,19 +452,19 @@ object Relational {
         |  round(ln(n_chars + 1), 6) AS log_chars,
         |  round(sqrt(n_chars), 6) AS sqrt_chars,
         |  doc_id % 7 AS mod7
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q23_map_funcs" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Declared("q23_map_funcs", q23MapFuncs, Some(
       """SELECT event_id, event_type AS m_type,
         |  CAST(user_id AS VARCHAR) AS m_user, 2 AS m_size,
         |  'type,user' AS m_keys
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q31_pivot" ->
+        |FROM events ORDER BY event_id""".stripMargin)),
+    Declared("q31_pivot", q31Pivot, Some(
       """SELECT o_orderpriority AS priority,
         |  count(*) FILTER (WHERE o_orderstatus = 'F') AS n_f,
         |  count(*) FILTER (WHERE o_orderstatus = 'O') AS n_o,
         |  count(*) FILTER (WHERE o_orderstatus = 'P') AS n_p
-        |FROM orders GROUP BY o_orderpriority ORDER BY priority""".stripMargin,
-    "q32_percentiles" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY priority""".stripMargin)),
+    Declared("q32_percentiles", q32Percentiles, Some(
       """SELECT c_mktsegment,
         |  round(quantile_cont(c_acctbal, 0.25), 6) AS p25,
         |  round(quantile_cont(c_acctbal, 0.5), 6) AS p50,
@@ -493,8 +472,8 @@ object Relational {
         |  round(min(c_acctbal), 6) AS lo,
         |  round(max(c_acctbal), 6) AS hi,
         |  count(*) AS n
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q33_asof_join" ->
+        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Declared("q33_asof_join", q33AsofJoin, Some(
       """WITH c AS (SELECT user_id, ts, max(event_id) AS c_id
         |           FROM events WHERE event_type = 'click'
         |           GROUP BY user_id, ts),
@@ -504,15 +483,15 @@ object Relational {
         |       c.c_id, epoch_us(c.ts) AS c_ts_us
         |FROM p ASOF LEFT JOIN c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p_id""".stripMargin,
-    "q43_cube" ->
+        |ORDER BY p_id""".stripMargin)),
+    Declared("q43_cube", q43Cube, Some(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
         |       coalesce(o_orderpriority, 'ALL') AS priority,
         |       count(*) AS n_orders,
         |       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY status, priority""".stripMargin,
-    "q44_stringagg" ->
+        |ORDER BY status, priority""".stripMargin)),
+    Declared("q44_stringagg", q44StringAgg, Some(
       """WITH ranked AS (
         |  SELECT c_mktsegment, c_name,
         |    row_number() OVER (PARTITION BY c_mktsegment
@@ -520,8 +499,8 @@ object Relational {
         |  FROM customer)
         |SELECT c_mktsegment, string_agg(c_name, ',' ORDER BY rn) AS top5_names
         |FROM ranked WHERE rn <= 5
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q48_window_distribution" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Declared("q48_window_distribution", q48WindowDistribution, Some(
       """SELECT o_custkey, o_orderkey,
         |  round(percent_rank() OVER w, 6) AS pr,
         |  round(cume_dist() OVER w, 6) AS cd,
@@ -529,5 +508,5 @@ object Relational {
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey
         |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -376,10 +376,6 @@ object SemStoreOps {
     semDedupVsStore(batch, model, reps)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("q208_semdedup_incr" -> (q208SemDedupIncr _))
-
-  /** No oracle: cell boundaries are float k-means fixpoints (the
-    * q45/q108/q187/q200 precedent) — SemStoreSpec pins the laws. */
-  val oracleSql: Map[String, String] = Map.empty
+  val declared: Seq[Declared] = Seq(
+    Declared("q208_semdedup_incr", q208SemDedupIncr, None)) // k-means fixpoint: semantic cells
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -954,31 +954,11 @@ object Similarity {
        |FROM sp GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q25_near_dup" -> (q25NearDup _),
-    "q26_cosine_topk" -> (q26CosineTopK _),
-    "q38_ann_lsh" -> (q38AnnLsh _),
-    "q39_embed_near_dup" -> (q39EmbedNearDup _),
-    "q41_simhash" -> (q41SimHash _),
-    "q42_ngram_jaccard" -> (q42NgramJaccard _),
-    "q45_ann_ivf" -> (q45AnnIvf _),
-    "q153_incremental_dedup" -> (q153IncrementalDedup _),
-    "q164_dup_clusters" -> (q164DupClusters _),
-    "q175_source_overlap" -> (q175SourceOverlap _),
-    "q183_star_collapse" -> (q183StarCollapse _))
-
-  /** q25/q42 via the portable md5 MinHash family, q41 via the portable
-    * md5-bit-vote SimHash family; q38/q39/q45 stay rows-only (float
-    * sketches aren't SQL-portable), spec-pinned. */
-  val oracleSql: Map[String, String] = Map(
-    "q25_near_dup" -> q25OracleSql,
-    "q41_simhash" -> q41OracleSql,
-    "q175_source_overlap" -> q175OracleSql,
-    "q42_ngram_jaccard" -> q42OracleSql,
-    "q153_incremental_dedup" -> q153OracleSql,
-    "q164_dup_clusters" -> q164OracleSql,
-    "q183_star_collapse" -> q183OracleSql,
-    "q26_cosine_topk" ->
+  /** q25/q42's oracles use the portable md5 MinHash family, q41's the
+    * portable md5-bit-vote SimHash family. */
+  val declared: Seq[Declared] = Seq(
+    Declared("q25_near_dup", q25NearDup, Some(q25OracleSql)),
+    Declared("q26_cosine_topk", q26CosineTopK, Some(
       """WITH q AS (
         |  SELECT unnest(CAST(embedding AS DOUBLE[])) AS qv,
         |         generate_subscripts(embedding, 1) AS pos
@@ -992,5 +972,14 @@ object Similarity {
         |         sum(q.qv * q.qv) AS nb
         |  FROM s JOIN q USING (pos) GROUP BY s.vec_id)
         |SELECT vec_id, round(dp / (sqrt(na) * sqrt(nb)), 6) AS cos_sim
-        |FROM d ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin)
+        |FROM d ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin)),
+    Declared("q38_ann_lsh", q38AnnLsh, None), // float sketch: hyperplane sign bands
+    Declared("q39_embed_near_dup", q39EmbedNearDup, None), // float sketch: hyperplane sign bands
+    Declared("q41_simhash", q41SimHash, Some(q41OracleSql)),
+    Declared("q42_ngram_jaccard", q42NgramJaccard, Some(q42OracleSql)),
+    Declared("q45_ann_ivf", q45AnnIvf, None), // k-means fixpoint: IVF cells
+    Declared("q153_incremental_dedup", q153IncrementalDedup, Some(q153OracleSql)),
+    Declared("q164_dup_clusters", q164DupClusters, Some(q164OracleSql)),
+    Declared("q175_source_overlap", q175SourceOverlap, Some(q175OracleSql)),
+    Declared("q183_star_collapse", q183StarCollapse, Some(q183OracleSql)))
 }

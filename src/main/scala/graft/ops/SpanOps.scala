@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Declared, Tables}
 
 /** q202 — exact substring (span) deduplication: the Lee et al. 2022
   * "Deduplicating Training Data Makes Language Models Better"
@@ -371,49 +371,8 @@ object SpanOps {
     spanDedupKeepFirstVsStore(batch, store)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("q202_span_dedup" -> (q202SpanDedup _),
-      "q203_span_dedup_incr" -> (q203SpanDedupIncr _),
-      "q204_span_dedup_keepone" -> (q204SpanDedupKeepOne _),
-      "q205_span_dedup_keepone_incr" -> (q205SpanDedupKeepOneIncr _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q202_span_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |         list_filter(regexp_split_to_array(
-        |             lower(coalesce(text, '')), '[^a-z]+'),
-        |                     x -> x <> '') AS l
-        |  FROM documents),
-        |s AS (SELECT doc_id, l, len(l) AS n FROM t),
-        |sp AS (
-        |  SELECT doc_id,
-        |         unnest(generate_series(1, CAST(n AS INT) - 7)) AS p,
-        |         unnest(list_transform(generate_series(1, CAST(n AS INT) - 7),
-        |           i -> md5(array_to_string(list_slice(l, i, i + 7), ' ')))) AS g
-        |  FROM s WHERE n >= 8),
-        |dup AS (SELECT g FROM sp GROUP BY g HAVING count(*) >= 2),
-        |occ AS (SELECT sp.doc_id, sp.p FROM sp JOIN dup USING (g)),
-        |cov AS (SELECT DISTINCT doc_id, tp FROM
-        |        (SELECT doc_id, unnest(generate_series(p, p + 7)) AS tp
-        |         FROM occ)),
-        |covn AS (SELECT doc_id, count(*) AS covered_tokens FROM cov GROUP BY 1),
-        |occn AS (SELECT doc_id, count(*) AS dup_spans FROM occ GROUP BY 1),
-        |toks AS (SELECT doc_id, unnest(l) AS tok,
-        |                unnest(generate_series(1, CAST(n AS INT))) AS tp
-        |         FROM s WHERE n >= 1),
-        |kept AS (
-        |  SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.tp) AS kept_text
-        |  FROM toks tk LEFT JOIN cov c ON tk.doc_id = c.doc_id AND tk.tp = c.tp
-        |  WHERE c.tp IS NULL GROUP BY tk.doc_id)
-        |SELECT s.doc_id, s.n AS n_tokens,
-        |       coalesce(occn.dup_spans, 0) AS dup_spans,
-        |       coalesce(covn.covered_tokens, 0) AS covered_tokens,
-        |       coalesce(kept.kept_text, '') AS kept_text
-        |FROM s LEFT JOIN occn USING (doc_id) LEFT JOIN covn USING (doc_id)
-        |       LEFT JOIN kept USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "q203_span_dedup_incr" ->
+  /** q203's DuckDB twin, shared by q206's streaming ingest. */
+  val q203OracleSql: String =
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(
@@ -453,8 +412,46 @@ object SpanOps {
         |FROM s LEFT JOIN occn USING (doc_id) LEFT JOIN covn USING (doc_id)
         |       LEFT JOIN kept USING (doc_id)
         |WHERE s.doc_id % 7 = 0
-        |ORDER BY doc_id""".stripMargin,
-    "q204_span_dedup_keepone" ->
+        |ORDER BY doc_id""".stripMargin
+
+  val declared: Seq[Declared] = Seq(
+    Declared("q202_span_dedup", q202SpanDedup, Some(
+      """WITH t AS (
+        |  SELECT doc_id,
+        |         list_filter(regexp_split_to_array(
+        |             lower(coalesce(text, '')), '[^a-z]+'),
+        |                     x -> x <> '') AS l
+        |  FROM documents),
+        |s AS (SELECT doc_id, l, len(l) AS n FROM t),
+        |sp AS (
+        |  SELECT doc_id,
+        |         unnest(generate_series(1, CAST(n AS INT) - 7)) AS p,
+        |         unnest(list_transform(generate_series(1, CAST(n AS INT) - 7),
+        |           i -> md5(array_to_string(list_slice(l, i, i + 7), ' ')))) AS g
+        |  FROM s WHERE n >= 8),
+        |dup AS (SELECT g FROM sp GROUP BY g HAVING count(*) >= 2),
+        |occ AS (SELECT sp.doc_id, sp.p FROM sp JOIN dup USING (g)),
+        |cov AS (SELECT DISTINCT doc_id, tp FROM
+        |        (SELECT doc_id, unnest(generate_series(p, p + 7)) AS tp
+        |         FROM occ)),
+        |covn AS (SELECT doc_id, count(*) AS covered_tokens FROM cov GROUP BY 1),
+        |occn AS (SELECT doc_id, count(*) AS dup_spans FROM occ GROUP BY 1),
+        |toks AS (SELECT doc_id, unnest(l) AS tok,
+        |                unnest(generate_series(1, CAST(n AS INT))) AS tp
+        |         FROM s WHERE n >= 1),
+        |kept AS (
+        |  SELECT tk.doc_id, string_agg(tk.tok, ' ' ORDER BY tk.tp) AS kept_text
+        |  FROM toks tk LEFT JOIN cov c ON tk.doc_id = c.doc_id AND tk.tp = c.tp
+        |  WHERE c.tp IS NULL GROUP BY tk.doc_id)
+        |SELECT s.doc_id, s.n AS n_tokens,
+        |       coalesce(occn.dup_spans, 0) AS dup_spans,
+        |       coalesce(covn.covered_tokens, 0) AS covered_tokens,
+        |       coalesce(kept.kept_text, '') AS kept_text
+        |FROM s LEFT JOIN occn USING (doc_id) LEFT JOIN covn USING (doc_id)
+        |       LEFT JOIN kept USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)),
+    Declared("q203_span_dedup_incr", q203SpanDedupIncr, Some(q203OracleSql)),
+    Declared("q204_span_dedup_keepone", q204SpanDedupKeepOne, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(
@@ -493,11 +490,11 @@ object SpanOps {
         |       coalesce(kept.kept_text, '') AS kept_text
         |FROM s LEFT JOIN occn USING (doc_id) LEFT JOIN covn USING (doc_id)
         |       LEFT JOIN kept USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
+        |ORDER BY doc_id""".stripMargin)),
     // q205 ≡ q204 over the WHOLE corpus (global keeper by (doc_id, p))
     // restricted to the batch's documents — the oracle states the law
     // directly; the Spark side factorizes it through the keyed store
-    "q205_span_dedup_keepone_incr" ->
+    Declared("q205_span_dedup_keepone_incr", q205SpanDedupKeepOneIncr, Some(
       """WITH t AS (
         |  SELECT doc_id,
         |         list_filter(regexp_split_to_array(
@@ -537,5 +534,5 @@ object SpanOps {
         |FROM s LEFT JOIN occn USING (doc_id) LEFT JOIN covn USING (doc_id)
         |       LEFT JOIN kept USING (doc_id)
         |WHERE s.doc_id % 7 = 0
-        |ORDER BY doc_id""".stripMargin)
+        |ORDER BY doc_id""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoders => SqlEncoders}
@@ -845,62 +845,21 @@ object StreamingOps {
     } finally graft.FsUtil.deleteRecursively(work)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q210_streaming_sem_ingest" -> (q210StreamingSemIngest _),
-    "q209_streaming_sig_ingest" -> (q209StreamingSigIngest _),
-    "q206_streaming_span_ingest" -> (q206StreamingSpanIngest _),
-    "q28_tumbling" -> (q28Tumbling _),
-    "q29_sliding" -> (q29Sliding _),
-    "q30_session" -> (q30Session _),
-    "q172_streaming_availablenow" -> (q172StreamingAvailableNow _),
-    "q192_streaming_kmv" -> (q192StreamingKmv _),
-    "q194_streaming_session" -> (q194StreamingSession _),
-    "q195_streaming_interval_join" -> (q195StreamingIntervalJoin _),
-    "q196_streaming_enrich" -> (q196StreamingEnrich _),
-    "q198_streaming_upsert" -> (q198StreamingUpsert _))
-
-  val oracleSql: Map[String, String] = Map(
+  val declared: Seq[Declared] = Seq(
+    Declared("q210_streaming_sem_ingest", q210StreamingSemIngest, None), // k-means fixpoint (q208)
+    // same contract on the signature store: one staged batch file →
+    // one trigger → exactly the batch q153 answer and its oracle
+    Declared("q209_streaming_sig_ingest", q209StreamingSigIngest, Some(Similarity.q153OracleSql)),
     // single AvailableNow trigger over the shipped single-file table →
     // the streaming ingest finishes with exactly the batch q203 answer
     // and shares its oracle verbatim (the q172/q28 precedent)
-    "q206_streaming_span_ingest" ->
-      SpanOps.oracleSql("q203_span_dedup_incr"),
-    // same contract on the signature store: one staged batch file →
-    // one trigger → exactly the batch q153 answer and its oracle
-    "q209_streaming_sig_ingest" -> Similarity.q153OracleSql,
-    // latest event per (user_id, event_type); the shipped data has no
-    // max-ts tie on any key (verified at every sf), so the arrival-
-    // order tie rule never fires and the argmax is the exact answer
-    "q198_streaming_upsert" ->
-      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us
-        |FROM (SELECT user_id, event_type, event_id, ts, row_number()
-        |    OVER (PARTITION BY user_id, event_type
-        |          ORDER BY ts DESC, event_id) AS rn
-        |  FROM events)
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-    "q28_tumbling" ->
+    Declared("q206_streaming_span_ingest", q206StreamingSpanIngest, Some(SpanOps.q203OracleSql)),
+    Declared("q28_tumbling", q28Tumbling, Some(
       """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS ws_us,
         |       count(*) AS n_events,
         |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY ws_us""".stripMargin,
-    // unsaturated regime (vocab ≪ k=2048): the sketch IS the distinct
-    // hash set, so the streaming sketch size equals the exact distinct
-    // token count — collision probability over a 60-bit hash is
-    // negligible at any testdata vocab
-    "q192_streaming_kmv" ->
-      """SELECT source, count(DISTINCT w)::BIGINT AS d
-        |FROM (SELECT source, unnest(list_filter(
-        |    string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
-        |  FROM documents)
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // the streaming run finishes with exactly the batch answer (Complete
-    // mode, AvailableNow) — same oracle as q28
-    "q172_streaming_availablenow" ->
-      """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS ws_us,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1 ORDER BY ws_us""".stripMargin,
-    "q29_sliding" ->
+        |FROM events GROUP BY 1 ORDER BY ws_us""".stripMargin)),
+    Declared("q29_sliding", q29Sliding, Some(
       """SELECT epoch_us(ws) AS ws_us, count(*) AS n_events,
         |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         |FROM (
@@ -909,10 +868,8 @@ object StreamingOps {
         |                   - INTERVAL '30 minutes']) AS ws,
         |         value
         |  FROM events)
-        |GROUP BY ws ORDER BY ws_us""".stripMargin,
-    // the streaming session drain finishes with exactly the batch
-    // session answer (Complete mode, AvailableNow) — q30's oracle
-    "q194_streaming_session" ->
+        |GROUP BY ws ORDER BY ws_us""".stripMargin)),
+    Declared("q30_session", q30Session, Some(
       """WITH flagged AS (
         |  SELECT user_id, ts, event_id, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -929,38 +886,67 @@ object StreamingOps {
         |       count(*) AS n_events,
         |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, start_us""".stripMargin,
+        |ORDER BY user_id, start_us""".stripMargin)),
+    // the streaming run finishes with exactly the batch answer (Complete
+    // mode, AvailableNow) — same oracle as q28
+    Declared("q172_streaming_availablenow", q172StreamingAvailableNow, Some(
+      """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS ws_us,
+        |       count(*) AS n_events,
+        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1 ORDER BY ws_us""".stripMargin)),
+    // unsaturated regime (vocab ≪ k=2048): the sketch IS the distinct
+    // hash set, so the streaming sketch size equals the exact distinct
+    // token count — collision probability over a 60-bit hash is
+    // negligible at any testdata vocab
+    Declared("q192_streaming_kmv", q192StreamingKmv, Some(
+      """SELECT source, count(DISTINCT w)::BIGINT AS d
+        |FROM (SELECT source, unnest(list_filter(
+        |    string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
+        |  FROM documents)
+        |GROUP BY source ORDER BY source""".stripMargin)),
+    // the streaming session drain finishes with exactly the batch
+    // session answer (Complete mode, AvailableNow) — q30's oracle
+    Declared("q194_streaming_session", q194StreamingSession, Some(
+      """WITH flagged AS (
+        |  SELECT user_id, ts, event_id, value,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
+        |         THEN 1 ELSE 0 END AS new_s
+        |  FROM events
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |sessions AS (
+        |  SELECT user_id, ts, value,
+        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |                     ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM flagged)
+        |SELECT user_id, epoch_us(min(ts)) AS start_us,
+        |       count(*) AS n_events,
+        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+        |FROM sessions GROUP BY user_id, sid
+        |ORDER BY user_id, start_us""".stripMargin)),
     // inner interval-join matches emit as found — the drained result is
     // the batch range join
-    "q195_streaming_interval_join" ->
+    Declared("q195_streaming_interval_join", q195StreamingIntervalJoin, Some(
       """SELECT c.user_id, c.event_id AS c_id, p.event_id AS p_id,
         |       epoch_us(c.ts) AS c_ts_us, epoch_us(p.ts) AS p_ts_us
         |FROM events c JOIN events p
         |  ON c.user_id = p.user_id
         | AND c.event_type = 'click' AND p.event_type = 'purchase'
         | AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL '1 hour'
-        |ORDER BY c_id, p_id""".stripMargin,
-    "q196_streaming_enrich" ->
+        |ORDER BY c_id, p_id""".stripMargin)),
+    Declared("q196_streaming_enrich", q196StreamingEnrich, Some(
       """SELECT c_mktsegment, count(*) AS n_events,
         |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
         |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q30_session" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR ts - lag(ts) OVER w >= INTERVAL '30 minutes'
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                     ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM flagged)
-        |SELECT user_id, epoch_us(min(ts)) AS start_us,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        |FROM sessions GROUP BY user_id, sid
-        |ORDER BY user_id, start_us""".stripMargin)
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    // latest event per (user_id, event_type); the shipped data has no
+    // max-ts tie on any key (verified at every sf), so the arrival-
+    // order tie rule never fires and the argmax is the exact answer
+    Declared("q198_streaming_upsert", q198StreamingUpsert, Some(
+      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us
+        |FROM (SELECT user_id, event_type, event_id, ts, row_number()
+        |    OVER (PARTITION BY user_id, event_type
+        |          ORDER BY ts DESC, event_id) AS rn
+        |  FROM events)
+        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)))
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -255,19 +255,9 @@ object TextOps {
       |WHERE bi.c_xy >= 3
       |ORDER BY bi.c_xy DESC, bi.w1, bi.w2 LIMIT 100""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q184_collocation_lift" -> (q184CollocationLift _),
-    "q47_hash_sample" -> (q47HashSample _),
-    "q24_dedup_exact" -> (q24DedupExact _),
-    "q27_wordcount_topk" -> (q27WordcountTopK _),
-    "q34_langid" -> (q34LangId _),
-    "q35_quality_score" -> (q35QualityScore _),
-    "q36_token_count" -> (q36TokenCount _),
-    "q37_fingerprint" -> (q37Fingerprint _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q184_collocation_lift" -> q184Oracle,
-    "q47_hash_sample" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q184_collocation_lift", q184CollocationLift, Some(q184Oracle)),
+    Declared("q47_hash_sample", q47HashSample, Some(
       """SELECT doc_id, lang, bucket FROM (
         |  SELECT doc_id, lang,
         |    CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 4)
@@ -276,18 +266,18 @@ object TextOps {
         |WHERE bucket < CASE lang WHEN 'en' THEN 50 WHEN 'es' THEN 30
         |                         WHEN 'fr' THEN 30 WHEN 'de' THEN 30
         |                         ELSE 10 END
-        |ORDER BY doc_id""".stripMargin,
-    "q24_dedup_exact" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Declared("q24_dedup_exact", q24DedupExact, Some(
       """SELECT min(doc_id) AS keep_id, sha256(text) AS text_hash,
         |       count(*) AS n_copies
-        |FROM documents GROUP BY sha256(text) ORDER BY keep_id""".stripMargin,
-    "q27_wordcount_topk" ->
+        |FROM documents GROUP BY sha256(text) ORDER BY keep_id""".stripMargin)),
+    Declared("q27_wordcount_topk", q27WordcountTopK, Some(
       """SELECT token, count(*) AS n FROM (
         |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS token
         |  FROM documents)
         |WHERE token <> '' GROUP BY token
-        |ORDER BY n DESC, token LIMIT 20""".stripMargin,
-    "q34_langid" ->
+        |ORDER BY n DESC, token LIMIT 20""".stripMargin)),
+    Declared("q34_langid", q34LangId, Some(
       """WITH t AS (SELECT doc_id, lang AS labeled,
         |    ' ' || lower(text) || ' ' AS padded FROM documents),
         |c AS (SELECT doc_id, labeled,
@@ -305,8 +295,8 @@ object TextOps {
         |       WHEN c_es >= c_fr AND c_es >= c_de THEN 'es'
         |       WHEN c_fr >= c_de THEN 'fr'
         |       ELSE 'de' END AS predicted
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q35_quality_score" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Declared("q35_quality_score", q35QualityScore, Some(
       """WITH t AS (SELECT doc_id, n_chars, text,
         |    ' ' || lower(text) || ' ' AS padded FROM documents),
         |c AS (SELECT doc_id, n_chars,
@@ -326,20 +316,20 @@ object TextOps {
         |  round(CAST(least(n_tokens, 100) AS DOUBLE) / 100
         |      + CAST(n_stop AS DOUBLE) / n_tokens
         |      - CAST(n_punct AS DOUBLE) / n_chars, 6) AS quality_score
-        |FROM c ORDER BY doc_id""".stripMargin,
-    "q36_token_count" ->
+        |FROM c ORDER BY doc_id""".stripMargin)),
+    Declared("q36_token_count", q36TokenCount, Some(
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '\S+')) AS INT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]|[^a-zA-Z0-9\s]')) AS INT)
         |    AS bpe_ish_tokens,
         |  CAST(ceil(n_chars / 4.0) AS INT) AS est_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q37_fingerprint" ->
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Declared("q37_fingerprint", q37Fingerprint, Some(
       """WITH t AS (SELECT doc_id,
         |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
         |  FROM documents)
         |SELECT doc_id, sha256(norm) AS fp_hex,
         |       substring(sha256(norm), 1, 16) AS fp64,
         |       CAST(length(norm) AS INT) AS norm_len
-        |FROM t ORDER BY doc_id""".stripMargin)
+        |FROM t ORDER BY doc_id""".stripMargin)))
 }

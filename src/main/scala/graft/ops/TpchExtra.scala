@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{Declared, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -208,16 +208,8 @@ object TpchExtra {
       .limit(10)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q115_tpch_q8" -> (q115TpchQ8 _),
-    "q116_tpch_q10" -> (q116TpchQ10 _),
-    "q117_tpch_q12" -> (q117TpchQ12 _),
-    "q118_tpch_q17" -> (q118TpchQ17 _),
-    "q119_tpch_q19" -> (q119TpchQ19 _),
-    "q120_tpch_q21" -> (q120TpchQ21 _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q115_tpch_q8" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q115_tpch_q8", q115TpchQ8, Some(
       """SELECT CAST(year(o_orderdate) AS INT) AS o_year,
         |  CAST(round(sum(CASE WHEN n1.n_name = 'NATION_1' THEN
         |      CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
@@ -239,8 +231,8 @@ object TpchExtra {
         |JOIN nation n1 ON s_nationkey = n1.n_nationkey
         |WHERE o_orderdate BETWEEN TIMESTAMP '1995-01-01'
         |                      AND TIMESTAMP '1996-12-31'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q116_tpch_q10" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Declared("q116_tpch_q10", q116TpchQ10, Some(
       """SELECT c_custkey, c_name,
         |  CAST(round(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
@@ -254,8 +246,8 @@ object TpchExtra {
         |  AND o_orderdate >= TIMESTAMP '1995-07-01'
         |  AND o_orderdate < TIMESTAMP '1995-10-01'
         |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q117_tpch_q12" ->
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
+    Declared("q117_tpch_q12", q117TpchQ12, Some(
       """SELECT l_returnflag,
         |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -263,8 +255,8 @@ object TpchExtra {
         |      THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q118_tpch_q17" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Declared("q118_tpch_q17", q118TpchQ17, Some(
       """WITH pq AS (
         |  SELECT l_partkey AS pk,
         |         sum(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty,
@@ -279,8 +271,8 @@ object TpchExtra {
         |  JOIN pq ON l_partkey = pk
         |  WHERE CAST(l_quantity AS DECIMAL(18,2)) * 5 * n_qty < sum_qty)
         |SELECT sum_revenue, sum_revenue / 7.0 AS avg_yearly, n_lines
-        |FROM base""".stripMargin,
-    "q119_tpch_q19" ->
+        |FROM base""".stripMargin)),
+    Declared("q119_tpch_q19", q119TpchQ19, Some(
       """SELECT
         |  CAST(round(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
@@ -292,8 +284,8 @@ object TpchExtra {
         |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
         |       AND l_quantity BETWEEN 10 AND 20)
         |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "q120_tpch_q21" ->
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
+    Declared("q120_tpch_q21", q120TpchQ21, Some(
       """SELECT s_name, count(*) AS numwait
         |FROM lineitem l1
         |JOIN orders ON l1.l_orderkey = o_orderkey AND o_orderstatus = 'F'
@@ -312,5 +304,5 @@ object TpchExtra {
         |      AND o3.o_orderstatus = 'F'
         |      AND l3.l_shipdate > o3.o_orderdate + INTERVAL 90 DAY)
         |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name LIMIT 10""".stripMargin)
+        |ORDER BY numwait DESC, s_name LIMIT 10""".stripMargin)))
 }

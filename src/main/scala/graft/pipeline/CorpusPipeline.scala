@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.Tables
+import graft.{Declared, Tables}
 import graft.ops.{Similarity, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -199,10 +199,6 @@ object CorpusPipeline {
       minQuality = 0.3, tokenBudget = 100000L, binCap = 2048)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q46_corpus_prep" -> (q46CorpusPrep _),
-    "q100_epoch_build" -> (q100EpochBuild _))
-
   /** [[prepare]]'s DuckDB CTE chain, stage for stage: normalize →
     * exact-dedup keeps min doc_id per normalized text → portable MinHash
     * band candidates over the survivors → drop b-sides with estimate ≥
@@ -265,12 +261,12 @@ object CorpusPipeline {
     * [[prepareOracleCtes]] → 8-gram decontamination (q99's digest join)
     * → md5-prefix train/val/test bands (q94's rule) → per-split packing
     * (q60's bin formula) → the 3-row audit. */
-  val oracleSql: Map[String, String] = Map(
-    "q46_corpus_prep" ->
+  val declared: Seq[Declared] = Seq(
+    Declared("q46_corpus_prep", q46CorpusPrep, Some(
       s"""WITH ${prepareOracleCtes(10000L)}
          |SELECT doc_id, lang, n_chars, n_tokens, quality_score, cum_tokens
-         |FROM kept ORDER BY doc_id""".stripMargin,
-    "q100_epoch_build" ->
+         |FROM kept ORDER BY doc_id""".stripMargin)),
+    Declared("q100_epoch_build", q100EpochBuild, Some(
       s"""WITH ${prepareOracleCtes(100000L)},
          |ktext AS (SELECT d.doc_id, d.text FROM documents d
          |  JOIN kept k ON d.doc_id = k.doc_id),
@@ -305,5 +301,5 @@ object CorpusPipeline {
          |  (SELECT CAST(count(*) AS BIGINT) FROM dirty)
          |    AS n_contaminated_removed
          |FROM splits s LEFT JOIN audit a ON a.split = s.split
-         |ORDER BY s.split""".stripMargin)
+         |ORDER BY s.split""".stripMargin)))
 }

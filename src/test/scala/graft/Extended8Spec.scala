@@ -54,7 +54,7 @@ class Extended8Spec extends AnyFunSuite {
     // the 30-min gap rule must agree with q30's gap sessionization on
     // the number of gap-sessions
     val gapSessions = rows.map(r => (r.getLong(0), r.getLong(1))).distinct.length
-    val q30 = graft.ops.StreamingOps.queries("q30_session")(spark, dir).count()
+    val q30 = graft.ops.StreamingOps.q30Session(spark, dir).count()
     assert(gapSessions == q30,
       s"$gapSessions gap-sessions vs q30's $q30")
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Extended10
+import graft.ops.{Clustering, Extended10}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -388,8 +388,10 @@ class RrfSpec extends AnyFunSuite {
       Extended10.ivfAppendAudit(index, cents, b, dim = 8).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     // auditing the base against its own quantizer assigns every base
-    // row to its stored cell (the append argmin IS the ingest argmin)
-    assert(counts(base).values.forall { case (nb, nt) => nb == nt })
+    // row to its index cell (the append argmin IS the ingest argmin)
+    val cellSizes = index.groupBy("cell").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(counts(base).map { case (c, (_, nt)) => c -> nt } == cellSizes)
     // auditing in two batches equals auditing at once (batch-local:
     // no append reads or perturbs any other row)
     val ids = batch.select("vec_id").collect().map(_.getLong(0)).sorted
@@ -403,12 +405,9 @@ class RrfSpec extends AnyFunSuite {
     assert(whole.values.map(_._2).sum == ids.length)
   }
 
-  test("q200 audit: computed-cell fast path equals the stored-cell path") {
-    // cellIsComputed = true derives the stored side's (cell, d2) from
-    // ONE argmin evaluation; over an inline index (cell = the same
-    // argmin) the audit output must be BIT-IDENTICAL to the
-    // stored-path shape that looks the cell up and recomputes the
-    // distance — only the cost differs
+  test("q200 audit: base and batch errors equal a driver-side nearest-centroid reference") {
+    // reference: each row's squared L2 to its nearest centroid, computed
+    // on the driver with l2sqLocal over the fixture (lower id on a tie)
     val docs = corpus(623L, 60)
     val vecs = uniformVectors(629L, docs.map(_._1))
     val embDf = vecs.toSeq.map { case (id, v) => (id, v) }
@@ -416,11 +415,31 @@ class RrfSpec extends AnyFunSuite {
     val base = embDf.filter(pmod(col("vec_id"), lit(10L)) =!= 9)
     val batch = embDf.filter(pmod(col("vec_id"), lit(10L)) === 9)
     val (index, cents) = Extended10.ivfIndex(base, dim = 8, nCells = 4)
-    val fast = Extended10.ivfAppendAudit(index, cents, batch, dim = 8,
-      cellIsComputed = true).collect().map(_.toSeq).toSeq
-    val stored = Extended10.ivfAppendAudit(index, cents, batch, dim = 8)
-      .collect().map(_.toSeq).toSeq
-    assert(fast == stored)
+    val sorted = cents.sortBy(_._1)
+    def nearest(ids: Iterable[Long]): Seq[(Long, Double)] =
+      ids.toSeq.sorted.map { id =>
+        val e = vecs(id).toArray
+        sorted.map { case (c, ce) => (c, Clustering.l2sqLocal(e, ce)) }
+          .minBy(_._2)
+      }
+    val (bIds, tIds) = vecs.keys.partition(_ % 10 != 9)
+    val (refBase, refBatch) = (nearest(bIds), nearest(tIds))
+    def mean(xs: Seq[(Long, Double)]) = xs.map(_._2).sum / xs.size
+    val audit = Extended10.ivfAppendAudit(index, cents, batch, dim = 8)
+      .collect()
+    assert(audit.nonEmpty && refBase.nonEmpty && refBatch.nonEmpty)
+    audit.foreach { r =>
+      val cell = r.getLong(0)
+      val (cb, ct) = (refBase.filter(_._1 == cell), refBatch.filter(_._1 == cell))
+      assert(r.getLong(1) == cb.size && r.getLong(2) == ct.size, s"cell $cell")
+      assert(math.abs(r.getDouble(3) - mean(refBase)) < 1e-6, s"cell $cell base_mse")
+      assert(math.abs(r.getDouble(4) - mean(refBatch)) < 1e-6, s"cell $cell batch_mse")
+      if (cb.nonEmpty && ct.nonEmpty && mean(cb) > 0)
+        assert(math.abs(r.getDouble(6) - mean(ct) / mean(cb)) < 1e-6,
+          s"cell $cell cell_drift")
+    }
+    assert(audit.map(_.getLong(0)).toSet ==
+      (refBase ++ refBatch).map(_._1).toSet)
   }
 
   test("q200 drift trigger: off-distribution batch trips retrain") {

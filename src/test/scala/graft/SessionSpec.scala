@@ -21,16 +21,18 @@ class SessionSpec extends AnyFunSuite {
     assert(s.sparkContext.uiWebUrl.isEmpty)
   }
 
-  /** The Scala files under `dir`, each with its trimmed lines, comment
-    * lines dropped: a scaladoc may name what it describes. */
-  private def codeLines(dir: String): List[(Path, Seq[String])] = {
+  private def scalaFiles(dir: String): List[Path] = {
     val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repo root: $root")
-    val files = scala.util.Using.resource(Files.walk(root))(
+    scala.util.Using.resource(Files.walk(root))(
       _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
-    files.map(p => p -> Files.readAllLines(p).asScala.toSeq.map(_.trim)
-      .filterNot(t => t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")))
   }
+
+  /** The Scala files under `dir`, each with its trimmed lines, comment
+    * lines dropped: a scaladoc may name what it describes. */
+  private def codeLines(dir: String): List[(Path, Seq[String])] =
+    scalaFiles(dir).map(p => p -> Files.readAllLines(p).asScala.toSeq.map(_.trim)
+      .filterNot(t => t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")))
 
   test("SparkSession.builder is called only in Session.scala") {
     val callers = codeLines("src/main/scala")
@@ -86,21 +88,65 @@ class SessionSpec extends AnyFunSuite {
     "ScaleOps.writeBucketedState" ->
       "writes the store that graft.sig.store loads into q153")
 
+  /** The lines of each Scala file under `dir`, with comments and the
+    * text of string literals blanked; the expressions an interpolated
+    * string splices in stay. */
+  private def blankedLines(dir: String): List[(Path, Vector[String])] = {
+    val lexeme = ("(?s)//[^\n]*|/\\*.*?\\*/|\"\"\"(.*?)\"\"\"(?!\")|" +
+      "\"(?:\\\\.|[^\"\\\\\\n])*\"|'(?:\\\\.|[^'\\\\\\n])'").r
+    val spliced = "\\$\\{[^}]*\\}|\\$\\w+".r
+    def blank(s: String) = s.map(c => if (c == '\n') c else ' ')
+    scalaFiles(dir).map { p =>
+      val src = Files.readString(p)
+      val out = lexeme.replaceAllIn(src, m => {
+        val text = m.matched
+        val interpolated = text.startsWith("\"") && m.start > 0 &&
+          Character.isLetter(src.charAt(m.start - 1))
+        val kept =
+          if (text.startsWith("'")) text
+          else if (!interpolated) blank(text)
+          else {
+            val b = new StringBuilder(blank(text))
+            spliced.findAllMatchIn(text).foreach(s =>
+              b.replace(s.start, s.end, s.matched))
+            b.toString
+          }
+        scala.util.matching.Regex.quoteReplacement(kept)
+      })
+      p -> out.split("\n", -1).toVector
+    }
+  }
+
   test("every src/main def, val and class is reached outside its definition or allowlisted") {
-    // a member is reached when its name occurs in a code line of
-    // src/main or perfbench/scala other than its own declaration line;
-    // overrides are Spark's callbacks and are not scanned
+    // a member is reached when its name occurs in its own file outside
+    // its declaration line or, elsewhere in src/main or perfbench/scala,
+    // as `Object.member` for an object's member and by its bare name for
+    // any other (a class's members are called on instances). Overrides
+    // are callbacks and a `main` is an entry point: neither is scanned.
     val decl = ("(?:@\\w+ )*(?:(?:private|protected)(?:\\[\\w+\\])? |final |" +
       "implicit |lazy |case |sealed |abstract )*(?:def|val|class) (\\w+).*").r
+    val owner = ("(?:(?:private|protected)(?:\\[\\w+\\])? |final |implicit |" +
+      "case |sealed |abstract )*(object|class|trait) (\\w+).*").r
     val word = "\\w+".r
-    val main = codeLines("src/main/scala")
-    val uses = (main ++ codeLines("perfbench/scala")).flatMap(_._2)
-      .flatMap(word.findAllIn).groupBy(identity).view.mapValues(_.size)
+    val qualified = "(\\w+)(?=\\s*\\.\\s*(\\w+))".r
+    def counts(ls: Seq[String]) = (ls.flatMap(word.findAllIn) ++
+      ls.flatMap(qualified.findAllMatchIn(_).map(m => s"${m.group(1)}.${m.group(2)}")))
+      .groupBy(identity).view.mapValues(_.size).toMap.withDefaultValue(0)
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val main = blankedLines("src/main/scala")
+    val inFile = (main ++ blankedLines("perfbench/scala"))
+      .map { case (p, ls) => p -> counts(ls) }.toMap
+    val total = inFile.values.flatten.groupMapReduce(_._1)(_._2)(_ + _).withDefaultValue(0)
     val unreached = (for {
-      (p, lines) <- main
-      line <- lines
-      name <- decl.unapplySeq(line).flatMap(_.headOption)
-      if uses(name) == word.findAllIn(line).count(_ == name)
+      (p, raw) <- main
+      (line, i) <- raw.zipWithIndex
+      name <- decl.unapplySeq(line.trim).flatMap(_.headOption) if name != "main"
+      own = inFile(p)
+      obj = (i - 1 to 0 by -1).map(raw).find(l => indent(l) < indent(line) &&
+        owner.matches(l.trim)).flatMap(l => owner.unapplySeq(l.trim))
+        .collect { case List("object", o) => o }
+      key = obj.fold(name)(o => s"$o.$name")
+      if own(name) == counts(Seq(line))(name) && total(key) == own(key)
     } yield s"${p.getFileName.toString.stripSuffix(".scala")}.$name").distinct
     def allowed(m: String) = specOnly.contains(m) ||
       specOnly.contains(m.takeWhile(_ != '.'))
