@@ -59,4 +59,34 @@ object SparkEntry {
   private lazy val views = (
     declared.map(d => d.name -> d.build).toMap,
     declared.flatMap(d => d.oracle.map(d.name -> _)).toMap)
+
+  /** The declared queries a main runs, in name order: those
+    * `SPARK_GRAFT_ONLY` names (comma-separated), or all of them when it
+    * is unset. Fails with the undeclared names, so a main calls it
+    * before its session starts. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[Declared] = {
+    val names = only.map(_.split(",").map(_.trim).toSet)
+    val unknown = names.fold(Set.empty[String])(_ -- queries.keySet)
+    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names undeclared queries: " +
+      unknown.toSeq.sorted.mkString(", "))
+    declared.filter(d => names.forall(_.contains(d.name))).sortBy(_.name)
+  }
+
+  /** `body`, then the release that keeps one query from taxing the next:
+    * the SQL cache is cleared and every RDD persisted since `body` began
+    * is unpersisted, blocking. That includes `localCheckpoint` blocks,
+    * which `clearCache` cannot free (they are RDD storage, not SQL cache;
+    * r4's bench showed 10–16× slowdowns on untouched queries from their
+    * accumulation). */
+  def releasing[T](spark: SparkSession)(body: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    try body
+    finally {
+      spark.catalog.clearCache()
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before.contains(id)) rdd.unpersist(blocking = true)
+      }
+    }
+  }
 }

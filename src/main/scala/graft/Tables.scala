@@ -43,8 +43,8 @@ object Tables {
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     // NO session mutation here (VERDICT r7 "wrong" #3): the legacy conf
-    // is set once in every graft entrypoint builder next to the UTC pin
-    // (Verify/Bench/Probe/Q* and the test session). A per-READ option
+    // is set once, next to the UTC pin, in Session.local, which every
+    // main and the test session build through. A per-READ option
     // cannot scope it — ParquetFileFormat.buildReaderWithPartitionValues
     // overwrites the hadoopConf key from sessionState.conf at plan time
     // (measured: executor tasks throw PARQUET_TYPE_ILLEGAL even when
@@ -59,6 +59,16 @@ object Tables {
             "spark.sql.legacy.parquet.nanosAsLong=true on the session " +
             "(every graft entrypoint does) and re-load", e)
     }
+    normalizeTs(raw)
+  }
+
+  /** The events frame `raw` with `ts` normalized to session-TZ
+    * TimestampType from the storage generation its schema carries
+    * ([[events]] lists them), for the batch loader and the streaming one
+    * (`StreamingOps.eventStream`) alike. A third generation fails here,
+    * by name, not as an obscure cast error inside a downstream window
+    * aggregation. */
+  private[graft] def normalizeTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))

@@ -1,53 +1,40 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected query's result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/compare.py`).
+  * `SPARK_GRAFT_ONLY` restricts the dump to named queries
+  * ([[SparkEntry.selected]]); unset, every declared query is dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Dev aid: SPARK_GRAFT_ONLY=q88_chunk_docs,q89_... restricts the dump
-    // to named queries (the driver never sets it → full surface).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
-    require(unknown.isEmpty, "SPARK_GRAFT_ONLY names undeclared queries: " +
-      unknown.toSeq.sorted.mkString(", "))
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val selected = SparkEntry.selected()
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
-    val sc = spark.sparkContext
-    selected.foreach { case (name, fn) =>
-      // Bench's per-query hygiene, mirrored (ADVICE r10): without it
-      // every cachedOrderBy output plus each query's localCheckpoint
-      // blocks accumulate in executor storage across the whole dump —
-      // spills, not wrong, but unbounded at larger verify tiers
-      val before = sc.getPersistentRDDs.keySet
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = true)
+    selected.foreach { d =>
+      SparkEntry.releasing(spark) {
+        try d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${d.name}")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
+        }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
+    * — a tab or CR in a declared oracle's SQL would otherwise make the
+    * reader's json.load fail and silently zero the correctness check. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -277,39 +277,4 @@ object ScaleOps {
         sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false))
     }
   }
-
-  /** Write `state` as a bucketed, sort-within-buckets table so that
-    * every future merge (the reference's R10 read-modify-write) joins
-    * against it WITHOUT shuffling the state side: only the (much
-    * smaller) incoming batch is exchanged into the state's bucketing.
-    * This is the SURVEY §4.2 posture for snapshot merges at 100 TB —
-    * the accumulated state never crosses the wire again. NB for a JOIN
-    * to reuse the bucketing without shuffling the state side, the
-    * bucket keys must be ALL of the join keys
-    * (spark.sql.requireAllClusterKeysForCoPartition defaults to true
-    * since 3.3 — a subset-keyed layout only helps aggregations and
-    * broadcast-regime scans, measured on the q153 band store). */
-  def writeBucketedState(state: DataFrame, table: String, path: String,
-      keys: Seq[String], nBuckets: Int = 8): Unit =
-    state.write.mode("overwrite")
-      .bucketBy(nBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", path)
-      .saveAsTable(table)
-
-  /** Resolve a store-location string (the q153/q203/q205 pre-built
-    * store knobs) to a DataFrame. Explicit schemes remove the
-    * ambiguity ADVICE r14 flagged — a bare relative path like
-    * 'store.parquet' was silently misread as a catalog table name:
-    *   - "parquet:<path>"  → parquet read of <path>
-    *   - "table:<name>"    → catalog table <name>
-    * Bare values keep the legacy heuristic for back-compat ('/' →
-    * parquet path, anything else → table name). */
-  def loadStore(spark: org.apache.spark.sql.SparkSession,
-      loc: String): DataFrame =
-    if (loc.startsWith("parquet:"))
-      spark.read.parquet(loc.stripPrefix("parquet:"))
-    else if (loc.startsWith("table:")) spark.table(loc.stripPrefix("table:"))
-    else if (loc.contains("/")) spark.read.parquet(loc)
-    else spark.table(loc)
 }

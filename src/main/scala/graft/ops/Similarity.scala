@@ -607,26 +607,16 @@ object Similarity {
     * reports its best existing match (max estimate, min doc_id tie).
     * Scale: the band join is new×existing only — bytes moved follow
     * the BATCH size, not the corpus (the existing side's signature
-    * store is written once per generation and probed; r14 routes the
-    * declared query through [[dedupVsSigStore]] so it IS the store
-    * path, with the store derived inline when none is supplied). The
-    * per-new-doc best-match window partitions on the new doc id. */
+    * store is written once per generation and probed; the declared
+    * query runs that probe, [[dedupVsSigStore]], against a store
+    * derived inline). The per-new-doc best-match window partitions on
+    * the new doc id. */
   def q153IncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val corpus = plantedCorpus(spark, dir)
     val batch = corpus.filter(col("doc_id") >= 1000000L)
-    // the stored band table is derived inline by default (testdata
-    // ships no signature store; the q200/q203 declared-query
-    // precedent) but a pre-built store plugs in via graft.sig.store,
-    // so the declared query runs EXACTLY the stored-table path
-    // (BASELINE.md round 14: declared q153 through a bucketed store,
-    // 1.6 s at 100×). ScaleOps.loadStore syntax:
-    // explicit "parquet:<path>"/"table:<name>", legacy '/'-heuristic
-    // for bare values
-    val store = sys.props.get("graft.sig.store") match {
-      case Some(loc) => ScaleOps.loadStore(spark, loc)
-      case None => sigBands(corpus.filter(col("doc_id") < 1000000L))
-    }
-    dedupVsSigStore(batch, store)
+    // the stored band table is derived inline (testdata ships no
+    // signature store; the q200/q203 declared-query precedent)
+    dedupVsSigStore(batch, sigBands(corpus.filter(col("doc_id") < 1000000L)))
   }
 
   /** The stored artifact for incremental near-dedup: a corpus's banded

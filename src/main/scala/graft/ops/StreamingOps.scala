@@ -395,26 +395,12 @@ object StreamingOps {
   /** The events table as a ts-normalized file STREAM — the readStream
     * twin of `Tables.events`: raw-schema probe through `Tables.load`
     * (inferred once per file version; the nanosAsLong session flag
-    * covers the nanos generation — ADVICE r7), then the
-    * same two-generation normalization contract. Shared by every
+    * covers the nanos generation — ADVICE r7), then the batch
+    * loader's `Tables.normalizeTs`. Shared by every
     * declared streaming query over events (q172/q194/q195/q196). */
-  private[graft] def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val schema = Tables.load(spark, dir, "events").schema
-    val raw = tableStream(spark, dir, "events", schema)
-    schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case TimestampType => raw
-      // fail fast like the batch twin Tables.events — a third physical
-      // generation must be DIAGNOSED here, not surface as an obscure
-      // cast error inside a downstream window aggregation
-      case other => throw new IllegalStateException(
-        s"events.ts: unexpected storage type $other — extend eventStream " +
-          "alongside Tables.events (TablesSpec names the loader contract)")
-    }
-  }
+  private[graft] def eventStream(spark: SparkSession, dir: String): DataFrame =
+    Tables.normalizeTs(tableStream(spark, dir, "events",
+      Tables.load(spark, dir, "events").schema))
 
   /** q172 — a REAL Structured Streaming run, oracle-checked: the events
     * table replayed through `readStream` with `Trigger.AvailableNow`

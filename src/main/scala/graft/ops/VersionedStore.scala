@@ -99,7 +99,7 @@ object VersionedStore {
     * carries no catalog bucket spec, so this removes the probe's
     * listing/open cost and restores one sorted run per hash partition,
     * NOT the join shuffle — a shuffle-free serving tier needs a
-    * bucketed TABLE store ([[ScaleOps.writeBucketedState]]; measured
+    * bucketed TABLE store (`bucketBy` + `saveAsTable`; measured
     * store-shuffle-free at 100× in BASELINE.md round 14).
     *
     * Crash-safe (the LSM-manifest order): the folded copy is fully

@@ -8,11 +8,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * custom expressions need: the Column ↔ Expression converters (to
   * expose an [[Expression]] through the public Column API), the
   * `AbstractDataType` name that `ExpectsInputTypes` signatures require,
-  * and the session's function registry (to make one callable from
-  * `spark.sql(...)`). This is the conventional shim of Spark-native
-  * extension libraries: the hooks are `private[sql]`, so the bridge
-  * lives inside the org.apache.spark.sql package. No behavior here —
-  * aliases only.
+  * the session's function registry (to make one callable from
+  * `spark.sql(...)`), and the listener bus's drain (to read a listener's
+  * records once the events of finished jobs have reached it). This is
+  * the conventional shim of Spark-native extension libraries: the hooks
+  * are `private[sql]` or `private[spark]`, so the bridge lives inside
+  * the org.apache.spark.sql package. No behavior here — aliases only.
   */
 object GraftShims {
   type AbstractDataType = org.apache.spark.sql.types.AbstractDataType
@@ -27,4 +28,10 @@ object GraftShims {
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier(name), info, builder)
+
+  /** Block until every event posted so far to `sc`'s listener bus has
+    * been delivered (at most a minute), so a listener has seen every job
+    * and stage that ended before the call. */
+  def awaitListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 }

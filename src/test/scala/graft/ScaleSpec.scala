@@ -105,7 +105,7 @@ class ScaleSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempDirectory("graft_bucket").toString
     val state = Tables.events(spark, dir)
       .groupBy("user_id").agg(max("ts").as("last_ts"))
-    ScaleOps.writeBucketedState(state, "state_bucketed", tmp, Seq("user_id"))
+    SparkTest.writeBucketedState(state, "state_bucketed", tmp, Seq("user_id"))
     try {
       val incoming = Tables.events(spark, dir)
         .select("user_id", "event_id", "ts")
@@ -124,32 +124,6 @@ class ScaleSpec extends AnyFunSuite {
       assert(merged.count() == incoming.count())
     } finally {
       spark.sql("DROP TABLE IF EXISTS state_bucketed")
-    }
-  }
-
-  test("loadStore resolves explicit schemes and the legacy heuristic") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_loadstore")
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    df.write.mode("overwrite").parquet(s"$tmp/store")
-    df.write.mode("overwrite").saveAsTable("graft_loadstore_t")
-    try {
-      // explicit schemes are unambiguous regardless of path shape
-      assert(ScaleOps.loadStore(spark, s"parquet:$tmp/store").count() == 2)
-      assert(ScaleOps.loadStore(spark, "table:graft_loadstore_t").count() == 2)
-      // legacy bare values: '/' → parquet path, else catalog table
-      assert(ScaleOps.loadStore(spark, s"$tmp/store").count() == 2)
-      assert(ScaleOps.loadStore(spark, "graft_loadstore_t").count() == 2)
-      // the ADVICE r14 trap: a RELATIVE parquet path without a scheme
-      // is misread as a table name by the heuristic — the scheme is
-      // the documented fix, so pin that it indeed resolves via scheme
-      val rel = "graft_rel_store.parquet"
-      df.write.mode("overwrite").parquet(rel)
-      try assert(ScaleOps.loadStore(spark, s"parquet:$rel").count() == 2)
-      finally FsUtil.deleteRecursively(rel)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_loadstore_t")
-      FsUtil.deleteRecursively(tmp)
     }
   }
 

@@ -84,9 +84,7 @@ class SessionSpec extends AnyFunSuite {
     "Similarity.jaccardUdf" ->
       "the independent cross-check of the native jaccard_sorted",
     "Extended10.semDedupCells" ->
-      "the explicit-k entry to the reached semDedupOnReps",
-    "ScaleOps.writeBucketedState" ->
-      "writes the store that graft.sig.store loads into q153")
+      "the explicit-k entry to the reached semDedupOnReps")
 
   /** The lines of each Scala file under `dir`, with comments and the
     * text of string literals blanked; the expressions an interpolated

@@ -3,9 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q153 store lifecycle. The laws: probing a batch against a stored
-  * band table equals the one-pass computation, two sequential batches
-  * through probe+append equal one combined store, and the declared
-  * query over a pre-built bucketed store equals the inline one. */
+  * band table equals the one-pass computation, and two sequential
+  * batches through probe+append equal one combined store. */
 class SigStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
   import spark.implicits._
@@ -70,27 +69,5 @@ class SigStoreSpec extends AnyFunSuite {
     // the cross-batch duplicate is caught only through the merge
     assert(sequential.exists { case (n, o, _) => n == 200L && o == 102L },
       "b2's copy of a b1 doc must match through the merged store")
-  }
-
-  test("declared q153 via graft.sig.store runs the stored-table path unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigdecl").toString
-    try {
-      val corpus = ops.Similarity.plantedCorpus(spark, SparkTest.sfDir)
-      ops.ScaleOps.writeBucketedState(
-        ops.Similarity.sigBands(corpus.filter($"doc_id" < 1000000L)),
-        "sig_store_decl", s"$dir/bands", Seq("band_idx", "band_key"), 4)
-      spark.catalog.clearCache()
-      val default = collectBest(
-        ops.Similarity.q153IncrementalDedup(spark, SparkTest.sfDir))
-      sys.props("graft.sig.store") = "sig_store_decl"
-      val stored =
-        try collectBest(ops.Similarity.q153IncrementalDedup(spark, SparkTest.sfDir))
-        finally sys.props.remove("graft.sig.store")
-      assert(stored === default)
-      assert(stored.nonEmpty, "planted copies must match")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS sig_store_decl")
-      spark.catalog.clearCache()
-    }
   }
 }

@@ -33,7 +33,7 @@ class SparseIndexSpec extends AnyFunSuite {
       // two segments at rest: both segments' postings bucketed by w,
       // and one stats row per segment
       val segments = Seq(store, batch).map(_.toDF("doc_id", "text"))
-      ops.ScaleOps.writeBucketedState(
+      SparkTest.writeBucketedState(
         segments.map(ops.Extended10.sparseIndex).reduce(_ union _),
         "sparse_spec_postings", s"$dir/postings", Seq("w"), 4)
       segments.map(ops.Extended10.sparseStats).reduce(_ union _)

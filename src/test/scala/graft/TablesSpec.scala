@@ -87,7 +87,7 @@ class TablesSpec extends AnyFunSuite {
       writer.close()
 
       // sanity: under the entrypoint conf (SparkTest's builder pins it
-      // true, like Verify/Bench/Q*) the file really reads as LongType
+      // true, like every main) the file really reads as LongType
       assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true",
         "test session must mirror the entrypoint builders")
       val rawType = spark.read.parquet(s"$tmp/events.parquet")
