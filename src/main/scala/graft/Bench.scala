@@ -140,15 +140,18 @@ object Bench {
 }
 
 /** One completed stage: its tasks, executor run and CPU time, input and
-  * shuffle records, and GC time. */
+  * shuffle records, shuffle bytes, bytes spilled (memory plus disk) and
+  * GC time. */
 private[graft] final case class StageRow(id: Int, name: String, tasks: Int,
     runMs: Long, cpuNs: Long, inRecords: Long, shuffleRead: Long,
-    shuffleWritten: Long, gcMs: Long) {
+    shuffleWritten: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+    spillBytes: Long, gcMs: Long) {
   def json: String =
     s"""{"id":$id,"name":${Verify.jsonString(name)},"tasks":$tasks,""" +
       s""""run_s":${runMs / 1e3},"cpu_s":${cpuNs / 1e9},"in_records":$inRecords,""" +
       s""""shuffle_read_records":$shuffleRead,"shuffle_write_records":$shuffleWritten,""" +
-      s""""gc_s":${gcMs / 1e3}}"""
+      s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
+      s""""spill_bytes":$spillBytes,"gc_s":${gcMs / 1e3}}"""
 }
 
 /** Attributes each job and completed stage to the Bench call named by
@@ -182,18 +185,23 @@ private[graft] class CallProfile extends SparkListener {
       stages.getOrElseUpdate(c, mutable.ArrayBuffer()) += StageRow(si.stageId,
         si.name, si.numTasks, m.executorRunTime, m.executorCpuTime,
         m.inputMetrics.recordsRead, m.shuffleReadMetrics.recordsRead,
-        m.shuffleWriteMetrics.recordsWritten, m.jvmGCTime)
+        m.shuffleWriteMetrics.recordsWritten, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten,
+        m.memoryBytesSpilled + m.diskBytesSpilled, m.jvmGCTime)
     }
   }
 
   def unlabelledJobs: Int = synchronized(unlabelled)
 
-  /** The call's jobs, stages, tasks and executor CPU, and its stage rows,
-    * as JSON object members. */
+  /** The call's jobs, stages, tasks, executor CPU, shuffle bytes and
+    * spill, and its stage rows, as JSON object members. */
   def json(call: String): String = synchronized {
     val rows = stages.getOrElse(call, Nil).toSeq
     s""""cpu_s":${rows.map(_.cpuNs).sum / 1e9},"jobs":${jobs(call)},""" +
       s""""stages":${rows.size},"tasks":${rows.map(_.tasks).sum},""" +
+      s""""shuffle_read_bytes":${rows.map(_.shuffleReadBytes).sum},""" +
+      s""""shuffle_write_bytes":${rows.map(_.shuffleWriteBytes).sum},""" +
+      s""""spill_bytes":${rows.map(_.spillBytes).sum},""" +
       s""""stage_rows":${rows.map(_.json).mkString("[", ",", "]")}"""
   }
 }

@@ -121,13 +121,8 @@ object Tables {
     * read listed: a fixed-size file-version stamp, however many part
     * files a table has. */
   private def leafDigest(df: DataFrame): String = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val leaves = df.queryExecution.analyzed.collectLeaves().flatMap {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        fs.location.listFiles(Nil, Nil).flatMap(_.files)
-          .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}")
-      case _ => Nil
-    }.sorted
+    val leaves = Layout.inputFiles(df)
+      .map(f => s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}").sorted
     val md = java.security.MessageDigest.getInstance("SHA-256")
     leaves.foreach(l => md.update((l + "\n").getBytes("UTF-8")))
     java.util.HexFormat.of().formatHex(md.digest())
@@ -141,18 +136,4 @@ object Tables {
       override def removeEldestEntry(
           e: java.util.Map.Entry[SchemaKey, (String, StructType)]): Boolean = size > 64
     }
-
-  /** Decouple compute parallelism from file layout for CPU-heavy narrow
-    * transforms (regex scoring, sketching). The driver testdata is ONE
-    * row group per table, so the scan yields one task no matter how many
-    * cores exist and per-row work serializes on a single thread. At
-    * scale inputs arrive in many splits and this is a no-op (it only
-    * repartitions when the scan has fewer splits than cores); locally it
-    * costs one shuffle of the projected columns — trivial next to the
-    * compute it parallelizes. Call it AFTER projecting down to the
-    * columns the query needs, so only those bytes shuffle. */
-  def fanout(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 }

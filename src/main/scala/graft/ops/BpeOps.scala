@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import scala.collection.mutable.ArrayBuffer
 
 /** BPE tokenizer TRAINING as a Spark job (SURVEY §7.4c: the last named
@@ -81,10 +81,10 @@ object BpeOps {
     val spark = docs.sparkSession
     import spark.implicits._
     // the vocab table rides the merge rounds at a row-count-adaptive
-    // layout (ScaleOps.adaptiveParts, r17): cached at the corpus
-    // aggregate's cores-wide shuffle layout, every round's argmax and
-    // merge rewrite paid one overhead task per core regardless of
-    // vocab size (measured: q171 cpu 17–27 s at 32-wide, vocab ~10⁴).
+    // layout (Layout, r17): cached at the corpus aggregate's
+    // cores-wide shuffle layout, every round's argmax and merge
+    // rewrite paid one overhead task per core regardless of vocab
+    // size (measured: q171 cpu 17–27 s at 32-wide, vocab ~10⁴).
     // The count materializes the un-coalesced cache once; the grain is
     // smaller than the relational default (per-row pair explode +
     // symbol-array rewrite). The coalesced view reads that cache
@@ -94,8 +94,8 @@ object BpeOps {
     val vocab = wordFreq(docs)
       .select(split(col("w"), "").as("syms"), col("cnt"))
       .persist()
-    val stateParts = ScaleOps.adaptiveParts(vocab.count(), 65536L)
-    var state = vocab.coalesce(stateParts).persist()
+    var state = vocab.coalesce(Layout.parts(vocab.count(), Layout.VectorGrain))
+      .persist()
     val merges = ArrayBuffer[(Int, String, String, Long)]()
     // the frame whose cache blocks the CURRENT state's lineage still
     // references — released only after a full pass over state has
@@ -146,7 +146,7 @@ object BpeOps {
     * with substr-pair extraction over the same word-frequency table. */
   def q170BpePairs(spark: SparkSession, dir: String): DataFrame = {
     val words = wordFreq(
-      Tables.fanout(Tables.documents(spark, dir).select("text")))
+      Tables.documents(spark, dir).select("text"))
     pairCounts(words.select(split(col("w"), "").as("syms"), col("cnt")))
       .orderBy(col("cnt").desc, col("l"), col("r"))
       .limit(20)
@@ -157,7 +157,7 @@ object BpeOps {
     * pins the laws (row 0 ≡ q170's argmax; exact merge table on a
     * hand-computable corpus; symbol-count bookkeeping). */
   def q171BpeTrain(spark: SparkSession, dir: String): DataFrame =
-    fit(Tables.fanout(Tables.documents(spark, dir).select("text")), 20)
+    fit(Tables.documents(spark, dir).select("text"), 20)
       .orderBy("rank")
 
   /** q173 — BPE encode step, oracle-checked: corpus token totals before /
@@ -168,7 +168,7 @@ object BpeOps {
     * applications" becomes a hash-compared law, not just a spec one. */
   def q173BpeEncodeStep(spark: SparkSession, dir: String): DataFrame = {
     val words = wordFreq(
-      Tables.fanout(Tables.documents(spark, dir).select("text")))
+      Tables.documents(spark, dir).select("text"))
     val top = pairCounts(
       words.select(split(col("w"), "").as("syms"), col("cnt")))
       .orderBy(col("cnt").desc, col("l"), col("r")).limit(1)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Declared
+import graft.{Declared, Layout}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -451,10 +451,9 @@ object Clustering {
     val cached = if (owned) emb.persist() else emb
     try {
       // the count materializes the cache and sizes the per-round
-      // partitioning (ScaleOps.adaptiveParts — the argmin is ~k·d flops
-      // per row, so the grain is smaller than the relational default)
-      val df = ScaleOps.coalesceAdaptive(cached, cached.count(),
-        rowsPerPart = 65536L)
+      // partitioning (the argmin is ~k·d flops per row, so the grain is
+      // smaller than the relational one)
+      val df = cached.coalesce(Layout.parts(cached.count(), Layout.VectorGrain))
       val cents = lloydRounds(df, k, dim, maxIters, tol)
       val centsDf = cents.toSeq.map { case (cid, ce) => (cid, ce.toSeq) }
         .toDF("cid", "ce")
@@ -481,15 +480,14 @@ object Clustering {
     // so its coalesced view is never re-cached here; direct lloyd
     // callers over raw frames otherwise pay a scan + any upstream
     // exchange PER ROUND), and size the round partitioning to the data
-    // (ScaleOps.adaptiveParts — the r17 per-task-overhead finding)
+    // (Layout — the r17 per-task-overhead finding)
     val lloydOwned =
       emb0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     val cached = if (lloydOwned) emb0.persist() else emb0
     try {
       val emb =
         if (lloydOwned)
-          ScaleOps.coalesceAdaptive(cached, cached.count(),
-            rowsPerPart = 65536L)
+          cached.coalesce(Layout.parts(cached.count(), Layout.VectorGrain))
         else cached
       lloydRounds(emb, k, dim, maxIters, tol)
     } finally if (lloydOwned) cached.unpersist()
@@ -553,9 +551,9 @@ object Clustering {
     */
   def q108Kmeans(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    val emb = graft.Tables.fanout(graft.Tables.embeddings(spark, dir)
+    val emb = graft.Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
-        col("embedding").cast("array<double>").as("e")))
+        col("embedding").cast("array<double>").as("e"))
     // 6 rounds converge this k/dim well inside the tol window; the
     // declared query bounds rounds so bench cost stays proportional
     kmeansFit(emb, k = 8, dim = 64, maxIters = 6)

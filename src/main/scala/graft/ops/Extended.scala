@@ -253,7 +253,7 @@ object Extended {
     * reducer. */
   def q60PackSequences(spark: SparkSession, dir: String): DataFrame =
     packSequences(
-      Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text"))
+      Tables.documents(spark, dir).select("doc_id", "text")
         .select(col("doc_id"),
           regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens")),
       cap = 2048, nShards = 16)
@@ -326,7 +326,7 @@ object Extended {
   def q62PiiRedact(spark: SparkSession, dir: String): DataFrame = {
     val email = "[a-zA-Z0-9._]+@[a-zA-Z0-9]+\\.[a-zA-Z]+"
     val digits = "[0-9]{4,}"
-    Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text"))
+    Tables.documents(spark, dir).select("doc_id", "text")
       .select(col("doc_id"),
         regexp_count(col("text"), lit(email)).as("n_emails"),
         regexp_count(col("text"), lit(digits)).as("n_digit_runs"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -167,8 +167,7 @@ object Extended10 {
     * hash aggregate — bucket-sized, not corpus-sized. Counts are
     * integers; nothing floats. */
   def q185DsirBuckets(spark: SparkSession, dir: String): DataFrame =
-    bigramBuckets(Tables.fanout(
-        Tables.documents(spark, dir).select("text", "lang")))
+    bigramBuckets(Tables.documents(spark, dir).select("text", "lang"))
       .groupBy("bucket")
       .agg(sum(when(col("lang") === "en", 1L).otherwise(0L)).as("c_target"),
         count(lit(1)).as("c_raw"))
@@ -205,8 +204,7 @@ object Extended10 {
     * at 100 TB the weight pass would be sampled or cached, but the
     * weight table itself never grows past 10 000 rows. */
   def q186DsirSelect(spark: SparkSession, dir: String): DataFrame =
-    dsirSelect(Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text", "lang")))
+    dsirSelect(Tables.documents(spark, dir).select("doc_id", "text", "lang"))
 
   /** Core of q186 over any (doc_id, text, lang) frame — the property
     * spec drives it with generated corpora against a driver-side
@@ -284,9 +282,9 @@ object Extended10 {
     * before a single pair forms, for the price of one hash shuffle on
     * the vector value (the q24 exact-dedup cost). */
   def q187SemDedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
-        col("embedding").cast("array<double>").as("e")))
+        col("embedding").cast("array<double>").as("e"))
     semDedupAdaptive(emb, dim = 64, tau = 0.99)
   }
 
@@ -480,8 +478,7 @@ object Extended10 {
     * inherently sequential in language order. */
   def q188UnimaxMixture(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val perLang = Tables.fanout(
-        Tables.documents(spark, dir).select("lang", "n_chars"))
+    val perLang = Tables.documents(spark, dir).select("lang", "n_chars")
       .groupBy("lang").agg(sum("n_chars").as("cnt"))
       .as[(String, Long)].collect().toSeq
     unimaxAlloc(perLang, cap = 3L, budget = perLang.map(_._2).sum / 2)
@@ -539,8 +536,7 @@ object Extended10 {
     * Scale: pure in-row map under the scan — no shuffle, no state;
     * the mask never materializes outside the row. */
   def q189SpanCorruption(spark: SparkSession, dir: String): DataFrame =
-    spanCorruption(Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text")))
+    spanCorruption(Tables.documents(spark, dir).select("doc_id", "text"))
 
   /** Core of q189 over any (doc_id, text) frame — the property spec
     * drives it with generated docs against a driver-side md5
@@ -632,8 +628,7 @@ object Extended10 {
     * localCheckpoints, which hides the plan behind an RDD scan). */
   private[graft] def q190Plan(spark: SparkSession,
       dir: String): (DataFrame, Seq[DataFrame]) =
-    bm25Plan(Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text")))
+    bm25Plan(Tables.documents(spark, dir).select("doc_id", "text"))
 
   /** Core of q190 over any (doc_id, text) frame — the property spec
     * drives it with generated corpora against a driver-side BM25
@@ -738,8 +733,7 @@ object Extended10 {
     * segment lifecycle). Segments derive inline (testdata ships no
     * index). */
   def q207Bm25Incr(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text"))
+    val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val store = docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L)
     val batch = docs.filter(pmod(col("doc_id"), lit(7L)) === 0L)
     val postings = sparseIndex(store).union(sparseIndex(batch))
@@ -808,8 +802,7 @@ object Extended10 {
     * precedent for sketch-regime verification). */
   def q191KmvOverlap(spark: SparkSession, dir: String): DataFrame = {
     val kmv = udaf(new KmvAgg(2048))
-    val sk = Tables.fanout(Tables.documents(spark, dir)
-        .select("source", "text"))
+    val sk = Tables.documents(spark, dir).select("source", "text")
       .select(col("source"), explode(toks(col("text"))).as("w"))
       .select(col("source"),
         graft.functions.Md5Bucket.md5Bucket(col("w"), 15, 0).as("h"))
@@ -922,8 +915,8 @@ object Extended10 {
     * Bloom-positive distinct grams. Only flagged (doc_id, n_hits)
     * rows ever leave the map. */
   def q193BloomDecontaminate(spark: SparkSession, dir: String): DataFrame =
-    bloomDecontaminate(Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text")))
+    bloomDecontaminate(
+      Layout.spread(Tables.documents(spark, dir).select("doc_id", "text")))
 
   /** Benchmark-sized Bloom width (VERDICT r9's one footgun): smallest
     * power of two ≥ 32·nGrams, clamped to [2^17, 2^27] bits
@@ -1089,10 +1082,10 @@ object Extended10 {
     * outer — dimension-sized at any corpus size. */
   def q197RrfHybrid(spark: SparkSession, dir: String): DataFrame = {
     val (out, caches) = rrfPlan(
-      Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text")),
-      Tables.fanout(Tables.embeddings(spark, dir)
+      Tables.documents(spark, dir).select("doc_id", "text"),
+      Tables.embeddings(spark, dir)
         .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("e0"))))
+          col("embedding").cast("array<double>").as("e0")))
     try out.localCheckpoint()
     finally caches.foreach(_.unpersist())
   }
@@ -1281,10 +1274,10 @@ object Extended10 {
     * full-probe and planted-recall tests instead. */
   def q199RrfHybridIvf(spark: SparkSession, dir: String): DataFrame = {
     val (out, caches) = rrfHybridIvfPlan(
-      Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text")),
-      Tables.fanout(Tables.embeddings(spark, dir)
+      Tables.documents(spark, dir).select("doc_id", "text"),
+      Tables.embeddings(spark, dir)
         .select(col("vec_id"),
-          col("embedding").cast("array<double>").as("e0"))),
+          col("embedding").cast("array<double>").as("e0")),
       dim = 64)
     try out.localCheckpoint()
     finally caches.foreach(_.unpersist())
@@ -1346,9 +1339,9 @@ object Extended10 {
     * [[ivfAppendAudit]]). Rows-only: cell boundaries are float k-means
     * fixpoints (q45/q108/q199 precedent). */
   def q200IvfAppend(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"),
-        col("embedding").cast("array<double>").as("e0")))
+        col("embedding").cast("array<double>").as("e0"))
     val base = emb.filter(pmod(col("vec_id"), lit(10L)) =!= 9)
     val batch = emb.filter(pmod(col("vec_id"), lit(10L)) === 9)
     val (index, cents) = ivfIndex(base, dim = 64, nCells = 16)
@@ -1427,7 +1420,7 @@ object Extended10 {
     * pruneCells = false: the inline index's cell column is COMPUTED
     * (the assignment UDF), so the candidate isin filter has nothing
     * below it to prune — and worse, the deterministic predicate pushes
-    * below fanout's repartition, collapsing the whole assignment to
+    * below any repartition, collapsing the whole assignment to
     * file-split parallelism (the q45 QTime finding, r11). The
     * broadcast pair join alone restricts the cells, at full width. */
   private[graft] def rrfHybridIvfPlan(docs: DataFrame, emb: DataFrame,
@@ -1489,7 +1482,7 @@ object Extended10 {
     // index) the probed-cell set goes in as a STATIC isin filter too:
     // partition pruning at the file listing, no DPP needed. With a
     // COMPUTED cell (inline) the filter is omitted — it would push
-    // below fanout's repartition and run the assignment UDF at
+    // below any repartition and run the assignment UDF at
     // file-split parallelism (q45's QTime finding) — and the
     // ≤ queries·nProbe-row pair join below restricts the cells on its
     // own, above the exchange at full width. The int8 quantize runs

@@ -60,7 +60,7 @@ object Extended2 {
     * never shuffles past tokenization. */
   def q68Tfidf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val tok = Tables.fanout(docs.select("doc_id", "text"))
+    val tok = docs.select("doc_id", "text")
       .select(col("doc_id"),
         explode(split(lower(col("text")), "[^a-z]+")).as("token"))
       .filter(col("token") =!= "")
@@ -207,7 +207,7 @@ object Extended2 {
         |         slice(toks, 2, size(toks) - 1),
         |         (a, b) -> named_struct('w1', a, 'w2', b))""".stripMargin)
     val wTot = Window.partitionBy("w1")
-    Tables.fanout(Tables.documents(spark, dir).select("text"))
+    Tables.documents(spark, dir).select("text")
       .select(toks.as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(explode(bigrams).as("bg"))

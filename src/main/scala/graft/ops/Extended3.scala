@@ -58,7 +58,7 @@ object Extended3 {
   def q88ChunkDocs(spark: SparkSession, dir: String): DataFrame = {
     val toks = filter(split(lower(col("text")), "[^a-z]+"),
       x => x =!= "")
-    Tables.fanout(Tables.documents(spark, dir).select(col("doc_id"), toks.as("toks")))
+    Tables.documents(spark, dir).select(col("doc_id"), toks.as("toks"))
       .withColumn("n", size(col("toks")).cast("long"))
       .filter(col("n") >= 1L)
       .select(col("doc_id"), col("toks"),
@@ -196,7 +196,7 @@ object Extended3 {
   def q93Repetition(spark: SparkSession, dir: String): DataFrame = {
     val toks = filter(split(lower(col("text")), "[^a-z]+"),
       x => x =!= "")
-    Tables.fanout(Tables.documents(spark, dir).select(col("doc_id"), toks.as("t")))
+    Tables.documents(spark, dir).select(col("doc_id"), toks.as("t"))
       .withColumn("n", size(col("t")).cast("long"))
       .filter(col("n") >= 3L)
       .withColumn("grams", transform(
@@ -575,7 +575,7 @@ object Extended3 {
   def q111PromptCompletion(spark: SparkSession, dir: String): DataFrame = {
     val toks = filter(split(lower(col("text")), "[^a-z]+"),
       x => x =!= "")
-    Tables.fanout(Tables.documents(spark, dir).select(col("doc_id"), toks.as("t")))
+    Tables.documents(spark, dir).select(col("doc_id"), toks.as("t"))
       .withColumn("n", size(col("t")).cast("long"))
       .filter(col("n") >= 40L)
       .select(col("doc_id"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -263,14 +263,10 @@ object Extended4 {
 
   def q125SetSimJoin(spark: SparkSession, dir: String): DataFrame = {
     val t = 0.6
-    val base = Tables.documents(spark, dir).select("doc_id", "text")
-    // fanout BEFORE the gram construction: the single-file scan yields
-    // ~2 input splits, and the per-doc gram build (tokenize + distinct
-    // + sort) is the query's heaviest map work — measured 5.9 s on 2
-    // tasks vs sub-second spread over the full parallelism
-    val corpus = Tables.fanout(base.unionByName(base.select(
-      (col("doc_id") + 1000000L).as("doc_id"),
-      concat(col("text"), lit(" planted near duplicate suffix")).as("text"))))
+    // the planted corpus comes spread: the per-doc gram build
+    // (tokenize + distinct + sort) is the query's heaviest map work —
+    // measured 5.9 s on 2 tasks vs sub-second spread wide
+    val corpus = Similarity.plantedCorpus(spark, dir)
     val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
     val tokd = corpus.select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 3)
@@ -357,10 +353,9 @@ object Extended4 {
       // expensive two-pointer verify below onto 2 cores (measured
       // 16.9 CPU-s on 2 tasks). A bare repartition on the distinct keys
       // is removed as redundant by the optimizer, so the eager stage
-      // boundary is what actually pins the 32-way spread — partition
-      // count must follow the VERIFY's cost, not the rows' size.
-      .repartition(spark.sparkContext.defaultParallelism,
-        col("a_id"), col("b_id"))
+      // boundary is what actually pins the spread — partition count
+      // follows the corpus the VERIFY reads, not the candidates' size.
+      .repartition(Layout.spreadParts(corpus), col("a_id"), col("b_id"))
       .pipe(ScaleOps.stageCheckpoint)
     // verify against BROADCAST gram sets: the gram table is O(corpus)
     // rows but each candidate pair would otherwise drag both arrays
@@ -465,7 +460,7 @@ object Extended4 {
     * per-doc score is in-row HOF arithmetic — no window, no scoring
     * shuffle, no array state. */
   def q127OovScore(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.fanout(Tables.documents(spark, dir))
+    val docs = Tables.documents(spark, dir)
     val toksCol = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
     // the vocab aggregate is fully distributed (partial+final on the
     // token key); only its 50-row RESULT reaches the driver — the same
@@ -500,7 +495,7 @@ object Extended4 {
     * per-doc roll-up shuffles (doc_id, flag) pairs only. */
   def q128DupGramRate(spark: SparkSession, dir: String): DataFrame = {
     val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    val grams = Tables.fanout(Tables.documents(spark, dir))
+    val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(array_distinct(

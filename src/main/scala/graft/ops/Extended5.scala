@@ -100,8 +100,8 @@ object Extended5 {
     * integer cross-product — |cum_s·N − cum_all·n_s| in decimal — and
     * becomes a float only in the final published division. */
   def q132KsDrift(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.fanout(Tables.documents(spark, dir)
-      .select("source", "n_chars"))
+    val d = Tables.documents(spark, dir)
+      .select("source", "n_chars")
     val counts = d.groupBy("source", "n_chars").agg(count(lit(1)).as("c"))
     val totals = d.groupBy("source").agg(count(lit(1)).as("n_s"))
     val gcounts = d.groupBy("n_chars").agg(count(lit(1)).as("gc"))
@@ -137,8 +137,7 @@ object Extended5 {
     * sort. */
   def q133CharGini(spark: SparkSession, dir: String): DataFrame = {
     val letters = ('a' to 'z').map(_.toString)
-    val withT = Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "text"))
+    val withT = Tables.documents(spark, dir).select("doc_id", "text")
       .withColumn("t", regexp_replace(lower(col("text")), "[^a-z]", ""))
       .withColumn("n_letters", length(col("t")).cast("long"))
       .filter(col("n_letters") > 0)
@@ -205,7 +204,7 @@ object Extended5 {
   def q135LengthBatches(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("bucket")
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
-    Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text"))
+    Tables.documents(spark, dir).select("doc_id", "text")
       .withColumn("n_tokens",
         regexp_count(col("text"), lit("\\S+")).cast("long"))
       .filter(col("n_tokens") > 0)
@@ -235,8 +234,8 @@ object Extended5 {
     * [[ScaleOps.shardedMd5Rank]] decomposes the rank md5-prefix-wise
     * and n_lang is a broadcast aggregate join. */
   def q136StratifiedSample(spark: SparkSession, dir: String): DataFrame =
-    stratifiedSample(Tables.fanout(Tables.documents(spark, dir)
-      .select("doc_id", "lang")))
+    stratifiedSample(Tables.documents(spark, dir)
+      .select("doc_id", "lang"))
 
   /** Core of q136 over any (doc_id, lang) frame — cross-impl-pinned
     * by SamplingCrossImplSpec: the sharded rank must equal a plain
@@ -266,8 +265,8 @@ object Extended5 {
     * (broadcast + partitioned top-k, no shuffle of the fact side) is
     * exactly what the composed system runs. */
   def q137KnnGraph(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val q = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     val w = Window.partitionBy("q_id")

@@ -36,8 +36,7 @@ object Extended6 {
     * the per-doc roll-up — the q125/q128 diamond rule; only
     * (doc_id, word) pairs ever shuffle. */
   def q138HapaxRate(spark: SparkSession, dir: String): DataFrame = {
-    val words = Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "text"))
+    val words = Tables.documents(spark, dir).select("doc_id", "text")
       .select(col("doc_id"), explode(array_distinct(toks)).as("w"))
       .pipe(ScaleOps.stageCheckpoint)
     // per-doc-distinct explode ⇒ count(w) == number of docs carrying w
@@ -62,8 +61,7 @@ object Extended6 {
     * plumbing as q128: streaming explode, partial+final min on the
     * gram key, (doc_id, flag) pairs only in the roll-up. */
   def q139GramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "text"))
+    val grams = Tables.documents(spark, dir).select("doc_id", "text")
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(array_distinct(
@@ -99,8 +97,7 @@ object Extended6 {
     // 2024-02-01T00:00:00Z — just past the events table's range, so
     // every age is positive; micros arithmetic is exact integer
     val anchorUs = 1706745600000000L
-    Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "ts", "value"))
+    Tables.events(spark, dir).select("user_id", "ts", "value")
       .select(col("user_id"),
         col("value").cast("decimal(18,6)").as("v"),
         least(expr(s"(($anchorUs - unix_micros(ts)) div 86400000000) div 7"),
@@ -164,8 +161,7 @@ object Extended6 {
     * the bigram table; corpus-sized data shuffles once per aggregate,
     * never as all-pairs. */
   def q142BigramLift(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "text"))
+    val base = Tables.documents(spark, dir).select("doc_id", "text")
       .select(toks.as("t"))
       .pipe(ScaleOps.stageCheckpoint)
     val uni = base.select(explode(col("t")).as("w"))
@@ -204,8 +200,7 @@ object Extended6 {
     * equi-join's fan-out per word is the number of sources carrying
     * it, bounded by the source count, never |corpus|². */
   def q143VocabOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val v = Tables.fanout(Tables.documents(spark, dir)
-        .select("source", "text"))
+    val v = Tables.documents(spark, dir).select("source", "text")
       .select(col("source"), explode(array_distinct(toks)).as("w"))
       .distinct()
       .pipe(ScaleOps.stageCheckpoint)
@@ -239,8 +234,7 @@ object Extended6 {
   def q144WinsorizedMean(spark: SparkSession, dir: String): DataFrame = {
     val wR = Window.partitionBy("event_type").orderBy("v", "event_id")
     val wN = Window.partitionBy("event_type")
-    val ranked = Tables.fanout(Tables.events(spark, dir)
-        .select("event_type", "event_id", "value"))
+    val ranked = Tables.events(spark, dir).select("event_type", "event_id", "value")
       .select(col("event_type"), col("event_id"),
         col("value").cast("decimal(18,6)").as("v"))
       .withColumn("rnk", row_number().over(wR))
@@ -278,8 +272,7 @@ object Extended6 {
     * row_number. This offset decomposition is exactly how a global
     * sort rank survives 100 TB. */
   def q145CurriculumStages(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "text"))
+    val d = Tables.documents(spark, dir).select("doc_id", "text")
       .select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
       .filter(col("n_tokens") > 0)
@@ -322,8 +315,8 @@ object Extended6 {
     * two distinct-aggregates on the user key; partial aggregation
     * collapses events to users before anything shuffles. */
   def q146AbTest(spark: SparkSession, dir: String): DataFrame = {
-    val byVariant = Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "event_type", "value"))
+    val byVariant = Tables.events(spark, dir)
+      .select("user_id", "event_type", "value")
       .groupBy((col("user_id") % 2).as("variant"))
       .agg(countDistinct("user_id").as("users"),
         countDistinct(when(col("event_type") === "purchase" &&

@@ -33,8 +33,8 @@ object Extended7 {
     * sized). Counts are exact; one final division. */
   def q147SessionTransitions(spark: SparkSession, dir: String): DataFrame = {
     val wU = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val trans = Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "event_id", "event_type", "ts"))
+    val trans = Tables.events(spark, dir)
+      .select("user_id", "event_id", "event_type", "ts")
       .withColumn("from_type", lag("event_type", 1).over(wU))
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("event_type").as("to_type"))
@@ -61,8 +61,7 @@ object Extended7 {
     * over docs or grams. */
   def q148VocabGrowth(spark: SparkSession, dir: String): DataFrame = {
     val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    val firstSeen = Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "text"))
+    val firstSeen = Tables.documents(spark, dir).select("doc_id", "text")
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("doc_id"), explode(array_distinct(
@@ -91,8 +90,7 @@ object Extended7 {
   def q149InterEventGaps(spark: SparkSession, dir: String): DataFrame = {
     val wU = Window.partitionBy("user_id", "event_type")
       .orderBy("ts", "event_id")
-    Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "event_id", "event_type", "ts"))
+    Tables.events(spark, dir).select("user_id", "event_id", "event_type", "ts")
       .withColumn("gap_s",
         expr("(unix_micros(ts) - unix_micros(lag(ts, 1) OVER " +
           "(PARTITION BY user_id, event_type ORDER BY ts, event_id))) " +
@@ -154,8 +152,7 @@ object Extended7 {
     * count table. Ties share a value, hence a bucket, so the
     * (value, event_id) tiebreak stays intact. */
   def q151QuantileNormalize(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.fanout(Tables.events(spark, dir)
-        .select("event_id", "event_type", "value"))
+    val ev = Tables.events(spark, dir).select("event_id", "event_type", "value")
       .select(col("event_id"), col("event_type"),
         col("value").cast("decimal(18,6)").as("v"))
     val bounds = ev.groupBy("event_type")
@@ -231,10 +228,10 @@ object Extended7 {
   def q154CanonicalDedup(spark: SparkSession, dir: String): DataFrame = {
     val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
     val base = Tables.documents(spark, dir).select("doc_id", "text")
-    val corpus = Tables.fanout(base.unionByName(
+    val corpus = base.unionByName(
       base.filter(col("doc_id") % 2 === 0).select(
         (col("doc_id") + 1000000L).as("doc_id"),
-        concat(col("text"), lit(" ...!!")).as("text"))))
+        concat(col("text"), lit(" ...!!")).as("text")))
     corpus
       .select(col("doc_id"), length(col("text")).cast("long").as("len"),
         md5(array_join(toks, " ")).as("ckey"))
@@ -256,8 +253,8 @@ object Extended7 {
     * 4-row count summary. Scale: both sides reduce to (doc_id, sha2)
     * — 40 B rows — before the join; text never crosses the wire. */
   def q155SnapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.fanout(Tables.documents(spark, dir)
-      .select("doc_id", "text"))
+    val base = Tables.documents(spark, dir)
+      .select("doc_id", "text")
     val v1 = base.select(col("doc_id"), sha2(col("text"), 256).as("h1"))
     val v2full = base.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"),

@@ -26,7 +26,7 @@ object Extended8 {
     * form cannot be distributed). The inverse-CDF thresholds on the
     * md5-uniform are exact hex-string comparisons — engine-identical;
     * sums are decimal-exact with one final division per replicate. At
-    * 100 TB: B× fanout of (weight, value) pairs, partial aggregation
+    * 100 TB: B× replication of (weight, value) pairs, partial aggregation
     * does the rest; the replicate-spread standard error costs nothing
     * extra. */
   def q158PoissonBootstrap(spark: SparkSession, dir: String): DataFrame = {
@@ -61,12 +61,11 @@ object Extended8 {
     * day — no range join, no nested loop (a day-grid range join is
     * the naive form; the explode turns it into a hash shuffle on the
     * day key). Report days outside the observed range are dropped by
-    * the semi-join against actual activity days. 7× fanout of
+    * the semi-join against actual activity days. 7× expansion of
     * (user_id, day) pairs — bytes bounded by activity, not the
     * grid. */
   def q159RollingActiveUsers(spark: SparkSession, dir: String): DataFrame = {
-    val act = Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "ts"))
+    val act = Tables.events(spark, dir).select("user_id", "ts")
       .select(col("user_id"),
         to_date(col("ts")).as("day")).distinct()
     val days = act.select(col("day")).distinct()
@@ -90,8 +89,7 @@ object Extended8 {
     * pass's partitioning. All arithmetic in integer micros. */
   def q160CappedSessions(spark: SparkSession, dir: String): DataFrame = {
     val wU = Window.partitionBy("user_id").orderBy("us", "event_id")
-    val ev = Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "event_id", "ts"))
+    val ev = Tables.events(spark, dir).select("user_id", "event_id", "ts")
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("us"))
       .withColumn("new_sess",
@@ -119,8 +117,8 @@ object Extended8 {
     * percentile windows partition by stage label. Integer micros to
     * integer seconds. */
   def q161FunnelLatency(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.fanout(Tables.events(spark, dir)
-      .select("user_id", "event_type", "ts"))
+    val ev = Tables.events(spark, dir)
+      .select("user_id", "event_type", "ts")
     val t1 = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min("ts").as("t1"))
     val t2 = ev.filter(col("event_type") === "click")
@@ -186,8 +184,8 @@ object Extended8 {
     // scale 2 every intermediate fits at full scale, so the flag
     // stays exact. The data is 2-decimal; the cast rounds identically
     // on both engines either way.
-    val e = Tables.fanout(Tables.events(spark, dir)
-        .select("event_id", "event_type", "value", "ts"))
+    val e = Tables.events(spark, dir)
+      .select("event_id", "event_type", "value", "ts")
       .select(col("event_id"), col("event_type"),
         col("value").cast("decimal(12,2)").as("v"),
         unix_micros(col("ts")).as("us"))
@@ -257,8 +255,8 @@ object Extended8 {
     * distance. Everything after the two groupBy counts is
     * stats-sized (sources × languages). */
   def q163LangmixDrift(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.fanout(Tables.documents(spark, dir)
-      .select("source", "lang"))
+    val d = Tables.documents(spark, dir)
+      .select("source", "lang")
     val bySl = d.groupBy("source", "lang").agg(count(lit(1)).as("c_sl"))
     val byS = d.groupBy("source").agg(count(lit(1)).as("n_s"))
     val byL = d.groupBy("lang").agg(count(lit(1)).as("c_l"))
@@ -293,8 +291,7 @@ object Extended8 {
     * output-type rule), and a sorted join is information-preserving
     * for integer ids. */
   def q165InvertedIndex(spark: SparkSession, dir: String): DataFrame =
-    invertedIndex(Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text")))
+    invertedIndex(Tables.documents(spark, dir).select("doc_id", "text"))
 
   /** Core of q165 over any (doc_id, text) frame — the cross-impl
     * property spec drives it with generated corpora. */
@@ -330,8 +327,8 @@ object Extended8 {
     * without a source-partitioned window over documents (≤10 reducers
     * otherwise; PlanAuditSpec forbids it). */
   def q166TemperatureSample(spark: SparkSession, dir: String): DataFrame =
-    temperatureSample(Tables.fanout(Tables.documents(spark, dir)
-      .select("doc_id", "source")))
+    temperatureSample(Tables.documents(spark, dir)
+      .select("doc_id", "source"))
 
   /** Core of q166 over any (doc_id, source) frame — cross-impl-pinned
     * by SamplingCrossImplSpec (skewed + singleton sources, budgets at

@@ -24,8 +24,7 @@ object Extended9 {
     * the path aggregate is ≤ |types|³ rows. */
   def q167PathAnalysis(spark: SparkSession, dir: String): DataFrame = {
     val wU = Window.partitionBy("user_id").orderBy("us", "event_id")
-    Tables.fanout(Tables.events(spark, dir)
-        .select("user_id", "event_id", "event_type", "ts"))
+    Tables.events(spark, dir).select("user_id", "event_id", "event_type", "ts")
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .withColumn("new_sess",
@@ -57,8 +56,8 @@ object Extended9 {
     * Scale: queries broadcast (bounded set), corpus never reshuffles
     * — q137's plan shape feeding an eval aggregate. */
   def q168RetrievalEval(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.fanout(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    val base = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val queries = base.filter(col("vec_id") < 50)
       .select((col("vec_id") + 1000000L).as("q_id"),
         transform(col("e"), x => x * 1.01).as("qe"))
@@ -97,8 +96,8 @@ object Extended9 {
     * exact integer cross-product; the published ratio is one rounded
     * division. Stats-sized after two counts. */
   def q169MixCells(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.fanout(Tables.documents(spark, dir)
-      .select("source", "lang"))
+    val d = Tables.documents(spark, dir)
+      .select("source", "lang")
     val bySl = d.groupBy("source", "lang").agg(count(lit(1)).as("c_sl"))
     val byS = d.groupBy("source").agg(count(lit(1)).as("n_s"))
     val byL = d.groupBy("lang").agg(count(lit(1)).as("c_l"))
@@ -137,8 +136,7 @@ object Extended9 {
     * key bounds segment starts at 10⁷ per document (10⁶ tokens);
     * beyond that widen the multiplier. */
   def q174SegmentDedup(spark: SparkSession, dir: String): DataFrame =
-    segmentDedup(Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text")))
+    segmentDedup(Tables.documents(spark, dir).select("doc_id", "text"))
 
   /** Core of q174 over any (doc_id, text) frame — the cross-impl
     * property spec drives it with generated corpora. */
@@ -192,9 +190,9 @@ object Extended9 {
     * driver, k-sized state, no global sort, no window. */
   def q182WeightedSample(spark: SparkSession, dir: String): DataFrame =
     weightedSampleWithoutReplacement(
-      Tables.fanout(Tables.documents(spark, dir)
+      Tables.documents(spark, dir)
         .select(col("doc_id"),
-          greatest(length(col("text")), lit(1)).cast("double").as("w"))),
+          greatest(length(col("text")), lit(1)).cast("double").as("w")),
       "doc_id", "w", k = 100, seed = 42L)
       .select(col("doc_id"), col("w").cast("long").as("weight"))
       .orderBy("doc_id")

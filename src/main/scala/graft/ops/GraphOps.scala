@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
@@ -324,25 +324,22 @@ object GraphOps {
     * min label). Exposed for spec pins on synthetic graphs. */
   private[graft] def labelPropagation(edges0: DataFrame, rounds: Int): DataFrame = {
     // evaluate the (possibly expensive) edge derivation once; the count
-    // sizes the per-round partitioning (ScaleOps.adaptiveParts — the
-    // q178 r17 finding: a cores-wide layout costs one overhead task per
-    // core per round regardless of data volume)
+    // sizes the per-round partitioning (Layout — the q178 r17 finding:
+    // a cores-wide layout costs one overhead task per core per round
+    // regardless of data volume). Vertex-sized frames ride the same
+    // layout (nUnd bounds the vertex count).
     val cached = edges0.select("src", "dst").distinct().persist()
     val nUnd = 2L * cached.count()
+    val parts = Layout.parts(nUnd, Layout.RowGrain)
     // persist PRE-PARTITIONED on the per-round join key: the cached
     // InMemoryRelation keeps hashpartitioning(dst), so every round's
     // edge⋈labels join re-shuffles only the vertex-sized labels side,
     // never the edge frame (without this, 8 rounds = 8 edge shuffles —
     // measured 3× slower at sf0.1)
-    val und = undirect(cached)
-      .repartition(ScaleOps.adaptiveParts(nUnd), col("dst")).persist()
-    // vertex-sized frames ride the same adaptive layout (nUnd bounds
-    // the vertex count): a cores-wide cached layout costs one overhead
-    // task per core per round (the q178 r17 finding)
-    val vertexParts = ScaleOps.adaptiveParts(nUnd)
+    val und = undirect(cached).repartition(parts, col("dst")).persist()
     var labels = und.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
-      .coalesce(vertexParts)
+      .coalesce(parts)
     // per-round label cache, released at each eager checkpoint — the
     // q178 recompute fix (see pagerankRanks): without it every round's
     // labels exchange re-executes the chain back to the last checkpoint
@@ -362,7 +359,7 @@ object GraphOps {
         .groupBy("id")
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("id"), (-col("m.nl")).as("lbl"))
-        .coalesce(vertexParts)
+        .coalesce(parts)
       if ((i + 1) % 4 == 0) {
         next = next.localCheckpoint(true)
         releasePinned()
@@ -590,15 +587,15 @@ object GraphOps {
     // and wed below, and without the cache each reference re-evaluates
     // the caller's (events-self-join-sized) edge derivation.
     // The count both materializes the cache and sizes the ROUND
-    // partitioning (ScaleOps.adaptiveParts, guide §2): every iteration
+    // partitioning (Layout, guide §2): every iteration
     // re-scans wed/ids/ranks, and at a cores-wide layout each round
     // paid one task of pure overhead per core regardless of data
     // (measured r17 — 2–4 executor-CPU-s per round-stage on 771 edges
     // at 32 tasks vs ~0.05 at 4; 10 rounds made that the whole query).
     val cached = edges0.select("src", "dst").distinct().persist()
     val nE = cached.count()
-    val edges = ScaleOps.coalesceAdaptive(cached, nE)
-    val edgeParts = ScaleOps.adaptiveParts(2L * nE)
+    val edges = cached.coalesce(Layout.parts(nE, Layout.RowGrain))
+    val edgeParts = Layout.parts(2L * nE, Layout.RowGrain)
     val und = undirect(edges)
     val deg = und.groupBy("src").agg(count(lit(1)).as("d"))
       .select(col("src").as("id"), col("d"))
@@ -617,8 +614,8 @@ object GraphOps {
       .coalesce(edgeParts).persist()
     val idsCached = deg.select(col("id")).persist()
     val nV = idsCached.count()
-    val vertexParts = ScaleOps.adaptiveParts(nV)
-    val ids = ScaleOps.coalesceAdaptive(idsCached, nV)
+    val vertexParts = Layout.parts(nV, Layout.RowGrain)
+    val ids = idsCached.coalesce(vertexParts)
     var ranks = ids.select(col("id"), lit(1.0).as("r"))
     // every round's ranks frame is persisted (vertex-sized): the %4
     // checkpoint otherwise executes a 4-round-deep plan whose repeated

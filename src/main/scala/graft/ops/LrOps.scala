@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 
 /** Distributed logistic regression — the cheap supervised quality filter
   * of production corpus pipelines (CCNet/fastText shape: distill an
@@ -60,7 +60,7 @@ object LrOps {
     * (de)serialization was the per-row cost; only the scalar residual
     * g stays a UDF (weights in `references` keep the codegen cache
     * warm across epochs). The fit input is cached AND coalesced to a
-    * row-count-adaptive partition layout (ScaleOps.adaptiveParts):
+    * row-count-adaptive partition layout (`Layout.parts`):
     * each epoch is one job over the cached frame, and at a cores-wide
     * layout every epoch paid one overhead task per core regardless of
     * data (the q178 r17 finding). Gradient values are IEEE-identical
@@ -75,8 +75,7 @@ object LrOps {
     val cached = if (owned) data.persist() else data
     try {
       // LR's per-row work is a dim-length dot (light) → a coarse grain
-      val df = graft.ops.ScaleOps.coalesceAdaptive(cached, cached.count(),
-        rowsPerPart = 1L << 20)
+      val df = cached.coalesce(Layout.parts(cached.count(), Layout.DotGrain))
       val w = new Array[Double](dim)
       val gsums = (0 until dim).map(j =>
         sum(col("g") * coalesce(try_element_at(col("f"), lit(j + 1)), lit(0.0)))
@@ -112,8 +111,7 @@ object LrOps {
     val nPunct = length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", ""))
     val nUpper = length(regexp_replace(col("text"), "[^A-Z]", ""))
     val nTokens = greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
-    Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "n_chars", "text"))
+    Tables.documents(spark, dir).select("doc_id", "n_chars", "text")
       .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
       .select(col("doc_id"),
         when(TextOps.qualityScore > 0.55, 1.0).otherwise(0.0).as("label"),

@@ -186,7 +186,7 @@ object PqOps {
       qvecs: Array[(Long, Array[Double])], topR: Int,
       depth: Int): DataFrame = {
     // the 8-byte code column is the ONLY corpus column the ADC scan
-    // carries; one in-row encode pass, then a 5-row broadcast fanout
+    // carries; one in-row encode pass, then a 5-row broadcast cross
     // (no shuffle) and the per-query top-R cut map-side
     // (WindowGroupLimit) before the rank exchange
     val codes = emb.select(col("id"),
@@ -196,7 +196,7 @@ object PqOps {
 
   /** The ADC scan + map-side top-R frame over a (id, code) corpus —
     * exposed so PqSpec can pin its plan shape (WindowGroupLimit
-    * rank-limit pushdown, broadcast query fanout, codes-only scan). */
+    * rank-limit pushdown, broadcast query cross, codes-only scan). */
   private[graft] def adcTopFrame(codes: DataFrame, model: PqModel,
       qvecs: Array[(Long, Array[Double])], topR: Int): DataFrame = {
     val spark = codes.sparkSession
@@ -267,9 +267,9 @@ object PqOps {
     * lowest-id queries, exact-rerank the top-32 and emit the top-10.
     * Rows-only (float codebooks). */
   def q201PqAdc(spark: SparkSession, dir: String): DataFrame = {
-    val emb = graft.Tables.fanout(graft.Tables.embeddings(spark, dir)
+    val emb = graft.Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"),
-          col("embedding").cast("array<double>").as("e")))
+          col("embedding").cast("array<double>").as("e"))
       .filter(size(col("e")) === 64)
       .persist()
     try {

@@ -16,42 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOps {
 
-  /** Scale-adaptive partition count for a row-counted frame (guide §2:
-    * derive partitioning from input size, never a constant tuned for
-    * either local mode or the cluster). Iterative drivers (PageRank /
-    * LPA rounds, Lloyd rounds, LR epochs, BPE merges) re-scan a cached
-    * model/vertex/vocab-sized frame once per round: at a cores-sized
-    * constant partition count every round pays `partitions` tasks of
-    * pure per-task overhead — measured r17 (QTime, q178): the SAME
-    * per-round stage costs 2–4 executor-CPU-s at 32 one-per-core tasks
-    * on a 771-edge frame and ~0.05 CPU-s at 4, i.e. the data work is
-    * nil and overhead scales with the task count. AQE cannot fix it:
-    * cached-plan output partitioning is pinned
-    * (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is
-    * false by default), so the cores-wide layout of a cached frame
-    * rides through every round.
-    *
-    * `rowsPerPart` is the per-task work grain (default 256k rows ≈
-    * 50–100 ms of hash-probe/agg work per task); callers with heavier
-    * per-row work pass a smaller grain. Uncapped above: at 100 TB the
-    * count grows with the data, which is the point.
-    * SPARK_GRAFT_ROWS_PER_PART overrides the grain fleet-wide. */
-  def adaptiveParts(rows: Long, rowsPerPart: Long = 262144L): Int = {
-    val grain = sys.env.get("SPARK_GRAFT_ROWS_PER_PART")
-      .map(_.toLong).getOrElse(rowsPerPart)
-    math.max(1L, (rows + grain - 1L) / grain).toInt
-  }
-
-  /** Coalesce a CACHED frame to [[adaptiveParts]] of its row count —
-    * narrow (reads the cache, no shuffle, no recompute), a no-op when
-    * the frame is already at or below the target. The caller supplies
-    * `rows` (typically from the count that materialized the cache). */
-  def coalesceAdaptive(df: DataFrame, rows: Long,
-      rowsPerPart: Long = 262144L): DataFrame = {
-    val p = adaptiveParts(rows, rowsPerPart)
-    if (p < df.rdd.getNumPartitions) df.coalesce(p) else df
-  }
-
   /** Inner equi-join with the fact side's hot keys spread over `nSalts`
     * sub-keys, and the dim side replicated once per salt. The join then
     * distributes a hot key over nSalts reducers instead of one.

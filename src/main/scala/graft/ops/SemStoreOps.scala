@@ -367,9 +367,9 @@ object SemStoreOps {
     * inline (testdata ships no store — the q200/q203 precedent).
     * Rows-only (float cells). */
   def q208SemDedupIncr(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
-        col("embedding").cast("array<double>").as("e")))
+        col("embedding").cast("array<double>").as("e"))
     val batch = emb.filter(pmod(col("id"), lit(7L)) === 0L)
     val (model, reps) =
       semStoreBuild(emb.filter(pmod(col("id"), lit(7L)) =!= 0L), dim = 64)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -229,7 +229,9 @@ object Similarity {
     * synthetic corpus (all driver texts are mutually distant). */
   private[graft] def plantedCorpus(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir).select("doc_id", "text")
-    Tables.fanout(base.unionByName(base.select(
+    // spread: every consumer runs per-doc md5 sketches or gram builds
+    // over it (q25, q125, q153, q164, q183, q209)
+    Layout.spread(base.unionByName(base.select(
       (col("doc_id") + 1000000L).as("doc_id"),
       concat(col("text"), lit(" planted near duplicate suffix")).as("text"))))
   }
@@ -286,8 +288,8 @@ object Similarity {
     * vector is broadcast (1 row); the scan side stays narrow and the
     * top-k is TakeOrderedAndProject — no shuffle of the fact side. */
   def q26CosineTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
     emb.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= 0)
@@ -338,8 +340,8 @@ object Similarity {
     * At 100 TB the bands become the partitioning key (each query touches
     * 4 buckets instead of the full corpus). */
   def q38AnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("bands", signBands(col("e")))
     // persisted: both the corpus side and the query side read this
     val rows = emb.select(col("vec_id"), col("e"),
@@ -417,8 +419,8 @@ object Similarity {
     * planted as scaled copies (same direction ⇒ identical signs on every
     * plane ⇒ all 4 bands match ⇒ always a candidate). */
   def q39EmbedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.fanout(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    val base = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     val corpus = base.unionByName(base.select(
       (col("vec_id") + 1000000L).as("vec_id"),
       transform(col("e"), x => x * 1.01).as("e")))
@@ -458,7 +460,9 @@ object Similarity {
     * 1-token-suffix copies (vote shift ≤ 3 per bit). */
   def q41SimHash(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir).select("doc_id", "text")
-    val corpus = Tables.fanout(base.unionByName(base.select(
+    // spread before the shingle md5s, the query's per-row CPU center:
+    // a small corpus scans as one task
+    val corpus = Layout.spread(base.unionByName(base.select(
       (col("doc_id") + 1000000L).as("doc_id"),
       concat(col("text"), lit(" zz")).as("text"))))
     val ex = portableShingleRows(corpus)
@@ -850,8 +854,8 @@ object Similarity {
   def q45AnnIvf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val nProbe = 4
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("e")))
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
     // The quantizer trains on a DETERMINISTIC BOUNDED hash-sample
     // (Clustering.trainingSample: ≤ 256·k vectors, the Faiss practice
     // — a coarse quantizer needs the density shape, not every vector).
@@ -882,7 +886,7 @@ object Similarity {
     }
     // the probed-cell restriction is a BROADCAST SEMI-ish join, not an
     // isin FILTER: a deterministic filter on the UDF column pushes
-    // below fanout's repartition and the whole assignment then runs at
+    // below any repartition and the whole assignment then runs at
     // file-split parallelism (QTime at 1000×: one 6-task stage holding
     // 73.8 of the query's 90 s) — the join keeps the argmin above the
     // exchange at full width. On a STORED cell column (q199's prebuilt
@@ -915,7 +919,7 @@ object Similarity {
     * final matrix is ≤ |sources|² rows. */
   def q175SourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val pairs = portablePairs(Tables.fanout(docs.select("doc_id", "text")))
+    val pairs = portablePairs(Layout.spread(docs.select("doc_id", "text")))
       .select("a_id", "b_id")
     val src = docs.select(col("doc_id"), col("source"))
     pairs

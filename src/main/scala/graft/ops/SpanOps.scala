@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 
 /** q202 — exact substring (span) deduplication: the Lee et al. 2022
   * "Deduplicating Training Data Makes Language Models Better"
@@ -67,18 +67,14 @@ object SpanOps {
     * carries ~1k genuinely duplicated 8-token spans). */
   private val L = 8
 
-  /** Tokenized base frame (doc_id, t, n). Fans out BEFORE the digest
-    * pass: the per-span slice/concat/md5 is the CPU center and must
-    * not serialize on the scan's split count (Tables.fanout contract —
-    * no-op on many-split input). Null text coalesces to "" so a null
-    * row yields (n=0, kept_text="") exactly like the oracle's
-    * coalesce — without it, array_join over null tokens would emit
-    * null kept_text and silently diverge. */
+  /** Tokenized base frame (doc_id, t, n). Null text coalesces to ""
+    * so a null row yields (n=0, kept_text="") exactly like the
+    * oracle's coalesce — without it, array_join over null tokens would
+    * emit null kept_text and silently diverge. */
   private[graft] def tokenBase(docs: DataFrame): DataFrame = {
     val toks = filter(split(lower(coalesce(col("text"), lit(""))),
       "[^a-z]+"), x => x =!= "")
-    graft.Tables.fanout(docs.select("doc_id", "text"))
-      .select(col("doc_id"), toks.as("t"))
+    docs.select(col("doc_id"), toks.as("t"))
       .withColumn("n", size(col("t")).cast("long"))
   }
 
@@ -127,9 +123,8 @@ object SpanOps {
       // the full rewritten corpus — long-string columns cache worse
       // than the sampling pass's recompute of the assembly tail (the
       // q62 redacted-corpus precedent, 1.4× at 1000×). The sampled
-      // chain starts at the fanout shuffle, so the replay
-      // is tokenize + kept-filter over map outputs — never the scan,
-      // and never the digest pass (cached)
+      // chain replays tokenize + kept-filter from the scan, never the
+      // digest pass (cached)
       .orderBy("doc_id")
   }
 
@@ -338,12 +333,14 @@ object SpanOps {
     * `spark.catalog.clearCache()` after consuming the result (Verify/
     * Bench/specs all do) or the digest cache outlives the query. */
   def q202SpanDedup(spark: SparkSession, dir: String): DataFrame =
-    spanDedup(Tables.documents(spark, dir).select("doc_id", "text"))
+    spanDedup(
+      Layout.spread(Tables.documents(spark, dir).select("doc_id", "text")))
 
   /** q204 — keep-first span dedup over the documents table (same
     * digest-persist caller contract as q202). */
   def q204SpanDedupKeepOne(spark: SparkSession, dir: String): DataFrame =
-    spanDedupKeepFirst(Tables.documents(spark, dir).select("doc_id", "text"))
+    spanDedupKeepFirst(
+      Layout.spread(Tables.documents(spark, dir).select("doc_id", "text")))
 
   /** q203 — incremental span dedup over the documents table: docs with
     * doc_id ≡ 0 (mod 7) arrive as the new batch, the rest are the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoders => SqlEncoders}
@@ -171,44 +171,6 @@ object StreamingOps {
     else rdr.option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
-  /** Bytes on disk under `dir/table.parquet` (file or directory) — the
-    * cheap input-volume probe [[drainParts]] sizes from. */
-  private[graft] def tableBytes(spark: SparkSession, dir: String,
-      table: String): Long = pathBytes(spark, s"$dir/$table.parquet")
-
-  private[graft] def pathBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .getContentSummary(p).getLength
-  }
-
-  /** Scale-adaptive shuffle/state partition count for ONE drain,
-    * derived from the stream's input volume (guide §2: derive
-    * partitioning from input size, never a constant tuned for local
-    * mode or the cluster). Why it matters for STREAMING specifically:
-    * each stateful operator keeps one state-store instance PER SHUFFLE
-    * PARTITION, each paying per-trigger provider/commit overhead
-    * regardless of rows (round 9 measured q195's symmetric-hash
-    * join: 4 stores/partition — summed commit 75–90 s/batch at 32
-    * partitions for 40k state rows, ~6 s at 8, ~0.9 s at 2), streaming
-    * has NO AQE to coalesce post-shuffle partitions, and the
-    * partition count is frozen into the checkpoint at first start. A
-    * deployment therefore sizes state partitions to state VOLUME —
-    * exactly what this derives. Floor 2 (never collapse a distributed
-    * drain to one task; multi-partition state semantics stay
-    * exercised); cap 4× cluster width (more instances than cores buys
-    * no intra-trigger parallelism, only commit overhead). Grain:
-    * SPARK_GRAFT_STATE_PART_BYTES (default 8 MiB of input per
-    * partition — at the driver's sf0.1 this yields 2, at the 100×
-    * probe ~25, past 1000× it rides the cap: grows with data, not
-    * with the bench host). */
-  private[graft] def drainParts(spark: SparkSession, bytes: Long): Int = {
-    val grain = sys.env.getOrElse("SPARK_GRAFT_STATE_PART_BYTES",
-      (8L << 20).toString).toLong
-    val cap = spark.sparkContext.defaultParallelism.toLong * 4L
-    math.max(2L, math.min((bytes + grain - 1L) / grain, cap)).toInt
-  }
-
   /** Drain an AvailableNow query DISTRIBUTED and CLEAN UP: foreachBatch
     * passes each trigger to `perBatch`, which returns the batch's result
     * already materialized in blocks on the EXECUTORS (the default hook
@@ -252,7 +214,7 @@ object StreamingOps {
   private[graft] def drainAndClean(spark: SparkSession, agg: DataFrame,
       name: String, outputMode: String = "complete",
       // scale-adaptive shuffle/state partition count for this drain
-      // ([[drainParts]]); -1 = keep the session setting. Also governs
+      // (`Layout.stateParts`); -1 = keep the session setting. Also governs
       // the perBatch hook's batch jobs — micro-batch-sized inputs want
       // the same adaptive layout (the r17 per-task-overhead finding).
       shuffleParts: Int = -1,
@@ -418,7 +380,7 @@ object StreamingOps {
     * finishes, so the checkpoint is single-use by construction). */
   def q172StreamingAvailableNow(spark: SparkSession, dir: String): DataFrame =
     drainAndClean(spark, hourlyWindows(eventStream(spark, dir)), "q172",
-      shuffleParts = drainParts(spark, tableBytes(spark, dir, "events")))(
+      shuffleParts = Layout.stateParts(Tables.events(spark, dir)))(
       _.orderBy("ws_us"))
 
   // ---------------------------------------------------------------- q194
@@ -436,7 +398,7 @@ object StreamingOps {
     // on-heap default OOM'd the 1000× probe at ~10M sessions)
     withRocksDbState(spark) {
       drainAndClean(spark, userSessions(eventStream(spark, dir)), "q194",
-        shuffleParts = drainParts(spark, tableBytes(spark, dir, "events")))(
+        shuffleParts = Layout.stateParts(Tables.events(spark, dir)))(
         _.orderBy("user_id", "start_us"))
     }
 
@@ -463,7 +425,7 @@ object StreamingOps {
       ev().filter(col("event_type") === "click"),
       ev().filter(col("event_type") === "purchase"))
     drainAndClean(spark, joined, "q195", outputMode = "append",
-      shuffleParts = drainParts(spark, tableBytes(spark, dir, "events")))(
+      shuffleParts = Layout.stateParts(Tables.events(spark, dir)))(
       _.orderBy("c_id", "p_id"))
   }
 
@@ -482,7 +444,7 @@ object StreamingOps {
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_events"), sumValue)
     drainAndClean(spark, agg, "q196",
-      shuffleParts = drainParts(spark, tableBytes(spark, dir, "events")))(
+      shuffleParts = Layout.stateParts(Tables.events(spark, dir)))(
       _.select(col("c_mktsegment"), col("n_events"), col("sum_value"))
         .orderBy("c_mktsegment"))
   }
@@ -512,7 +474,7 @@ object StreamingOps {
         graft.functions.Md5Bucket.md5Bucket(col("w"), 15, 0).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("sk"))
     drainAndClean(spark, agg, "q192",
-      shuffleParts = drainParts(spark, tableBytes(spark, dir, "documents")))(
+      shuffleParts = Layout.stateParts(Tables.documents(spark, dir)))(
       _.select(col("source"), size(col("sk")).cast("long").as("d"))
         .orderBy("source"))
   }
@@ -541,7 +503,7 @@ object StreamingOps {
       import org.apache.spark.sql.expressions.Window
       val agg = statefulUpsertTws(eventStream(spark, dir))
       drainAndClean(spark, agg, "q198", outputMode = "update",
-        shuffleParts = drainParts(spark, tableBytes(spark, dir, "events"))) { df =>
+        shuffleParts = Layout.stateParts(Tables.events(spark, dir))) { df =>
         val w = Window.partitionBy("user_id", "event_type")
           .orderBy(col("ts_us").desc, col("event_id"))
         df.withColumn("rn", row_number().over(w))
@@ -663,7 +625,7 @@ object StreamingOps {
     // the drain returns its result over batches it local-checkpointed,
     // so the store dir can be deleted as soon as the drain returns
     try streamingSpanIngest(spark, stream, store0, root.toString,
-      shuffleParts = drainParts(spark, tableBytes(spark, dir, "documents")))
+      shuffleParts = Layout.stateParts(Tables.documents(spark, dir)))
     finally graft.FsUtil.deleteRecursively(root)
   }
 
@@ -718,14 +680,14 @@ object StreamingOps {
     * reuses it with the checkpoint across restarts). */
   def q209StreamingSigIngest(spark: SparkSession, dir: String): DataFrame = {
     // persisted across its two staging consumers (store bands + batch
-    // file) — both otherwise re-derive the fanout corpus from parquet;
+    // file) — both otherwise re-derive the planted corpus from parquet;
     // released before the drain, which never touches it
     val corpus = Similarity.plantedCorpus(spark, dir).persist()
     val work = java.nio.file.Files.createTempDirectory("graft-sigingest")
     // one adaptive partition count for the whole query (store init
     // layout ≡ per-trigger read ≡ drain state), sized from the source
     // table the planted corpus derives from
-    val parts = drainParts(spark, tableBytes(spark, dir, "documents"))
+    val parts = Layout.stateParts(Tables.documents(spark, dir))
     try {
       val store0 = Similarity.sigBands(
         corpus.filter(col("doc_id") < 1000000L))
@@ -804,15 +766,15 @@ object StreamingOps {
     * and reuses it with the checkpoint across restarts, loading the
     * frozen model from the stored P_model table. */
   def q210StreamingSemIngest(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.fanout(Tables.embeddings(spark, dir)
+    val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
-        col("embedding").cast("array<double>").as("e")))
+        col("embedding").cast("array<double>").as("e"))
     val (model, reps) = SemStoreOps.semStoreBuild(
       emb.filter(pmod(col("id"), lit(7L)) =!= 0L), dim = 64)
     val work = java.nio.file.Files.createTempDirectory("graft-semingest")
     // one adaptive partition count for store layout and drain state,
     // sized from the source table (the q209 convention)
-    val parts = drainParts(spark, tableBytes(spark, dir, "embeddings"))
+    val parts = Layout.stateParts(Tables.embeddings(spark, dir))
     try {
       VersionedStore.init(reps, s"$work/store", parts)
       emb.filter(pmod(col("id"), lit(7L)) === 0L)

@@ -22,7 +22,7 @@ object TextOps {
     * 32-byte digests, not documents — the scale-correct exact-dedup shape
     * (the full text never leaves the scan stage). */
   def q24DedupExact(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text"))
+    Tables.documents(spark, dir).select("doc_id", "text")
       .groupBy(sha2(col("text"), 256).as("text_hash"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "text_hash", "n_copies")
@@ -33,7 +33,7 @@ object TextOps {
     * Partial aggregation collapses each partition to its distinct tokens
     * before the shuffle; the final top-k is TakeOrderedAndProject. */
   def q27WordcountTopK(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.documents(spark, dir).select("text"))
+    Tables.documents(spark, dir).select("text")
       .select(explode(split(lower(col("text")), "[^a-z]+")).as("token"))
       .filter(col("token") =!= "")
       .groupBy("token")
@@ -58,7 +58,7 @@ object TextOps {
     val c_es = (occ(col("padded"), " el ") + occ(col("padded"), " y ")).as("c_es")
     val c_fr = (occ(col("padded"), " le ") + occ(col("padded"), " et ")).as("c_fr")
     val c_de = (occ(col("padded"), " der ") + occ(col("padded"), " und ")).as("c_de")
-    Tables.fanout(Tables.documents(spark, dir).select("doc_id", "lang", "text"))
+    Tables.documents(spark, dir).select("doc_id", "lang", "text")
       .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
       .select(col("doc_id"), col("lang").as("labeled"), c_en, c_es, c_fr, c_de)
       .withColumn("predicted",
@@ -102,8 +102,7 @@ object TextOps {
     val nUpper = length(regexp_replace(col("text"), "[^A-Z]", ""))
     val nTokens = greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
     val nStop = stopwords.map(occ(col("padded"), _)).reduce(_ + _)
-    Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "n_chars", "text"))
+    Tables.documents(spark, dir).select("doc_id", "n_chars", "text")
       .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
       .select(
         col("doc_id"),
@@ -120,8 +119,7 @@ object TextOps {
     * count (letter runs / single digits / single punctuation — the shape
     * of GPT-2's pretokenization), and the chars/4 estimate. */
   def q36TokenCount(spark: SparkSession, dir: String): DataFrame =
-    Tables.fanout(Tables.documents(spark, dir)
-        .select("doc_id", "n_chars", "text"))
+    Tables.documents(spark, dir).select("doc_id", "n_chars", "text")
       .select(
         col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).as("ws_tokens"),
@@ -135,7 +133,7 @@ object TextOps {
     * 64-bit-prefix short form. */
   def q37Fingerprint(spark: SparkSession, dir: String): DataFrame = {
     val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
-    Tables.fanout(Tables.documents(spark, dir).select("doc_id", "text"))
+    Tables.documents(spark, dir).select("doc_id", "text")
       .select(
         col("doc_id"),
         sha2(norm, 256).as("fp_hex"),
@@ -196,8 +194,7 @@ object TextOps {
     * lesson: an unpersisted frame referenced twice re-evaluates the
     * corpus scan per reference). */
   def q184CollocationLift(spark: SparkSession, dir: String): DataFrame =
-    collocationLift(Tables.fanout(
-      Tables.documents(spark, dir).select("text")))
+    collocationLift(Tables.documents(spark, dir).select("text"))
 
   /** Core of q184 over any (text) frame — the cross-impl property
     * spec drives it with generated corpora. */

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{Declared, Tables}
+import graft.{Declared, Layout, Tables}
 import graft.ops.{Similarity, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -79,7 +79,7 @@ object CorpusPipeline {
     * replicated in one DuckDB statement ([[oracleSql]]). */
   def q46CorpusPrep(spark: SparkSession, dir: String): DataFrame =
     prepare(
-      Tables.fanout(Tables.documents(spark, dir)
+      Layout.spread(Tables.documents(spark, dir)
         .select("doc_id", "text", "n_chars", "lang")),
       minQuality = 0.3, tokenBudget = 10000L)
 
@@ -193,7 +193,7 @@ object CorpusPipeline {
     * every 97th document (the q89/q99 convention). Rows-only check
     * (LSH stage ⇒ no SQL oracle); CorpusPipelineSpec pins the laws. */
   def q100EpochBuild(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.fanout(Tables.documents(spark, dir)
+    val docs = Layout.spread(Tables.documents(spark, dir)
       .select("doc_id", "text", "n_chars", "lang"))
     epoch(docs, docs.filter(pmod(col("doc_id"), lit(97L)) === 0L),
       minQuality = 0.3, tokenBudget = 100000L, binCap = 2048)

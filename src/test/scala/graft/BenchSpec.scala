@@ -49,6 +49,20 @@ class BenchSpec extends AnyFunSuite {
       c.get("stage_rows").elements.asScala.map(_.get("id").asInt -> call(c)))
     assert(owner.map(_._1).distinct.size == owner.size,
       "a stage is profiled under more than one call")
+    // shuffle bytes and spill: a call's totals are its stage rows' sums,
+    // and a stage reports shuffle bytes exactly when it moved shuffle
+    // records; both queries shuffle (q01's sort, q172's aggregate)
+    val byteKeys = Seq("shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
+    calls.foreach { c =>
+      val rows = c.get("stage_rows").elements.asScala.toSeq
+      byteKeys.foreach(k => assert(c.get(k).asLong == rows.map(_.get(k).asLong).sum, s"${call(c)} $k"))
+      rows.foreach { r =>
+        for (side <- Seq("read", "write"))
+          assert((r.get(s"shuffle_${side}_records").asLong > 0) ==
+            (r.get(s"shuffle_${side}_bytes").asLong > 0), s"${call(c)} stage ${r.get("id")} $side")
+      }
+      assert(c.get("shuffle_read_bytes").asLong > 0 && c.get("shuffle_write_bytes").asLong > 0, call(c))
+    }
     // both passes drain; every drain job and its profiled stages are q172's
     val drains = drainJobs.asScala.toSeq
     assert(drains.map(_._2).toSet ==

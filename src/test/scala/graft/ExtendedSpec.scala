@@ -30,8 +30,7 @@ class ExtendedSpec extends AnyFunSuite {
 
   test("q60: sharded packing equals the single-global-window formulation") {
     import org.apache.spark.sql.expressions.Window
-    val tok = Tables.fanout(
-      Tables.documents(spark, dir).select("doc_id", "text"))
+    val tok = Tables.documents(spark, dir).select("doc_id", "text")
       .select(col("doc_id"),
         regexp_count(col("text"), lit("\\S+")).cast("long").as("n_tokens"))
     val w = Window.orderBy("doc_id")

@@ -41,6 +41,15 @@ class SessionSpec extends AnyFunSuite {
     assert(callers == List("Session.scala"))
   }
 
+  test("defaultParallelism is read only in Layout.scala") {
+    // partition counts come from the data through Layout; its drain
+    // cap is the one count that reads the cluster's width
+    val readers = codeLines("src/main/scala")
+      .filter(_._2.exists(_.contains("defaultParallelism")))
+      .map(_._1.getFileName.toString)
+    assert(readers == List("Layout.scala"), s"defaultParallelism read in $readers")
+  }
+
   test("no spec builds a session; session confs and the function registry each have one route") {
     // string literals blanked: this spec names the patterns it scans for
     def callers(dir: String, pattern: String) = codeLines(dir).filter(_._2.exists(
