@@ -67,8 +67,10 @@ object Bench {
   /** Times every query of `selected` in `runs` passes (per chunk, as
     * [[main]] describes) and returns the one-line JSON [[main]] prints, each
     * query's min over its successful passes, and the profile JSON of
-    * every timed call: its query, pass, outcome, wall time and janino
-    * compiles, plus what [[CallProfile]] attributed to it. Pass 1 is
+    * every timed call: its query, pass, outcome, wall time, janino
+    * compiles and the RDDs [[SparkEntry.releasing]] freed after it
+    * (`released_rdds`: what a lazy plan left to the harness), plus
+    * what [[CallProfile]] attributed to it. Pass 1 is
     * each query's first timed call; later passes are warm. */
   def measure(spark: SparkSession, sfDir: String, selected: Seq[Declared],
       runs: Int, chunks: Int, coolS: Int): (String, String) = {
@@ -77,12 +79,12 @@ object Bench {
     GraftShims.awaitListeners(sc)
     val profile = new CallProfile
     sc.addSparkListener(profile)
-    val calls = mutable.ArrayBuffer[(String, Int, Boolean, Double, Long)]()
+    val calls = mutable.ArrayBuffer[(String, Int, Boolean, Double, Long, Int)]()
     def timeOne(query: String, pass: Int,
         fn: (SparkSession, String) => DataFrame): Double = {
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       sc.setLocalProperty(CallKey, s"$query#$pass")
-      val (ok, dt) = try SparkEntry.releasing(spark) {
+      val ((ok, dt), released) = try SparkEntry.releasing(spark) {
         val t0 = System.nanoTime()
         // a crashed query reports -1, never its (near-zero) elapsed time —
         // a failure must not read as "fast" in the emitted JSON
@@ -93,7 +95,7 @@ object Bench {
         (ok, (System.nanoTime() - t0) / 1e9)
       } finally sc.setLocalProperty(CallKey, null)
       calls += ((query, pass, ok, dt,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0, released))
       if (ok) dt else -1.0
     }
     val groups: Seq[Seq[Declared]] =
@@ -131,8 +133,9 @@ object Bench {
       else sentinels.map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(""","sentinels":{""", ",", "}")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson$sentJson,"sf":"$sfDir","runs":$runs,"chunks":$chunks}"""
-    val callsJson = calls.map { case (query, pass, ok, dt, compiles) =>
-      s"""{"query":"$query","pass":$pass,"ok":$ok,"wall_s":$dt,"compiles":$compiles,${profile.json(s"$query#$pass")}}"""
+    val callsJson = calls.map { case (query, pass, ok, dt, compiles, released) =>
+      s"""{"query":"$query","pass":$pass,"ok":$ok,"wall_s":$dt,"compiles":$compiles,""" +
+        s""""released_rdds":$released,${profile.json(s"$query#$pass")}}"""
     }.mkString("[", ",\n", "]")
     (line, s"""{"sf":${Verify.jsonString(sfDir)},"runs":$runs,"chunks":$chunks,""" +
       s""""unlabelled_jobs":${profile.unlabelledJobs},"calls":$callsJson}""")

@@ -61,32 +61,41 @@ object SparkEntry {
     declared.flatMap(d => d.oracle.map(d.name -> _)).toMap)
 
   /** The declared queries a main runs, in name order: those
-    * `SPARK_GRAFT_ONLY` names (comma-separated), or all of them when it
-    * is unset. Fails with the undeclared names, so a main calls it
-    * before its session starts. */
+    * `SPARK_GRAFT_ONLY` names (comma-separated, blank names dropped),
+    * or all of them when it is unset or names none. Fails with the
+    * undeclared names, so a main calls it before its session starts. */
   def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[Declared] = {
-    val names = only.map(_.split(",").map(_.trim).toSet)
+    val names = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
     val unknown = names.fold(Set.empty[String])(_ -- queries.keySet)
     require(unknown.isEmpty, "SPARK_GRAFT_ONLY names undeclared queries: " +
       unknown.toSeq.sorted.mkString(", "))
     declared.filter(d => names.forall(_.contains(d.name))).sortBy(_.name)
   }
 
-  /** `body`, then the release that keeps one query from taxing the next:
-    * the SQL cache is cleared and every RDD persisted since `body` began
-    * is unpersisted, blocking. That includes `localCheckpoint` blocks,
-    * which `clearCache` cannot free (they are RDD storage, not SQL cache;
-    * r4's bench showed 10–16× slowdowns on untouched queries from their
-    * accumulation). */
-  def releasing[T](spark: SparkSession)(body: => T): T = {
+  /** `body`'s result, then the release that keeps one query from
+    * taxing the next, and how many RDDs that release freed. The SQL
+    * cache is cleared and every RDD persisted since `body` began is
+    * unpersisted, blocking. That includes `localCheckpoint` blocks,
+    * which `clearCache` cannot free (they are RDD storage, not SQL
+    * cache; r4's bench showed 10–16× slowdowns on untouched queries
+    * from their accumulation). This is the harness half of the
+    * lazy-plan convention ([[Pins]]); no library code calls it. */
+  def releasing[T](spark: SparkSession)(body: => T): (T, Int) = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    try body
-    finally {
-      spark.catalog.clearCache()
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.unpersist(blocking = true)
+    var freed = 0
+    val result =
+      try body
+      finally {
+        // counted before clearCache, which frees the SQL caches' RDDs;
+        // unpersisting those a second time races clearCache's removal
+        freed = (sc.getPersistentRDDs.keySet -- before).size
+        spark.catalog.clearCache()
+        sc.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!before.contains(id)) rdd.unpersist(blocking = true)
+        }
       }
-    }
+    (result, freed)
   }
 }

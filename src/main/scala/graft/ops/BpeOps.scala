@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import scala.collection.mutable.ArrayBuffer
 
 /** BPE tokenizer TRAINING as a Spark job (SURVEY §7.4c: the last named
@@ -77,7 +77,7 @@ object BpeOps {
   /** Train `numMerges` BPE merges over a corpus with a `text` column.
     * Returns the driver-assembled merge table (rank, l, r, cnt) in merge
     * order; stops early if no pair remains. */
-  def fit(docs: DataFrame, numMerges: Int): DataFrame = {
+  def fit(docs: DataFrame, numMerges: Int): DataFrame = Pins.scoped { p =>
     val spark = docs.sparkSession
     import spark.implicits._
     // the vocab table rides the merge rounds at a row-count-adaptive
@@ -89,13 +89,12 @@ object BpeOps {
     // smaller than the relational default (per-row pair explode +
     // symbol-array rewrite). The coalesced view reads that cache
     // narrowly and re-caches at the adaptive layout on round 1's
-    // argmax; the parent cache is released through the prevState
-    // mechanism below, exactly like any other superseded round.
-    val vocab = wordFreq(docs)
-      .select(split(col("w"), "").as("syms"), col("cnt"))
-      .persist()
-    var state = vocab.coalesce(Layout.parts(vocab.count(), Layout.VectorGrain))
-      .persist()
+    // argmax; the parent cache is released like any other superseded
+    // round's, below.
+    val vocab = p.persist(wordFreq(docs)
+      .select(split(col("w"), "").as("syms"), col("cnt")))
+    var state = p.persist(
+      vocab.coalesce(Layout.parts(vocab.count(), Layout.VectorGrain)))
     val merges = ArrayBuffer[(Int, String, String, Long)]()
     // the frame whose cache blocks the CURRENT state's lineage still
     // references — released only after a full pass over state has
@@ -104,7 +103,10 @@ object BpeOps {
     // the former eager per-round persist+count() job existed only to
     // make that release safe immediately; deferring the release one
     // round removes one vocab-sized job per round for the same safety)
-    var prevState: Option[DataFrame] = Some(vocab)
+    var parent = vocab
+    // the latest lineage-truncating checkpoint: every later state reads
+    // it until the next checkpoint is materialized
+    var ckpt = Option.empty[DataFrame]
     var r = 0
     var done = false
     while (r < numMerges && !done) {
@@ -113,30 +115,31 @@ object BpeOps {
       val top = pairCounts(state)
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).collect()
-      prevState.foreach(_.unpersist())
-      prevState = None
+      p.release(parent)
       if (top.isEmpty) done = true
       else {
         val l = top(0).getString(0)
         val rt = top(0).getString(1)
         val c = top(0).getLong(2)
         merges += ((r, l, rt, c))
-        var next = state.select(
+        val next = state.select(
           applyMergeUdf(col("syms"), lit(l), lit(rt)).as("syms"), col("cnt"))
+        parent = state
         // truncate lineage periodically: without this, round r's plan
         // nests r UDF projections and analysis cost grows linearly.
-        // localCheckpoint is EAGER (it materializes here), so this
-        // round's state cache can release immediately
-        if ((r + 1) % 8 == 0) {
-          next = next.localCheckpoint(true)
-          state.unpersist()
-        } else prevState = Some(state)
-        state = next.persist()
+        // The checkpoint is EAGER (it materializes here), so this
+        // round's state cache and the previous checkpoint release
+        // immediately
+        state = p.persist(if ((r + 1) % 8 == 0) {
+          val c = p.checkpoint(next)
+          ckpt.foreach(p.release)
+          ckpt = Some(c)
+          p.release(parent)
+          c
+        } else next)
       }
       r += 1
     }
-    prevState.foreach(_.unpersist())
-    state.unpersist()
     merges.toSeq.toDF("rank", "l", "r", "cnt")
   }
 

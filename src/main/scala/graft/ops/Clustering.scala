@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Layout}
+import graft.{Declared, Layout, Pins}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -134,9 +134,9 @@ object Clustering {
     * rounds and released before returning; the collect is k·d doubles,
     * the model artifact. */
   private[graft] def fitCentroidsSampled(src: DataFrame, k: Int,
-      dim: Int, maxIters: Int): Array[(Long, Array[Double])] = {
+      dim: Int, maxIters: Int): Array[(Long, Array[Double])] = Pins.scoped { p =>
     def fit(df: DataFrame) =
-      kmeansFit(df, k, dim, maxIters)
+      kmeansFit(p, df, k, dim, maxIters)
         .select(col("cid"), col("ce")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     val drawn = trainingSample(src, k)
@@ -146,10 +146,9 @@ object Clustering {
     // pqTrain finding); an unthinned input is ≤ 256·k rows by
     // definition, so the per-round rescan it forgoes is tiny
     val thinned = drawn ne src
-    val train = if (thinned) drawn.persist() else drawn
-    val cents =
-      try fit(train)
-      finally if (thinned) train.unpersist()
+    val train = if (thinned) p.persist(drawn) else drawn
+    val cents = fit(train)
+    p.release(train)
     if (cents.isEmpty && thinned) fit(src) else cents
   }
 
@@ -268,10 +267,9 @@ object Clustering {
     // over it (code-review r12) — the salted re-draw actually thins
     val top = lloydSampled(emb, k1, dim, maxIters, salt = Some(1L))
     if (top.isEmpty) return TwoLevelModel(k2, top, Map.empty)
-    val asgTop = emb.select(col("id"), col("e"),
-        nearestCentroid(top)(col("e")).getField("_1").as("tc"))
-      .persist()
-    try {
+    Pins.scoped { p =>
+      val asgTop = p.persist(emb.select(col("id"), col("e"),
+        nearestCentroid(top)(col("e")).getField("_1").as("tc")))
       val w = Window.partitionBy("tc").orderBy("id")
       var subs: Map[Long, Array[(Long, Array[Double])]] =
         asgTop.withColumn("rn", row_number().over(w))
@@ -307,7 +305,7 @@ object Clustering {
         i += 1
       }
       TwoLevelModel(k2, top, subs)
-    } finally asgTop.unpersist()
+    }
   }
 
   /** Hierarchical twin of [[nearestCentroid]]: top argmin, then sub
@@ -366,12 +364,11 @@ object Clustering {
       cid -> m
     }
     val modUdf = udf { (cid: Long) => modOf(cid) }.asNonNullable()
-    val sampled = asg.filter(col("cid").isin(cells: _*))
-      .filter(pmod(xxhash64(col("id"), lit(salt)), modUdf(col("cid")))
-        === 0)
-      .select(col("cid"), col("id"), col("e"))
-      .persist()
-    try {
+    Pins.scoped { p =>
+      val sampled = p.persist(asg.filter(col("cid").isin(cells: _*))
+        .filter(pmod(xxhash64(col("id"), lit(salt)), modUdf(col("cid")))
+          === 0)
+        .select(col("cid"), col("id"), col("e")))
       val w = Window.partitionBy("cid").orderBy("id")
       var subs: Map[Long, Array[(Long, Array[Double])]] =
         sampled.withColumn("rn", row_number().over(w))
@@ -382,10 +379,9 @@ object Clustering {
             cid -> rows.map(r => ((r.getInt(1) - 1).toLong,
               r.getSeq[Double](2).toArray)).sortBy(_._1)
           }
-      if (subs.isEmpty) return subs
       val vsum = udaf(new VectorSumAgg(dim))
       var i = 0
-      while (i < maxIters) {
+      while (subs.nonEmpty && i < maxIters) {
         val local = subs
         // a sampled row's cid contributed ≥1 init member unless its
         // whole draw was empty — and an empty-draw cell has no
@@ -409,7 +405,7 @@ object Clustering {
         i += 1
       }
       subs
-    } finally sampled.unpersist()
+    }
   }
 
   /** Nearest-centroid id per vector (tie → lower cid) against a
@@ -435,21 +431,21 @@ object Clustering {
     * mutually inconsistent by those boundary vectors (ADVICE r3,
     * documented rather than recomputed: folding the count into the
     * update aggregate would report the PREVIOUS round's populations —
-    * inconsistent with the returned ce in exactly the same way). */
-  def kmeansFit(emb: DataFrame, k: Int, dim: Int, maxIters: Int = 20,
+    * inconsistent with the returned ce in exactly the same way).
+    *
+    * The result is checkpointed through `p`, which holds it. */
+  def kmeansFit(p: Pins, emb: DataFrame, k: Int, dim: Int, maxIters: Int = 20,
       tol: Double = 1e-6): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     // cache the fit input across the Lloyd rounds AND the final
     // population audit (r17, guide §1.2): an unpersisted input was
     // re-scanned — including any caller-side repartition exchange —
-    // once per round plus once by the audit. Persist only when the
-    // caller didn't (the fitCentroidsSampled contract: never re-manage
-    // a caller-owned cache); the k-row result is materialized eagerly
-    // (localCheckpoint) so the cache can be released before returning.
-    val owned = emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (owned) emb.persist() else emb
-    try {
+    // once per round plus once by the audit. A caller-cached input is
+    // used as is; the k-row result is materialized eagerly, so the
+    // fit's own cache is released before returning.
+    Pins.scoped { own =>
+      val cached = own.persist(emb)
       // the count materializes the cache and sizes the per-round
       // partitioning (the argmin is ~k·d flops per row, so the grain is
       // smaller than the relational one)
@@ -461,8 +457,8 @@ object Clustering {
           .agg(count(lit(1)).as("n")), Seq("cid"), "left")
         .select(col("cid"), col("ce"), coalesce(col("n"), lit(0L)).as("n"))
         .orderBy("cid")
-        .localCheckpoint(true)
-    } finally if (owned) cached.unpersist()
+        .pipe(p.checkpoint)
+    }
   }
 
   /** The Lloyd loop of [[kmeansFit]], returning the driver-held
@@ -474,24 +470,17 @@ object Clustering {
     * that path calls this directly. Centroids are bit-identical to
     * kmeansFit's: same init, same rounds, same tie rules. */
   private[graft] def lloyd(emb0: DataFrame, k: Int, dim: Int,
-      maxIters: Int, tol: Double = 1e-6): Array[(Long, Array[Double])] = {
-    // cache the rounds' input when the caller didn't (kmeansFit and
-    // fitCentroidsSampled already do — kmeansFit enters at lloydRounds
-    // so its coalesced view is never re-cached here; direct lloyd
-    // callers over raw frames otherwise pay a scan + any upstream
-    // exchange PER ROUND), and size the round partitioning to the data
-    // (Layout — the r17 per-task-overhead finding)
-    val lloydOwned =
-      emb0.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (lloydOwned) emb0.persist() else emb0
-    try {
-      val emb =
-        if (lloydOwned)
-          cached.coalesce(Layout.parts(cached.count(), Layout.VectorGrain))
-        else cached
-      lloydRounds(emb, k, dim, maxIters, tol)
-    } finally if (lloydOwned) cached.unpersist()
-  }
+      maxIters: Int, tol: Double = 1e-6): Array[(Long, Array[Double])] =
+    Pins.scoped { p =>
+      // cache the rounds' input (kmeansFit enters at lloydRounds, so its
+      // coalesced view is never re-cached here; lloyd's callers pass raw
+      // frames, which otherwise pay a scan + any upstream exchange PER
+      // ROUND), and size the round partitioning to the data (Layout —
+      // the r17 per-task-overhead finding)
+      val cached = p.persist(emb0)
+      lloydRounds(cached.coalesce(Layout.parts(cached.count(), Layout.VectorGrain)),
+        k, dim, maxIters, tol)
+    }
 
   private def lloydRounds(emb: DataFrame, k: Int, dim: Int,
       maxIters: Int, tol: Double): Array[(Long, Array[Double])] = {
@@ -556,7 +545,7 @@ object Clustering {
         col("embedding").cast("array<double>").as("e"))
     // 6 rounds converge this k/dim well inside the tol window; the
     // declared query bounds rounds so bench cost stays proportional
-    kmeansFit(emb, k = 8, dim = 64, maxIters = 6)
+    kmeansFit(Pins.forPlan, emb, k = 8, dim = 64, maxIters = 6)
       .select(col("cid"), col("n"),
         round(sqrt(aggregate(col("ce"), lit(0.0),
           (acc, x) => acc + x * x)), 6).as("centroid_norm"))

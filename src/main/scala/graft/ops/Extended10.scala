@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -292,13 +292,10 @@ object Extended10 {
     * k = max(8, ⌈nReps/256⌉), and the count is reused for the
     * training-sample modulus. */
   private[graft] def semDedupAdaptive(emb: DataFrame, dim: Int,
-      tau: Double): DataFrame = {
-    val reps = collapseExact(emb).persist()
-    try {
-      val nReps = reps.count()
-      val k = semDedupK(nReps)
-      semDedupOnReps(reps, k, dim, tau, knownCount = Some(nReps))
-    } finally reps.unpersist()
+      tau: Double): DataFrame = Pins.scoped { p =>
+    val reps = p.persist(collapseExact(emb))
+    val nReps = reps.count()
+    semDedupOnReps(p, reps, semDedupK(nReps), dim, tau, knownCount = Some(nReps))
   }
 
   /** k = max(8, ⌈nReps/256⌉): cells average ≤ 256 reps, and the whole
@@ -310,10 +307,8 @@ object Extended10 {
   /** Explicit-k entry (the planted-cone spec pins): same collapsed
     * core, k chosen by the caller. */
   private[graft] def semDedupCells(emb: DataFrame, k: Int, dim: Int,
-      tau: Double): DataFrame = {
-    val reps = collapseExact(emb).persist()
-    try semDedupOnReps(reps, k, dim, tau, knownCount = None)
-    finally reps.unpersist()
+      tau: Double): DataFrame = Pins.scoped { p =>
+    semDedupOnReps(p, p.persist(collapseExact(emb)), k, dim, tau, knownCount = None)
   }
 
   /** Exact-duplicate collapse: one hash shuffle keyed on the vector
@@ -327,7 +322,8 @@ object Extended10 {
       .select(col("id"), col("e"), col("cnt"))
 
   /** Core of q187 over collapsed reps (id, e, cnt — persisted by the
-    * caller): cells over reps via the shared in-row argmin (metric +
+    * caller), returned materialized with its caches held by `p`:
+    * cells over reps via the shared in-row argmin (metric +
     * lower-cid tie rule identical to the Lloyd update loop; k·d
     * doubles ride the closure, not a join), within-cell rep pairs,
     * CC over rep ids, multiplicity-weighted per-cell audit.
@@ -344,7 +340,7 @@ object Extended10 {
     * only bound pair work, and the drop laws (exact copies collapse
     * pre-quantizer; cosine < τ pairs never drop) hold under ANY cell
     * partition. */
-  private def semDedupOnReps(reps: DataFrame, k: Int, dim: Int,
+  private def semDedupOnReps(p: Pins, reps: DataFrame, k: Int, dim: Int,
       tau: Double, knownCount: Option[Long]): DataFrame = {
     val repsSel = reps.select(col("id"), col("e"))
     // the shared regime switch (Clustering.fitQuantizer): flat bounded
@@ -354,14 +350,13 @@ object Extended10 {
     // refit per the lloydSampled contract
     val assignUdf = Clustering.fitQuantizer(repsSel, k, dim, knownCount)
       .fold(Clustering.nearestCentroid, Clustering.nearestTwoLevel)
-    val asg0 = reps.select(col("id"), col("e"), col("cnt"),
-        assignUdf(col("e")).getField("_1").as("cid"))
-      .persist()
+    val asg0 = p.persist(reps.select(col("id"), col("e"), col("cnt"),
+        assignUdf(col("e")).getField("_1").as("cid")))
     // worst-case population bound (r12 verdict hardening): adaptive k
     // bounds the AVERAGE cell at ≤256 reps; this bounds the MAX, so an
     // adversarial hot cone the quantizer failed to split can't
     // re-create super-linear pair work below
-    val asg = boundCellPopulations(asg0, dim)
+    val asg = boundCellPopulations(p, asg0, dim)
     val a = asg.select(col("cid"), col("id").as("src"), col("e").as("ea"))
     val b = asg.select(col("cid"), col("id").as("dst"), col("e").as("eb"))
     val edges = a.join(b, Seq("cid"))
@@ -374,18 +369,14 @@ object Extended10 {
     // n_dropped = Σcnt − #components-in-cell, which equals the
     // row-level "rows whose label ≠ id" of the uncollapsed plan —
     // an exact-duplicate group is itself a component (cosine 1 ≥ τ)
-    val labels = GraphOps.connectedComponents(asg.select(col("id")), edges)
+    val labels = GraphOps.connectedComponents(p, asg.select(col("id")), edges)
     val out = labels
       .join(asg.select(col("id"), col("cid"), col("cnt")), "id")
       .groupBy("cid")
       .agg(sum(col("cnt")).as("n_members"),
         (sum(col("cnt")) - countDistinct(col("label"))).as("n_dropped"))
       .orderBy("cid")
-    try out.localCheckpoint()
-    finally {
-      if (asg ne asg0) asg.unpersist()
-      asg0.unpersist()
-    }
+    out.localCheckpoint()
   }
 
   /** Cells average ≤ 256 reps under adaptive k; a single cell may
@@ -419,8 +410,11 @@ object Extended10 {
     * laws hold under ANY cell partition — cells only bound pair work.
     * On corpora with no oversized cell (the whole sf ladder and every
     * planted spec corpus) the remap never fires and the assignment —
-    * and therefore the declared output — is bit-identical. */
-  private[graft] def boundCellPopulations(asg0: DataFrame, dim: Int,
+    * and therefore the declared output — is bit-identical.
+    *
+    * Each remapped round is held by `p` until the next one has
+    * materialized; `asg0` is the caller's. */
+  private[graft] def boundCellPopulations(p: Pins, asg0: DataFrame, dim: Int,
       maxCell: Int = SemDedupMaxCell, splitK: Int = 16,
       maxRounds: Int = 4): DataFrame = {
     var asg = asg0
@@ -432,7 +426,7 @@ object Extended10 {
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       // the count job materialized `asg`'s cache — the previous
       // round's frame has no remaining consumer
-      prev.foreach(_.unpersist())
+      prev.foreach(p.release)
       prev = None
       val over = counts.filter(_._2 > maxCell).toMap
       if (over.isEmpty) done = true
@@ -451,12 +445,11 @@ object Extended10 {
           }
         }.asNonNullable()
         prev = Some(asg).filter(_ ne asg0)
-        asg = asg.withColumn("cid", remap(col("cid"), col("e")))
-          .persist()
+        asg = p.persist(asg.withColumn("cid", remap(col("cid"), col("e"))))
         round += 1
       }
     }
-    prev.foreach(_.unpersist())
+    prev.foreach(p.release)
     asg
   }
 
@@ -616,26 +609,22 @@ object Extended10 {
     * the q153 shape): each map task keeps ≤10 rows per query, so the
     * rank exchange carries ≤ 10·tasks·queries rows, never the
     * candidate set. The tokenized corpus is persisted across its
-    * passes and unpersisted after the result materializes. */
-  def q190Bm25(spark: SparkSession, dir: String): DataFrame = {
-    val (out, caches) = q190Plan(spark, dir)
-    try out.localCheckpoint()
-    finally caches.foreach(_.unpersist())
-  }
+    * passes and released after the result materializes. */
+  def q190Bm25(spark: SparkSession, dir: String): DataFrame =
+    Pins.scoped(p => q190Plan(p, spark, dir).localCheckpoint())
 
-  /** Un-checkpointed q190 plan + the frames it persisted, so the spec
+  /** Un-checkpointed q190 plan, its caches held by `p`, so the spec
     * can audit the REAL dataflow (the declared query
     * localCheckpoints, which hides the plan behind an RDD scan). */
-  private[graft] def q190Plan(spark: SparkSession,
-      dir: String): (DataFrame, Seq[DataFrame]) =
-    bm25Plan(Tables.documents(spark, dir).select("doc_id", "text"))
+  private[graft] def q190Plan(p: Pins, spark: SparkSession,
+      dir: String): DataFrame =
+    bm25Plan(p, Tables.documents(spark, dir).select("doc_id", "text"))
 
   /** Core of q190 over any (doc_id, text) frame — the property spec
     * drives it with generated corpora against a driver-side BM25
-    * reimplementation. */
-  private[graft] def bm25Plan(docs: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    import org.apache.spark.sql.expressions.Window
-    val d = docs.select(col("doc_id"), toks(col("text")).as("t")).persist()
+    * reimplementation. Its caches are held by `p`. */
+  private[graft] def bm25Plan(p: Pins, docs: DataFrame): DataFrame = {
+    val d = p.persist(docs.select(col("doc_id"), toks(col("text")).as("t")))
     val stats = d.agg(count(lit(1)).as("n"),
       sum(size(col("t")).cast("long")).as("l"))
     val qterms = d.orderBy("doc_id").limit(5)
@@ -644,12 +633,11 @@ object Extended10 {
     // the broadcast query-term filter sits BELOW the tf aggregate, so
     // the only shuffle carries matching (doc, term) instances — never
     // the corpus vocabulary (tf/df for non-query terms is dead work)
-    val tf = d.select(col("doc_id"), size(col("t")).cast("long").as("dl"),
+    val tf = p.persist(d.select(col("doc_id"), size(col("t")).cast("long").as("dl"),
         explode(col("t")).as("w"))
       .join(broadcast(qterms.select("w").distinct()), "w")
-      .groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf"))
-      .persist()
-    (bm25Score(qterms, tf, stats), Seq(tf, d))
+      .groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf")))
+    bm25Score(qterms, tf, stats)
   }
 
   /** Shared BM25 scoring tail over query-term-restricted postings
@@ -800,17 +788,16 @@ object Extended10 {
     * in the regime the oracle never sees; the estimator is pinned by
     * Extended10Spec on planted 10k-token vocabularies (the q17 HLL
     * precedent for sketch-regime verification). */
-  def q191KmvOverlap(spark: SparkSession, dir: String): DataFrame = {
+  def q191KmvOverlap(spark: SparkSession, dir: String): DataFrame = Pins.scoped { p =>
     val kmv = udaf(new KmvAgg(2048))
-    val sk = Tables.documents(spark, dir).select("source", "text")
+    // both pair sides derive from sk — persist so the corpus
+    // explode+KMV aggregation runs once, not twice (the q164
+    // persist-when-referenced-twice rule; ADVICE r8)
+    val sk = p.persist(Tables.documents(spark, dir).select("source", "text")
       .select(col("source"), explode(toks(col("text"))).as("w"))
       .select(col("source"),
         graft.functions.Md5Bucket.md5Bucket(col("w"), 15, 0).as("h"))
-      .groupBy("source").agg(kmv(col("h")).as("sk"))
-      // both pair sides derive from sk — persist so the corpus
-      // explode+KMV aggregation runs once, not twice (the q164
-      // persist-when-referenced-twice rule; ADVICE r8)
-      .persist()
+      .groupBy("source").agg(kmv(col("h")).as("sk")))
     val a = sk.select(col("source").as("s1"), col("sk").as("k1"))
     val b = sk.select(col("source").as("s2"), col("sk").as("k2"))
     val out = a.join(broadcast(b), col("s1") < col("s2"))
@@ -819,10 +806,7 @@ object Extended10 {
       .select(col("s1"), col("s2"), col("st._1").as("d1"),
         col("st._2").as("d2"), col("st._3").as("shared"))
       .orderBy("s1", "s2")
-    // finally: a mid-materialization failure must not leave the corpus
-    // aggregate pinned in the shared long-lived session (review r9)
-    try out.localCheckpoint()
-    finally sk.unpersist()
+    out.localCheckpoint()
   }
 
   /** Pair statistics from two bottom-k sketches (k = 2048): exact
@@ -945,7 +929,7 @@ object Extended10 {
     * one count() over the cached distinct benchmark grams, a scalar
     * to the driver; Some(b) pins an explicit width (specs, probes). */
   private[graft] def bloomDecontaminate(docs: DataFrame,
-      mBits: Option[Int] = None): DataFrame = {
+      mBits: Option[Int] = None): DataFrame = Pins.scoped { p =>
     mBits.foreach(b =>
       require(b % 64 == 0, s"mBits must be a multiple of 64, got $b"))
     // variable-amount unsigned shift: functions.shiftrightunsigned only
@@ -983,14 +967,14 @@ object Extended10 {
       case Some(b) => (b.toLong, bitsFor(b.toLong, benchGrams))
       case None =>
         // size to THIS benchmark: cache the distinct grams so the
-        // shuffle is paid once across count + insert; localCheckpoint
+        // shuffle is paid once across count + insert; the checkpoint
         // is eager, so the one bitset row (≤ 16 MB) is materialized
         // before the cache is released
-        benchGrams.persist()
-        try {
-          val b = bloomSizeBits(benchGrams.count()).toLong
-          (b, bitsFor(b, benchGrams).localCheckpoint())
-        } finally benchGrams.unpersist()
+        val grams = p.persist(benchGrams)
+        val b = bloomSizeBits(grams.count()).toLong
+        val bits = p.checkpoint(bitsFor(b, grams))
+        p.release(grams)
+        (b, bits)
     }
     def bloomHit(g: Column): Column =
       forall(positions(m)(g), p =>
@@ -1080,24 +1064,22 @@ object Extended10 {
     * cells while the fusion stage is unchanged (it sees ≤ 20 rows per
     * query forever). The fusion join is a ≤(10+10)·queries-row full
     * outer — dimension-sized at any corpus size. */
-  def q197RrfHybrid(spark: SparkSession, dir: String): DataFrame = {
-    val (out, caches) = rrfPlan(
+  def q197RrfHybrid(spark: SparkSession, dir: String): DataFrame =
+    Pins.scoped(p => rrfPlan(p,
       Tables.documents(spark, dir).select("doc_id", "text"),
       Tables.embeddings(spark, dir)
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("e0")))
-    try out.localCheckpoint()
-    finally caches.foreach(_.unpersist())
-  }
+      .localCheckpoint())
 
   /** Core of q197 over any (doc_id, text) docs frame and (vec_id, e0)
     * embedding frame (vec_id aligns with doc_id) — RrfSpec drives it
     * with generated corpora against a driver-side reimplementation.
-    * Returns the fused frame plus the frames bm25Plan persisted. */
-  private[graft] def rrfPlan(docs: DataFrame,
-      emb: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    * Returns the fused frame; bm25Plan's caches are held by `p`. */
+  private[graft] def rrfPlan(p: Pins, docs: DataFrame,
+      emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (lexTop, caches) = bm25Plan(docs)
+    val lexTop = bm25Plan(p, docs)
     val lex = lexTop.select(col("q_id"), col("doc_id"),
       col("rnk").as("lex_rank"))
     // q114's affine int8 map; flat vectors (max == min) are unrankable
@@ -1119,7 +1101,7 @@ object Extended10 {
       .filter(col("rnk") <= 10)
       .select(col("q_id"), col("doc_id"),
         col("rnk").cast("long").as("dense_rank"))
-    (rrfFuse(lex, dense), caches)
+    rrfFuse(lex, dense)
   }
 
   /** The RRF fusion stage shared by [[rrfPlan]] (brute dense) and
@@ -1272,16 +1254,13 @@ object Extended10 {
     * the cell boundaries are float k-means fixpoints (q45/q108
     * precedent) — correctness is pinned by RrfSpec's exactness-at-
     * full-probe and planted-recall tests instead. */
-  def q199RrfHybridIvf(spark: SparkSession, dir: String): DataFrame = {
-    val (out, caches) = rrfHybridIvfPlan(
+  def q199RrfHybridIvf(spark: SparkSession, dir: String): DataFrame =
+    Pins.scoped(p => rrfHybridIvfPlan(p,
       Tables.documents(spark, dir).select("doc_id", "text"),
       Tables.embeddings(spark, dir)
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("e0")),
-      dim = 64)
-    try out.localCheckpoint()
-    finally caches.foreach(_.unpersist())
-  }
+      dim = 64).localCheckpoint())
 
   /** IVF index build (the ingest/write path): train the coarse
     * quantizer on a deterministic BOUNDED hash-sample of the fixed-dim
@@ -1383,36 +1362,36 @@ object Extended10 {
     // k-row audit frame consumed twice (per-cell rows + the global MSE
     // ratio) — persist so the two consumers don't rescan both sides
     // (the r11 fat-scan-per-consumer lesson)
-    val cells = baseSide.join(batchSide, Seq("cell"), "full_outer")
-      .select(col("cell"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_batch"), lit(0L)).as("n_batch"),
-        coalesce(col("s_base"), lit(0.0)).as("s_base"),
-        coalesce(col("s_batch"), lit(0.0)).as("s_batch"))
-      .persist()
-    val tot = cells.agg(
-      (sum(col("s_base")) / sum(col("n_base"))).as("base_mse"),
-      (sum(col("s_batch")) / sum(col("n_batch"))).as("batch_mse"))
-    val out = cells.crossJoin(broadcast(tot))
-      .select(col("cell"), col("n_base"), col("n_batch"),
-        round(col("base_mse"), 6).as("base_mse"),
-        round(col("batch_mse"), 6).as("batch_mse"),
-        // GLOBAL trigger (ADVICE r12: scope documented) — the
-        // total-batch-MSE / total-base-MSE > 2 decision, replicated
-        // identically onto every cell row; the maintenance decision
-        // is corpus-global (one quantizer)
-        coalesce(col("batch_mse") > col("base_mse") * 2, lit(false))
-          .as("retrain"),
-        // per-cell MSE ratio so LOCALIZED drift is visible in the
-        // audit frame (null when either side is empty or the base
-        // side's error is exactly 0)
-        when(col("n_base") > 0 && col("n_batch") > 0
-            && col("s_base") > 0,
-          round((col("s_batch") / col("n_batch"))
-            / (col("s_base") / col("n_base")), 6)).as("cell_drift"))
-      .orderBy("cell")
-    try out.localCheckpoint()
-    finally cells.unpersist()
+    Pins.scoped { p =>
+      val cells = p.persist(baseSide.join(batchSide, Seq("cell"), "full_outer")
+        .select(col("cell"),
+          coalesce(col("n_base"), lit(0L)).as("n_base"),
+          coalesce(col("n_batch"), lit(0L)).as("n_batch"),
+          coalesce(col("s_base"), lit(0.0)).as("s_base"),
+          coalesce(col("s_batch"), lit(0.0)).as("s_batch")))
+      val tot = cells.agg(
+        (sum(col("s_base")) / sum(col("n_base"))).as("base_mse"),
+        (sum(col("s_batch")) / sum(col("n_batch"))).as("batch_mse"))
+      val out = cells.crossJoin(broadcast(tot))
+        .select(col("cell"), col("n_base"), col("n_batch"),
+          round(col("base_mse"), 6).as("base_mse"),
+          round(col("batch_mse"), 6).as("batch_mse"),
+          // GLOBAL trigger (ADVICE r12: scope documented) — the
+          // total-batch-MSE / total-base-MSE > 2 decision, replicated
+          // identically onto every cell row; the maintenance decision
+          // is corpus-global (one quantizer)
+          coalesce(col("batch_mse") > col("base_mse") * 2, lit(false))
+            .as("retrain"),
+          // per-cell MSE ratio so LOCALIZED drift is visible in the
+          // audit frame (null when either side is empty or the base
+          // side's error is exactly 0)
+          when(col("n_base") > 0 && col("n_batch") > 0
+              && col("s_base") > 0,
+            round((col("s_batch") / col("n_batch"))
+              / (col("s_base") / col("n_base")), 6)).as("cell_drift"))
+        .orderBy("cell")
+      out.localCheckpoint()
+    }
   }
 
   /** Inline build+query composition (the declared q199 and the spec
@@ -1423,27 +1402,25 @@ object Extended10 {
     * below any repartition, collapsing the whole assignment to
     * file-split parallelism (the q45 QTime finding, r11). The
     * broadcast pair join alone restricts the cells, at full width. */
-  private[graft] def rrfHybridIvfPlan(docs: DataFrame, emb: DataFrame,
-      dim: Int, nCells: Int = 16, nProbe: Int = 4)
-      : (DataFrame, Seq[DataFrame]) = {
+  private[graft] def rrfHybridIvfPlan(p: Pins, docs: DataFrame, emb: DataFrame,
+      dim: Int, nCells: Int = 16, nProbe: Int = 4): DataFrame = {
     val (index, cents) = ivfIndex(emb, dim, nCells)
-    rrfHybridIvfQuery(docs, index, cents, nProbe, pruneCells = false)
+    rrfHybridIvfQuery(p, docs, index, cents, nProbe, pruneCells = false)
   }
 
   /** Query side over a (pre)built index: probe each query's nProbe
     * nearest cells (same L2 metric and lower-cid tie rule as the
     * assignment argmin, so a query's own cell is always probed),
     * quantize and exact-dot-rerank ONLY the probed cells' vectors,
-    * fuse with q190's lexical list via the unchanged [[rrfFuse]]. */
-  private[graft] def rrfHybridIvfQuery(docs: DataFrame, index: DataFrame,
+    * fuse with q190's lexical list via the unchanged [[rrfFuse]].
+    * bm25Plan's caches are held by `p`. */
+  private[graft] def rrfHybridIvfQuery(p: Pins, docs: DataFrame, index: DataFrame,
       cents: Array[(Long, Array[Double])], nProbe: Int,
-      pruneCells: Boolean = true)
-      : (DataFrame, Seq[DataFrame]) = {
+      pruneCells: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     import spark.implicits._
-    val (lexTop, caches) = bm25Plan(docs)
-    val lex = lexTop.select(col("q_id"), col("doc_id"),
+    val lex = bm25Plan(p, docs).select(col("q_id"), col("doc_id"),
       col("rnk").as("lex_rank"))
     // the SAME five queries as the lexical side (q190's derivation).
     // The 5 ids AND their raw vectors are collected (5·dim doubles —
@@ -1507,7 +1484,7 @@ object Extended10 {
       .filter(col("rnk") <= 10)
       .select(col("q_id"), col("doc_id"),
         col("rnk").cast("long").as("dense_rank"))
-    (rrfFuse(lex, dense), caches)
+    rrfFuse(lex, dense)
   }
 
   val declared: Seq[Declared] = Seq(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import graft.ops.Out.SortOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -261,7 +261,7 @@ object Extended4 {
       else inter.toDouble / (na + nb - inter)
   }
 
-  def q125SetSimJoin(spark: SparkSession, dir: String): DataFrame = {
+  def q125SetSimJoin(spark: SparkSession, dir: String): DataFrame = Pins.scoped { p =>
     val t = 0.6
     // the planted corpus comes spread: the per-doc gram build
     // (tokenize + distinct + sort) is the query's heaviest map work —
@@ -290,7 +290,7 @@ object Extended4 {
           xxhash64(element_at(col("t"), i), element_at(col("t"), i + 1),
             element_at(col("t"), i + 2)))))
         .as("hset"))
-      .pipe(ScaleOps.stageCheckpoint)
+      .pipe(p.checkpoint)
     // global rarity ORDER (occurrence count asc, hash asc) — the prefix
     // rule needs any consistent total order, NOT dense ranks, so no
     // global row_number window ever materializes: the per-doc window
@@ -311,7 +311,7 @@ object Extended4 {
               .as("g")))).as(Seq("pos", "e")))
       .groupBy(col("e.gh").as("gh"))
       .agg(count(lit(1)).as("df"), countDistinct(col("e.g")).as("nd"))
-      .pipe(ScaleOps.stageCheckpoint) // feeds cert probe + prefix broadcast
+      .pipe(p.checkpoint) // feeds cert probe + prefix broadcast
     // the certificate probe: one aggregate over the O(vocab) rarity
     // table (28k rows at sf0.1) — NOT a data-sized collect
     val injective =
@@ -327,7 +327,7 @@ object Extended4 {
       .select(col("doc_id"), col("sz"), col("rn"), col("gh"))
       // eager too: both sides of the candidate self-join read this —
       // tiny (4 numeric cols × prefix rows), rebuilt twice otherwise
-      .pipe(ScaleOps.stageCheckpoint)
+      .pipe(p.checkpoint)
     // candidates: shared prefix gram + PPJoin's two cheap filters —
     //  size:       J ≥ t ⟹ t·|a| ≤ |b| ≤ |a|/t
     //  positional: a match at prefix positions (rna, rnb) bounds the
@@ -356,7 +356,7 @@ object Extended4 {
       // boundary is what actually pins the spread — partition count
       // follows the corpus the VERIFY reads, not the candidates' size.
       .repartition(Layout.spreadParts(corpus), col("a_id"), col("b_id"))
-      .pipe(ScaleOps.stageCheckpoint)
+      .pipe(p.checkpoint)
     // verify against BROADCAST gram sets: the gram table is O(corpus)
     // rows but each candidate pair would otherwise drag both arrays
     // through a shuffle (measured 2×~2.4 GB at sf0.1 — the whole cost
@@ -386,7 +386,7 @@ object Extended4 {
           transform(sequence(lit(1), size(col("t")) - 2), i =>
             concat_ws(" ", element_at(col("t"), i),
               element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
-          .as("grams")).pipe(ScaleOps.stageCheckpoint)
+          .as("grams")).pipe(p.checkpoint)
         cand
           .join(broadcast(gsets), col("a_id") === col("doc_id"))
           .withColumnRenamed("grams", "ga").drop("doc_id")
@@ -401,7 +401,8 @@ object Extended4 {
       // the closing orderBy range-partitions, and RangePartitioner's
       // sampling job EVALUATES the child — without a boundary here the
       // whole verify subtree runs twice (once to sample, once to
-      // shuffle). The surviving pairs are a few thousand rows.
+      // shuffle). The surviving pairs are a few thousand rows; this
+      // checkpoint is the result's, the scope releases the ones above.
       .pipe(ScaleOps.stageCheckpoint)
       .orderBy("a_id", "b_id")
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -177,7 +177,7 @@ object Extended8 {
     * exactly. Every window here partitions by (type, block) or runs
     * on the ≤64-row block table; the fact table never funnels through
     * a per-type reducer. */
-  def q162RollingAnomaly(spark: SparkSession, dir: String): DataFrame = {
+  def q162RollingAnomaly(spark: SparkSession, dir: String): DataFrame = Pins.scoped { p =>
     // decimal(12,2), not (18,6): the sqrt-free test squares products
     // of sums, and Spark's decimal typer reduces SCALE (rounding
     // real digits) when a product's precision would exceed 38 — at
@@ -189,7 +189,7 @@ object Extended8 {
       .select(col("event_id"), col("event_type"),
         col("value").cast("decimal(12,2)").as("v"),
         unix_micros(col("ts")).as("us"))
-      .pipe(ScaleOps.stageCheckpoint)
+      .pipe(p.checkpoint) // read until `ranked` is materialized
     val bounds = e.groupBy("event_type")
       .agg(min("us").as("lo"), max("us").as("hi"))
     val sh = e.join(broadcast(bounds), "event_type")

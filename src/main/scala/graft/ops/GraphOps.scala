@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.chaining._
@@ -70,13 +70,13 @@ object GraphOps {
     *    consecutive sums ⟺ no label changed.
     *
     * `edges` must have columns (src, dst), endpoints ⊆ `vertices.id`;
-    * treated as undirected. */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame,
+    * treated as undirected. The returned labels read caches `p` holds. */
+  def connectedComponents(p: Pins, vertices: DataFrame, edges: DataFrame,
       maxIters: Int = 50): DataFrame = {
-    val und = undirect(edges.select(col("src"), col("dst"))).persist()
+    val und = p.persist(undirect(edges.select(col("src"), col("dst"))))
     // both directions are present, so src alone covers every endpoint
-    val connected = und.select(col("src").as("id")).distinct().persist()
-    var labels = connected.select(col("id"), col("id").as("label")).persist()
+    val connected = p.persist(und.select(col("src").as("id")).distinct())
+    var labels = p.persist(connected.select(col("id"), col("id").as("label")))
     // null sum ⟺ empty label set (sum over zero rows) — doubles as the
     // emptiness probe, so initialization costs ONE action, not two
     def labelSum(df: DataFrame): Option[java.math.BigDecimal] = {
@@ -90,16 +90,16 @@ object GraphOps {
       // neighbor labels: for each edge (src,dst), dst receives src's label
       val nbr = und.join(labels, und("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
-      val next = labels.select(col("id"), col("label")).union(nbr)
-        .groupBy("id").agg(min("label").as("label")).persist()
+      val next = p.persist(labels.select(col("id"), col("label")).union(nbr)
+        .groupBy("id").agg(min("label").as("label")))
       val nextSum = labelSum(next)
-      labels.unpersist()
+      p.release(labels)
       labels = next
       converged = nextSum == prevSum
       prevSum = nextSum
       i += 1
     }
-    und.unpersist()
+    p.release(und)
     warnIfNotConverged(converged, "connectedComponents", maxIters)
     val isolated = vertices.select(col("id"))
       .join(connected, Seq("id"), "left_anti")
@@ -131,7 +131,7 @@ object GraphOps {
     * minimum id. Same contract as [[connectedComponents]]; returns
     * (id, label). */
   def connectedComponentsStar(vertices: DataFrame, edges: DataFrame,
-      maxIters: Int = 30): DataFrame = {
+      maxIters: Int = 30): DataFrame = Pins.scoped { p =>
     val spark = vertices.sparkSession
     import spark.implicits._
     def swap(e: DataFrame) = e.select(col("dst").as("src"),
@@ -146,13 +146,13 @@ object GraphOps {
     }
     // evaluate the (possibly expensive, caller-owned) edge frame ONCE:
     // both derivations below are eagerly checkpointed, so the cache is
-    // released before the loop starts
-    val e0 = edges.select("src", "dst").persist()
+    // released before the loop starts. `connected` is the result's.
+    val e0 = p.persist(edges.select("src", "dst"))
     val connected = e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct()
       .pipe(graft.ops.ScaleOps.stageCheckpoint)
-    var e = canon(e0).pipe(graft.ops.ScaleOps.stageCheckpoint)
-    e0.unpersist()
+    var e = p.checkpoint(canon(e0))
+    p.release(e0)
     var prev = sig(e)
     var converged = prev._1 == 0L
     var i = 0
@@ -165,20 +165,21 @@ object GraphOps {
       val mnL = und.groupBy(col("src").as("u"))
         .agg(min(col("dst")).as("mnb"))
         .select(col("u"), least(col("mnb"), col("u")).as("m"))
-      val large = canon(und.filter(col("dst") > col("src"))
+      val large = p.checkpoint(canon(und.filter(col("dst") > col("src"))
         .join(mnL, col("src") === col("u"))
-        .select(col("dst").as("src"), col("m").as("dst")))
-        .pipe(graft.ops.ScaleOps.stageCheckpoint)
+        .select(col("dst").as("src"), col("m").as("dst"))))
       // small-star over the large-star output: strictly-smaller
       // neighbors S(u); u and every v ∈ S attach to min(S)
       val undS = large.union(swap(large))
       val sml = undS.filter(col("dst") < col("src"))
       val mnS = sml.groupBy(col("src").as("u")).agg(min(col("dst")).as("m"))
-      val next = canon(
+      val next = p.checkpoint(canon(
         sml.join(mnS, col("src") === col("u"))
           .select(col("dst").as("src"), col("m").as("dst"))
-          .union(mnS.select(col("u").as("src"), col("m").as("dst"))))
-        .pipe(graft.ops.ScaleOps.stageCheckpoint)
+          .union(mnS.select(col("u").as("src"), col("m").as("dst")))))
+      // next is materialized: the round's inputs have no reader left
+      p.release(large)
+      p.release(e)
       val nextSig = sig(next)
       converged = nextSig == prev
       prev = nextSig
@@ -188,7 +189,7 @@ object GraphOps {
     warnIfNotConverged(converged, "connectedComponentsStar", maxIters)
     // converged: e is a star set (child → root). Roots and isolated
     // vertices label themselves.
-    val children = e.select(col("src").as("id"), col("dst").as("label"))
+    val children = p.keep(e).select(col("src").as("id"), col("dst").as("label"))
     val roots = connected.join(children.select("id"), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("label"))
     val isolated = vertices.select(col("id"))
@@ -322,13 +323,14 @@ object GraphOps {
     * edge frame: (id, lbl) for every edge-touching vertex after
     * `rounds` synchronous most-frequent-neighbor-label updates (ties →
     * min label). Exposed for spec pins on synthetic graphs. */
-  private[graft] def labelPropagation(edges0: DataFrame, rounds: Int): DataFrame = {
+  private[graft] def labelPropagation(edges0: DataFrame,
+      rounds: Int): DataFrame = Pins.scoped { p =>
     // evaluate the (possibly expensive) edge derivation once; the count
     // sizes the per-round partitioning (Layout — the q178 r17 finding:
     // a cores-wide layout costs one overhead task per core per round
     // regardless of data volume). Vertex-sized frames ride the same
     // layout (nUnd bounds the vertex count).
-    val cached = edges0.select("src", "dst").distinct().persist()
+    val cached = p.persist(edges0.select("src", "dst").distinct())
     val nUnd = 2L * cached.count()
     val parts = Layout.parts(nUnd, Layout.RowGrain)
     // persist PRE-PARTITIONED on the per-round join key: the cached
@@ -336,15 +338,14 @@ object GraphOps {
     // edge⋈labels join re-shuffles only the vertex-sized labels side,
     // never the edge frame (without this, 8 rounds = 8 edge shuffles —
     // measured 3× slower at sf0.1)
-    val und = undirect(cached).repartition(parts, col("dst")).persist()
+    val und = p.persist(undirect(cached).repartition(parts, col("dst")))
     var labels = und.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .coalesce(parts)
     // per-round label cache, released at each eager checkpoint — the
     // q178 recompute fix (see pagerankRanks): without it every round's
     // labels exchange re-executes the chain back to the last checkpoint
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-    def releasePinned(): Unit = { pinned.foreach(_.unpersist()); pinned.clear() }
+    var chain = Vector.empty[DataFrame]
     var i = 0
     while (i < rounds) {
       // neighbor-label multiplicities: for edge (src, dst), dst's label
@@ -352,7 +353,7 @@ object GraphOps {
       // The tie-break is ONE aggregate: max(struct(c, -lbl)) is (max
       // count, then min label) — integer-exact, no second shuffle or
       // self-join over the counts
-      var next = und
+      val next = und
         .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
         .groupBy(col("src").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
@@ -360,24 +361,27 @@ object GraphOps {
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("id"), (-col("m.nl")).as("lbl"))
         .coalesce(parts)
-      if ((i + 1) % 4 == 0) {
-        next = next.localCheckpoint(true)
-        releasePinned()
-      } else {
-        next = next.persist()
-        pinned += next
-      }
-      labels = next
+      labels = nextRound(p, chain, next, i)
+      chain = if ((i + 1) % 4 == 0) Vector(labels) else chain :+ labels
       i += 1
     }
-    // vertex-sized materialization, then release the cached edge frame
-    // — hand back an unpersisted result (triangleStats convention)
-    val out = labels.localCheckpoint(true)
-    releasePinned()
-    und.unpersist()
-    cached.unpersist()
-    out
+    // vertex-sized materialization; the scope then releases the round
+    // and edge frames, so the caller holds nothing
+    labels.localCheckpoint(true)
   }
+
+  /** Round `i`'s frame of an iterative loop, held by `p`: every 4th
+    * round is checkpointed (lineage truncation), which bakes in the
+    * values of `chain` — the frames since the previous checkpoint, that
+    * one included — so they are released; the rounds between are
+    * cached, materialized by the next checkpoint's job. */
+  private def nextRound(p: Pins, chain: Seq[DataFrame], next: DataFrame,
+      i: Int): DataFrame =
+    if ((i + 1) % 4 == 0) {
+      val c = p.checkpoint(next)
+      chain.foreach(p.release)
+      c
+    } else p.persist(next)
 
   /** q181's DuckDB twin: 8 unrolled synchronous rounds. Every CTE is
     * MATERIALIZED — l$k is referenced twice by round k+1 (count + tie
@@ -446,15 +450,12 @@ object GraphOps {
     * checkpoint every 4 (the CC cadence). k-core is the standard
     * dense-region/bot-cluster extractor at corpus scale. */
   def q179KCore(spark: SparkSession, dir: String): DataFrame = {
-    // kCoreEdges hands back its final frame already materialized (the
-    // loop's convergence count ran on it) and still persisted/
-    // checkpointed — re-persisting it here was a no-op that muddied
-    // ownership (ADVICE r7); this caller only unpersists
-    val core = kCoreEdges(burstEdges(spark, dir), k = 3)
-    val nEdges = core.count()
-    val nVerts = core.select(col("src").as("id"))
-      .union(core.select(col("dst").as("id"))).distinct().count()
-    core.unpersist()
+    val (nVerts, nEdges) = Pins.scoped { p =>
+      val core = kCoreEdges(p, burstEdges(spark, dir), k = 3)
+      val nEdges = core.count()
+      (core.select(col("src").as("id"))
+        .union(core.select(col("dst").as("id"))).distinct().count(), nEdges)
+    }
     import spark.implicits._
     Seq((nVerts, nEdges)).toDF("n_core_vertices", "n_core_edges")
   }
@@ -462,13 +463,12 @@ object GraphOps {
   /** The peeling core of [[q179KCore]] on an arbitrary canonical edge
     * frame: surviving edges after iterating to fixpoint or `maxRounds`,
     * whichever first. Exposed for spec checks on synthetic graphs.
-    * Ownership: the returned frame is already materialized (the final
-    * convergence count ran on it) and still persisted (or localCheck-
-    * pointed on a %4 round) — the CALLER unpersists it when done; do
-    * not persist it again. */
-  private[graft] def kCoreEdges(edges0: DataFrame, k: Int,
+    * The returned frame is materialized (the final convergence count
+    * ran on it) and held by `p`, as each round's is until the next
+    * one has materialized. */
+  private[graft] def kCoreEdges(p: Pins, edges0: DataFrame, k: Int,
       maxRounds: Int = 24): DataFrame = {
-    var edges = edges0.select("src", "dst").distinct().persist()
+    var edges = p.persist(edges0.select("src", "dst").distinct())
     var prev = -1L
     var cur = edges.count()
     var round = 0
@@ -477,15 +477,14 @@ object GraphOps {
         .union(edges.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select("id")
-      var next = edges
+      val peeled = edges
         .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst")
-      if ((round + 1) % 4 == 0) next = next.localCheckpoint(true)
-      else next = next.persist()
+      val next = if ((round + 1) % 4 == 0) p.checkpoint(peeled) else p.persist(peeled)
       prev = cur
       cur = next.count()
-      edges.unpersist()
+      p.release(edges)
       edges = next
       round += 1
     }
@@ -582,7 +581,8 @@ object GraphOps {
   /** The iteration core of [[q178PageRank]] on an arbitrary canonical
     * (src, dst) edge frame: returns (id, r) unrounded for every
     * edge-touching vertex. Exposed for spec closed-form checks. */
-  private[graft] def pagerankRanks(edges0: DataFrame, iters: Int): DataFrame = {
+  private[graft] def pagerankRanks(edges0: DataFrame,
+      iters: Int): DataFrame = Pins.scoped { p =>
     // persist the canonical edge frame: und is referenced by BOTH deg
     // and wed below, and without the cache each reference re-evaluates
     // the caller's (events-self-join-sized) edge derivation.
@@ -592,7 +592,7 @@ object GraphOps {
     // paid one task of pure overhead per core regardless of data
     // (measured r17 — 2–4 executor-CPU-s per round-stage on 771 edges
     // at 32 tasks vs ~0.05 at 4; 10 rounds made that the whole query).
-    val cached = edges0.select("src", "dst").distinct().persist()
+    val cached = p.persist(edges0.select("src", "dst").distinct())
     val nE = cached.count()
     val edges = cached.coalesce(Layout.parts(nE, Layout.RowGrain))
     val edgeParts = Layout.parts(2L * nE, Layout.RowGrain)
@@ -610,9 +610,9 @@ object GraphOps {
     // the cores-wide shuffle layout re-imposes one overhead task per
     // core on EVERY round that scans it (the r17 finding; cached plans
     // pin their layout, AQE cannot re-coalesce them).
-    val wed = und.join(deg.select(col("id").as("src"), col("d")), "src")
-      .coalesce(edgeParts).persist()
-    val idsCached = deg.select(col("id")).persist()
+    val wed = p.persist(und.join(deg.select(col("id").as("src"), col("d")), "src")
+      .coalesce(edgeParts))
+    val idsCached = p.persist(deg.select(col("id")))
     val nV = idsCached.count()
     val vertexParts = Layout.parts(nV, Layout.RowGrain)
     val ids = idsCached.coalesce(vertexParts)
@@ -622,42 +622,27 @@ object GraphOps {
     // ranks subtrees only stay deduplicated as long as ReuseExchange
     // recognizes them — the cache makes the once-per-round execution
     // explicit instead of plan-shape-dependent. Caches are released as
-    // soon as an EAGER materialization (the %4 localCheckpoint, or the
+    // soon as an EAGER materialization (the %4 checkpoint, or the
     // final one) has baked their values in.
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-    def releasePinned(): Unit = { pinned.foreach(_.unpersist()); pinned.clear() }
+    var chain = Vector.empty[DataFrame]
     var i = 0
     while (i < iters) {
       val contrib = wed
         .join(ranks.select(col("id").as("src"), col("r")), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(col("r") / col("d")).as("x"))
-      var next = ids
+      val next = ids
         .join(contrib, Seq("id"), "left")
         .select(col("id"), (lit(0.15) + lit(0.85) * coalesce(col("x"),
           lit(0.0))).as("r"))
         .coalesce(vertexParts)
-      // truncate lineage every 4 rounds (eager) and release the block's
-      // caches — their values are in the checkpoint now
-      if ((i + 1) % 4 == 0) {
-        next = next.localCheckpoint(true)
-        releasePinned()
-      } else {
-        next = next.persist()
-        pinned += next
-      }
-      ranks = next
+      ranks = nextRound(p, chain, next, i)
+      chain = if ((i + 1) % 4 == 0) Vector(ranks) else chain :+ ranks
       i += 1
     }
-    // materialize (vertex-sized) before releasing the cached frames the
-    // tail lineage still references, then hand back an unpersisted
-    // result — callers own nothing (triangleStats convention)
-    val out = ranks.localCheckpoint(true)
-    releasePinned()
-    wed.unpersist()
-    idsCached.unpersist()
-    cached.unpersist()
-    out
+    // materialize (vertex-sized) before the scope releases the frames
+    // the tail lineage still references — callers own nothing
+    ranks.localCheckpoint(true)
   }
 
   // --------------------------------------------------------------- q177
@@ -684,8 +669,9 @@ object GraphOps {
   /** The oriented-wedge core of [[q177Triangles]] on an arbitrary
     * (src, dst) canonical edge frame (duplicates tolerated — deduped
     * here). Exposed for spec cross-checks on synthetic graphs. */
-  private[graft] def triangleStats(edges0: DataFrame): (Long, Long, Long) = {
-    val edges = edges0.select("src", "dst").distinct().persist()
+  private[graft] def triangleStats(
+      edges0: DataFrame): (Long, Long, Long) = Pins.scoped { p =>
+    val edges = p.persist(edges0.select("src", "dst").distinct())
     val deg = edges.select(col("src").as("id"))
       .union(edges.select(col("dst").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
@@ -694,10 +680,10 @@ object GraphOps {
       .join(deg.select(col("id").as("dst"), col("d").as("db")), "dst")
     val fwd = col("da") < col("db") ||
       (col("da") === col("db") && col("src") < col("dst"))
-    val oriented = withDeg.select(
+    val oriented = p.persist(withDeg.select(
       when(fwd, col("src")).otherwise(col("dst")).as("u"),
       when(fwd, col("dst")).otherwise(col("src")).as("v"),
-      when(fwd, col("db")).otherwise(col("da")).as("dv")).persist()
+      when(fwd, col("db")).otherwise(col("da")).as("dv")))
     val o1 = oriented.select(col("u"), col("v").as("x"), col("dv").as("dx"))
     val o2 = oriented.select(col("u"), col("v").as("y"), col("dv").as("dy"))
     val wedges = o1.join(o2, Seq("u"))
@@ -708,8 +694,6 @@ object GraphOps {
       "left_semi").count()
     val nEdges = edges.count()
     val nVerts = deg.count()
-    edges.unpersist()
-    oriented.unpersist()
     (nVerts, nEdges, nTri)
   }
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 
 /** Distributed logistic regression — the cheap supervised quality filter
   * of production corpus pipelines (CCNet/fastText shape: distill an
@@ -70,30 +70,27 @@ object LrOps {
     * is cached for the fit alone and released on every path, as in
     * `kmeansFit`; a caller's cache is left in place. */
   def fit(data: DataFrame, dim: Int, epochs: Int = 40,
-      step: Double = 2.0): Array[Double] = {
-    val owned = data.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val cached = if (owned) data.persist() else data
-    try {
-      // LR's per-row work is a dim-length dot (light) → a coarse grain
-      val df = cached.coalesce(Layout.parts(cached.count(), Layout.DotGrain))
-      val w = new Array[Double](dim)
-      val gsums = (0 until dim).map(j =>
-        sum(col("g") * coalesce(try_element_at(col("f"), lit(j + 1)), lit(0.0)))
-          .as(s"g$j")) :+
-        count(lit(1)).as("n")
-      var e = 0
-      while (e < epochs) {
-        val upd = df
-          .select(col("f"), residualUdf(w.clone())(col("label"), col("f")).as("g"))
-          .agg(gsums.head, gsums.tail: _*)
-          .head()
-        val n = upd.getLong(dim)
-        var i = 0
-        while (i < dim) { w(i) -= step * upd.getDouble(i) / n.toDouble; i += 1 }
-        e += 1
-      }
-      w
-    } finally if (owned) cached.unpersist()
+      step: Double = 2.0): Array[Double] = Pins.scoped { p =>
+    val cached = p.persist(data)
+    // LR's per-row work is a dim-length dot (light) → a coarse grain
+    val df = cached.coalesce(Layout.parts(cached.count(), Layout.DotGrain))
+    val w = new Array[Double](dim)
+    val gsums = (0 until dim).map(j =>
+      sum(col("g") * coalesce(try_element_at(col("f"), lit(j + 1)), lit(0.0)))
+        .as(s"g$j")) :+
+      count(lit(1)).as("n")
+    var e = 0
+    while (e < epochs) {
+      val upd = df
+        .select(col("f"), residualUdf(w.clone())(col("label"), col("f")).as("g"))
+        .agg(gsums.head, gsums.tail: _*)
+        .head()
+      val n = upd.getLong(dim)
+      var i = 0
+      while (i < dim) { w(i) -= step * upd.getDouble(i) / n.toDouble; i += 1 }
+      e += 1
+    }
+    w
   }
 
   /** Score rows with a trained weight vector: adds `p` = σ(w·f). One
@@ -130,29 +127,30 @@ object LrOps {
     * oracle); LrSpec pins convergence on planted separable data and an
     * accuracy floor here. */
   def q176LrDistill(spark: SparkSession, dir: String): DataFrame = {
-    val feats = featureFrame(spark, dir).persist()
-    val w = fit(feats, dim = 6)
-    // the result is ONE row (a confusion matrix): run the scoring
-    // aggregate eagerly while feats is still cached, then release the
-    // cache deterministically before returning — no persist outlives
-    // the call (ADVICE r7 cache-leak sweep), and the scoring pass still
-    // reads features from cache instead of recomputing them
-    val r = predict(feats, w)
-      .select(col("label"), when(col("p") >= 0.5, 1.0).otherwise(0.0).as("yhat"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("label") === 1.0 && col("yhat") === 1.0, 1L)
-          .otherwise(0L)).as("tp"),
-        sum(when(col("label") === 0.0 && col("yhat") === 1.0, 1L)
-          .otherwise(0L)).as("fp"),
-        sum(when(col("label") === 0.0 && col("yhat") === 0.0, 1L)
-          .otherwise(0L)).as("tn"),
-        sum(when(col("label") === 1.0 && col("yhat") === 0.0, 1L)
-          .otherwise(0L)).as("fn"))
-      .withColumn("accuracy",
-        round((col("tp") + col("tn")).cast("double") / col("n"), 6))
-      .head()
-    feats.unpersist()
+    val r = Pins.scoped { p =>
+      val feats = p.persist(featureFrame(spark, dir))
+      val w = fit(feats, dim = 6)
+      // the result is ONE row (a confusion matrix): run the scoring
+      // aggregate eagerly while feats is still cached, then release the
+      // cache deterministically before returning — no persist outlives
+      // the call (ADVICE r7 cache-leak sweep), and the scoring pass still
+      // reads features from cache instead of recomputing them
+      predict(feats, w)
+        .select(col("label"), when(col("p") >= 0.5, 1.0).otherwise(0.0).as("yhat"))
+        .agg(
+          count(lit(1)).as("n"),
+          sum(when(col("label") === 1.0 && col("yhat") === 1.0, 1L)
+            .otherwise(0L)).as("tp"),
+          sum(when(col("label") === 0.0 && col("yhat") === 1.0, 1L)
+            .otherwise(0L)).as("fp"),
+          sum(when(col("label") === 0.0 && col("yhat") === 0.0, 1L)
+            .otherwise(0L)).as("tn"),
+          sum(when(col("label") === 1.0 && col("yhat") === 0.0, 1L)
+            .otherwise(0L)).as("fn"))
+        .withColumn("accuracy",
+          round((col("tp") + col("tn")).cast("double") / col("n"), 6))
+        .head()
+    }
     import spark.implicits._
     Seq((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
       r.getLong(4), r.getDouble(5)))

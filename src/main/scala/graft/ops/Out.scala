@@ -36,8 +36,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * measure both at the tier. At deployment scale the determinism
   * sort is dropped entirely — it exists for the verification contract,
   * not the pipeline — so this is bench/test hygiene, not the 100 TB
-  * story; the cache is released by the per-query clearCache both
-  * Bench and Verify run between queries.
+  * story; the cache belongs to the returned plan and is released by
+  * the harness after the query (the lazy-plan convention of
+  * [[graft.Pins]]).
   */
 object Out {
   implicit class SortOps(private val df: DataFrame) extends AnyVal {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Declared
+import graft.{Declared, Pins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
@@ -88,8 +88,8 @@ object PqOps {
     // emb persisted across train/encode/query — found in the r13
     // self-review)
     val thinned = drawn ne emb
-    val train = if (thinned) drawn.persist() else drawn
-    try {
+    Pins.scoped { p =>
+      val train = if (thinned) p.persist(drawn) else drawn
       var subsMap = Clustering.fitWithinCells(explodeSubs(train),
         bound, splitK = ks, dim = sub, maxIters = maxIters, salt = 0L)
       if (subsMap.isEmpty && thinned)
@@ -97,7 +97,7 @@ object PqOps {
           splitK = ks, dim = sub, maxIters = maxIters, salt = 0L)
       PqModel(dim, m, ks, Array.tabulate(m)(i =>
         subsMap.getOrElse(i.toLong, Array.empty)))
-    } finally if (thinned) train.unpersist()
+    }
   }
 
   /** Encode: per-subspace argmin (the shared [[Clustering.argminLocal]]
@@ -266,23 +266,19 @@ object PqOps {
     * corpus into one BIGINT per vector, ADC-rank ALL vectors for the 5
     * lowest-id queries, exact-rerank the top-32 and emit the top-10.
     * Rows-only (float codebooks). */
-  def q201PqAdc(spark: SparkSession, dir: String): DataFrame = {
-    val emb = graft.Tables.embeddings(spark, dir)
+  def q201PqAdc(spark: SparkSession, dir: String): DataFrame = Pins.scoped { p =>
+    val emb = p.persist(graft.Tables.embeddings(spark, dir)
         .select(col("vec_id").as("id"),
           col("embedding").cast("array<double>").as("e"))
-      .filter(size(col("e")) === 64)
-      .persist()
-    try {
-      val model = pqTrain(emb, dim = 64, m = 8, ks = 16)
-      // 5 query vectors, collected driver-side (5·64 doubles — the
-      // model-artifact class; a query-vector DataFrame would cost one
-      // fat corpus scan per consumer, the r11 lesson)
-      val qvecs = emb.orderBy("id").limit(5)
-        .select(col("id"), col("e")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      val out = pqAdcQuery(emb, model, qvecs, topR = 32, depth = 10)
-      out.localCheckpoint()
-    } finally emb.unpersist()
+      .filter(size(col("e")) === 64))
+    val model = pqTrain(emb, dim = 64, m = 8, ks = 16)
+    // 5 query vectors, collected driver-side (5·64 doubles — the
+    // model-artifact class; a query-vector DataFrame would cost one
+    // fat corpus scan per consumer, the r11 lesson)
+    val qvecs = emb.orderBy("id").limit(5)
+      .select(col("id"), col("e")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    pqAdcQuery(emb, model, qvecs, topR = 32, depth = 10).localCheckpoint()
   }
 
   val declared: Seq[Declared] = Seq(

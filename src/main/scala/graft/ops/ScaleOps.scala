@@ -61,19 +61,13 @@ object ScaleOps {
     * this function expensively-derived pairs (q60 tokenizes text
     * upstream; 3 evaluations tripled its cost, measured). The cached
     * frame is only (orderCol, valueCol) pairs — bytes per row, far
-    * below the data they summarize. Same cache lifecycle contract as
-    * [[graft.ops.Similarity]]: the persist belongs to the returned
-    * plan; callers composing repeated runs clearCache between them
-    * (Bench does). A caller that wants to OWN the cache lifecycle
-    * passes an already-persisted frame — an input with a storage level
-    * is used as-is, never re-persisted, and stays the caller's to
-    * unpersist (ADVICE r3: composed pipelines like epoch's 3×
-    * packSequences otherwise accumulate one orphan cache per call). */
+    * below the data they summarize. The persist belongs to the
+    * returned plan ([[graft.Pins.forPlan]]). A caller that owns the
+    * cache passes an already-persisted frame, which is used as is. */
   def shardedCumSum(df0: DataFrame, orderCol: String, valueCol: String,
       cumName: String, nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val df = if (df0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df0.persist() else df0
+    val df = graft.Pins.forPlan.persist(df0)
     val bounds = df.agg(min(orderCol).as("__lo"),
       ceil((max(orderCol) - min(orderCol) + 1).cast("double") / nShards)
         .cast("long").as("__width"))
@@ -109,8 +103,7 @@ object ScaleOps {
   def groupedShardedCumSum(df0: DataFrame, groupCol: String, orderCol: String,
       valueCol: String, cumName: String, nShards: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val df = if (df0.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df0.persist() else df0
+    val df = graft.Pins.forPlan.persist(df0)
     val bounds = df.groupBy(groupCol).agg(min(orderCol).as("__lo"),
       ceil((max(orderCol) - min(orderCol) + 1).cast("double") / nShards)
         .cast("long").as("__width"))
@@ -193,52 +186,4 @@ object ScaleOps {
     if (df.sparkSession.conf.get("graft.checkpoint.reliable", "false").toBoolean)
       df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
-
-  /** Release the executor blocks behind a localCheckpoint'd frame
-    * (ADVICE r15: these are RDD-level persists — `catalog.clearCache()`
-    * never frees them, so a long multi-trigger streaming drain that
-    * checkpoints per trigger accumulates unbounded RDD storage;
-    * Verify/Bench only reclaim after the whole query). Digs the
-    * checkpointed RDD out of the frame's LogicalRDD leaves and
-    * unpersists it. ONLY call once every consumer of the frame has
-    * materialized — a localCheckpoint truncates lineage, so a
-    * post-unpersist recompute would fail, not recompute. No-op on
-    * frames that are not checkpoint-backed. */
-  def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
-
-  /** Snapshot the RDD-persist id set — pair with [[freeSince]] to
-    * scope checkpoint hygiene around a composed operator whose
-    * internal stageCheckpoints the caller cannot name (the q210
-    * trigger around semIngest). */
-  def rddMark(spark: org.apache.spark.sql.SparkSession): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** Unpersist every RDD persisted since `mark` except the blocks
-    * backing the `keep` frames (their LogicalRDD leaves). Same
-    * contract as [[freeLocalCheckpoint]]: every non-kept frame's
-    * consumers must have materialized. ADDITIONALLY (code review
-    * r16): getPersistentRDDs is SparkContext-GLOBAL, so the mark→free
-    * window must not overlap another query persisting frames on the
-    * same session — a concurrently-created localCheckpoint between
-    * mark and free would be unpersisted out from under its owner (and
-    * a truncated-lineage frame cannot recompute). The q210 trigger
-    * satisfies this via the drain's single-query posture (drainAndClean
-    * already WARNs if other streaming queries are active). */
-  def freeSince(spark: org.apache.spark.sql.SparkSession, mark: Set[Int],
-      keep: DataFrame*): Unit = {
-    val keepIds = keep.flatMap(df =>
-      df.queryExecution.analyzed.collectLeaves().collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }).toSet
-    val sc = spark.sparkContext
-    (sc.getPersistentRDDs.keySet.toSet -- mark).foreach { i =>
-      if (!keepIds.contains(i))
-        sc.getPersistentRDDs.get(i).foreach(_.unpersist(blocking = false))
-    }
-  }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Tables}
+import graft.{Declared, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -119,29 +119,31 @@ object SemStoreOps {
     * model with fresh global cids, and the reps remapped — so a probe
     * against the model sees the same bounded cells the build produced.
     * Returns the driver-held model and the reps frame (cid, id, e,
-    * cnt), materialized so the caller can persist or table it. */
-  private[graft] def semStoreBuild(emb: DataFrame, dim: Int,
+    * cnt), materialized so the caller can persist or table it: a
+    * checkpoint acquired through `p`, as are the guard's rounds. */
+  private[graft] def semStoreBuild(p: Pins, emb: DataFrame, dim: Int,
       kOverride: Option[Int] = None,
-      maxCell: Int = Extended10.SemDedupMaxCell): (SemModel, DataFrame) = {
-    val reps = Extended10.collapseExact(emb).persist()
-    try {
+      maxCell: Int = Extended10.SemDedupMaxCell): (SemModel, DataFrame) =
+    Pins.scoped { own =>
+      val reps = own.persist(Extended10.collapseExact(emb))
       val n = reps.count()
       val k = kOverride.getOrElse(Extended10.semDedupK(n))
       val repsSel = reps.select(col("id"), col("e"))
       val base: SemBase = Clustering.fitQuantizer(repsSel, k, dim,
         Some(n)).fold(SemFlat, SemTwoLevel)
       if (base.leaves.isEmpty)
-        return (SemModel(base, Map.empty),
+        (SemModel(base, Map.empty),
           reps.select(lit(0L).as("cid"), col("id"), col("e"), col("cnt"))
             .limit(0))
-      val asg0 = ScaleOps.stageCheckpoint(reps.select(
-        SemModel(base, Map.empty).assign(col("e")).getField("_1")
-          .as("cid"),
-        col("id"), col("e"), col("cnt")))
-      val (splits, asg) = boundStoreCells(asg0, base, dim, maxCell)
-      (SemModel(base, splits), asg)
-    } finally reps.unpersist()
-  }
+      else {
+        val asg0 = p.checkpoint(reps.select(
+          SemModel(base, Map.empty).assign(col("e")).getField("_1")
+            .as("cid"),
+          col("id"), col("e"), col("cnt")))
+        val (splits, asg) = boundStoreCells(p, asg0, base, dim, maxCell)
+        (SemModel(base, splits), asg)
+      }
+    }
 
   /** The build-time population guard (the boundCellPopulations loop,
     * capturing the split STRUCTURE in the model): per round, one
@@ -150,8 +152,10 @@ object SemStoreOps {
     * allocated above every existing leaf and split id in ascending
     * parent order (deterministic); reps remapped and re-materialized.
     * A cell still oversized after maxRounds (or whose draw came up
-    * empty) is left as-is — degrade, never loop (the q187 posture). */
-  private def boundStoreCells(asg0: DataFrame, base: SemBase, dim: Int,
+    * empty) is left as-is — degrade, never loop (the q187 posture).
+    * Each round's checkpoint is held by `p` until the next one has
+    * materialized. */
+  private def boundStoreCells(p: Pins, asg0: DataFrame, base: SemBase, dim: Int,
       maxCell: Int, splitK: Int = 16, maxRounds: Int = 4)
       : (Map[Long, Array[(Long, Array[Double])]], DataFrame) = {
     var asg = asg0
@@ -184,8 +188,10 @@ object SemStoreOps {
               case None => cid
             }
           }.asNonNullable()
-          asg = ScaleOps.stageCheckpoint(
+          val next = p.checkpoint(
             asg.withColumn("cid", remap(col("cid"), col("e"))))
+          p.release(asg)
+          asg = next
           round += 1
         }
       }
@@ -282,12 +288,13 @@ object SemStoreOps {
     * MATERIALIZED so both ingest outputs derive from one probe pass
     * (code review r15: a real ingest step needs the audit AND the
     * admitted payload, and the two public entries each re-ran the
-    * collapse/assignment/pair joins on identical inputs). */
-  private def probeFrames(batch: DataFrame, model: SemModel,
+    * collapse/assignment/pair joins on identical inputs). Its stage
+    * checkpoints are acquired through `p`. */
+  private def probeFrames(p: Pins, batch: DataFrame, model: SemModel,
       storedReps: DataFrame, tau: Double,
       maxCell: Int = Extended10.SemDedupMaxCell)
       : (DataFrame, DataFrame) = {
-    val bReps = ScaleOps.stageCheckpoint(
+    val bReps = p.checkpoint(
       Extended10.collapseExact(batch).select(
         model.assign(col("e")).getField("_1").as("cid"),
         col("id"), col("e"), col("cnt")))
@@ -300,10 +307,10 @@ object SemStoreOps {
         // side re-assigned by the SAME udf, output back at cid grain
         val sub = (f: DataFrame) =>
           f.withColumn("sub", refine(col("cid"), col("e")))
-        semProbe(ScaleOps.stageCheckpoint(sub(bReps)), sub(storeInCells),
+        semProbe(p.checkpoint(sub(bReps)), sub(storeInCells),
           tau, keys = Seq("cid", "sub"))
     }
-    (ScaleOps.stageCheckpoint(probed), storeInCells)
+    (p.checkpoint(probed), storeInCells)
   }
 
   /** The per-cell audit over a probed frame (see [[semDedupVsStore]]
@@ -330,8 +337,8 @@ object SemStoreOps {
     if (model.isEmpty)
       return batch.select(lit(0L).as("cid"), lit(0L).as("n_store"),
         lit(0L).as("n_batch"), lit(0L).as("n_dropped")).limit(0)
-    val (probed, storeInCells) = probeFrames(batch, model, storedReps,
-      tau, maxCell)
+    val (probed, storeInCells) = probeFrames(Pins.forPlan, batch, model,
+      storedReps, tau, maxCell)
     auditOf(probed, storeInCells)
   }
 
@@ -343,19 +350,19 @@ object SemStoreOps {
       model: SemModel, storedReps: DataFrame,
       tau: Double = Tau): DataFrame = {
     require(!model.isEmpty, "cannot admit into an empty-model store")
-    admittedOf(probeFrames(batch, model, storedReps, tau)._1)
+    admittedOf(probeFrames(Pins.forPlan, batch, model, storedReps, tau)._1)
   }
 
   /** ONE ingest step — the maintenance loop's real shape: probe once,
     * return (per-cell audit, admitted append payload) both derived
-    * from the same materialized probed frame. Callers run the audit,
-    * then append the admitted half. */
-  private[graft] def semIngest(batch: DataFrame, model: SemModel,
+    * from the same materialized probed frame, whose checkpoints `p`
+    * holds. Callers run the audit, then append the admitted half. */
+  private[graft] def semIngest(p: Pins, batch: DataFrame, model: SemModel,
       storedReps: DataFrame, tau: Double = Tau,
       maxCell: Int = Extended10.SemDedupMaxCell)
       : (DataFrame, DataFrame) = {
     require(!model.isEmpty, "cannot ingest into an empty-model store")
-    val (probed, storeInCells) = probeFrames(batch, model, storedReps,
+    val (probed, storeInCells) = probeFrames(p, batch, model, storedReps,
       tau, maxCell)
     (auditOf(probed, storeInCells), admittedOf(probed))
   }
@@ -366,14 +373,15 @@ object SemStoreOps {
     * probe audit (cid, n_store, n_batch, n_dropped). Store derived
     * inline (testdata ships no store — the q200/q203 precedent).
     * Rows-only (float cells). */
-  def q208SemDedupIncr(spark: SparkSession, dir: String): DataFrame = {
+  def q208SemDedupIncr(spark: SparkSession, dir: String): DataFrame = Pins.scoped { p =>
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("e"))
     val batch = emb.filter(pmod(col("id"), lit(7L)) === 0L)
     val (model, reps) =
-      semStoreBuild(emb.filter(pmod(col("id"), lit(7L)) =!= 0L), dim = 64)
-    semDedupVsStore(batch, model, reps)
+      semStoreBuild(p, emb.filter(pmod(col("id"), lit(7L)) =!= 0L), dim = 64)
+    // the returned audit reads the store's reps: the plan owns them
+    semDedupVsStore(batch, model, p.keep(reps))
   }
 
   val declared: Seq[Declared] = Seq(

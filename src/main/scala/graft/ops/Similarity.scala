@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,14 +8,11 @@ import org.apache.spark.sql.functions._
 /** q25/q26/q38/q39: near-duplicate detection and similarity search over
   * `documents` / `embeddings` — the LLM-training-data workhorses.
   *
-  * Cache lifecycle contract: builders that feed one computed table into
-  * BOTH sides of a self-join (`portablePairs`, q38/q39/q41/q42) persist
-  * that intermediate — it is sketch-sized (≤ ~128 B per document), never
-  * text. The persist belongs to the returned plan; a caller composing
-  * many invocations in one session reclaims the blocks with
-  * `spark.catalog.clearCache()` (or `unpersist` on the input) between
-  * runs — the library cannot unpersist for you because the returned
-  * DataFrame is lazy and the blocks must outlive its materialization.
+  * Builders that feed one computed table into BOTH sides of a
+  * self-join (`portablePairs`, q38/q39/q41/q42) persist that
+  * intermediate — it is sketch-sized (≤ ~128 B per document), never
+  * text — for the returned plan (the lazy-plan convention of
+  * [[graft.Pins]]).
   *
   * Scale design:
   *  - MinHash/LSH (q25) shuffles k=16 longs per document, never text;
@@ -243,16 +240,16 @@ object Similarity {
     * signature, equi-join on scalar band keys, estimate from component
     * agreement ([[portablePairs]]). */
   def q25NearDup(spark: SparkSession, dir: String): DataFrame =
-    portablePairs(plantedCorpus(spark, dir)).orderBy("a_id", "b_id")
+    portablePairs(Pins.forPlan, plantedCorpus(spark, dir)).orderBy("a_id", "b_id")
 
   /** PORTABLE-family near-dup pair generator: (a_id, b_id, est_jaccard ≥
     * minEst), candidates from the 4-band md5 self-join, estimate =
     * matching components / 16 rounded to 6. The reusable core of q25,
     * q175, and the corpus pipeline's near-dup stage — every consumer is
     * therefore DuckDB-replicable step for step. */
-  def portablePairs(corpus: DataFrame, minEst: Double = 0.5): DataFrame = {
+  def portablePairs(p: Pins, corpus: DataFrame, minEst: Double = 0.5): DataFrame = {
     // persist: the signature table feeds both sides of the band self-join
-    val sigs = portableSigs(corpus).persist()
+    val sigs = p.persist(portableSigs(corpus))
     val bands = sigs.select(col("doc_id"), col("sig"),
       posexplode(portableBandKeys(col("sig"))).as(Seq("band_idx", "band_key")))
     val a = bands.select(col("band_idx"), col("band_key"),
@@ -919,7 +916,7 @@ object Similarity {
     * final matrix is ≤ |sources|² rows. */
   def q175SourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val pairs = portablePairs(Layout.spread(docs.select("doc_id", "text")))
+    val pairs = portablePairs(Pins.forPlan, Layout.spread(docs.select("doc_id", "text")))
       .select("a_id", "b_id")
     val src = docs.select(col("doc_id"), col("source"))
     pairs

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 
 /** q202 — exact substring (span) deduplication: the Lee et al. 2022
   * "Deduplicating Training Data Makes Language Models Better"
@@ -185,12 +185,12 @@ object SpanOps {
     * distinct digest SET — the artifact a production pipeline persists
     * once per corpus generation (bucketed by digest, the ScaleOps
     * bucketed-state shape, the semi-join needs no store-side
-    * shuffle). */
-  private[graft] def spanDedupVsStore(batch: DataFrame,
+    * shuffle). The batch-sized digest cache (three consumers) is
+    * acquired through `p`. */
+  private[graft] def spanDedupVsStore(p: Pins, batch: DataFrame,
       storeDigests: DataFrame): DataFrame = {
     val base = tokenBase(batch)
-    val spans = spanFrame(base)
-      .persist() // batch-sized digests; three consumers (harness unpersists)
+    val spans = p.persist(spanFrame(base))
     val withinBatch = spans.groupBy("g").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2L).select("g")
     // store hits: distinct-reduce the batch side BEFORE the semi-join
@@ -315,23 +315,19 @@ object SpanOps {
     * keeps that frame and frees it when it is no longer read. */
   private[graft] def spanIngestTrigger(spark: SparkSession, root: String,
       maxSegments: Int = 8): (DataFrame, Long) => DataFrame =
-    (b: DataFrame, id: Long) => {
+    (b: DataFrame, id: Long) => Pins.scoped { p =>
       VersionedStore.maintain(spark, root, id, Seq("g"), maxSegments)
-      val bc = b.localCheckpoint(true)
+      val bc = p.checkpoint(b)
       val probeStore = spanStoreBefore(spark, root, id)
-      val out = spanDedupVsStore(bc, probeStore).localCheckpoint(true)
-      spark.catalog.clearCache() // the digest persist, per trigger
+      // the probe's digest cache is released once `out` is materialized
+      val out = Pins.scoped(q =>
+        spanDedupVsStore(q, bc, probeStore).localCheckpoint(true))
       VersionedStore.write(spanIndexDelta(bc, probeStore), root, id)
-      ScaleOps.freeLocalCheckpoint(bc) // both consumers materialized
       out
     }
 
-  /** q202 over the documents table.
-    *
-    * NOTE (caller contract, repo-wide convention): the returned plan
-    * holds a `persist()` on the internal digest frame; run
-    * `spark.catalog.clearCache()` after consuming the result (Verify/
-    * Bench/specs all do) or the digest cache outlives the query. */
+  /** q202 over the documents table. The returned plan reads its
+    * digest cache (the lazy-plan convention, [[graft.Pins]]). */
   def q202SpanDedup(spark: SparkSession, dir: String): DataFrame =
     spanDedup(
       Layout.spread(Tables.documents(spark, dir).select("doc_id", "text")))
@@ -347,13 +343,12 @@ object SpanOps {
     * standing corpus whose digest index exists from its own ingest.
     * The index is derived inline — testdata ships no stored index; the
     * q200 declared-query precedent. The stored-index probe is
-    * [[spanDedupVsStore]] over any store frame. (Same digest-persist
-    * caller contract as q202.) */
+    * [[spanDedupVsStore]] over any store frame. */
   def q203SpanDedupIncr(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val batch = docs.filter(pmod(col("doc_id"), lit(7L)) === 0L)
     val store = spanIndex(docs.filter(pmod(col("doc_id"), lit(7L)) =!= 0L))
-    spanDedupVsStore(batch, store)
+    spanDedupVsStore(Pins.forPlan, batch, store)
   }
 
   /** q205 — incremental keep-first span dedup over the documents table

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoders => SqlEncoders}
@@ -274,7 +274,7 @@ object StreamingOps {
             .outputMode(outputMode)
             .foreachBatch { (df: DataFrame, batchId: Long) =>
               Option(kept.put(if (complete) 0L else batchId, perBatch(df, batchId)))
-                .foreach(ScaleOps.freeLocalCheckpoint)
+                .foreach(Pins.freeCheckpoint)
             }
             .option("checkpointLocation", ckpt.toString)
             .trigger(Trigger.AvailableNow())
@@ -321,7 +321,7 @@ object StreamingOps {
         catch { case _: Throwable => () }
       }
       // a failed drain returns nothing, so nothing reads its batches
-      if (!returned) kept.values.asScala.foreach(ScaleOps.freeLocalCheckpoint)
+      if (!returned) kept.values.asScala.foreach(Pins.freeCheckpoint)
       val ownId = own.map(_.id)
       val stillActive = spark.streams.active
         .filterNot(q => ownId.contains(q.id))
@@ -587,9 +587,8 @@ object StreamingOps {
     SpanOps.spanStoreInit(store0, storeRoot, parts = shuffleParts)
     // analysis-only probe for the output schema (no job: .schema on an
     // empty frame); the persist it marks is dropped right after
-    val outSchema = SpanOps.spanDedupVsStore(
-      emptyFrame(spark, docStream.schema), store0).schema
-    spark.catalog.clearCache()
+    val outSchema = Pins.scoped(p => SpanOps.spanDedupVsStore(p,
+      emptyFrame(spark, docStream.schema), store0).schema)
     drainAndClean(spark, docStream, "q206", outputMode = "append",
       shuffleParts = shuffleParts,
       perBatch = SpanOps.spanIngestTrigger(spark, storeRoot),
@@ -642,24 +641,20 @@ object StreamingOps {
     * equi-join probe + a batch-sized segment write. */
   private[graft] def sigIngestTrigger(spark: SparkSession, root: String,
       maxSegments: Int = 8): (DataFrame, Long) => DataFrame =
-    (b: DataFrame, id: Long) => {
+    (b: DataFrame, id: Long) => Pins.scoped { p =>
       // merge policy: fold committed segments (all strictly < id) into
       // one band-key-laid-out generation past maxSegments — probe cost
       // flat in trigger count, replay-safe (VersionedStore.maintain)
       VersionedStore.maintain(spark, root, id,
         Seq("band_idx", "band_key"), maxSegments)
-      val bc = b.localCheckpoint(true)
+      val bc = p.checkpoint(b)
       // ONE signature pass per trigger: the materialized bands feed
       // both the probe and the fold (code review r15b — the semIngest
-      // lesson)
-      val bands = Similarity.sigBands(bc).localCheckpoint(true)
+      // lesson); both are consumed by the scope's end
+      val bands = p.checkpoint(Similarity.sigBands(bc))
       val out = Similarity.dedupVsSigStoreBands(bands,
         VersionedStore.before(spark, root, id)).localCheckpoint(true)
       VersionedStore.write(bands, root, id)
-      // bc fed only bands; bands fed the probe (out, materialized) and
-      // the fold (written) — both consumed, free their blocks now
-      ScaleOps.freeLocalCheckpoint(bands)
-      ScaleOps.freeLocalCheckpoint(bc)
       out
     }
 
@@ -679,16 +674,16 @@ object StreamingOps {
     * posture; production points the store root at shared storage and
     * reuses it with the checkpoint across restarts). */
   def q209StreamingSigIngest(spark: SparkSession, dir: String): DataFrame = {
-    // persisted across its two staging consumers (store bands + batch
-    // file) — both otherwise re-derive the planted corpus from parquet;
-    // released before the drain, which never touches it
-    val corpus = Similarity.plantedCorpus(spark, dir).persist()
     val work = java.nio.file.Files.createTempDirectory("graft-sigingest")
     // one adaptive partition count for the whole query (store init
     // layout ≡ per-trigger read ≡ drain state), sized from the source
     // table the planted corpus derives from
     val parts = Layout.stateParts(Tables.documents(spark, dir))
-    try {
+    try Pins.scoped { p =>
+      // persisted across its two staging consumers (store bands + batch
+      // file) — both otherwise re-derive the planted corpus from parquet;
+      // released before the drain, which never touches it
+      val corpus = p.persist(Similarity.plantedCorpus(spark, dir))
       val store0 = Similarity.sigBands(
         corpus.filter(col("doc_id") < 1000000L))
       VersionedStore.init(store0, s"$work/store", parts)
@@ -697,7 +692,7 @@ object StreamingOps {
       // once — production batches arrive as their own files)
       corpus.filter(col("doc_id") >= 1000000L)
         .coalesce(1).write.parquet(s"$work/batch")
-      corpus.unpersist()
+      p.release(corpus)
       val stream = spark.readStream
         .schema("doc_id BIGINT, text STRING").parquet(s"$work/batch")
       // analysis-only output-schema probe (no job)
@@ -731,22 +726,17 @@ object StreamingOps {
     * the overwrite invariant, not bit-determinism, is what replay
     * safety actually rests on (see [[VersionedStore]]). Non-flooded
     * batches (the refinement no-op) replay bit-identically.
-    * semIngest's internal stage checkpoints are anonymous, so hygiene
-    * here is the mark/freeSince scope instead of named frees. */
+    * semIngest's stage checkpoints are held by the trigger's scope. */
   private[graft] def semIngestTrigger(spark: SparkSession, root: String,
       model: SemStoreOps.SemModel, maxSegments: Int = 8)
       : (DataFrame, Long) => DataFrame =
-    (b: DataFrame, id: Long) => {
+    (b: DataFrame, id: Long) => Pins.scoped { p =>
       VersionedStore.maintain(spark, root, id, Seq("cid"), maxSegments)
-      val mark = ScaleOps.rddMark(spark)
-      val bc = b.localCheckpoint(true)
-      val (audit, admitted) = SemStoreOps.semIngest(bc, model,
+      val bc = p.checkpoint(b)
+      val (audit, admitted) = SemStoreOps.semIngest(p, bc, model,
         VersionedStore.before(spark, root, id))
       val out = audit.localCheckpoint(true)
       VersionedStore.write(admitted, root, id)
-      // every intermediate (bc, the probe's internal checkpoints) is
-      // consumed by out + the fold; keep only the drained frame's blocks
-      ScaleOps.freeSince(spark, mark, out)
       out
     }
 
@@ -765,11 +755,11 @@ object StreamingOps {
     * posture); production points the store root at shared storage
     * and reuses it with the checkpoint across restarts, loading the
     * frozen model from the stored P_model table. */
-  def q210StreamingSemIngest(spark: SparkSession, dir: String): DataFrame = {
+  def q210StreamingSemIngest(spark: SparkSession, dir: String): DataFrame = Pins.scoped { p =>
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("e"))
-    val (model, reps) = SemStoreOps.semStoreBuild(
+    val (model, reps) = SemStoreOps.semStoreBuild(p,
       emb.filter(pmod(col("id"), lit(7L)) =!= 0L), dim = 64)
     val work = java.nio.file.Files.createTempDirectory("graft-semingest")
     // one adaptive partition count for store layout and drain state,
@@ -782,9 +772,12 @@ object StreamingOps {
       val stream = spark.readStream
         .schema(spark.read.parquet(s"$work/batch").schema)
         .parquet(s"$work/batch")
-      // analysis-only output-schema probe (tiny empty-input jobs)
-      val outSchema = SemStoreOps.semDedupVsStore(
-        emptyFrame(spark, stream.schema), model, reps).schema
+      // analysis-only output-schema probe (tiny empty-input jobs whose
+      // checkpoints p holds; an empty model runs none)
+      val probe = emptyFrame(spark, stream.schema)
+      val outSchema =
+        if (model.isEmpty) SemStoreOps.semDedupVsStore(probe, model, reps).schema
+        else SemStoreOps.semIngest(p, probe, model, reps)._1.schema
       drainAndClean(spark, stream, "q210", outputMode = "append",
         shuffleParts = parts,
         perBatch = semIngestTrigger(spark, s"$work/store", model),

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.{Declared, Layout, Tables}
+import graft.{Declared, Layout, Pins, Tables}
 import graft.ops.{Similarity, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -25,17 +25,17 @@ import scala.util.chaining._
   * shard (partitionBy a shard key) or pre-aggregating counts per
   * doc_id range and cutting at the range boundary.
   *
-  * Cache lifecycle: `prepare` persists the exact-dedup survivors (and
-  * [[graft.ops.Similarity.portablePairs]] persists its signature table)
-  * for the duration of the returned plan. Callers running many
-  * pipelines in one session should `spark.catalog.clearCache()` between
-  * runs — see the contract note on [[graft.ops.Similarity]].
+  * Cache lifecycle: `prepare` acquires its caches (the exact-dedup
+  * survivors, [[graft.ops.Similarity.portablePairs]]'s signature table,
+  * the scored frame its running total reads) through the pins it is
+  * given: q46 returns them with its plan ([[graft.Pins.forPlan]]),
+  * `epoch` holds and releases them.
   */
 object CorpusPipeline {
 
   /** Testable core: prepare an arbitrary (doc_id, text, n_chars, lang)
-    * frame. */
-  def prepare(docs: DataFrame, minQuality: Double,
+    * frame, its caches acquired through `p`. */
+  def prepare(p: Pins, docs: DataFrame, minQuality: Double,
       tokenBudget: Long): DataFrame = {
     val norm = trim(regexp_replace(lower(col("text")), "\\s+", " "))
     // 1 — exact dedup (hash-groupBy; text never shuffles)
@@ -46,11 +46,11 @@ object CorpusPipeline {
     // re-scanned per stage. The in-library analog of checkpointing
     // between pipeline stages, which is how this runs at 100 TB too
     // (materialize survivors, then iterate on the much smaller set).
-    val exact = docs.join(keepIds, Seq("doc_id"), "left_semi").persist()
+    val exact = p.persist(docs.join(keepIds, Seq("doc_id"), "left_semi"))
     // 2 — near-dup removal (LSH candidates only; drop the b side).
     // PORTABLE md5 family (sketch-sized on the wire), so the WHOLE
     // pipeline is DuckDB-replicable and q46 is hash-compared end to end.
-    val dropB = Similarity.portablePairs(exact.select("doc_id", "text"))
+    val dropB = Similarity.portablePairs(p, exact.select("doc_id", "text"))
       .select(col("b_id").as("doc_id")).distinct()
     val nearDeduped = exact.join(dropB, Seq("doc_id"), "left_anti")
     // 3 — quality gate
@@ -64,7 +64,7 @@ object CorpusPipeline {
     // the SHARDED prefix sum (ScaleOps.shardedCumSum) — identical
     // values to a global `sum OVER (ORDER BY doc_id)` window without
     // funnelling every surviving doc through one reducer
-    graft.ops.ScaleOps.shardedCumSum(scored, "doc_id", "n_tokens",
+    graft.ops.ScaleOps.shardedCumSum(p.persist(scored), "doc_id", "n_tokens",
         "cum_tokens", 16)
       .filter(col("cum_tokens") <= tokenBudget)
       .select("doc_id", "lang", "n_chars", "n_tokens", "quality_score",
@@ -78,7 +78,7 @@ object CorpusPipeline {
     * the q35 quality gate, and the doc_id-ordered token budget are all
     * replicated in one DuckDB statement ([[oracleSql]]). */
   def q46CorpusPrep(spark: SparkSession, dir: String): DataFrame =
-    prepare(
+    prepare(Pins.forPlan,
       Layout.spread(Tables.documents(spark, dir)
         .select("doc_id", "text", "n_chars", "lang")),
       minQuality = 0.3, tokenBudget = 10000L)
@@ -123,70 +123,64 @@ object CorpusPipeline {
     */
   def epoch(docs: DataFrame, benchmark: DataFrame, minQuality: Double,
       tokenBudget: Long, binCap: Int): DataFrame = {
-    // epoch OWNS the cache lifecycle of everything it composes (ADVICE
-    // r3 / VERDICT r4 item 7): prepare's survivor persist, the LSH
-    // signature table, dirty, the pack's internal cumsum persist, and
-    // every stageCheckpoint block. The audit result is ≤ 3 rows by
-    // construction, so it is collected eagerly and everything this call
-    // pinned is released — CorpusPipelineSpec asserts getPersistentRDDs
-    // returns to its pre-call state.
-    val scEpoch = docs.sparkSession.sparkContext
-    val pinnedBefore = scEpoch.getPersistentRDDs.keySet
-    // localCheckpoint (not persist): the survivors' METADATA is tiny,
-    // but its LINEAGE is the whole LSH pipeline. Downstream every pack
-    // branch embeds this frame inside broadcast subqueries (bounds,
-    // offsets) whose planning/evaluation re-traverses the full analyzed
-    // plan — measured 20–75 s PER BRANCH at sf0.1 with persist alone
-    // (cache hits don't shrink the plan), 0.6–1.1 s once checkpointing
-    // truncates the plan to the materialized blocks. At cluster scale
-    // the same move is `checkpoint()` to reliable storage — the classic
-    // stage boundary of a multi-stage data pipeline.
-    val kept = prepare(docs, minQuality, tokenBudget)
-      .select("doc_id", "n_tokens").pipe(graft.ops.ScaleOps.stageCheckpoint)
-    // persisted: feeds the anti-join AND the audit count
-    val dirty = contaminatedIds(
-      docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"),
-      benchmark).persist()
-    val clean = kept.join(dirty, Seq("doc_id"), "left_anti")
-    val h = substring(md5(col("doc_id").cast("string")), 1, 4)
-    val tagged = clean.withColumn("split",
-      when(h < "cccd", "train").when(h < "e666", "val")
-        .otherwise("test")).pipe(graft.ops.ScaleOps.stageCheckpoint)
-    // ONE grouped pack over all splits (round 3 ran three separate
-    // pack pipelines over the same frame — 3× the jobs for the same
-    // bins); a left join against the literal split list keeps the
-    // all-zero row for a split the tagging emptied out
     val spark = docs.sparkSession
     import spark.implicits._
-    val audit = graft.ops.Extended.packSequencesGrouped(
-        tagged.select("split", "doc_id", "n_tokens"),
-        "split", cap = binCap, nShards = 4)
-      .groupBy("split")
-      .agg(count(lit(1)).as("n_bins"),
-        sum("bin_tokens").as("total_tokens"),
-        sum("n_docs").as("n_docs"))
-    val packed = Seq("train", "val", "test").toDF("split")
-      .join(audit, Seq("split"), "left")
-      .select(col("split"),
-        coalesce(col("n_bins"), lit(0L)).as("n_bins"),
-        coalesce(col("total_tokens"), lit(0L)).as("total_tokens"),
-        coalesce(col("n_docs"), lit(0L)).as("n_docs"))
-    val nDirty = dirty.count()
-    val result = packed
-      .withColumn("n_contaminated_removed", lit(nDirty))
-      .select("split", "n_docs", "total_tokens", "n_bins",
-        "n_contaminated_removed")
-      .orderBy("split")
-    // materialize the bounded audit, then free every RDD this build
-    // pinned (persist + localCheckpoint blocks — catalog.clearCache
-    // would miss the latter); the returned frame is a LocalRelation
-    // with no dependence on the released blocks
-    val rows = result.collect().toSeq
-    scEpoch.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedBefore.contains(id)) rdd.unpersist(blocking = false)
+    // epoch OWNS the cache lifecycle of everything it composes (ADVICE
+    // r3 / VERDICT r4 item 7): prepare's caches, dirty, the pack's
+    // cumsum input and every stage checkpoint are held by one scope.
+    // The audit result is ≤ 3 rows by construction, so it is collected
+    // eagerly and the scope releases everything — CorpusPipelineSpec
+    // asserts the persisted RDDs return to their pre-call set.
+    val (rows, schema) = Pins.scoped { p =>
+      // a checkpoint (not a bare persist): the survivors' METADATA is
+      // tiny, but its LINEAGE is the whole LSH pipeline. Downstream
+      // every pack branch embeds this frame inside broadcast subqueries
+      // (bounds, offsets) whose planning/evaluation re-traverses the
+      // full analyzed plan — measured 20–75 s PER BRANCH at sf0.1 with
+      // persist alone (cache hits don't shrink the plan), 0.6–1.1 s once
+      // checkpointing truncates the plan to the materialized blocks. At
+      // cluster scale the same move is `checkpoint()` to reliable
+      // storage — the classic stage boundary of a multi-stage data
+      // pipeline.
+      val kept = p.checkpoint(prepare(p, docs, minQuality, tokenBudget)
+        .select("doc_id", "n_tokens"))
+      // persisted: feeds the anti-join AND the audit count
+      val dirty = p.persist(contaminatedIds(
+        docs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"),
+        benchmark))
+      val clean = kept.join(dirty, Seq("doc_id"), "left_anti")
+      val h = substring(md5(col("doc_id").cast("string")), 1, 4)
+      val tagged = p.checkpoint(clean.withColumn("split",
+        when(h < "cccd", "train").when(h < "e666", "val")
+          .otherwise("test")))
+      // ONE grouped pack over all splits (round 3 ran three separate
+      // pack pipelines over the same frame — 3× the jobs for the same
+      // bins); a left join against the literal split list keeps the
+      // all-zero row for a split the tagging emptied out. The pack's
+      // running total reads its input cached.
+      val audit = graft.ops.Extended.packSequencesGrouped(
+          p.persist(tagged.select("split", "doc_id", "n_tokens")),
+          "split", cap = binCap, nShards = 4)
+        .groupBy("split")
+        .agg(count(lit(1)).as("n_bins"),
+          sum("bin_tokens").as("total_tokens"),
+          sum("n_docs").as("n_docs"))
+      val packed = Seq("train", "val", "test").toDF("split")
+        .join(audit, Seq("split"), "left")
+        .select(col("split"),
+          coalesce(col("n_bins"), lit(0L)).as("n_bins"),
+          coalesce(col("total_tokens"), lit(0L)).as("total_tokens"),
+          coalesce(col("n_docs"), lit(0L)).as("n_docs"))
+      val nDirty = dirty.count()
+      val result = packed
+        .withColumn("n_contaminated_removed", lit(nDirty))
+        .select("split", "n_docs", "total_tokens", "n_bins",
+          "n_contaminated_removed")
+        .orderBy("split")
+      (result.collect().toSeq, result.schema)
     }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), result.schema)
+    // a LocalRelation-backed frame: nothing the scope released
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
   /** q100 — the epoch build declared over `documents`, benchmark =

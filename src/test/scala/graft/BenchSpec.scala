@@ -7,11 +7,12 @@ import org.apache.spark.sql.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Bench's pass function over a scan and q172's streaming drain, and the
-  * SPARK_GRAFT_ONLY check both mains make before their session starts. */
+/** Bench's pass function over a scan, a lazy plan that reads its own
+  * cache (q25) and q172's streaming drain, and the SPARK_GRAFT_ONLY
+  * check both mains make before their session starts. */
 class BenchSpec extends AnyFunSuite {
   lazy val spark = SparkTest.session
-  private val subset = Seq("q01_scan_project", "q172_streaming_availablenow")
+  private val subset = Seq("q01_scan_project", "q172_streaming_availablenow", "q25_near_dup")
 
   test("Bench.measure: JSON keys are the selection; each profiled stage has one call; drain jobs carry q172's") {
     // the jobs a streaming query starts on its stream thread, with the
@@ -51,7 +52,8 @@ class BenchSpec extends AnyFunSuite {
       "a stage is profiled under more than one call")
     // shuffle bytes and spill: a call's totals are its stage rows' sums,
     // and a stage reports shuffle bytes exactly when it moved shuffle
-    // records; both queries shuffle (q01's sort, q172's aggregate)
+    // records; every query shuffles (q01's sort, q25's band join,
+    // q172's aggregate)
     val byteKeys = Seq("shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes")
     calls.foreach { c =>
       val rows = c.get("stage_rows").elements.asScala.toSeq
@@ -71,13 +73,25 @@ class BenchSpec extends AnyFunSuite {
     val drainStages = drains.flatMap { case (ids, c) => ids.flatMap(stageCall.get).map(c -> _) }
     assert(drainStages.nonEmpty && drainStages.forall { case (job, stage) => job == stage },
       s"drain stages profiled under another call: $drainStages")
+    // what each call left for the harness to free: nothing after a plain
+    // scan, the signature cache after q25's lazy plan
+    calls.foreach { c =>
+      val released = c.get("released_rdds").asInt
+      c.get("query").asText match {
+        case "q01_scan_project" => assert(released == 0, call(c))
+        case "q25_near_dup" => assert(released > 0, call(c))
+        case _ =>
+      }
+    }
   }
 
   test("an undeclared SPARK_GRAFT_ONLY name fails Bench and Verify before a session starts") {
     val e = intercept[IllegalArgumentException](
       SparkEntry.selected(Some("q999,q01_scan_project,q0x")))
     assert(e.getMessage.endsWith("SPARK_GRAFT_ONLY names undeclared queries: q0x, q999"))
-    assert(SparkEntry.selected(None).map(_.name) == SparkEntry.queries.keys.toSeq.sorted)
+    // unset, empty, or naming only blanks: every declared query
+    Seq(None, Some(""), Some(" , ")).foreach(only => assert(
+      SparkEntry.selected(only).map(_.name) == SparkEntry.queries.keys.toSeq.sorted, only))
     // each main in a JVM of its own, with only the variable set: it
     // exits with the names, starts no SparkContext (which logs its
     // version at start) and writes no output

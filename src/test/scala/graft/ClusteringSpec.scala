@@ -24,7 +24,7 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("planted clusters recover exactly; counts balance") {
-    val cents = Clustering.kmeansFit(blobs, k = 3, dim = 4).collect()
+    val cents = Clustering.kmeansFit(Pins.forPlan, blobs, k = 3, dim = 4).collect()
     assert(cents.length == 3)
     val found = cents.map(_.getSeq[Double](1).toVector).sortBy(_.head)
     // converged centroids sit at the planted centers (jitter averages
@@ -94,7 +94,7 @@ class ClusteringSpec extends AnyFunSuite {
   test("empty input returns empty centroids instead of crashing") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Seq[Double])].toDF("id", "e")
-    val out = Clustering.kmeansFit(empty, k = 3, dim = 4)
+    val out = Clustering.kmeansFit(Pins.forPlan, empty, k = 3, dim = 4)
     assert(out.count() == 0)
   }
 

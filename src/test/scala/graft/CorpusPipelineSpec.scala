@@ -28,18 +28,18 @@ class CorpusPipelineSpec extends AnyFunSuite {
     .toDF("doc_id", "text", "n_chars", "lang")
 
   test("exact and near duplicates drop, junk fails the gate, originals survive") {
-    val out = CorpusPipeline.prepare(docs, minQuality = 0.3,
+    val out = CorpusPipeline.prepare(Pins.forPlan, docs, minQuality = 0.3,
       tokenBudget = 1000000L).collect()
     val ids = out.map(_.getLong(0)).toSeq
     assert(ids == Seq(1L, 4L), s"survivors: $ids")
   }
 
   test("token budget keeps the doc_id-ordered prefix") {
-    val all = CorpusPipeline.prepare(docs, minQuality = -10,
+    val all = CorpusPipeline.prepare(Pins.forPlan, docs, minQuality = -10,
       tokenBudget = 1000000L).collect()
     assert(all.length >= 2)
     val firstTokens = all.head.getLong(3)
-    val out = CorpusPipeline.prepare(docs, minQuality = -10,
+    val out = CorpusPipeline.prepare(Pins.forPlan, docs, minQuality = -10,
       tokenBudget = firstTokens).collect()
     assert(out.length == 1 && out.head.getLong(0) == all.head.getLong(0))
     // cum_tokens is monotone and within budget on the full run

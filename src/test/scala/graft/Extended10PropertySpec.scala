@@ -91,10 +91,9 @@ class Extended10PropertySpec extends AnyFunSuite {
   // ------------------------------------------------------------- q190
   test("q190 BM25 matches an independent reimplementation") {
     val docs = corpus(303L, 80).map { case (id, t, _) => (id, t) }
-    val (out, caches) = Extended10.bm25Plan(docs.toDF("doc_id", "text"))
-    val got = out.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getLong(2), r.getLong(3))).toSeq
-    caches.foreach(_.unpersist())
+    val got = Pins.scoped(p => Extended10.bm25Plan(p, docs.toDF("doc_id", "text"))
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getLong(3))).toSeq)
     // reference
     val toks = docs.map { case (id, t) => id -> tokensOf(t) }.toMap
     val n = docs.size.toLong

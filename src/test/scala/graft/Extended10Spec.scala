@@ -136,18 +136,16 @@ class Extended10Spec extends AnyFunSuite {
     val rows = (0 until 64).map { i =>
       (i.toLong, Seq(i.toDouble, 1.0), 1L, 0L)
     }
-    val asg0 = rows.toDF("id", "e", "cnt", "cid").persist()
-    try {
-      val out = Extended10.boundCellPopulations(asg0, dim = 2,
-        maxCell = 8, splitK = 2, maxRounds = 8)
-      val got = out.collect()
-      if (out ne asg0) out.unpersist()
-      assert(got.map(_.getLong(0)).sorted.toSeq == (0L until 64L).toSeq,
-        "split must only rewrite cid — every id exactly once")
-      val pops = got.groupBy(_.getAs[Long]("cid")).map(_._2.length)
-      assert(pops.sum == 64 && pops.max <= 8,
-        s"recursive split left a cell of ${pops.max} > 8")
-    } finally asg0.unpersist()
+    val got = Pins.scoped { p =>
+      val asg0 = p.persist(rows.toDF("id", "e", "cnt", "cid"))
+      Extended10.boundCellPopulations(p, asg0, dim = 2,
+        maxCell = 8, splitK = 2, maxRounds = 8).collect()
+    }
+    assert(got.map(_.getLong(0)).sorted.toSeq == (0L until 64L).toSeq,
+      "split must only rewrite cid — every id exactly once")
+    val pops = got.groupBy(_.getAs[Long]("cid")).map(_._2.length)
+    assert(pops.sum == 64 && pops.max <= 8,
+      s"recursive split left a cell of ${pops.max} > 8")
   }
 
   test("q187 over embeddings: every vector in exactly one cell") {
@@ -229,14 +227,13 @@ class Extended10Spec extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
     import org.apache.spark.sql.execution.joins.CartesianProductExec
-    val (out, caches) = Extended10.q190Plan(spark, SparkTest.sfDir)
-    val plan: SparkPlan = out.queryExecution.sparkPlan
+    val plan: SparkPlan = Pins.scoped(p =>
+      Extended10.q190Plan(p, spark, SparkTest.sfDir).queryExecution.sparkPlan)
     assert(plan.collect { case w: WindowGroupLimitExec => w }.nonEmpty,
       "top-10 per query must go through rank-limit pushdown")
     assert(plan.collect { case j: BroadcastHashJoinExec => j }.size >= 2,
       "query-term and df joins must broadcast")
     assert(plan.collect { case c: CartesianProductExec => c }.isEmpty)
-    caches.foreach(_.unpersist())
   }
 
   // ------------------------------------------------------------- q191

@@ -15,8 +15,8 @@ class GraphOpsSpec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (12L, 10L)).toDF("src", "dst")
     val verts = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
-    val labels = GraphOps.connectedComponents(verts, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labels = Pins.scoped(GraphOps.connectedComponents(_, verts, edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(Seq(1L, 2L, 3L, 4L).forall(labels(_) == 1L))
     assert(Seq(10L, 11L, 12L).forall(labels(_) == 10L))
     assert(labels(20L) == 20L)
@@ -49,7 +49,7 @@ class GraphOpsSpec extends AnyFunSuite {
         col("b_us") - col("a_us") <= 300000000L)
       .select("src", "dst")
     val verts = ev.select(col("event_id").as("id"))
-    val prop = GraphOps.connectedComponents(verts, edges).collect()
+    val prop = Pins.scoped(GraphOps.connectedComponents(_, verts, edges).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val star = GraphOps.connectedComponentsStar(verts, edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -78,7 +78,7 @@ class GraphOpsSpec extends AnyFunSuite {
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
     val verts = (0L until 64L).toDF("id")
     val before = GraphOps.nonConvergenceCount.get()
-    GraphOps.connectedComponents(verts, edges, maxIters = 1).collect()
+    Pins.scoped(GraphOps.connectedComponents(_, verts, edges, maxIters = 1).collect())
     GraphOps.connectedComponentsStar(verts, edges, maxIters = 1).collect()
     assert(GraphOps.nonConvergenceCount.get() == before + 2,
       "each variant's maxIters exit must emit exactly one signal")
@@ -210,18 +210,19 @@ class GraphOpsSpec extends AnyFunSuite {
         if ((a * 1000003L + b * 7919L + seed) % 97) < 15
       } yield (a.toLong, b.toLong)).toDF("src", "dst")
       val (nv, ne, nt) = ops.GraphOps.triangleStats(edges)
-      val e = edges.persist()
-      val brute = e.as("e1")
-        .join(e.as("e2"), col("e2.src") === col("e1.src") &&
-          col("e2.dst") > col("e1.dst"))
-        .join(e.as("e3"), col("e3.src") === col("e1.dst") &&
-          col("e3.dst") === col("e2.dst"))
-        .count()
-      assert(nt == brute, s"seed $seed: oriented $nt != brute $brute")
-      assert(ne == e.count())
-      assert(nv == e.select(explode(array(col("src"), col("dst"))))
-        .distinct().count())
-      e.unpersist()
+      Pins.scoped { p =>
+        val e = p.persist(edges)
+        val brute = e.as("e1")
+          .join(e.as("e2"), col("e2.src") === col("e1.src") &&
+            col("e2.dst") > col("e1.dst"))
+          .join(e.as("e3"), col("e3.src") === col("e1.dst") &&
+            col("e3.dst") === col("e2.dst"))
+          .count()
+        assert(nt == brute, s"seed $seed: oriented $nt != brute $brute")
+        assert(ne == e.count())
+        assert(nv == e.select(explode(array(col("src"), col("dst"))))
+          .distinct().count())
+      }
     }
   }
 
@@ -252,9 +253,43 @@ class GraphOpsSpec extends AnyFunSuite {
     // 4-clique {0,1,2,3} + a tail 3-4-5 chain: tail degrees < 3 cascade
     val clique = for { a <- 0 to 3; b <- (a + 1) to 3 } yield (a.toLong, b.toLong)
     val tail = Seq((3L, 4L), (4L, 5L))
-    val core = ops.GraphOps.kCoreEdges((clique ++ tail).toDF("src", "dst"), 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val core = Pins.scoped(ops.GraphOps.kCoreEdges(_, (clique ++ tail).toDF("src", "dst"), 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(core == clique.toSet, s"3-core should be exactly the clique: $core")
+  }
+
+  test("the iterative loops leave no RDD persisted besides their result's") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    def added(body: => Unit): Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      body
+      sc.getPersistentRDDs.keySet.toSet -- before
+    }
+    // a triangle with a 6-edge tail: 2-core peeling drops one tail edge
+    // per round, so the peel runs 7 rounds (a checkpoint at round 4)
+    val edges = (Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 10L)) ++
+      (10L until 15L).map(i => (i, i + 1))).toDF("src", "dst")
+    // 10 rounds: checkpoints at rounds 4 and 8, then the result's own
+    Seq[DataFrame => DataFrame](ops.GraphOps.pagerankRanks(_, iters = 10),
+        ops.GraphOps.labelPropagation(_, rounds = 10)).foreach { loop =>
+      var out: DataFrame = null
+      val rdds = added { out = loop(edges) }
+      val own = out.queryExecution.analyzed.collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+      Pins.freeCheckpoint(out)
+      assert(rdds == own && own.size == 1, s"left $rdds, the result reads $own")
+    }
+    var core = Set.empty[(Long, Long)]
+    assert(added { core = Pins.scoped(ops.GraphOps.kCoreEdges(_, edges, k = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet) }.isEmpty)
+    assert(core == Set((0L, 1L), (0L, 2L), (1L, 2L)))
+    // two 10-letter words: 18 merges available, a checkpoint at merge 8
+    var merges = 0
+    assert(added { merges = ops.BpeOps.fit(
+      Seq("abcdefghij", "klmnopqrst").toDF("text"), 12).collect().length }.isEmpty)
+    assert(merges == 12)
   }
 
   test("q180: star graph assortativity is exactly -1; burst graph in range") {

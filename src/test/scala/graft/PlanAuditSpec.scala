@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{GraftShims, SparkSession}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -33,6 +35,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     at 100×, exactly as bad as a global window. The scale-safe
   *     idioms are per-(key, shard) windows plus a broadcast offset
   *     table (ScaleOps.groupedShardedCumSum, q141/q151/q162).
+  *  4. No build leaves an RDD persisted that its returned plan does not
+  *     read: every cache or checkpoint is either released by the
+  *     builder (`graft.Pins`) or read by the plan it hands back.
   */
 class PlanAuditSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
@@ -125,24 +130,53 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(e.getMessage.endsWith(s"declared more than once: ${dup.name}"))
   }
 
-  // each declared query's physical plans, built once for the three plan
+  // each declared query's physical plans, built once for the plan
   // cases: the returned plan, then those its `build` function executed
   // while it was called (streaming drains, loop rounds, cache-filling counts and
   // checkpoints), which the listener sees once the bus is drained. Each
-  // build is released as the mains release it.
-  private lazy val plans: Seq[(String, Seq[SparkPlan])] = {
+  // build is released as the mains release it; before that release,
+  // the RDDs the build left persisted that the returned plan does not
+  // read are recorded as its orphans.
+  private lazy val builds: Seq[(String, Seq[SparkPlan], Seq[Int])] = {
     val eager = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
         eager.add(qe.sparkPlan)
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val sc = spark.sparkContext
     spark.listenerManager.register(listener)
     try SparkEntry.selected(None).map { d =>
-      val returned = SparkEntry.releasing(spark)(d.build(spark, dir).queryExecution.sparkPlan)
-      GraftShims.awaitListeners(spark.sparkContext)
-      d.name -> (returned +: Iterator.continually(eager.poll()).takeWhile(_ != null).toSeq)
+      val ((returned, orphans), _) = SparkEntry.releasing(spark) {
+        val before = sc.getPersistentRDDs.keySet.toSet
+        val plan = d.build(spark, dir).queryExecution.sparkPlan
+        (plan, (sc.getPersistentRDDs.keySet.toSet -- before -- rddsRead(plan)).toSeq.sorted)
+      }
+      GraftShims.awaitListeners(sc)
+      (d.name, returned +: Iterator.continually(eager.poll()).takeWhile(_ != null).toSeq,
+        orphans)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  private lazy val plans: Seq[(String, Seq[SparkPlan])] = builds.map(b => b._1 -> b._2)
+
+  // the persisted RDDs a plan reads: its LogicalRDD leaves (checkpoint
+  // blocks) and the cache entries it scans, with whatever those
+  // entries' own plans read
+  private def rddsRead(plan: SparkPlan): Set[Int] = plan.collectWithSubqueries {
+    case s: RDDScanExec => Set(s.rdd.id)
+    case s: InMemoryTableScanExec =>
+      val b = s.relation.cacheBuilder
+      rddsRead(b.cachedPlan) ++
+        (if (b.isCachedColumnBuffersLoaded) Set(b.cachedColumnBuffers.id) else Set.empty[Int])
+    case a: AdaptiveSparkPlanExec => rddsRead(a.inputPlan)
+  }.flatten.toSet
+
+  test("no declared query leaves an RDD persisted that its returned plan does not read") {
+    val orphaned = builds.collect { case (name, _, ids) if ids.nonEmpty =>
+      s"$name (${ids.size})" }
+    assert(orphaned.isEmpty,
+      s"builds leaving persisted RDDs their plan never reads: ${orphaned.mkString(", ")}")
   }
 
   test("no declared query plans a cartesian product") {

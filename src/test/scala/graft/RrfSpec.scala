@@ -155,15 +155,14 @@ class RrfSpec extends AnyFunSuite {
       : Seq[(Long, Long, Long, Long, Option[Long], Option[Long])] = {
     val embDf = vecs.toSeq.map { case (id, v) => (id, v) }
       .toDF("vec_id", "e0")
-    val (out, caches) = Extended10.rrfPlan(
-      docs.toDF("doc_id", "text"), embDf)
-    val got = out.collect().map { r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        if (r.isNullAt(5)) None else Some(r.getLong(5)))
-    }.toSeq
-    caches.foreach(_.unpersist())
-    got
+    Pins.scoped { p =>
+      Extended10.rrfPlan(p, docs.toDF("doc_id", "text"), embDf)
+        .collect().map { r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            if (r.isNullAt(4)) None else Some(r.getLong(4)),
+            if (r.isNullAt(5)) None else Some(r.getLong(5)))
+        }.toSeq
+    }
   }
 
   /** Uniform-dim variant of [[vectors]] (dim 8 only — ~1/10 absent,
@@ -191,16 +190,15 @@ class RrfSpec extends AnyFunSuite {
       : Seq[(Long, Long, Long, Long, Option[Long], Option[Long])] = {
     val embDf = vecs.toSeq.map { case (id, v) => (id, v) }
       .toDF("vec_id", "e0")
-    val (out, caches) = Extended10.rrfHybridIvfPlan(
-      docs.toDF("doc_id", "text"), embDf,
-      dim = 8, nCells = nCells, nProbe = nProbe)
-    val got = out.collect().map { r =>
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        if (r.isNullAt(5)) None else Some(r.getLong(5)))
-    }.toSeq
-    caches.foreach(_.unpersist())
-    got
+    Pins.scoped { p =>
+      Extended10.rrfHybridIvfPlan(p, docs.toDF("doc_id", "text"), embDf,
+          dim = 8, nCells = nCells, nProbe = nProbe)
+        .collect().map { r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            if (r.isNullAt(4)) None else Some(r.getLong(4)),
+            if (r.isNullAt(5)) None else Some(r.getLong(5)))
+        }.toSeq
+    }
   }
 
   // --------------------------------------------------------------- pins
@@ -240,20 +238,19 @@ class RrfSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
     import org.apache.spark.sql.execution.joins.{
       BroadcastNestedLoopJoinExec, CartesianProductExec}
-    val (out, caches) = Extended10.rrfPlan(
+    val plan = Pins.scoped(p => Extended10.rrfPlan(p,
       graft.Tables.documents(spark, SparkTest.sfDir)
         .select("doc_id", "text"),
       graft.Tables.embeddings(spark, SparkTest.sfDir)
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("e0")))
-    val plan = out.queryExecution.sparkPlan
+      .queryExecution.sparkPlan)
     assert(plan.collect { case w: WindowGroupLimitExec => w }.size >= 2,
       "dense top-10 and fused top-10 must both go through " +
         "rank-limit pushdown")
     assert(plan.collect { case j: BroadcastNestedLoopJoinExec => j }
       .nonEmpty, "query code vectors must broadcast over the corpus scan")
     assert(plan.collect { case c: CartesianProductExec => c }.isEmpty)
-    caches.foreach(_.unpersist())
   }
 
   test("q199 IVF at nProbe == nCells equals brute-force q197 exactly") {
@@ -306,14 +303,13 @@ class RrfSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.{
       BroadcastHashJoinExec, BroadcastNestedLoopJoinExec,
       CartesianProductExec}
-    val (out, caches) = Extended10.rrfHybridIvfPlan(
+    val plan = Pins.scoped(p => Extended10.rrfHybridIvfPlan(p,
       graft.Tables.documents(spark, SparkTest.sfDir)
         .select("doc_id", "text"),
       graft.Tables.embeddings(spark, SparkTest.sfDir)
         .select(col("vec_id"),
           col("embedding").cast("array<double>").as("e0")),
-      dim = 64)
-    val plan = out.queryExecution.sparkPlan
+      dim = 64).queryExecution.sparkPlan)
     assert(plan.collect { case w: WindowGroupLimitExec => w }.size >= 2,
       "dense top-10 and fused top-10 must both go through " +
         "rank-limit pushdown")
@@ -321,7 +317,6 @@ class RrfSpec extends AnyFunSuite {
       plan.collect { case j: BroadcastNestedLoopJoinExec => j }.nonEmpty,
       "probe cells and query codes must broadcast into the index scan")
     assert(plan.collect { case c: CartesianProductExec => c }.isEmpty)
-    caches.foreach(_.unpersist())
   }
 
   test("q199 prebuilt-index roundtrip equals the inline composition") {
@@ -336,33 +331,28 @@ class RrfSpec extends AnyFunSuite {
     val docsDf = docs.toDF("doc_id", "text")
     val embDf = vecs.toSeq.map { case (id, v) => (id, v) }
       .toDF("vec_id", "e0")
-    def collectOut(p: (org.apache.spark.sql.DataFrame,
-        Seq[org.apache.spark.sql.DataFrame])) = {
-      val rows = p._1.collect().map(_.toSeq).toSeq
-      p._2.foreach(_.unpersist())
-      rows
-    }
-    val inline = collectOut(Extended10.rrfHybridIvfPlan(
+    def collectOut(plan: Pins => org.apache.spark.sql.DataFrame) =
+      Pins.scoped(p => plan(p).collect().map(_.toSeq).toSeq)
+    val inline = collectOut(Extended10.rrfHybridIvfPlan(_,
       docsDf, embDf, dim = 8, nCells = 4, nProbe = 2))
     val (index, cents) = Extended10.ivfIndex(embDf, dim = 8, nCells = 4)
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf-rt")
     try {
       index.repartition(col("cell")).sortWithinPartitions("vec_id")
         .write.partitionBy("cell").mode("overwrite").parquet(dir.toString)
-      val prebuilt = collectOut(Extended10.rrfHybridIvfQuery(
+      val prebuilt = collectOut(Extended10.rrfHybridIvfQuery(_,
         docsDf, spark.read.parquet(dir.toString), cents, nProbe = 2))
       assert(prebuilt == inline)
       // plan evidence (PLANS.md q199): the probed-cell restriction must
       // reach the index read as PARTITION filters — pruning at the file
       // listing, not a post-scan filter over the whole corpus
       import org.apache.spark.sql.execution.FileSourceScanExec
-      val (planOut, planCaches) = Extended10.rrfHybridIvfQuery(
-        docsDf, spark.read.parquet(dir.toString), cents, nProbe = 2)
-      val pruned = planOut.queryExecution.sparkPlan.collect {
-        case s: FileSourceScanExec if s.partitionFilters.exists(
-          _.references.exists(_.name == "cell")) => s
-      }
-      planCaches.foreach(_.unpersist())
+      val pruned = Pins.scoped(p => Extended10.rrfHybridIvfQuery(p,
+          docsDf, spark.read.parquet(dir.toString), cents, nProbe = 2)
+        .queryExecution.sparkPlan.collect {
+          case s: FileSourceScanExec if s.partitionFilters.exists(
+            _.references.exists(_.name == "cell")) => s
+        })
       assert(pruned.nonEmpty,
         "candidate scan must carry cell partition filters")
     } finally {

@@ -42,7 +42,7 @@ class SemStoreSpec extends AnyFunSuite {
       (107L until 110L).map(i => (i, vec(i - 60L))) // vec 47..49, fresh
 
   test("planted copies drop, fresh vectors don't; incremental ≡ full cliques") {
-    val (model, reps) = SemStoreOps.semStoreBuild(
+    val (model, reps) = SemStoreOps.semStoreBuild(Pins.forPlan,
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
     val audit = SemStoreOps.semDedupVsStore(
       batchRows.toDF("id", "e"), model, reps).collect()
@@ -73,7 +73,7 @@ class SemStoreSpec extends AnyFunSuite {
   }
 
   test("append law: admitted reps join the store") {
-    val (model, reps) = SemStoreOps.semStoreBuild(
+    val (model, reps) = SemStoreOps.semStoreBuild(Pins.forPlan,
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(4))
     val admitted = SemStoreOps.semAdmitted(
       batchRows.toDF("id", "e"), model, reps)
@@ -95,7 +95,7 @@ class SemStoreSpec extends AnyFunSuite {
     // force the semDedupOnReps switch: the quantizer is two-level, yet
     // every law is partition-independent for exact cliques, so the
     // planted counts are unchanged
-    val (model, reps) = SemStoreOps.semStoreBuild(
+    val (model, reps) = SemStoreOps.semStoreBuild(Pins.forPlan,
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(72))
     assert(model.base.isInstanceOf[SemStoreOps.SemTwoLevel],
       s"k=72 must select the two-level quantizer, got $model")
@@ -121,7 +121,7 @@ class SemStoreSpec extends AnyFunSuite {
     // cells must be the assignment's (split walk included), and the
     // planted drop laws are unchanged (they hold under ANY cell
     // partition)
-    val (model, reps) = SemStoreOps.semStoreBuild(
+    val (model, reps) = SemStoreOps.semStoreBuild(Pins.forPlan,
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(2),
       maxCell = 8)
     assert(model.splits.nonEmpty, "the guard must have split something")
@@ -147,7 +147,7 @@ class SemStoreSpec extends AnyFunSuite {
       s"split-guarded store broke the planted law: ${audit.mkString(", ")}")
     // single-pass ingest: audit ≡ semDedupVsStore, admitted ≡
     // semAdmitted (both derived from ONE probe)
-    val (a2, adm2) = SemStoreOps.semIngest(
+    val (a2, adm2) = SemStoreOps.semIngest(Pins.forPlan,
       batchRows.toDF("id", "e"), model, reps)
     assert(a2.collect().map(_.toSeq).toSeq == audit.map(_.toSeq).toSeq)
     assert(adm2.select("id").collect().map(_.getLong(0)).toSet ==
@@ -165,7 +165,7 @@ class SemStoreSpec extends AnyFunSuite {
     // copies, which share a refined sub-cell by construction (same
     // vector → same argmin), so refinement can't separate any pair the
     // probe would have compared.
-    val (model, reps) = SemStoreOps.semStoreBuild(
+    val (model, reps) = SemStoreOps.semStoreBuild(Pins.forPlan,
       storeRows.toDF("id", "e"), dim = Dim, kOverride = Some(1))
     // 3 store copies (drop) + an exact within-batch pair (1 drop) +
     // 23 fresh distinct vectors (offsets 5–7 — disjoint (p,q) pairs
@@ -201,7 +201,7 @@ class SemStoreSpec extends AnyFunSuite {
       s"planted law: 3 store copies + 1 exact pair drop: $capped")
     assert(capped.map(_(2).asInstanceOf[Long]).sum == 28L)
     // and the one-pass ingest path threads the cap identically
-    val (a2, adm2) = SemStoreOps.semIngest(floodDf, model, reps,
+    val (a2, adm2) = SemStoreOps.semIngest(Pins.forPlan, floodDf, model, reps,
       maxCell = 8)
     assert(a2.collect().map(_.toSeq).toSeq === plain)
     assert(adm2.count() == 24L) // 103's keeper + 23 fresh

@@ -50,6 +50,17 @@ class SessionSpec extends AnyFunSuite {
     assert(readers == List("Layout.scala"), s"defaultParallelism read in $readers")
   }
 
+  test("executor storage is released only through Pins and the harness") {
+    // caches and checkpoints are released by graft.Pins; the harness's
+    // backstop (SparkEntry.releasing) is the one other route
+    val tokens = Seq(".unpersist(", "getPersistentRDDs", "clearCache", "storageLevel ==")
+    val outside = codeLines("src/main/scala")
+      .filterNot(f => Set("Pins.scala", "SparkEntry.scala")(f._1.getFileName.toString))
+      .flatMap { case (p, ls) =>
+        ls.filter(l => tokens.exists(l.contains)).map(l => s"${p.getFileName}: $l") }
+    assert(outside.isEmpty, s"storage released outside Pins: ${outside.mkString("; ")}")
+  }
+
   test("no spec builds a session; session confs and the function registry each have one route") {
     // string literals blanked: this spec names the patterns it scans for
     def callers(dir: String, pattern: String) = codeLines(dir).filter(_._2.exists(

@@ -179,7 +179,7 @@ class SimilaritySpec extends AnyFunSuite {
     val star = Similarity.starCollapse(docs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // pair-collapse twin (q164's rule) on the full pair enumeration
-    val pairs = Similarity.portablePairs(docs).select("a_id", "b_id")
+    val pairs = Similarity.portablePairs(Pins.forPlan, docs).select("a_id", "b_id")
     val members = pairs.select(explode(array(
       struct(col("a_id").as("doc_id"), col("b_id").as("peer")),
       struct(col("b_id").as("doc_id"), col("a_id").as("peer")),
@@ -212,7 +212,7 @@ class SimilaritySpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
     val starDocs = Similarity.starCollapse(docs)
       .agg(coalesce(sum("cluster_size"), lit(0L))).collect()(0).getLong(0)
-    val pairTouched = Similarity.portablePairs(docs).select("a_id", "b_id")
+    val pairTouched = Similarity.portablePairs(Pins.forPlan, docs).select("a_id", "b_id")
       .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
       .distinct().count()
     assert(starDocs <= pairTouched,

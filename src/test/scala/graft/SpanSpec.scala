@@ -118,7 +118,7 @@ class SpanSpec extends AnyFunSuite {
 
   private def runIncr(batch: Seq[(Long, String)],
       store: Seq[(Long, String)]): Map[Long, (Long, Long, Long, String)] =
-    try ops.SpanOps.spanDedupVsStore(batch.toDF("doc_id", "text"),
+    try ops.SpanOps.spanDedupVsStore(Pins.forPlan, batch.toDF("doc_id", "text"),
         ops.SpanOps.spanIndex(store.toDF("doc_id", "text")))
       .collect()
       .map(r => r.getLong(0) ->
@@ -253,7 +253,7 @@ class SpanSpec extends AnyFunSuite {
       // delta is genuinely new-only: disjoint from idx0
       assert(delta.join(idx0, Seq("g"), "left_semi").count() === 0L)
       val merged = idx0.union(delta)
-      val out = ops.SpanOps.spanDedupVsStore(b2.toDF("doc_id", "text"), merged)
+      val out = ops.SpanOps.spanDedupVsStore(Pins.forPlan, b2.toDF("doc_id", "text"), merged)
         .collect()
         .map(r => r.getLong(0) ->
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))

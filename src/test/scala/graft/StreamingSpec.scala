@@ -105,7 +105,7 @@ class StreamingSpec extends AnyFunSuite {
       // batch-operator ground truth, trigger by trigger
       def runVs(batch: Seq[(Long, String)],
           idx: org.apache.spark.sql.DataFrame) =
-        try ops.SpanOps.spanDedupVsStore(batch.toDF("doc_id", "text"), idx)
+        try ops.SpanOps.spanDedupVsStore(Pins.forPlan, batch.toDF("doc_id", "text"), idx)
           .collect().map(r => r.getLong(0) ->
             (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toMap
         finally spark.catalog.clearCache()
@@ -331,7 +331,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       SparkTest.stageTriggerFiles(s"$dir/stream",
         Seq(t1, t2).map(_.toDF("id", "e")))
-      val (model, reps0) = ops.SemStoreOps.semStoreBuild(
+      val (model, reps0) = ops.SemStoreOps.semStoreBuild(Pins.forPlan,
         store.toDF("id", "e"), dim = dim, kOverride = Some(4))
       ops.VersionedStore.init(reps0, s"$dir/store")
       val stream = spark.readStream
@@ -398,7 +398,7 @@ class StreamingSpec extends AnyFunSuite {
     val sink = java.nio.file.Files.createDirectory(root.resolve("sink"))
     val storeRoot = root.resolve("store").toString
     try {
-      val (model, reps0) = ops.SemStoreOps.semStoreBuild(
+      val (model, reps0) = ops.SemStoreOps.semStoreBuild(Pins.forPlan,
         store.toDF("id", "e"), dim = dim, kOverride = Some(4))
       ops.VersionedStore.init(reps0, storeRoot)
       def drain(): Unit = {
@@ -590,7 +590,7 @@ class StreamingSpec extends AnyFunSuite {
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toMap
       // ground truth composed from the batch operators, trigger order
       def runVs(batch: Seq[(Long, String)], idx: DataFrame) =
-        try ops.SpanOps.spanDedupVsStore(batch.toDF("doc_id", "text"), idx)
+        try ops.SpanOps.spanDedupVsStore(Pins.forPlan, batch.toDF("doc_id", "text"), idx)
           .collect().map(r => r.getLong(0) ->
             (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))).toMap
         finally spark.catalog.clearCache()
@@ -1304,6 +1304,17 @@ class StreamingSpec extends AnyFunSuite {
     finally listed.close()
   }
 
+  test("q206's builder leaves a frame the caller cached in the cache") {
+    val mine = Tables.orders(spark, SparkTest.sfDir).select("o_orderkey").persist()
+    try {
+      mine.count()
+      val level = mine.storageLevel
+      assert(level != org.apache.spark.storage.StorageLevel.NONE)
+      Pins.freeCheckpoint(StreamingOps.q206StreamingSpanIngest(spark, SparkTest.sfDir))
+      assert(mine.storageLevel == level, "q206 dropped the caller's cache")
+    } finally mine.unpersist()
+  }
+
   test("a drain whose perBatch hook throws frees its kept batches and its checkpoint dir") {
     import org.apache.spark.sql.streaming.StreamingQueryException
     val sc = spark.sparkContext
@@ -1345,7 +1356,7 @@ class StreamingSpec extends AnyFunSuite {
           .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
         assert(added == leaves && added.size == nKept, mode)
         assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == expected, mode)
-        ops.ScaleOps.freeLocalCheckpoint(out)
+        Pins.freeCheckpoint(out)
         assert(ckptDirs(s"blocks_$mode").isEmpty, mode)
       }
     } finally FsUtil.deleteRecursively(dir)
@@ -1379,7 +1390,7 @@ class StreamingSpec extends AnyFunSuite {
       val leaves = out.queryExecution.analyzed.collectLeaves()
         .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
       assert(added == leaves && added.size == 2, s"added $added, returned $leaves")
-      ops.ScaleOps.freeLocalCheckpoint(out)
+      Pins.freeCheckpoint(out)
     } finally FsUtil.deleteRecursively(dir)
   }
 
@@ -1441,7 +1452,7 @@ class StreamingSpec extends AnyFunSuite {
         val out = StreamingOps.drainAndClean(spark, counts, "confs_ok")(identity)
         assert(state == start)
         assert(out.count() > 0)
-        ops.ScaleOps.freeLocalCheckpoint(out)
+        Pins.freeCheckpoint(out)
         intercept[AnalysisException] {
           StreamingOps.drainAndClean(spark, unwatermarked, "confs_bad",
             outputMode = "append")(identity)
@@ -1466,7 +1477,7 @@ class StreamingSpec extends AnyFunSuite {
         shuffleParts = 3)(identity)
       assert(spark.conf.getAll.get(key).isEmpty)
       assert(out.count() > 0)
-      ops.ScaleOps.freeLocalCheckpoint(out)
+      Pins.freeCheckpoint(out)
       intercept[AnalysisException] {
         StreamingOps.drainAndClean(spark, unwatermarked, "parts_bad",
           outputMode = "append", shuffleParts = 3)(identity)

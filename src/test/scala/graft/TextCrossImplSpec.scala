@@ -86,7 +86,7 @@ class TextCrossImplSpec extends AnyFunSuite {
   // ------------------------------------ portable MinHash/LSH core
   test("portablePairs matches a first-principles reimplementation") {
     val docs = corpus(44L, 100)
-    val got = graft.ops.Similarity.portablePairs(
+    val got = graft.ops.Similarity.portablePairs(Pins.forPlan,
         docs.toDF("doc_id", "text"), minEst = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
