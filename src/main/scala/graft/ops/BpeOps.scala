@@ -35,8 +35,7 @@ object BpeOps {
 
   /** (w, cnt): corpus word-frequency table — the single corpus-sized job. */
   private[ops] def wordFreq(docs: DataFrame): DataFrame =
-    docs.select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-      .filter(col("w") =!= "")
+    docs.select(explode(TextOps.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
   /** Adjacent-pair counts over a (syms, cnt) symbol table: explode the
@@ -45,9 +44,8 @@ object BpeOps {
     * only (symbol, symbol, long). */
   private[ops] def pairCounts(words: DataFrame): DataFrame =
     words.filter(size(col("syms")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("syms")) - 1),
-        i => struct(element_at(col("syms"), i).as("l"),
-          element_at(col("syms"), i + 1).as("r")))).as("p"), col("cnt"))
+      .select(explode(TextOps.wordGrams(col("syms"), 2,
+        ws => struct(ws(0).as("l"), ws(1).as("r")))).as("p"), col("cnt"))
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum(col("cnt")).as("cnt"))
 

@@ -117,12 +117,6 @@ class BitsetAgg(words: Int) extends Aggregator[Long, Array[Long], Seq[Long]] {
   */
 object Extended10 {
 
-  /** Shared tokenizer — identical to q184's (lower, split on runs of
-    * non-letters, drop empties) so the collocation and selection
-    * families agree on what a "word" is. */
-  private[graft] def toks(text: Column): Column =
-    filter(split(lower(text), "[^a-z]+"), t => t =!= "")
-
   private val tokSql =
     "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 
@@ -134,14 +128,11 @@ object Extended10 {
     * (Md5BucketSpec pins the equality), with no hex string
     * materialized per bigram. */
   private def bigramBuckets(doc: DataFrame): DataFrame =
-    doc.withColumn("t", toks(col("text")))
+    doc.withColumn("t", TextOps.tokens(col("text")))
       .filter(size(col("t")) >= 2)
-      .select(col("*"), explode(transform(
-        sequence(lit(1), size(col("t")) - 1),
-        i => graft.functions.Md5Bucket.md5Bucket(
-          concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1)), 6, 10000).cast("int")))
-        .as("bucket"))
+      .select(col("*"), explode(TextOps.wordGrams(col("t"), 2, ws =>
+        graft.functions.Md5Bucket.md5Bucket(TextOps.joined(ws), 6, 10000)
+          .cast("int"))).as("bucket"))
       .drop("t")
 
   /** Oracle mirror of [[bigramBuckets]] keeping `cols`: same
@@ -540,7 +531,7 @@ object Extended10 {
       concat(col("doc_id").cast("string"), lit(":"), i.cast("string")),
       4, 100)
     docs
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .select(col("doc_id"), size(col("t")).as("n"))
       .withColumn("m", when(col("n") > 0,
         transform(sequence(lit(1), col("n")),
@@ -624,7 +615,8 @@ object Extended10 {
     * drives it with generated corpora against a driver-side BM25
     * reimplementation. Its caches are held by `p`. */
   private[graft] def bm25Plan(p: Pins, docs: DataFrame): DataFrame = {
-    val d = p.persist(docs.select(col("doc_id"), toks(col("text")).as("t")))
+    val d = p.persist(
+      docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t")))
     val stats = d.agg(count(lit(1)).as("n"),
       sum(size(col("t")).cast("long")).as("l"))
     val qterms = d.orderBy("doc_id").limit(5)
@@ -675,7 +667,7 @@ object Extended10 {
     * term literals read only matching row groups — postings point
     * lookups, never a vocabulary scan. */
   private[graft] def sparseIndex(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), toks(col("text")).as("t"))
+    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
         explode(col("t")).as("w"))
       .groupBy("doc_id", "dl", "w").agg(count(lit(1)).as("tf"))
@@ -685,7 +677,7 @@ object Extended10 {
     * corpus-level N and avgdl are exact without ever rescanning
     * earlier segments. */
   private[graft] def sparseStats(docs: DataFrame): DataFrame =
-    docs.select(toks(col("text")).as("t"))
+    docs.select(TextOps.tokens(col("text")).as("t"))
       .agg(count(lit(1)).as("n"), sum(size(col("t")).cast("long")).as("l"))
 
   /** BM25 top-10 against the STORED segmented index: df for the query
@@ -731,7 +723,8 @@ object Extended10 {
     // 64, because the staged-division BIGINT headroom analysis in the
     // q190 scaladoc only covers per-(q,doc) sums over ≤ 20 terms; a
     // wider caller must redo that algebra before relaxing the guard
-    val qterms = docs.select(col("doc_id"), toks(col("text")).as("t"))
+    val qterms = docs
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .orderBy("doc_id").limit(5)
       .select(col("doc_id").as("q_id"),
         explode(slice(col("t"), 1, 4)).as("w")).distinct()
@@ -794,7 +787,7 @@ object Extended10 {
     // explode+KMV aggregation runs once, not twice (the q164
     // persist-when-referenced-twice rule; ADVICE r8)
     val sk = p.persist(Tables.documents(spark, dir).select("source", "text")
-      .select(col("source"), explode(toks(col("text"))).as("w"))
+      .select(col("source"), explode(TextOps.tokens(col("text"))).as("w"))
       .select(col("source"),
         graft.functions.Md5Bucket.md5Bucket(col("w"), 15, 0).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("sk")))
@@ -950,9 +943,7 @@ object Extended10 {
     val grams13 = array_distinct(transform(
       sequence(lit(1L), col("n") - 12L),
       i => concat_ws(" ", slice(col("t"), i.cast("int"), lit(13)))))
-    val base = docs
-      .select(col("doc_id"), toks(col("text")).as("t"))
-      .withColumn("n", size(col("t")).cast("long"))
+    val base = TextOps.tokenBase(docs, col("text"))
       .filter(col("n") >= 13L)
     val benchGrams = base
       .filter(pmod(col("doc_id"), lit(97L)) === 0L)

@@ -61,9 +61,7 @@ object Extended2 {
   def q68Tfidf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val tok = docs.select("doc_id", "text")
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), "[^a-z]+")).as("token"))
-      .filter(col("token") =!= "")
+      .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("token"))
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     // df = how many tf rows share the token — computed as a count over a
@@ -194,23 +192,17 @@ object Extended2 {
       .orderBy("c_mktsegment", "rnk")
   }
 
-  /** q73 — bigram language-model counts: adjacent token pairs via
-    * zip_with over two slices of the per-doc token array (no
-    * positional self-join — the pairing happens inside the row, then a
-    * single aggregate counts pairs). Conditional probability
-    * P(w2|w1) = cnt / Σ_w2 cnt from a window over the (tiny) bigram
-    * vocabulary. Top-20 with a total tiebreak. */
+  /** q73 — bigram language-model counts: adjacent token pairs built
+    * inside the row from the per-doc token array (no positional
+    * self-join), then a single aggregate counts pairs. Conditional
+    * probability P(w2|w1) = cnt / Σ_w2 cnt from a window over the
+    * (tiny) bigram vocabulary. Top-20 with a total tiebreak. */
   def q73BigramLm(spark: SparkSession, dir: String): DataFrame = {
-    val toks = expr("filter(split(lower(text), '[^a-z]+'), x -> x != '')")
-    val bigrams = expr(
-      """zip_with(slice(toks, 1, size(toks) - 1),
-        |         slice(toks, 2, size(toks) - 1),
-        |         (a, b) -> named_struct('w1', a, 'w2', b))""".stripMargin)
     val wTot = Window.partitionBy("w1")
-    Tables.documents(spark, dir).select("text")
-      .select(toks.as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(bigrams).as("bg"))
+    Tables.documents(spark, dir)
+      .select(TextOps.tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= 2)
+      .select(explode(TextOps.wordGrams(col("t"), 2, TextOps.pair)).as("bg"))
       .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("cnt"))
       .withColumn("w1_total", sum(col("cnt")).over(wTot))

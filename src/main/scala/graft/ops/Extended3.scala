@@ -56,17 +56,14 @@ object Extended3 {
     * parallel with output ~n_tokens/stride rows per doc.
     */
   def q88ChunkDocs(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"),
-      x => x =!= "")
-    Tables.documents(spark, dir).select(col("doc_id"), toks.as("toks"))
-      .withColumn("n", size(col("toks")).cast("long"))
+    TextOps.tokenBase(Tables.documents(spark, dir), col("text"))
       .filter(col("n") >= 1L)
-      .select(col("doc_id"), col("toks"),
+      .select(col("doc_id"), col("t"),
         explode(sequence(lit(0L), col("n") - 1L, lit(48L))).as("start"))
       .select(col("doc_id"), col("start"),
-        size(slice(col("toks"), col("start") + 1L, lit(64))).cast("long")
+        size(slice(col("t"), col("start") + 1L, lit(64))).cast("long")
           .as("n_chunk_tokens"),
-        concat_ws(" ", slice(col("toks"), col("start") + 1L, lit(64)))
+        concat_ws(" ", slice(col("t"), col("start") + 1L, lit(64)))
           .as("chunk_text"))
       // NOT cachedOrderBy: chunk_text is corpus-sized — the cache was
       // wall-neutral at 1000× (157 vs 165 s), and holding a corpus in
@@ -94,12 +91,10 @@ object Extended3 {
   /** Core of q89 over any (doc_id, text) frame — the cross-impl
     * property spec drives it with generated corpora. */
   private[graft] def decontaminatePhrases(docs: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"),
-      x => x =!= "")
     val norm = docs
-      .select(col("doc_id"), toks.as("toks"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .select(col("doc_id"),
-        concat_ws(" ", col("toks")).as("norm"), size(col("toks")).as("nt"))
+        concat_ws(" ", col("t")).as("norm"), size(col("t")).as("nt"))
     val phrases = norm
       .filter(pmod(col("doc_id"), lit(97L)) === 0L && col("nt") >= 8)
       .select(concat_ws(" ",
@@ -194,16 +189,9 @@ object Extended3 {
     * exactly-representable ints, bit-identical in any engine.
     */
   def q93Repetition(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"),
-      x => x =!= "")
-    Tables.documents(spark, dir).select(col("doc_id"), toks.as("t"))
-      .withColumn("n", size(col("t")).cast("long"))
+    TextOps.tokenBase(Tables.documents(spark, dir), col("text"))
       .filter(col("n") >= 3L)
-      .withColumn("grams", transform(
-        sequence(lit(1L), col("n") - 2L),
-        i => concat_ws(" ", element_at(col("t"), i.cast("int")),
-          element_at(col("t"), i.cast("int") + 1),
-          element_at(col("t"), i.cast("int") + 2))))
+      .withColumn("grams", TextOps.wordGrams(col("t"), 3, TextOps.joined))
       .select(col("doc_id"),
         (col("n") - 2L).as("n_grams"),
         size(array_distinct(col("grams"))).cast("long").as("n_distinct"),
@@ -338,20 +326,10 @@ object Extended3 {
   /** Core of q99 over any (doc_id, text) frame — the cross-impl
     * property spec drives it with generated corpora. */
   private[graft] def decontaminateNgram(docs: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"),
-      x => x =!= "")
-    val base = docs
-      .select(col("doc_id"), toks.as("t"))
-      .withColumn("n", size(col("t")).cast("long"))
-    def shingles(df: DataFrame): DataFrame = df
-      .filter(col("n") >= 8L)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1L), col("n") - 7L),
-          i => md5(concat_ws(" ",
-            slice(col("t"), i.cast("int"), lit(8)))))).as("g"))
-    val docGrams = shingles(base)
-    val benchGrams = shingles(
-      base.filter(pmod(col("doc_id"), lit(97L)) === 0L))
+    val base = TextOps.tokenBase(docs, col("text"))
+    val docGrams = TextOps.windowDigests(base, 8)
+    val benchGrams = TextOps.windowDigests(
+      base.filter(pmod(col("doc_id"), lit(97L)) === 0L), 8)
       .select(col("g")).distinct()
     docGrams.join(benchGrams, "g")
       .groupBy("doc_id")
@@ -573,10 +551,7 @@ object Extended3 {
     * packing (q60) and splitting (q94).
     */
   def q111PromptCompletion(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"),
-      x => x =!= "")
-    Tables.documents(spark, dir).select(col("doc_id"), toks.as("t"))
-      .withColumn("n", size(col("t")).cast("long"))
+    TextOps.tokenBase(Tables.documents(spark, dir), col("text"))
       .filter(col("n") >= 40L)
       .select(col("doc_id"),
         concat_ws(" ", slice(col("t"), 1, 32)).as("prompt"),

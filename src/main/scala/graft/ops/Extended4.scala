@@ -267,8 +267,8 @@ object Extended4 {
     // (tokenize + distinct + sort) is the query's heaviest map work —
     // measured 5.9 s on 2 tasks vs sub-second spread wide
     val corpus = Similarity.plantedCorpus(spark, dir)
-    val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    val tokd = corpus.select(col("doc_id"), toks.as("t"))
+    val tokd = corpus
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
     // hset: the doc's gram set as sorted distinct 64-bit hashes — the
     // representation every downstream stage runs on. The hash is the
@@ -286,10 +286,7 @@ object Extended4 {
     // were duplicate gram builds; eager: built once).
     val hsets = tokd
       .select(col("doc_id"), array_sort(array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 2), i =>
-          xxhash64(element_at(col("t"), i), element_at(col("t"), i + 1),
-            element_at(col("t"), i + 2)))))
-        .as("hset"))
+        TextOps.wordGrams(col("t"), 3, ws => xxhash64(ws: _*)))).as("hset"))
       .pipe(p.checkpoint)
     // global rarity ORDER (occurrence count asc, hash asc) — the prefix
     // rule needs any consistent total order, NOT dense ranks, so no
@@ -303,12 +300,9 @@ object Extended4 {
     // multi-arg hash below groups exactly by triple).
     val dfreq = tokd
       .select(col("doc_id"), posexplode(
-        transform(sequence(lit(1), size(col("t")) - 2), i =>
-          struct(xxhash64(element_at(col("t"), i), element_at(col("t"), i + 1),
-              element_at(col("t"), i + 2)).as("gh"),
-            concat_ws(" ", element_at(col("t"), i),
-              element_at(col("t"), i + 1), element_at(col("t"), i + 2))
-              .as("g")))).as(Seq("pos", "e")))
+        TextOps.wordGrams(col("t"), 3, ws =>
+          struct(xxhash64(ws: _*).as("gh"), TextOps.joined(ws).as("g"))))
+        .as(Seq("pos", "e")))
       .groupBy(col("e.gh").as("gh"))
       .agg(count(lit(1)).as("df"), countDistinct(col("e.g")).as("nd"))
       .pipe(p.checkpoint) // feeds cert probe + prefix broadcast
@@ -383,10 +377,8 @@ object Extended4 {
         // vocabulary): exact STRING verify — gram-string sets are built
         // here, in the only world that ever reads them
         val gsets = tokd.select(col("doc_id"), array_sort(array_distinct(
-          transform(sequence(lit(1), size(col("t")) - 2), i =>
-            concat_ws(" ", element_at(col("t"), i),
-              element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
-          .as("grams")).pipe(p.checkpoint)
+          TextOps.wordGrams(col("t"), 3, TextOps.joined))).as("grams"))
+          .pipe(p.checkpoint)
         cand
           .join(broadcast(gsets), col("a_id") === col("doc_id"))
           .withColumnRenamed("grams", "ga").drop("doc_id")
@@ -462,7 +454,7 @@ object Extended4 {
     * shuffle, no array state. */
   def q127OovScore(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val toksCol = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
+    val toksCol = TextOps.tokens(col("text"))
     // the vocab aggregate is fully distributed (partial+final on the
     // token key); only its 50-row RESULT reaches the driver — the same
     // bounded-scalar discipline as q122's stride. Baked into the plan
@@ -495,15 +487,7 @@ object Extended4 {
     * doc-frequency aggregate is partial+final on the gram key, and the
     * per-doc roll-up shuffles (doc_id, flag) pairs only. */
   def q128DupGramRate(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    val grams = Tables.documents(spark, dir)
-      .select(col("doc_id"), toks.as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 2), i =>
-          concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
-        .as("g"))
+    val grams = TextOps.gramRows(Tables.documents(spark, dir), 3)
       // the exploded gram table feeds both the doc-frequency aggregate
       // and the scoring probe — materialize once (q125's diamond rule)
       .pipe(ScaleOps.stageCheckpoint)

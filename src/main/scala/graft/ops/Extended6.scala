@@ -20,11 +20,6 @@ import scala.util.chaining._
   */
 object Extended6 {
 
-  /** Shared tokenizer — the q127/q128 contract: lowercase, split on
-    * non-letter runs, drop empties. Mirrored verbatim in every oracle. */
-  private val toks =
-    filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-
   // ---------------------------------------------------------------- q138
   /** q138 — hapax rate: per document, the share of its DISTINCT words
     * that appear in NO other document (document frequency 1) — the
@@ -37,7 +32,8 @@ object Extended6 {
     * (doc_id, word) pairs ever shuffle. */
   def q138HapaxRate(spark: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(spark, dir).select("doc_id", "text")
-      .select(col("doc_id"), explode(array_distinct(toks)).as("w"))
+      .select(col("doc_id"),
+        explode(array_distinct(TextOps.tokens(col("text")))).as("w"))
       .pipe(ScaleOps.stageCheckpoint)
     // per-doc-distinct explode ⇒ count(w) == number of docs carrying w
     val dfreq = words.groupBy("w").agg(count(lit(1)).as("df"))
@@ -61,14 +57,7 @@ object Extended6 {
     * plumbing as q128: streaming explode, partial+final min on the
     * gram key, (doc_id, flag) pairs only in the roll-up. */
   def q139GramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val grams = Tables.documents(spark, dir).select("doc_id", "text")
-      .select(col("doc_id"), toks.as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 2), i =>
-          concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
-        .as("g"))
+    val grams = TextOps.gramRows(Tables.documents(spark, dir), 3)
       .pipe(ScaleOps.stageCheckpoint)
     val firstSeen = grams.groupBy("g").agg(min("doc_id").as("first_seen"))
     grams.join(broadcast(firstSeen), "g")
@@ -162,16 +151,14 @@ object Extended6 {
     * never as all-pairs. */
   def q142BigramLift(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir).select("doc_id", "text")
-      .select(toks.as("t"))
+      .select(TextOps.tokens(col("text")).as("t"))
       .pipe(ScaleOps.stageCheckpoint)
     val uni = base.select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
       .pipe(ScaleOps.stageCheckpoint)
     val nUni = uni.agg(sum("c").as("n_uni"))
     val bi = base.filter(size(col("t")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("t")) - 1), i =>
-        struct(element_at(col("t"), i).as("w1"),
-          element_at(col("t"), i + 1).as("w2")))).as("p"))
+      .select(explode(TextOps.wordGrams(col("t"), 2, TextOps.pair)).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= 20)
@@ -201,7 +188,8 @@ object Extended6 {
     * it, bounded by the source count, never |corpus|². */
   def q143VocabOverlap(spark: SparkSession, dir: String): DataFrame = {
     val v = Tables.documents(spark, dir).select("source", "text")
-      .select(col("source"), explode(array_distinct(toks)).as("w"))
+      .select(col("source"),
+        explode(array_distinct(TextOps.tokens(col("text")))).as("w"))
       .distinct()
       .pipe(ScaleOps.stageCheckpoint)
     val sizes = v.groupBy("source").agg(count(lit(1)).as("n"))

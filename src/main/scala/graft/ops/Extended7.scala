@@ -60,15 +60,7 @@ object Extended7 {
     * block table — stats-sized by construction (docs/50 rows), never
     * over docs or grams. */
   def q148VocabGrowth(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    val firstSeen = Tables.documents(spark, dir).select("doc_id", "text")
-      .select(col("doc_id"), toks.as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 2), i =>
-          concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
-        .as("g"))
+    val firstSeen = TextOps.gramRows(Tables.documents(spark, dir), 3)
       .groupBy("g").agg(min("doc_id").as("first_seen"))
     val wCum = Window.orderBy("block")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -226,7 +218,6 @@ object Extended7 {
     * carrying (len, doc_id) pairs — map-side partial max_by, text
     * never shuffles. */
   def q154CanonicalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
     val base = Tables.documents(spark, dir).select("doc_id", "text")
     val corpus = base.unionByName(
       base.filter(col("doc_id") % 2 === 0).select(
@@ -234,7 +225,7 @@ object Extended7 {
         concat(col("text"), lit(" ...!!")).as("text")))
     corpus
       .select(col("doc_id"), length(col("text")).cast("long").as("len"),
-        md5(array_join(toks, " ")).as("ckey"))
+        md5(array_join(TextOps.tokens(col("text")), " ")).as("ckey"))
       .groupBy("ckey")
       .agg(count(lit(1)).as("n_variants"),
         max_by(struct(col("len"), col("doc_id")),

@@ -296,15 +296,7 @@ object Extended8 {
   /** Core of q165 over any (doc_id, text) frame — the cross-impl
     * property spec drives it with generated corpora. */
   private[graft] def invertedIndex(docs: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    docs
-      .select(col("doc_id"), toks.as("t"))
-      .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(
-        transform(sequence(lit(1), size(col("t")) - 2), i =>
-          concat_ws(" ", element_at(col("t"), i),
-            element_at(col("t"), i + 1), element_at(col("t"), i + 2)))))
-        .as("g"))
+    TextOps.gramRows(docs, 3)
       .groupBy("g")
       .agg(count(lit(1)).as("df"),
         array_join(sort_array(collect_list(col("doc_id"))), ",")

@@ -141,16 +141,13 @@ object Extended9 {
   /** Core of q174 over any (doc_id, text) frame — the cross-impl
     * property spec drives it with generated corpora. */
   private[graft] def segmentDedup(docs: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"), x => x =!= "")
-    val segs = docs
-      .select(col("doc_id"), toks.as("toks"))
-      .withColumn("n", size(col("toks")).cast("long"))
+    val segs = TextOps.tokenBase(docs, col("text"))
       .filter(col("n") >= 1L)
       .select(col("doc_id"),
         explode(sequence(lit(0L), col("n") - 1L, lit(10L))).as("start"),
-        col("toks"))
+        col("t"))
       .select(col("doc_id"), col("start"),
-        concat_ws(" ", slice(col("toks"), col("start") + 1L, lit(10)))
+        concat_ws(" ", slice(col("t"), col("start") + 1L, lit(10)))
           .as("seg_text"))
       .withColumn("okey", col("doc_id") * 10000000L + col("start"))
       .withColumn("h", sha2(col("seg_text"), 256))

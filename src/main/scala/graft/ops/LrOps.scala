@@ -104,21 +104,17 @@ object LrOps {
     * distillation target is EXACTLY linear in f (score = f1 + f2 − f3),
     * so LR can recover it; boundary-adjacent docs bound the reachable
     * accuracy in finite epochs. */
-  private[ops] def featureFrame(spark: SparkSession, dir: String): DataFrame = {
-    val nPunct = length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", ""))
-    val nUpper = length(regexp_replace(col("text"), "[^A-Z]", ""))
-    val nTokens = greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
+  private[ops] def featureFrame(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select("doc_id", "n_chars", "text")
-      .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
+      .withColumn("padded", TextOps.padded)
       .select(col("doc_id"),
         when(TextOps.qualityScore > 0.55, 1.0).otherwise(0.0).as("label"),
         array(lit(1.0),
-          least(nTokens, lit(100)).cast("double") / 100,
+          least(TextOps.nWords, lit(100)).cast("double") / 100,
           TextOps.stopwordRatio,
-          nPunct.cast("double") / col("n_chars"),
-          nUpper.cast("double") / col("n_chars"),
+          TextOps.nPunct.cast("double") / col("n_chars"),
+          TextOps.nUpper.cast("double") / col("n_chars"),
           col("n_chars").cast("double") / 1000).as("f"))
-  }
 
   /** q176 — quality-classifier distillation, end to end: build features,
     * fit LR (40 driver-held-model epochs), score the corpus with the

@@ -294,10 +294,7 @@ object SemStoreOps {
       storedReps: DataFrame, tau: Double,
       maxCell: Int = Extended10.SemDedupMaxCell)
       : (DataFrame, DataFrame) = {
-    val bReps = p.checkpoint(
-      Extended10.collapseExact(batch).select(
-        model.assign(col("e")).getField("_1").as("cid"),
-        col("id"), col("e"), col("cnt")))
+    val bReps = p.checkpoint(assigned(batch, model))
     val storeInCells = storedReps
       .join(bReps.select("cid").distinct(), Seq("cid"), "left_semi")
     val probed = refineBatchCells(bReps, model, maxCell) match {
@@ -312,6 +309,20 @@ object SemStoreOps {
     }
     (p.checkpoint(probed), storeInCells)
   }
+
+  /** The batch's exact-collapsed reps with their cells: (cid, id, e, cnt). */
+  private def assigned(batch: DataFrame, model: SemModel): DataFrame =
+    Extended10.collapseExact(batch).select(
+      model.assign(col("e")).getField("_1").as("cid"),
+      col("id"), col("e"), col("cnt"))
+
+  /** The schema of [[semIngest]]'s audit, read off an unmaterialized
+    * probe's plan: no checkpoint, no flooded-cell collect and no cell
+    * semi-join (none changes a column), so it starts no job. */
+  private[graft] def auditSchema(batch: DataFrame, model: SemModel,
+      storedReps: DataFrame): org.apache.spark.sql.types.StructType =
+    auditOf(semProbe(assigned(batch, model), storedReps, Tau), storedReps)
+      .schema
 
   /** The per-cell audit over a probed frame (see [[semDedupVsStore]]
     * for the column contract). */

@@ -68,19 +68,15 @@ object Similarity {
   // collapsing LSH buckets together (measured: quadratic band-join
   // blowup).
 
-  /** Word-3-shingle STRINGS via engine-portable ops only. Tokenization
-    * is the proven portable pairing (split(lower, "[^a-z]+") + filter
-    * empty ≡ DuckDB regexp split + list_filter); docs with < 3 tokens
+  /** Word-3-shingle STRINGS via engine-portable ops only
+    * ([[TextOps.tokens]], mirrored by the oracle); docs with < 3 tokens
     * yield one space-joined composite shingle on both engines. */
   private def portableShingles(corpus: DataFrame): DataFrame =
     corpus
-      .select(col("doc_id"),
-        filter(split(lower(col("text")), "[^a-z]+"), t => t =!= "").as("t"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("t"))
       .select(col("doc_id"),
         when(size(col("t")) >= 3,
-          transform(sequence(lit(1), size(col("t")) - 2),
-            i => concat_ws(" ", element_at(col("t"), i),
-              element_at(col("t"), i + 1), element_at(col("t"), i + 2))))
+          TextOps.wordGrams(col("t"), 3, TextOps.joined))
           .otherwise(array(array_join(col("t"), " "))).as("sh"))
 
   /** (doc_id, s) exploded shingle-string rows — the shared front end of

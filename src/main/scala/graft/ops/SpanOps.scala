@@ -71,12 +71,8 @@ object SpanOps {
     * so a null row yields (n=0, kept_text="") exactly like the
     * oracle's coalesce — without it, array_join over null tokens would
     * emit null kept_text and silently diverge. */
-  private[graft] def tokenBase(docs: DataFrame): DataFrame = {
-    val toks = filter(split(lower(coalesce(col("text"), lit(""))),
-      "[^a-z]+"), x => x =!= "")
-    docs.select(col("doc_id"), toks.as("t"))
-      .withColumn("n", size(col("t")).cast("long"))
-  }
+  private def tokenBase(docs: DataFrame): DataFrame =
+    TextOps.tokenBase(docs, coalesce(col("text"), lit("")))
 
   /** (doc_id, p, g): token-start position (1-based) + span digest.
     * One in-row pass; md5 keeps the dup definition engine-portable

@@ -469,7 +469,7 @@ object StreamingOps {
     val raw = tableStream(spark, dir, "documents", schema)
     val kmv = udaf(new KmvAgg(2048))
     val agg = raw
-      .select(col("source"), explode(Extended10.toks(col("text"))).as("w"))
+      .select(col("source"), explode(TextOps.tokens(col("text"))).as("w"))
       .select(col("source"),
         graft.functions.Md5Bucket.md5Bucket(col("w"), 15, 0).as("h"))
       .groupBy("source").agg(kmv(col("h")).as("sk"))
@@ -772,12 +772,9 @@ object StreamingOps {
       val stream = spark.readStream
         .schema(spark.read.parquet(s"$work/batch").schema)
         .parquet(s"$work/batch")
-      // analysis-only output-schema probe (tiny empty-input jobs whose
-      // checkpoints p holds; an empty model runs none)
-      val probe = emptyFrame(spark, stream.schema)
-      val outSchema =
-        if (model.isEmpty) SemStoreOps.semDedupVsStore(probe, model, reps).schema
-        else SemStoreOps.semIngest(p, probe, model, reps)._1.schema
+      // analysis-only output-schema probe (no job)
+      val outSchema = SemStoreOps.auditSchema(
+        emptyFrame(spark, stream.schema), model, reps)
       drainAndClean(spark, stream, "q210", outputMode = "append",
         shuffleParts = parts,
         perBatch = semIngestTrigger(spark, s"$work/store", model),

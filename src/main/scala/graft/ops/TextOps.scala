@@ -17,6 +17,55 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
+  /** The engine's one word contract: lowercase, split on runs of
+    * non-letters, drop empties. Digits and non-ASCII letters split
+    * words like punctuation does ("Café9x" → [caf, x]); null text gives
+    * a null array, so a caller that wants [] for it passes
+    * `coalesce(text, "")`. Mirrored verbatim in every oracle as
+    * `list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')`
+    * (Java's and RE2's splits agree on this class). */
+  def tokens(text: Column): Column =
+    filter(split(lower(text), "[^a-z]+"), x => x =!= "")
+
+  /** The (doc_id, t, n) token base of a (doc_id, text) frame: the token
+    * array of `text` and its length as a long. */
+  def tokenBase(docs: DataFrame, text: Column): DataFrame =
+    docs.select(col("doc_id"), tokens(text).as("t"))
+      .withColumn("n", size(col("t")).cast("long"))
+
+  /** The word n-grams of token array `t`, in order: `combine` of the n
+    * words starting at each position 1 … size(t) − n + 1. The caller
+    * keeps rows with size(t) ≥ n first: on a shorter array the
+    * position sequence counts down instead of being empty. */
+  def wordGrams(t: Column, n: Int, combine: Seq[Column] => Column): Column =
+    transform(sequence(lit(1), size(t) - (n - 1)), i =>
+      combine(element_at(t, i) +: (1 until n).map(k => element_at(t, i + k))))
+
+  /** `combine` for [[wordGrams]]: the gram as one space-joined string. */
+  val joined: Seq[Column] => Column = ws => concat_ws(" ", ws: _*)
+
+  /** `combine` for word bigrams: a struct (w1, w2). */
+  val pair: Seq[Column] => Column =
+    ws => struct(ws(0).as("w1"), ws(1).as("w2"))
+
+  /** (doc_id, g): each document's DISTINCT word n-grams as space-joined
+    * strings, one row per gram; docs with fewer than n words give none. */
+  def gramRows(docs: DataFrame, n: Int): DataFrame =
+    docs.select(col("doc_id"), tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= n)
+      .select(col("doc_id"),
+        explode(array_distinct(wordGrams(col("t"), n, joined))).as("g"))
+
+  /** (doc_id, g) over a [[tokenBase]]: the md5 hex digest of every
+    * n-token window, one row per window (q99's decontamination
+    * shingles; only digests ever shuffle, never text). */
+  def windowDigests(base: DataFrame, n: Int): DataFrame =
+    base.filter(col("n") >= n.toLong)
+      .select(col("doc_id"),
+        explode(transform(sequence(lit(1L), col("n") - (n - 1).toLong),
+          i => md5(concat_ws(" ", slice(col("t"), i.cast("int"), lit(n))))))
+          .as("g"))
+
   /** q24 — exact deduplication: group by sha2(text) keeping the smallest
     * doc_id as the canonical representative. The hash-groupBy shuffles
     * 32-byte digests, not documents — the scale-correct exact-dedup shape
@@ -34,8 +83,7 @@ object TextOps {
     * before the shuffle; the final top-k is TakeOrderedAndProject. */
   def q27WordcountTopK(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select("text")
-      .select(explode(split(lower(col("text")), "[^a-z]+")).as("token"))
-      .filter(col("token") =!= "")
+      .select(explode(tokens(col("text"))).as("token"))
       .groupBy("token")
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token"))
@@ -59,7 +107,7 @@ object TextOps {
     val c_fr = (occ(col("padded"), " le ") + occ(col("padded"), " et ")).as("c_fr")
     val c_de = (occ(col("padded"), " der ") + occ(col("padded"), " und ")).as("c_de")
     Tables.documents(spark, dir).select("doc_id", "lang", "text")
-      .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
+      .withColumn("padded", padded)
       .select(col("doc_id"), col("lang").as("labeled"), c_en, c_es, c_fr, c_de)
       .withColumn("predicted",
         when(col("c_en") >= col("c_es") && col("c_en") >= col("c_fr")
@@ -72,48 +120,54 @@ object TextOps {
 
   private val stopwords = Seq(" the ", " a ", " of ", " and ", " to ")
 
+  // q35's signals, each one expression over `text` or `padded`; q34,
+  // q35, the quality score, the stopword ratio, q176's features and
+  // CorpusPipeline read these
+  /** ' ' || lower(text) || ' ': word-boundary padding for [[occ]]. */
+  private[graft] val padded: Column =
+    concat(lit(" "), lower(col("text")), lit(" "))
+  /** Characters that are neither ASCII letters, digits nor whitespace. */
+  private[ops] val nPunct: Column =
+    length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", ""))
+  /** ASCII uppercase letters. */
+  private[ops] val nUpper: Column =
+    length(regexp_replace(col("text"), "[^A-Z]", ""))
+  /** Runs of ASCII letters, at least 1 so it can divide. */
+  private[ops] val nWords: Column =
+    greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
+  /** Stopword occurrences in `padded`. */
+  private val nStop: Column = stopwords.map(occ(col("padded"), _)).reduce(_ + _)
+
   /** Stopword density (q35's signal) as a reusable expression; expects
-    * `text` and `padded` (= ' ' || lower(text) || ' '). */
-  def stopwordRatio: Column = {
-    val nTokens = greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
-    stopwords.map(occ(col("padded"), _)).reduce(_ + _).cast("double") / nTokens
-  }
+    * `text` and `padded`. */
+  def stopwordRatio: Column = nStop.cast("double") / nWords
 
   /** The q35 composite quality score as a reusable expression; expects
-    * the frame to carry `text`, `n_chars`, and `padded`
-    * (= ' ' || lower(text) || ' '). Used by q35 and CorpusPipeline. */
-  def qualityScore: Column = {
-    val nPunct = length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", ""))
-    val nTokens = greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
-    val nStop = stopwords.map(occ(col("padded"), _)).reduce(_ + _)
+    * the frame to carry `text`, `n_chars`, and `padded`. Used by q35,
+    * q176's label and CorpusPipeline. */
+  def qualityScore: Column =
     round(
-      least(nTokens, lit(100)).cast("double") / 100
-        + nStop.cast("double") / nTokens
+      least(nWords, lit(100)).cast("double") / 100
+        + nStop.cast("double") / nWords
         - nPunct.cast("double") / col("n_chars"), 6)
-  }
 
   /** q35 — quality scoring: length, punctuation/uppercase character
     * ratios, stopword density, and a composite score — the standard
     * cheap pre-filter before expensive LLM-data processing. All ratios
     * are single IEEE divisions of exact integer counts (deterministic),
     * rounded to 6 decimals. */
-  def q35QualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val nPunct = length(regexp_replace(col("text"), "[a-zA-Z0-9\\s]", ""))
-    val nUpper = length(regexp_replace(col("text"), "[^A-Z]", ""))
-    val nTokens = greatest(regexp_count(col("text"), lit("[a-zA-Z]+")), lit(1))
-    val nStop = stopwords.map(occ(col("padded"), _)).reduce(_ + _)
+  def q35QualityScore(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select("doc_id", "n_chars", "text")
-      .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
+      .withColumn("padded", padded)
       .select(
         col("doc_id"),
         col("n_chars"),
-        nTokens.as("n_tokens"),
+        nWords.as("n_tokens"),
         round(nPunct.cast("double") / col("n_chars"), 6).as("punct_ratio"),
         round(nUpper.cast("double") / col("n_chars"), 6).as("upper_ratio"),
-        round(nStop.cast("double") / nTokens, 6).as("stopword_ratio"),
+        round(stopwordRatio, 6).as("stopword_ratio"),
         qualityScore.as("quality_score"))
       .cachedOrderBy("doc_id")
-  }
 
   /** q36 — token counting: whitespace tokens, a BPE-style pre-tokenizer
     * count (letter runs / single digits / single punctuation — the shape
@@ -199,15 +253,11 @@ object TextOps {
   /** Core of q184 over any (text) frame — the cross-impl property
     * spec drives it with generated corpora. */
   private[graft] def collocationLift(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(filter(split(lower(col("text")), "[^a-z]+"),
-        t => t =!= "").as("t"))
+    val toks = docs.select(tokens(col("text")).as("t"))
     val uni = toks.select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c")).persist()
     val bi = toks.filter(size(col("t")) >= 2)
-      .select(explode(transform(sequence(lit(1), size(col("t")) - 1),
-        i => struct(element_at(col("t"), i).as("w1"),
-          element_at(col("t"), i + 1).as("w2")))).as("b"))
+      .select(explode(wordGrams(col("t"), 2, pair)).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c_xy")).persist()
     val u = uni.agg(sum("c").as("uu"))

@@ -55,7 +55,7 @@ object CorpusPipeline {
     val nearDeduped = exact.join(dropB, Seq("doc_id"), "left_anti")
     // 3 — quality gate
     val scored = nearDeduped
-      .withColumn("padded", concat(lit(" "), lower(col("text")), lit(" ")))
+      .withColumn("padded", TextOps.padded)
       .withColumn("quality_score", TextOps.qualityScore)
       .withColumn("n_tokens",
         regexp_count(col("text"), lit("\\S+")).cast("long"))
@@ -88,16 +88,8 @@ object CorpusPipeline {
     * md5 digests shuffle, never text). */
   private def contaminatedIds(docs: DataFrame,
       benchmark: DataFrame): DataFrame = {
-    val toks = filter(split(lower(col("text")), "[^a-z]+"),
-      x => x =!= "")
-    def grams(df: DataFrame) = df
-      .select(col("doc_id"), toks.as("t"))
-      .withColumn("n", size(col("t")).cast("long"))
-      .filter(col("n") >= 8L)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1L), col("n") - 7L),
-          i => md5(concat_ws(" ",
-            slice(col("t"), i.cast("int"), lit(8)))))).as("g"))
+    def grams(df: DataFrame) =
+      TextOps.windowDigests(TextOps.tokenBase(df, col("text")), 8)
     grams(docs)
       .join(grams(benchmark).select("g").distinct(), "g")
       .select("doc_id").distinct()

@@ -50,6 +50,15 @@ class SessionSpec extends AnyFunSuite {
     assert(readers == List("Layout.scala"), s"defaultParallelism read in $readers")
   }
 
+  test("the word tokenizer's split pattern is written only in TextOps.scala") {
+    // TextOps.tokens is the one tokenizer; oracle SQL spells the
+    // pattern in single quotes and is not matched
+    val writers = codeLines("src/main/scala")
+      .filter(_._2.exists(_.contains("\"[^a-z]+\"")))
+      .map(_._1.getFileName.toString)
+    assert(writers == List("TextOps.scala"), s"tokenizer written in $writers")
+  }
+
   test("executor storage is released only through Pins and the harness") {
     // caches and checkpoints are released by graft.Pins; the harness's
     // backstop (SparkEntry.releasing) is the one other route

@@ -43,7 +43,7 @@ class SparseIndexSpec extends AnyFunSuite {
       assert(spark.table("sparse_spec_stats").count() === 2L)
       val all = (store ++ batch).toDF("doc_id", "text")
       val qterms = all.select(col("doc_id"),
-          ops.Extended10.toks(col("text")).as("t"))
+          ops.TextOps.tokens(col("text")).as("t"))
         .orderBy("doc_id").limit(3)
         .select(col("doc_id").as("q_id"),
           explode(slice(col("t"), 1, 4)).as("w")).distinct()

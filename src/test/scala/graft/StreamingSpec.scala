@@ -366,6 +366,30 @@ class StreamingSpec extends AnyFunSuite {
     } finally FsUtil.deleteRecursively(dir)
   }
 
+  test("q210's audit-schema probe starts no job and matches a real one-batch audit") {
+    import spark.implicits._
+    val dim = 8
+    def vec(i: Long): Seq[Double] = Seq.tabulate(dim)(j =>
+      (if (j == i % dim) 1.0 else 0.0) + (if (j == (i + 1) % dim) 0.3 else 0.0))
+    Pins.scoped { p =>
+      val (model, reps) = ops.SemStoreOps.semStoreBuild(p,
+        (0L until 40L).map(i => (i, vec(i))).toDF("id", "e"), dim = dim,
+        kOverride = Some(4))
+      val batch = Seq((100L, vec(3L)), (101L, vec(50L))).toDF("id", "e")
+      val probe = StreamingOps.emptyFrame(spark, batch.schema)
+      var probed: org.apache.spark.sql.types.StructType = null
+      val jobs = SparkTest.jobsDuring {
+        probed = ops.SemStoreOps.auditSchema(probe, model, reps)
+      }
+      assert(jobs == 0, s"the schema probe started $jobs job(s)")
+      val real = ops.SemStoreOps.semIngest(p, batch, model, reps)._1
+      assert(real.count() > 0L)
+      def fields(s: org.apache.spark.sql.types.StructType) =
+        s.fields.map(f => (f.name, f.dataType)).toSeq
+      assert(fields(probed) == fields(real.schema))
+    }
+  }
+
   test("q210 ingest survives a cross-restart WAL replay (versioned reps store)") {
     // q206's crash simulation on the round-16 sem trigger: drain batch
     // 0, delete the checkpoint's commits/0 marker (post-write

@@ -120,40 +120,9 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
-  /** Jobs started on this thread while `body` runs, counted by a listener.
-    * Listener events arrive asynchronously, so a marker job is run after
-    * `body` and waited for: events are delivered in order, so every job
-    * of `body` has been counted once the marker's start arrives. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val marker = "tables-spec-marker"
-    val seen = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(e.properties.getProperty("spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "")
-    try {
-      body
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "marker job never reached the listener")
-      seen.size - 1
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a table's schema is inferred once: a second load starts no Spark job") {
     val first = Tables.lineitem(spark, dir).schema
-    val jobs = jobsDuring {
+    val jobs = SparkTest.jobsDuring {
       assert(Tables.lineitem(spark, dir).schema == first)
     }
     assert(jobs == 0, s"second load started $jobs job(s) (a footer-read inference)")

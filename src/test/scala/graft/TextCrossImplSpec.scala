@@ -64,6 +64,36 @@ class TextCrossImplSpec extends AnyFunSuite {
     assert(got == expect)
   }
 
+  // --------------------------------------------------------- tokens
+  test("tokens and wordGrams at the edges: null, punctuation-only, non-letters, exactly n words") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.TextOps
+    val texts = Seq[(Long, String)]((1L, null), (2L, "?! -- ..."),
+      (3L, "Café9x"), (4L, "One two, THREE"))
+    val docs = texts.toDF("doc_id", "text")
+    val got = docs.select(col("doc_id"), TextOps.tokens(col("text")).as("t"),
+        TextOps.tokens(coalesce(col("text"), lit(""))).as("c"))
+      .orderBy("doc_id").collect()
+      .map(r => r.getLong(0) -> (Option(r.getSeq[String](1)), r.getSeq[String](2)))
+      .toMap
+    assert(got(1L) == (None, Seq()))
+    assert(got(2L) == (Some(Seq()), Seq()))
+    assert(got(3L)._1.contains(Seq("caf", "x")))
+    assert(got(4L)._1.contains(Seq("one", "two", "three")))
+    // the driver-side reference tokenizer agrees on every non-null text
+    texts.collect { case (id, text) if text != null =>
+      assert(got(id)._1.contains(tokensOf(text)), s"doc $id") }
+    // an array of exactly n tokens has one n-gram
+    val grams = docs.filter(col("doc_id") === 4L)
+      .select(TextOps.tokens(col("text")).as("t"))
+      .select(TextOps.wordGrams(col("t"), 3, TextOps.joined).as("g3"),
+        TextOps.wordGrams(slice(col("t"), 1, 2), 2, TextOps.pair).as("g2"))
+      .head()
+    assert(grams.getSeq[String](0) == Seq("one two three"))
+    assert(grams.getSeq[org.apache.spark.sql.Row](1)
+      .map(r => (r.getString(0), r.getString(1))) == Seq(("one", "two")))
+  }
+
   // ------------------------------------------------------------- q165
   test("q165 inverted index matches an independent reimplementation") {
     val docs = corpus(22L, 120)

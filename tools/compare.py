@@ -3,10 +3,18 @@
 against DuckDB executing oracle_sql.json on the same sf dir's tables.
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
+       python3 tools/compare.py --runs <verifyOutA> <verifyOutB>
 
 Sorts columns by name, normalizes values, compares row-by-row (both
 sides fully ordered by the query's own ORDER BY — we additionally sort
 rows as a safety net, mirroring a hash-compare).
+
+--runs compares two Verify output dirs with each other instead (e.g. a
+change against its parent, or one tree under two core counts): every
+query's columns, column types and rows, the no-oracle queries included,
+plus the two oracle_sql.json files byte for byte. Values compare by
+repr, so floats must match bit for bit (NaN equals NaN). It prints
+each query that differs and exits 1 if any does.
 """
 import sys, json, glob, os
 import duckdb
@@ -103,5 +111,52 @@ def main(sf_dir, out_dir):
     print(f"\n{n_pass} pass, {n_fail} fail, {len(declared)} declared")
     return 1 if n_fail else 0
 
+def outputs(out_dir):
+    return {d for d in os.listdir(out_dir) if os.path.isdir(f"{out_dir}/{d}")}
+
+def read_output(con, out_dir, name):
+    """(columns, {column: type}, repr of each canonical row) of one
+    query's output, or None when it wrote no parquet."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    if not files:
+        return None
+    sql = f"SELECT * FROM read_parquet({files!r})"
+    got = con.execute(sql)
+    cols, rows = canon([d[0] for d in got.description], got.fetchall())
+    return cols, arrow_types(con, f"{sql} LIMIT 0"), [repr(r) for r in rows]
+
+def main_runs(a_dir, b_dir):
+    con = duckdb.connect()
+    names = sorted(outputs(a_dir) | outputs(b_dir))
+    n_same = n_diff = 0
+    for name in names:
+        a = read_output(con, a_dir, name)
+        b = read_output(con, b_dir, name)
+        if a is None or b is None:
+            why = f"no output in {a_dir if a is None else b_dir}"
+        elif a[0] != b[0]:
+            why = f"columns differ {a[0]} vs {b[0]}"
+        elif a[1] != b[1]:
+            why = f"column types differ {a[1]} vs {b[1]}"
+        elif a[2] != b[2]:
+            only_a = sorted(set(a[2]) - set(b[2]))
+            only_b = sorted(set(b[2]) - set(a[2]))
+            why = (f"rows differ ({len(a[2])} vs {len(b[2])} rows, "
+                   f"{len(only_a)} only in the first, {len(only_b)} only in the second)")
+            if only_a: why += f"\n  first ={only_a[0]}"
+            if only_b: why += f"\n  second={only_b[0]}"
+        else:
+            n_same += 1
+            continue
+        print(f"DIFF  {name}: {why}")
+        n_diff += 1
+    oracles = [open(f"{d}/oracle_sql.json", "rb").read() for d in (a_dir, b_dir)]
+    same_oracle = oracles[0] == oracles[1]
+    print(f"oracle_sql.json {'identical' if same_oracle else 'DIFFERS'}")
+    print(f"\n{n_same} identical, {n_diff} differ, {len(names)} outputs")
+    return 1 if n_diff or not same_oracle else 0
+
 if __name__ == "__main__":
+    if sys.argv[1] == "--runs":
+        sys.exit(main_runs(sys.argv[2], sys.argv[3]))
     sys.exit(main(sys.argv[1], sys.argv[2]))
